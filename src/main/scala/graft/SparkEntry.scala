@@ -269,25 +269,43 @@ object SparkEntry {
     *  - the name-query relevance filter (title filter ON) is the
     *    event_id%5 predicate; ticker queries take the whole pool.
     *
-    * Shared by a4_fallback_chain, j5_attach_provenance and e1_pipeline.
-    * Output: (user_id, headline_source, picked_event_id, pub_str) — one
-    * row per key that has any candidate.
+    * Shared by a4_fallback_chain, j5_attach_provenance, k6_reason_codes
+    * and e1_pipeline. Output: (user_id, headline_source, picked_event_id,
+    * pub_str) — one row per key that has any candidate.
     */
-  def selectedHeadlines(s: SparkSession, dir: String, asOf: String): DataFrame = {
+  def selectedHeadlines(s: SparkSession, dir: String, asOf: String): DataFrame =
     // window pushed to the raw-nanos scan (see Tables.eventsInWindow) —
     // semantically Recency.recencyWindow, physically partition-prunable
-    val inWindow = Tables.eventsInWindow(s, dir, asOf, Cfg.lookbackHours)
+    selectHeadlines(Tables.eventsInWindow(s, dir, asOf, Cfg.lookbackHours))
+
+  /** [[selectedHeadlines]] over already-windowed events, from ONE pass.
+    *
+    * The four candidate sets are a name query and a ticker query per
+    * provider, and the ticker pool contains the name pool: a relevant
+    * event is a candidate twice (`google` and `google_ticker`, or
+    * `newsdata` and `newsdata_ticker`), with the same `pub_str` and
+    * `event_id`. Its ticker copy can never win — the fallback chain ranks
+    * precedence before recency, and the name copy is the same row with
+    * better precedence. So each event is tagged ONCE, with its best
+    * source: the name query's if its title is relevant, the ticker
+    * query's otherwise. Per key the winner is unchanged — if any relevant
+    * event of a provider exists, the name source wins over the same set
+    * of rows as before; if none does, the ticker source holds every event
+    * of that provider, as before. One scan with a CASE tag replaces the
+    * 4-branch union of scans. OperatorsSpec checks it against the union
+    * form on random inputs.
+    */
+  private[graft] def selectHeadlines(inWindow: DataFrame): DataFrame = {
     val unparseable = minute(col("ts")) % 10 === 0
     val relevant = col("event_id") % 5 === 0
-    val google = inWindow.filter(col("event_type").isin("click", "view"))
-    val newsd = inWindow.filter(col("event_type").isin("purchase", "signup"))
-      .filter(!unparseable)
-    val cands = google.filter(relevant).withColumn("src", lit("google"))
-      .unionByName(google.withColumn("src", lit("google_ticker")))
-      .unionByName(newsd.filter(relevant).withColumn("src", lit("newsdata")))
-      .unionByName(newsd.withColumn("src", lit("newsdata_ticker")))
+    val google = col("event_type").isin("click", "view")
+    val newsd = col("event_type").isin("purchase", "signup") && !unparseable
+    val cands = inWindow.filter(google || newsd)
+      .withColumn("src",
+        when(google, when(relevant, lit("google")).otherwise(lit("google_ticker")))
+          .otherwise(when(relevant, lit("newsdata")).otherwise(lit("newsdata_ticker"))))
       .withColumn("pub_str",
-        when(col("src").startsWith("google") && unparseable, lit(""))
+        when(google && unparseable, lit(""))
           .otherwise(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")))
     Recency.fallbackChain(cands, Seq("user_id"), "src",
         Seq("google", "google_ticker", "newsdata", "newsdata_ticker"),
@@ -472,10 +490,13 @@ object SparkEntry {
       .agg(sum(col("value")).as("close"), count(lit(1)).as("volume"))
     val withPct = PctChange.withPctChange(
       daily, Seq("user_id"), Seq(col("date")), "close")
-    val market = Calendar.universe(
-        Calendar.tradingDates(s, Cfg.marketStart, Cfg.marketEnd),
-        Tables.events(s, dir).select(col("user_id")).distinct())
-      .join(withPct, Seq("user_id", "date"), "inner")
+    // calendar × keys ⋈ withPct, as a semi-join: every (user_id, date)
+    // key of withPct is a distinct user of events by construction, so
+    // the universe's only effect is to keep trading dates and drop null
+    // keys (a null never equi-joins)
+    val market = withPct.filter(col("user_id").isNotNull)
+      .join(broadcast(Calendar.tradingDates(s, Cfg.marketStart, Cfg.marketEnd)),
+        Seq("date"), "left_semi")
       .filter(col("pct_change").isNotNull)
     val head = selectedHeadlines(s, dir, asOf)
       .withColumn("doc_id", pmod(col("picked_event_id"), lit(500)))
@@ -778,9 +799,12 @@ object SparkEntry {
     // E1 — the flagship end-to-end pipeline: the reference's whole batch
     // run as ONE DataFrame DAG producing the 9-column PipelineRow schema
     // (engine.py:62-112; header :33-37). Composition semantics per N1/N2:
-    //   calendar × keys  (G2, broadcast cross)
-    //   ⋈ inner  daily market fact with full-history lag (T3/N6; missing
-    //            (key,date) or first-ever day ⇒ row DROPPED, N1)
+    //   daily market fact with full-history lag (T3/N6; first-ever day ⇒
+    //            row DROPPED, N1)
+    //   ⋉ semi   broadcast trading calendar — the calendar × keys (G2)
+    //            inner join, minus the cross product: the fact's keys
+    //            ARE the key universe, so only the date filter remains
+    //            (missing (key,date) ⇒ no row, N1)
     //   ⟕ left   per-key selected headline + document text (A4+J5, N2) —
     //            one row per key ⇒ AQE broadcasts from runtime size
     //   ⟕ left   as-of YoY fundamentals (J4) — dimension ⇒ same; no

@@ -5,7 +5,8 @@ import org.apache.spark.sql.types.TimestampType
 
 /** Loaders for the driver-provided star-schema parquet tables
   * (`/root/testdata/sf*`, see TESTDATA.md). All schemas are declared by the
-  * parquet footers; we never infer from CSV (SURVEY.md §1.3).
+  * parquet footers, read in-process without a Spark job (see
+  * [[acquire]]); we never infer from CSV (SURVEY.md §1.3).
   *
   * At cluster scale the same entry points would read a partitioned table
   * root (e.g. `.../lineitem/` bucketed by join key); the single-file layout
@@ -37,9 +38,23 @@ object Tables {
   /** The raw source acquisition behind the retry seam; ResilienceSpec
     * swaps in a flaky double to exercise recovery and exhaustion without
     * a real flaky filesystem.
+    *
+    * Acquisition launches no Spark job: the schema Spark would infer is
+    * read from one footer in-process
+    * ([[org.apache.spark.sql.GraftPlanBridge.parquetSchema]]) and handed
+    * to the reader, so building a query costs a footer read per table
+    * instead of a schema-inference job each. The schema is the inferred
+    * one by construction (same file, same converter), so plans and
+    * results are unchanged; SchemaCanarySpec pins the equality for every
+    * table and layout. Nothing is cached: each call reads the footer
+    * afresh, so a rewritten table is never seen with a stale schema.
     */
   @volatile private[graft] var acquire: (SparkSession, String, String) => DataFrame =
-    (spark, sfDir, name) => spark.read.parquet(s"$sfDir/$name.parquet")
+    (spark, sfDir, name) => {
+      val path = s"$sfDir/$name.parquet"
+      org.apache.spark.sql.GraftPlanBridge.parquetSchema(spark, path)
+        .fold(spark.read)(spark.read.schema).parquet(path)
+    }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     graft.sources.Resilience.withRetry(scanRetry, scanSleeper)(

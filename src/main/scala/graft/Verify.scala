@@ -2,7 +2,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (scripts/selfcheck.py).
+  * A query or sink that throws is named on stderr and fails the run
+  * (exit 1) once the dump is complete — a silently missing result must
+  * never read green.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -32,11 +36,13 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
     }
+    var failed = List.empty[String]
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed ::= name
       }
     }
     // Drive the sink surface each round: K1/T15 (final CSV, null→"" for
@@ -66,6 +72,7 @@ object Verify {
       }
     } catch { case e: Throwable =>
       System.err.println(s"[verify] sink stage failed: ${e.getMessage}")
+      failed ::= "sink stage"
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -94,5 +101,10 @@ object Verify {
     Files.deleteIfExists(Paths.get(s"$outDir/$sibling"))
     Files.writeString(Paths.get(s"$outDir/$oracleFile"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] FAILED (${failed.size}): ${failed.reverse.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -18,12 +18,21 @@ import org.apache.spark.sql.functions._
   *   6. yoy = (cur − prev) / abs(prev) × 100, 2 dp (N4: abs denominator).
   *
   * Spark has no native tolerance as-of join; this is the compose-built-ins
-  * path (SURVEY.md §7.3): rank-1 window for `current`, an equi-join on key
-  * with a date-distance band predicate, and a rank-1 pick. Both shuffles
-  * hash on `key`, so at 100 TB they share one exchange; the band predicate
-  * is applied post-join (per-key row counts are small — quarters — so the
-  * join never explodes; for dense per-key history, bucket the time axis
-  * first).
+  * path (SURVEY.md §7.3) as two windows over ONE partitioning on `key`:
+  *   - `current` = `max(struct(time, tiebreak, value)) OVER (PARTITION BY
+  *     key)`: the greatest (time, tiebreak) with nulls lowest, which is
+  *     the rank-1 row of step 1 under (time desc, tiebreak desc) — desc
+  *     sorts nulls last (value breaks exact duplicates deterministically);
+  *   - the rank-1 row by (|Δ| asc, time desc, tiebreak desc) among the
+  *     rows within tolerance.
+  * Both windows cluster on `key`, so the plan scans the fact once and
+  * shuffles it once — no `latest ⋈ fact` self-join. Rows with a null key
+  * or time are dropped first: the self-join form dropped them too (a null
+  * key never joins; a null time never wins step 1 — desc puts nulls last
+  * — and never lands within tolerance). OperatorsSpec checks the two
+  * forms agree row for row on random inputs. The band predicate is
+  * applied per row (per-key row counts are small — quarters; for dense
+  * per-key history, bucket the time axis first).
   */
 object AsOf {
 
@@ -40,29 +49,25 @@ object AsOf {
       toleranceDays: Int = 20,
       tiebreakCol: String = ""): DataFrame = {
 
-    val baseCols = Seq(
-      col(keyCol).as("k"),
-      to_date(col(timeCol)).as("t"),
-      col(valueCol).as("v")) ++
-      (if (tiebreakCol.nonEmpty) Seq(col(tiebreakCol).as("tb")) else Nil)
-    val nonNull = fact.filter(col(valueCol).isNotNull).select(baseCols: _*)
+    val tb = if (tiebreakCol.nonEmpty) Seq(col("tb")) else Nil
+    val base = fact
+      .select((Seq(col(keyCol).as("k"), to_date(col(timeCol)).as("t"),
+        col(valueCol).as("v")) ++
+        (if (tiebreakCol.nonEmpty) Seq(col(tiebreakCol).as("tb")) else Nil)): _*)
+      .filter(col("k").isNotNull && col("t").isNotNull && col("v").isNotNull)
 
-    val latest = {
-      val w = Window.partitionBy(col("k"))
-        .orderBy((col("t").desc +: (if (tiebreakCol.nonEmpty) Seq(col("tb").desc) else Nil)): _*)
-      nonNull.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("k"), col("t").as("cur_time"), col("v").as("cur_value"))
-    }
-
+    val cur = max(struct((col("t") +: tb :+ col("v")): _*))
+      .over(Window.partitionBy(col("k")))
     val dd = abs(datediff(col("t"), add_months(col("cur_time"), -offsetMonths)))
-    val cand = latest.join(nonNull, Seq("k"))
+    val cand = base
+      .withColumn("__cur", cur)
+      .withColumn("cur_time", col("__cur.t"))
+      .withColumn("cur_value", col("__cur.v"))
       .withColumn("__dd", dd)
       .filter(col("__dd") <= toleranceDays)
 
     val wPick = Window.partitionBy(col("k"))
-      .orderBy((col("__dd").asc +: col("t").desc +:
-        (if (tiebreakCol.nonEmpty) Seq(col("tb").desc) else Nil)): _*)
+      .orderBy((col("__dd").asc +: col("t").desc +: tb.map(_.desc)): _*)
 
     cand.withColumn("__rn", row_number().over(wPick))
       .filter(col("__rn") === 1 && col("v") =!= 0)

@@ -34,7 +34,12 @@ object Sinks {
       .write.mode("overwrite").option("header", "true")
       // bare empty field, not the default quoted "" — csv.DictWriter
       // writes nothing for an empty string (engine.py:207-210)
-      .option("emptyValue", "").csv(path)
+      .option("emptyValue", "")
+      // Spark's CSV writer trims both ends of every value by default;
+      // csv.DictWriter writes a headline's blanks as they are
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      .csv(path)
   }
 
   /** K2: one directory per key value (`key=<value>/part-*.csv`). */

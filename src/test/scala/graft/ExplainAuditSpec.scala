@@ -13,6 +13,25 @@ class ExplainAuditSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  private object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Physical nodes of query `name`'s plan (descending into the adaptive
+    * plan) that `pf` selects.
+    */
+  private def nodes[T](name: String)(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
+    aqe.collect(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)(pf)
+
+  /** How many parquet scans of `table` query `name` plans. */
+  private def scans(name: String, table: String): Int = nodes(name) {
+    case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => s
+  }.size
+
+  private def unions(name: String): Int = nodes(name) {
+    case u: org.apache.spark.sql.execution.UnionExec => u
+  }.size
+
   test("q5_join_agg: dimension joins broadcast; no cartesian product") {
     val p = plan("q5_join_agg")
     assert(p.contains("BroadcastHashJoin"))
@@ -33,6 +52,33 @@ class ExplainAuditSpec extends SparkSpec {
         (if (q == "e1_pipeline") 2 else 1), s"$q lost the runtime broadcast:\n$p")
       assert(!p.contains("CartesianProduct"))
     }
+  }
+
+  test("headline selection scans events once: a4 and k6 plan no Union") {
+    // the four provider×query candidate sets are one tagged scan
+    assert(scans("a4_fallback_chain", "events") == 1)
+    assert(unions("a4_fallback_chain") == 0)
+    // k6: the selection's one scan plus the key universe's distinct(user_id)
+    assert(scans("k6_reason_codes", "events") == 2)
+    assert(unions("k6_reason_codes") == 0)
+  }
+
+  test("e1_pipeline: the calendar is a semi-join, not a cross product; orders read once") {
+    val p = plan("e1_pipeline")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"e1 crosses the calendar with the key universe again:\n$p")
+    assert(p.contains("LeftSemi"), s"trading-date filter lost its semi-join:\n$p")
+    assert(scans("e1_pipeline", "orders") == 1)
+    // the daily market fact and the headline selection
+    assert(scans("e1_pipeline", "events") == 2)
+  }
+
+  test("j4_asof_tolerance: one orders scan, one shuffle for both windows") {
+    assert(scans("j4_asof_tolerance", "orders") == 1)
+    val shuffles = nodes("j4_asof_tolerance") {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(shuffles.size == 1, s"yoyAsOf shuffles ${shuffles.size} times:\n${plan("j4_asof_tolerance")}")
   }
 
   test("banded/bucketed candidate generation never plans a cross product") {

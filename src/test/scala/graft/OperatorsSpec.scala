@@ -72,6 +72,69 @@ class AsOfSpec extends SparkSpec {
     assert(out.getAs[java.sql.Date]("prev_time").toString == "2023-06-20")
   }
 
+  /** The self-join form `yoyAsOf` had before it became two windows over
+    * one partitioning — kept as the reference the rewrite must match.
+    */
+  private def yoyAsOfSelfJoin(fact: org.apache.spark.sql.DataFrame,
+      keyCol: String, timeCol: String, valueCol: String,
+      offsetMonths: Int, toleranceDays: Int, tiebreakCol: String) = {
+    import org.apache.spark.sql.expressions.Window
+    val tb = if (tiebreakCol.nonEmpty) Seq(col("tb")) else Nil
+    val nonNull = fact.filter(col(valueCol).isNotNull).select((Seq(
+      col(keyCol).as("k"), to_date(col(timeCol)).as("t"), col(valueCol).as("v")) ++
+      (if (tiebreakCol.nonEmpty) Seq(col(tiebreakCol).as("tb")) else Nil)): _*)
+    val latest = nonNull
+      .withColumn("__rn", row_number().over(Window.partitionBy(col("k"))
+        .orderBy((col("t").desc +: tb.map(_.desc)): _*)))
+      .filter(col("__rn") === 1)
+      .select(col("k"), col("t").as("cur_time"), col("v").as("cur_value"))
+    latest.join(nonNull, Seq("k"))
+      .withColumn("__dd",
+        abs(datediff(col("t"), add_months(col("cur_time"), -offsetMonths))))
+      .filter(col("__dd") <= toleranceDays)
+      .withColumn("__rn", row_number().over(Window.partitionBy(col("k"))
+        .orderBy((col("__dd").asc +: col("t").desc +: tb.map(_.desc)): _*)))
+      .filter(col("__rn") === 1 && col("v") =!= 0)
+      .select(col("k").as(keyCol), col("cur_time"), col("cur_value"),
+        col("t").as("prev_time"), col("v").as("prev_value"),
+        round((col("cur_value") - col("v")) / abs(col("v")) * 100, 2).as("yoy_pct"))
+  }
+
+  test("J4: the two-window yoyAsOf returns the self-join form's rows on random inputs") {
+    for (seed <- 1 to 4) {
+      val rng = new scala.util.Random(seed)
+      def maybe[T](p: Double, v: => T): Option[T] =
+        if (rng.nextDouble() < p) None else Some(v)
+      // few keys and a narrow date range: ties on date, several candidates
+      // per key within tolerance, and latest rows decided by the tiebreak
+      val base = java.time.LocalDate.parse("2022-01-01")
+      val rows = (1 to 400).map { id =>
+        (maybe(0.05, rng.nextInt(12).toLong),
+          maybe(0.05, java.sql.Date.valueOf(base.plusDays(rng.nextInt(60) * 13L))),
+          maybe(0.1, if (rng.nextDouble() < 0.1) 0.0 else (rng.nextInt(2000) - 500).toDouble),
+          id.toLong)
+      }
+      val fact = rows.toDF("k", "d", "v", "id")
+      // without a tiebreak the forms agree wherever the pick is unique:
+      // one row per (k, d), fixed once and fed to both forms
+      val unique = spark.createDataFrame(
+        java.util.Arrays.asList(fact.dropDuplicates("k", "d").collect(): _*), fact.schema)
+      def norm(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      for (tol <- Seq(20, 120)) {
+        val got = norm(AsOf.yoyAsOf(fact, "k", "d", "v", 12, tol, "id"))
+        val want = norm(yoyAsOfSelfJoin(fact, "k", "d", "v", 12, tol, "id"))
+        assert(want.nonEmpty, s"seed $seed tol $tol: no matches, the case is vacuous")
+        assert(got == want, s"seed $seed tol $tol")
+        assert(norm(AsOf.yoyAsOf(unique, "k", "d", "v", 12, tol)) ==
+          norm(yoyAsOfSelfJoin(unique, "k", "d", "v", 12, tol, "")), s"seed $seed tol $tol")
+      }
+      // the random inputs reach every case the rewrite argues about
+      assert(rows.exists(_._1.isEmpty) && rows.exists(_._2.isEmpty) &&
+        rows.exists(_._3.isEmpty) && rows.exists(_._3.contains(0.0)))
+    }
+  }
+
   private def tsDf(name: String, rows: (Long, String, Double)*) =
     rows.toDF("k", "t", name)
       .select(col("k"), to_timestamp(col("t")).as("t"), col(name))
@@ -537,6 +600,71 @@ class RecencySpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(out(1L) == (("google_ticker", 11L))) // provider preempts; "" loses within source
     assert(out(2L) == (("newsdata_ticker", 20L))) // unlisted source ignored
+  }
+}
+
+class HeadlineSelectionSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** The 4-branch union of per-source scans `selectHeadlines` replaced,
+    * kept as the reference the one-scan tagging must match.
+    */
+  private def selectHeadlinesUnion(inWindow: org.apache.spark.sql.DataFrame) = {
+    val unparseable = minute(col("ts")) % 10 === 0
+    val relevant = col("event_id") % 5 === 0
+    val google = inWindow.filter(col("event_type").isin("click", "view"))
+    val newsd = inWindow.filter(col("event_type").isin("purchase", "signup"))
+      .filter(!unparseable)
+    val cands = google.filter(relevant).withColumn("src", lit("google"))
+      .unionByName(google.withColumn("src", lit("google_ticker")))
+      .unionByName(newsd.filter(relevant).withColumn("src", lit("newsdata")))
+      .unionByName(newsd.withColumn("src", lit("newsdata_ticker")))
+      .withColumn("pub_str",
+        when(col("src").startsWith("google") && unparseable, lit(""))
+          .otherwise(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")))
+    Recency.fallbackChain(cands, Seq("user_id"), "src",
+        Seq("google", "google_ticker", "newsdata", "newsdata_ticker"),
+        Seq(col("pub_str").desc, col("event_id").desc))
+      .select(col("user_id"), col("src").as("headline_source"),
+        col("event_id").as("picked_event_id"), col("pub_str"))
+  }
+
+  test("A4: one-scan source tagging selects the 4-branch union's winners on random inputs") {
+    val types = Array("click", "view", "purchase", "signup", "error", null)
+    for (seed <- 1 to 4) {
+      val rng = new scala.util.Random(seed)
+      val t0 = java.time.LocalDateTime.parse("2024-01-12T00:00:00")
+      val rows = (1 to 300).map { i =>
+        (if (rng.nextDouble() < 0.05) None else Some(rng.nextInt(40).toLong),
+          i.toLong,
+          types(rng.nextInt(types.length)),
+          // a coarse minute grid: many equal pub_str values, and ~1 in 5
+          // minutes unparseable (minute % 10 == 0)
+          if (rng.nextDouble() < 0.05) None
+          else Some(java.sql.Timestamp.valueOf(t0.plusMinutes(rng.nextInt(30) * 5L))))
+      } ++ Seq(
+        (95L, 1005L, "click", 1), (95L, 1006L, "click", 2),    // google
+        (96L, 1011L, "view", 3),                                // google_ticker
+        (97L, 1015L, "purchase", 4), (97L, 1016L, "signup", 5), // newsdata
+        (98L, 1021L, "signup", 6),                              // newsdata_ticker
+        // no relevant title on either provider; the google row is
+        // unparseable (minute 0) and still beats the newsdata one
+        (99L, 1001L, "click", 0), (99L, 1002L, "purchase", 1)
+      ).map { case (u, id, tpe, m) =>
+        (Some(u), id, tpe, Some(java.sql.Timestamp.valueOf(t0.plusMinutes(m.toLong))))
+      }
+      val inWindow = rows.toDF("user_id", "event_id", "event_type", "ts")
+      def norm(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val got = norm(SparkEntry.selectHeadlines(inWindow))
+      assert(got == norm(selectHeadlinesUnion(inWindow)), s"seed $seed")
+      assert(got.filter(r => (95 to 99).map(_ + "|").exists(r.startsWith)) == Seq(
+        "95|google|1005|2024-01-12 00:01:00",
+        "96|google_ticker|1011|2024-01-12 00:03:00",
+        "97|newsdata|1015|2024-01-12 00:04:00",
+        "98|newsdata_ticker|1021|2024-01-12 00:06:00",
+        "99|google_ticker|1001|"))
+    }
   }
 }
 

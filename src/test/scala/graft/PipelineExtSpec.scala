@@ -2244,6 +2244,19 @@ class SinksSpec extends SparkSpec {
     assert(lines.exists(_ == "2024-01-09,B,-0.5,200,")) // trailing empty, not "null"
   }
 
+  test("K1: a headline's leading and trailing blanks reach the CSV untrimmed") {
+    // a 60-char headline prefix can end mid-sentence on a blank; the
+    // reference's csv.DictWriter writes it as is
+    val dir = tmpDir() + "/blanks"
+    Sinks.writeFinalCsv(Seq(("A", "Stocks rally ", Some(1.0)), ("B", " Dip", None))
+      .toDF("Stock", "Headline", "YoY_NetIncome_Pct"), dir)
+    val file = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".csv")).head
+    val src = scala.io.Source.fromFile(file)
+    val lines = try src.getLines().toList finally src.close()
+    assert(lines.contains("A,Stocks rally ,1.0"), lines.mkString("\n"))
+    assert(lines.contains("B, Dip,"), lines.mkString("\n"))
+  }
+
   test("S8: the written CSV reads back with header and re-validates (validator.py:39-46)") {
     val dir = tmpDir() + "/final2"
     val df = Seq(("A", 0.5, Some(1.0)), ("B", -0.5, None))

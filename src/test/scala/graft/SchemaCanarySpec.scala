@@ -70,6 +70,105 @@ class SchemaCanarySpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` and counts the Spark jobs it launched, as a
+    * SparkListener sees them. Jobs are told apart by a job group (a
+    * thread-local property), and a fence job run after `body` flushes the
+    * asynchronous listener bus: events arrive in order, so once the fence
+    * is seen every job of `body` has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("canary-acquire") => jobs.incrementAndGet()
+          case Some("canary-fence")   => fence.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("canary-acquire", "table acquisition")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup("canary-fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the fence job")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Acquires `table` under `dir` and checks it against Spark's own
+    * schema inference: same schema, and no job launched to get it.
+    */
+  private def assertJobFree(dir: String, table: String): Unit = {
+    val (df, jobs) = jobsDuring(Tables(spark, dir, table))
+    assert(jobs == 0, s"acquiring $table launched $jobs Spark job(s)")
+    assert(df.schema == spark.read.parquet(s"$dir/$table.parquet").schema,
+      s"$table: acquired schema differs from inference")
+  }
+
+  for (table <- Tables.names) test(s"acquisition: $table launches no job; schema equals inference") {
+    assertJobFree(sf, table)
+  }
+
+  test("acquisition: legacy nanos, adjusted-UTC and multi-file layouts match inference with no job") {
+    import spark.implicits._
+    // legacy layout: TIMESTAMP(NANOS) written by a non-Spark writer, so
+    // the footer carries no Spark row metadata and the schema comes from
+    // the parquet converter (nanosAsLong=true turns ts into a long)
+    val nanosDir = java.nio.file.Files.createTempDirectory("graft-canary-nanos").toString
+    locally {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        """message events {
+          |  required int64 event_id;
+          |  optional int64 ts (TIMESTAMP(NANOS,false));
+          |  required int64 user_id;
+          |  optional binary event_type (STRING);
+          |  optional double value;
+          |  optional binary props (STRING);
+          |}""".stripMargin)
+      val w = ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"$nanosDir/events.parquet"))
+        .withType(schema).withConf(new org.apache.hadoop.conf.Configuration())
+        .build()
+      try w.write(new SimpleGroupFactory(schema).newGroup()
+          .append("event_id", 1L)
+          .append("ts", java.time.Instant.parse("2024-01-14T12:00:00Z")
+            .toEpochMilli * 1000000L)
+          .append("user_id", 2L).append("event_type", "click")
+          .append("value", 1.0).append("props", "{}"))
+      finally w.close()
+    }
+    assert(spark.read.parquet(s"$nanosDir/events.parquet").schema("ts").dataType == LongType)
+    assertJobFree(nanosDir, "events")
+    assert(Tables.events(spark, nanosDir).select("ts").head().getTimestamp(0) ==
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-01-14T12:00:00Z")))
+
+    // adjusted-UTC TIMESTAMP, written by Spark as a directory of several
+    // part files plus _SUCCESS and .crc side files
+    val multiDir = java.nio.file.Files.createTempDirectory("graft-canary-multi").toString
+    (1L to 30L).map(i => (i, java.sql.Timestamp.valueOf("2024-01-14 12:00:00"),
+        i % 4, "view", i.toDouble, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartition(3).write.parquet(s"$multiDir/events.parquet")
+    assert(new java.io.File(s"$multiDir/events.parquet").listFiles
+      .count(_.getName.endsWith(".parquet")) > 1)
+    assertJobFree(multiDir, "events")
+    assert(Tables.events(spark, multiDir).count() == 30)
+  }
+
+  test("acquisition: a missing table fails with Spark's own path error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-canary-missing").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](Tables(spark, dir, "region"))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
   test("canary: events loader normalizes ts to session-zone timestamp") {
     // Whatever the footer layout, the engine-facing contract after
     // Tables.events is a plain TimestampType `ts` (downstream epoch-µs
