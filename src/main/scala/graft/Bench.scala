@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout for the driver.
   *
@@ -18,23 +16,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate inlines a computed explode input into a
-      // size()>0 filter BELOW the projection, re-evaluating the whole
-      // array expression ~8x per row (ta_decontam: 86s -> 1s without it);
-      // the inferred filter is defensive only - explode of an empty
-      // array already emits nothing.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.builder(cpus).getOrCreate()
     // A task finishing AFTER its query execution completed reports its
     // (now-unregistered) SQL-metric accumulators and DAGScheduler logs
     // "Failed to update accumulator ... non-existent accumulator" at
@@ -86,7 +69,8 @@ object Bench {
     // encode argmin — so every sim_* measurement (solo runs included:
     // solo_bench invokes this same main per query) was paying their
     // first-use JIT+codegen inside its timed window (~3-4 s cold vs
-    // warm, measured via IvfPqProfile). Warm them on a 64-row slice,
+    // warm: sim_ivfpq_ann's train/search/brute phases timed on a first
+    // and a repeated pass in one JVM). Warm them on a 64-row slice,
     // untimed, exactly like q1 warms the scan/agg paths.
     try {
       import org.apache.spark.sql.functions.col

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the formatted physical plan for the given
   * query names (all queries if none given). Used to keep every operator's
   * plan honest — broadcasts where expected, filters pushed to the scan,
@@ -14,22 +12,7 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate inlines a computed explode input into a
-      // size()>0 filter BELOW the projection, re-evaluating the whole
-      // array expression ~8x per row (ta_decontam: 86s -> 1s without it);
-      // the inferred filter is defensive only - explode of an empty
-      // array already emits nothing.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.builder(4).getOrCreate()
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

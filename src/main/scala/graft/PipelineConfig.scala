@@ -158,7 +158,8 @@ final case class PipelineConfig(
     // (0.40 at 32 codewords, 0.27 cosine-trained) — re-measured by
     // sim_pq_recall.
     //
-    // rerank=60 CHOSEN FROM A SWEEP (graft.PqSweep, r14): recall@3 over
+    // rerank=60 CHOSEN FROM A SWEEP (r14; sim_pq_recall re-measures the
+    // chosen point every Verify run): recall@3 over
     // codewords {16,32} × rerank {10..100} measured 0.73 at the old
     // (16,10) and ≥0.85 from (16,25)/(32,15) up; (16,60) reads 1.00 at
     // sf0.01 / 0.93 at sf0.1. 16 codewords is kept because the ENCODE

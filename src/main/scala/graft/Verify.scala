@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (scripts/selfcheck.py).
@@ -10,23 +9,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate inlines a computed explode input into a
-      // size()>0 filter BELOW the projection, re-evaluating the whole
-      // array expression ~8x per row (ta_decontam: 86s -> 1s without it);
-      // the inferred filter is defensive only - explode of an empty
-      // array already emits nothing.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.builder(cpus).getOrCreate()
     new java.io.File(outDir).mkdirs()
     // Dev-only: SPARK_GRAFT_ONLY=q1,q2 dumps a subset while iterating on
     // one operator (the driver never sets it — it always dumps all).

@@ -536,11 +536,7 @@ object Dedup {
       val next = step(mid)
         .join(mid.select(col("id"), col("label").as("__old")), Seq("id"))
         .localCheckpoint(eager = false)
-      val t0 = System.nanoTime()
       changed = next.filter(col("label") =!= col("__old")).count()
-      if (sys.env.contains("GRAFT_CLUSTER_DEBUG"))
-        System.err.println(f"propagateMin round ${iter + 1}: changed=$changed " +
-          f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
       labels = next.drop("__old")
       iter += 1
     }

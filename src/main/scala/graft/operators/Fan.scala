@@ -37,11 +37,11 @@ import org.apache.spark.sql.DataFrame
   * frames behind a localCheckpoint (LogicalRDD) and post-join frames
   * report the default/product placeholder, which would read as
   * "infinite input" — those fall back to the floor, which is exactly
-  * the r21 behavior. Knobs: `spark.graft.fanout.cap` (the floor; 0
-  * disables fan-out entirely) and `spark.graft.fanout.bytesPerTask`.
+  * the r21 behavior.
   */
 object Fan {
-  val DefaultCap = 8
+  /** The minimum fan width (see "Width" above). */
+  val Floor = 8
 
   /** Target bytes of planned input per fanned task. 128 KB of PARQUET
     * (or in-plan estimated) bytes expands to ~0.5-1 MB of in-memory
@@ -52,14 +52,6 @@ object Fan {
     * behavior is unchanged; a 1 GB input yields 8192 → every core.
     */
   val DefaultBytesPerTask = 128L * 1024
-
-  def cap(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.fanout.cap")
-      .map(_.toInt).getOrElse(DefaultCap)
-
-  private def bytesPerTask(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.fanout.bytesPerTask")
-      .map(_.toLong).getOrElse(DefaultBytesPerTask)
 
   /** The width rule, exposed for tests: floor at `floor`, scale with
     * trusted planned bytes, never exceed the core count. `bytes < 0`
@@ -83,7 +75,7 @@ object Fan {
     */
   val UntrustedBytes = 1L << 40
 
-  private def target(df: DataFrame, sized: DataFrame): Int = {
+  private def target(sized: DataFrame): Int = {
     // sizeInBytes is a BigInt (join estimates multiply into values past
     // Long range, whose toLong would WRAP) — clamp before narrowing
     val bytes =
@@ -91,8 +83,7 @@ object Fan {
         val bi = sized.queryExecution.optimizedPlan.stats.sizeInBytes
         if (bi >= BigInt(UntrustedBytes)) UntrustedBytes else bi.toLong
       } catch { case _: Throwable => -1L }
-    width(bytes, df.sparkSession.sparkContext.defaultParallelism,
-      cap(df), bytesPerTask(df))
+    width(bytes, sized.sparkSession.sparkContext.defaultParallelism, Floor)
   }
 
   /** Fan `df` out to the input-scaled width iff it currently has fewer
@@ -102,7 +93,7 @@ object Fan {
   def out(df: DataFrame): DataFrame = {
     if (df.isStreaming) df
     else {
-      val t = target(df, df)
+      val t = target(df)
       if (t <= 1 || df.rdd.getNumPartitions >= t) df
       else df.repartition(t)
     }
@@ -123,7 +114,7 @@ object Fan {
   def outLike(df: DataFrame, gauge: DataFrame): DataFrame = {
     if (df.isStreaming || gauge.isStreaming) df
     else {
-      val t = target(df, gauge)
+      val t = target(gauge)
       if (t <= 1 || gauge.rdd.getNumPartitions >= t) df
       else df.repartition(t)
     }
@@ -145,7 +136,7 @@ object Fan {
       keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
     if (df.isStreaming || gauge.isStreaming) df
     else {
-      val t = target(df, gauge)
+      val t = target(gauge)
       if (t <= 1 || gauge.rdd.getNumPartitions >= t) df
       else df.repartition(t, keys: _*)
     }

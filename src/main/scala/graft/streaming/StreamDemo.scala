@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI surface for the streaming operators: replays the events table as a
@@ -12,22 +11,7 @@ import org.apache.spark.sql.functions._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // InferFiltersFromGenerate inlines a computed explode input into a
-      // size()>0 filter BELOW the projection, re-evaluating the whole
-      // array expression ~8x per row (ta_decontam: 86s -> 1s without it);
-      // the inferred filter is defensive only - explode of an empty
-      // array already emits nothing.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder(4).getOrCreate()
 
     // File-source stream over the events parquet; same schema-adaptive ts
     // normalization as the batch Tables.events (NTZ micros -> timestamp, or
