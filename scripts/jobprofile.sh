@@ -13,5 +13,4 @@ for p in java.base/java.lang java.base/java.lang.invoke \
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | sort | tr '\n' ':')"
-exec java $OPENS -Xmx8g -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.JobProfile "$@"
+exec java $OPENS -Xmx8g -cp "$CP" graft.JobProfile "$@"

@@ -21,8 +21,7 @@ for p in java.base/java.lang java.base/java.lang.invoke \
 done
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | sort | tr '\n' ':')"
 mkdir -p plans/r22
-java $OPENS -Xmx8g -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Explain \
+java $OPENS -Xmx8g -cp "$CP" graft.Explain \
   /root/testdata/sf0.001 $QUERIES 2>/dev/null \
 | awk -v sfx="$SUFFIX" '
   # formatted explain prints its own "===== Subqueries =====" section

@@ -1,7780 +1,37 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators._
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry: the contract of SURVEY.md §7.
   *
-  * Each entry implements one operator row from SURVEY.md §2 over the
-  * driver's star-schema tables (mapping per FIXTURES.md §B: events ≈ the
-  * OHLCV fact, documents ≈ headlines, orders ≈ quarterly fundamentals).
-  * Every query has an ANSI-SQL oracle in [[oracleSql]] runnable by DuckDB
-  * over the same parquet tables.
+  * Each [[QueryDef]] in [[registry]] implements one operator row from
+  * SURVEY.md §2 over the star-schema test tables and carries its ANSI-SQL
+  * oracle, runnable by DuckDB over the same parquet tables. The
+  * definitions live by family under `graft/queries/`, each plan next to
+  * its oracle; [[queries]] and [[oracleSql]] are the two lookup views
+  * that Verify, Bench, Explain, JobProfile, the specs and the benchmark
+  * harness read, built once from the registry.
   */
 object SparkEntry {
-
-  /** S1 — the run's typed configuration (config.yaml:1-13 analogue):
-    * every parameterized constant below (as-of instants, lookback,
-    * calendar bounds, banding budget, curation gates, layout budgets)
-    * is defined ONCE here and interpolated into both the Spark plan
-    * and its DuckDB oracle, so the two sides agree by construction.
-    */
-  private val Cfg = PipelineConfig.Default
-
-  /** Standing IVF-PQ codebooks for the eval loop — FAISS's
-    * train-once/search-many split applied to `sim_eval_mrr`: the first
-    * call per (sf dir, training params) trains both quantizers
-    * concurrently and persists them via [[Similarity.writeCodebooks]]
-    * under the JVM temp dir; every later call — the next bench pass,
-    * the next eval of a tuning sweep — reads the two tiny parquet
-    * artifacts (or the in-process memo) instead of re-running two
-    * corpus-wide Lloyd trainings. Results are identical either way
-    * (training is deterministic; the artifact round-trip is
-    * value-exact, spec-pinned), so the oracle's unrolled CTE chain
-    * needs no change. `fmt` versions the layout: bump it whenever
-    * training semantics change so a stale on-disk codebook can never
-    * shadow new code.
-    */
-  private val codebookMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(Int, Seq[Double])], Seq[(Int, Int, Seq[Double])])]
-
-  private def standingCodebooks(s: SparkSession, dir: String,
-      emb: DataFrame): (Seq[(Int, Seq[Double])], Seq[(Int, Int, Seq[Double])]) = {
-    val fmt = 1
-    // data mtime folded in like every other standing-artifact key
-    // (ADVICE r19): a regenerated testdata set at the same path must
-    // never serve stale codebooks — the oracle retrains live.
-    val key = Seq(dir, fmt, 8, Cfg.kmeansIters, Cfg.pqTrainBound,
-      Cfg.pqM, Cfg.pqSubDim, Cfg.pqCodewords,
-      dataMtime(dir, "embeddings.parquet")).mkString("|")
-    codebookMemo.getOrElseUpdate(key, {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val art = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_codebooks_$digest")
-      def complete(d: java.io.File) =
-        new java.io.File(d, "coarse/_SUCCESS").isFile &&
-          new java.io.File(d, "codebooks/_SUCCESS").isFile
-      if (complete(art)) Similarity.readCodebooks(s, art.toString)
-      else {
-        val trained = Similarity.trainIvfPqConcurrently(emb,
-          coarseK = 8, iters = Cfg.kmeansIters, trainBound = Cfg.pqTrainBound,
-          m = Cfg.pqM, subDim = Cfg.pqSubDim, codewords = Cfg.pqCodewords)
-        // write-then-rename so a concurrent JVM never reads a half-
-        // written artifact; if the rename loses the race our trained
-        // values are used directly (identical by determinism)
-        val tmp = new java.io.File(art.getParentFile,
-          art.getName + ".tmp" + ProcessHandle.current().pid())
-        Similarity.writeCodebooks(s, tmp.toString, trained._1, trained._2)
-        finishRename(tmp, art, complete(art))
-        // rename lost or failed: our trained values are used directly
-        // (identical by determinism), so no marker re-check is needed —
-        // an incomplete `art` is rebuilt or re-raced by the next JVM
-        trained
-      }
-    })
-  }
-
-  /** Max mtime under a testdata table dir — folded into standing-
-    * artifact keys so a regenerated testdata set can never be shadowed
-    * by a stale artifact.
-    */
-  private def dataMtime(dir: String, table: String): Long = {
-    val d = new java.io.File(dir, table)
-    Option(d.listFiles())
-      .map(_.map(_.lastModified()).foldLeft(d.lastModified())(math.max))
-      .getOrElse(d.lastModified())
-  }
-
-  /** Atomically publish a built `tmp` dir as the standing artifact
-    * `art`. A failed rename is a LOST BUILD RACE only when `art` is
-    * already complete; any other cause (a stale half-written `art`
-    * from a killed build, an IO error) must not be silently swallowed
-    * (ADVICE r19) — a stale blocker is removed and the rename retried
-    * once, and leftover tmp dirs are always cleaned up. Callers that
-    * go on to READ `art` re-check its markers and fail loudly.
-    */
-  private def finishRename(tmp: java.io.File, art: java.io.File,
-      artComplete: => Boolean): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    if (!tmp.renameTo(art)) {
-      if (!artComplete) { rm(art); tmp.renameTo(art); () }
-      if (tmp.exists()) rm(tmp)
-    }
-  }
-
-  /** Build-once /tmp artifact shared by the standing indexes: the
-    * first call per key builds under a pid-suffixed temp dir and
-    * atomically renames into place (write-then-rename, so a concurrent
-    * JVM never reads a half-written artifact; if the rename loses the
-    * race the duplicate build is discarded — determinism makes the
-    * winner identical); later calls return the existing path. Throws
-    * a descriptive error if the artifact is still incomplete after the
-    * publish (an IO failure, NOT a lost race — the subsequent parquet
-    * read would otherwise die on an opaque path error).
-    */
-  private def standingArtifact(prefix: String, keyParts: Seq[Any],
-      successMarkers: Seq[String])(build: String => Unit): java.io.File = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(keyParts.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val art = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"${prefix}_$digest")
-    def complete = successMarkers.forall(
-      m => new java.io.File(art, m).isFile)
-    if (!complete) {
-      val tmp = new java.io.File(art.getParentFile,
-        art.getName + ".tmp" + ProcessHandle.current().pid())
-      build(tmp.toString)
-      finishRename(tmp, art, complete)
-      if (!complete) throw new IllegalStateException(
-        s"standingArtifact: $art is missing ${successMarkers.mkString(",")} " +
-          "after build+rename — not a lost race; check disk/permissions " +
-          "under java.io.tmpdir")
-    }
-    art
-  }
-
-  /** Standing binary index for the live-ingest screens — the
-    * [[standingCodebooks]] discipline applied to the cheapest index in
-    * the house: the first call per (sf dir, bands, data mtime) runs
-    * [[Similarity.writeBinaryIndex]] (packed sign codes + band-
-    * partitioned postings) under the JVM temp dir; every later call —
-    * the next bench pass, the next micro-batch of a standing ingest —
-    * scans the two small artifacts instead of re-deriving sign bits
-    * from the full-precision corpus. Inline ≡ prebuilt bit-for-bit
-    * (the slicing is static per-row arithmetic; spec-pinned), so
-    * st17/e8's oracle CTEs need no change.
-    */
-  private def standingBinaryIndex(s: SparkSession, dir: String,
-      emb: DataFrame): DataFrame = {
-    // fmt 2: postings denormalize the code halves (ADVICE r19) — the
-    // key bump makes a pre-bump /tmp artifact unreachable, not misread
-    val art = standingArtifact("graft_binidx",
-      Seq(dir, 2, Cfg.binaryBands, dataMtime(dir, "embeddings.parquet")),
-      Seq("codes/_SUCCESS", "bands/_SUCCESS")) { tmp =>
-      Similarity.writeBinaryIndex(emb, "id", "vec", tmp, Cfg.binaryBands)
-    }
-    // fanned (r22): the band directories are byte-small (8 tiny files
-    // pack into ONE scan split) but the screen's posting-join + hamming
-    // kernel fuses into this scan — JobProfile read it as a 1-task
-    // ~1.1 s-CPU stage in e8. Identity at any real index size (Fan).
-    Fan.out(s.read.parquet(s"$art/bands")
-      .select(col("id"), col("band").cast("int").as("band"), col("band_val"),
-        col("code_lo"), col("code_hi")))
-  }
-
-  /** The live-ingest screen's base corpus: embeddings as (id, vec).
-    * Fanned (r22): the asDouble transform is an interpreted HOF per
-    * row and the byte-small scan packs into one split — JobProfile
-    * read the fused scan+project as a 1-task ~0.8 s-CPU stage in e8.
-    */
-  private def screenBase(s: SparkSession, dir: String): DataFrame =
-    // null-filter on the RAW column: `transform` preserves nullness, so
-    // this admits exactly the rows `vec.isNotNull` did — but a filter on
-    // the derived column pushes BELOW the fan and re-evaluates the
-    // interpreted per-element cast on the 1-split scan (guide §4.4's
-    // duplicated-evaluation trap; JobProfile: a 1-task ~0.9 s-CPU stage)
-    Fan.out(Tables.embeddings(s, dir)
-        .filter(col("embedding").isNotNull))
-      .select(col("vec_id").as("id"),
-        Similarity.asDouble(col("embedding")).as("vec"))
-
-  /** The arriving micro-batch fixture st17_binary_scan and
-    * e8_ingest_screen share: bounded re-encodes of the base — ids
-    * %3==0 fully negated (novel, ~Hamming 64 from everything), the
-    * rest with ONLY the first component's sign flipped (Hamming ≤ 1 —
-    * inside the pigeonhole radius, near-exact cosine to their source).
-    * Exact IEEE negation (`-x`) so both engines compute identical
-    * doubles; mirrored literally by the shared oracle CTE prefix.
-    */
-  private def screenArrivals(emb: DataFrame): DataFrame =
-    // eagerly checkpointed (r22): the arrival batch is a bounded
-    // fixture, but its derived vec column otherwise re-evaluates the
-    // interpreted negate-transform chain once per consumer — and
-    // binaryCodes' null guard PUSHES that evaluation below every fan
-    // onto the 1-split scan (guide §4.4; JobProfile: a 1-task ~1.3
-    // s-CPU scan stage in e8). A ~hundred-row checkpoint is free and
-    // is a pushdown barrier.
-    emb.filter(col("id") < Cfg.binaryScreenArrivals)
-      .select((col("id") + lit(100000L)).as("id"),
-        when(col("id") % 3 === 0,
-          transform(col("vec"), x => -x))
-        .otherwise(concat(
-          array(-element_at(col("vec"), 1)),
-          slice(col("vec"), 2, 63))).as("vec"))
-      .localCheckpoint(eager = true)
-
-  /** Standing frame-signature index for the live-ingest video screen —
-    * the [[standingBinaryIndex]] discipline on the frame plane: the
-    * first call per (sf dir, blockTokens, dfCap, data mtime) builds the
-    * df-capped postings under the JVM temp dir
-    * ([[Multimodal.writeFrameSigIndex]]); every later call scans the
-    * artifact instead of re-deriving signatures from the full corpus.
-    * Indexed ≡ inline df-capped postings bit-for-bit (spec-pinned), so
-    * the oracle CTEs stay on the inline form.
-    */
-  private def standingFrameSigIndex(s: SparkSession, dir: String): DataFrame = {
-    val art = standingArtifact("graft_framesigidx",
-      Seq(dir, 1, Cfg.paraBlockTokens, Cfg.videoSigDfCap,
-        dataMtime(dir, "documents.parquet")),
-      Seq("postings/_SUCCESS")) { tmp =>
-      Multimodal.writeFrameSigIndex(
-        Multimodal.frameSignatures(Multimodal.attachVideoPayload(
-          Tables.documents(s, dir), Cfg.paraBlockTokens)),
-        tmp, Cfg.paraBlockTokens, Cfg.videoSigDfCap)
-    }
-    s.read.parquet(s"$art/postings").select(col("doc_id"), col("frame_sig"))
-  }
-
-  /** The arriving-upload fixture st19_video_scan screens: ids %10==0
-    * re-upload a CLIP (the first two blocks of the source video, new id
-    * +2·10⁶ — every clip frame exists in the base by construction);
-    * ids %10==5 are NOVEL uploads (synthetic text, id +3·10⁶ — their
-    * single frame collides with nothing). Deterministic string
-    * construction on both sides, mirrored literally by the oracle.
-    */
-  private def videoArrivals(docs: DataFrame): DataFrame = {
-    val nn = docs.filter(col("text").isNotNull)
-    val clips = nn.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-        concat_ws(" ", slice(split(col("text"), " "), 1,
-          2 * Cfg.paraBlockTokens)).as("text"))
-    val novel = nn.filter(col("doc_id") % 10 === 5)
-      .select((col("doc_id") + lit(3000000L)).as("doc_id"),
-        concat(lit("novel upload "), col("doc_id").cast("string")).as("text"))
-    clips.unionByName(novel)
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("e1_pipeline")(spark, "/root/testdata/sf0.001")
 
-  /** The A4 selected-headline table: one winner per key from the four
-    * provider×query candidate sets, via [[Recency.fallbackChain]]
-    * (news.py:344-397; per-provider name≻ticker at :74-86,225-239).
-    *
-    * The batch shadow of the reference's live providers over `events`:
-    *  - Google pool = click/view events inside the recency window (the
-    *    `when:3d` server-side filter, news.py:218,226); ordering is by the
-    *    STRING timestamp with unparseable→"" sorting oldest (N3,
-    *    news.py:288-291,319-330) — unparseable simulated as minute%10==0;
-    *  - NewsData pool = purchase/signup events inside the window with
-    *    unparseable rows DROPPED (news.py:163-167);
-    *  - the name-query relevance filter (title filter ON) is the
-    *    event_id%5 predicate; ticker queries take the whole pool.
-    *
-    * Shared by a4_fallback_chain, j5_attach_provenance, k6_reason_codes
-    * and e1_pipeline. Output: (user_id, headline_source, picked_event_id,
-    * pub_str) — one row per key that has any candidate.
-    */
-  def selectedHeadlines(s: SparkSession, dir: String, asOf: String): DataFrame =
-    // window pushed to the raw-nanos scan (see Tables.eventsInWindow) —
-    // semantically Recency.recencyWindow, physically partition-prunable
-    selectHeadlines(Tables.eventsInWindow(s, dir, asOf, Cfg.lookbackHours))
-
-  /** [[selectedHeadlines]] over already-windowed events, from ONE pass.
-    *
-    * The four candidate sets are a name query and a ticker query per
-    * provider, and the ticker pool contains the name pool: a relevant
-    * event is a candidate twice (`google` and `google_ticker`, or
-    * `newsdata` and `newsdata_ticker`), with the same `pub_str` and
-    * `event_id`. Its ticker copy can never win — the fallback chain ranks
-    * precedence before recency, and the name copy is the same row with
-    * better precedence. So each event is tagged ONCE, with its best
-    * source: the name query's if its title is relevant, the ticker
-    * query's otherwise. Per key the winner is unchanged — if any relevant
-    * event of a provider exists, the name source wins over the same set
-    * of rows as before; if none does, the ticker source holds every event
-    * of that provider, as before. One scan with a CASE tag replaces the
-    * 4-branch union of scans. OperatorsSpec checks it against the union
-    * form on random inputs.
-    */
-  private[graft] def selectHeadlines(inWindow: DataFrame): DataFrame = {
-    val unparseable = minute(col("ts")) % 10 === 0
-    val relevant = col("event_id") % 5 === 0
-    val google = col("event_type").isin("click", "view")
-    val newsd = col("event_type").isin("purchase", "signup") && !unparseable
-    val cands = inWindow.filter(google || newsd)
-      .withColumn("src",
-        when(google, when(relevant, lit("google")).otherwise(lit("google_ticker")))
-          .otherwise(when(relevant, lit("newsdata")).otherwise(lit("newsdata_ticker"))))
-      .withColumn("pub_str",
-        when(google && unparseable, lit(""))
-          .otherwise(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")))
-    Recency.fallbackChain(cands, Seq("user_id"), "src",
-        Seq("google", "google_ticker", "newsdata", "newsdata_ticker"),
-        Seq(col("pub_str").desc, col("event_id").desc))
-      .select(col("user_id"), col("src").as("headline_source"),
-        col("event_id").as("picked_event_id"), col("pub_str"))
-  }
-
-  /** T10: the news operator's "explain mode" (scripts/dump_news_debug.py:
-    * 83-157) — every candidate from the four provider×query combos,
-    * annotated with the selection flags instead of filtered, plus a
-    * SELECTED marker for the fallback-chain winner. This is the same
-    * candidate DataFrame as [[selectedHeadlines]] *without* the
-    * `row_number===1` filter (SURVEY.md §3 E3).
-    */
-  def debugCandidates(s: SparkSession, dir: String, asOf: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val inWindow =
-      col("ts") >= to_timestamp(lit(asOf)) - expr(s"INTERVAL ${Cfg.lookbackHours} HOURS") &&
-        col("ts") <= to_timestamp(lit(asOf))
-    val google = ev.filter(col("event_type").isin("click", "view"))
-    val newsd = ev.filter(col("event_type").isin("purchase", "signup"))
-    val tagged = google.withColumn("src", lit("google"))
-      .unionByName(google.withColumn("src", lit("google_ticker")))
-      .unionByName(newsd.withColumn("src", lit("newsdata")))
-      .unionByName(newsd.withColumn("src", lit("newsdata_ticker")))
-    val annotated = tagged.select(
-      col("user_id"), col("src"), col("event_id"),
-      (col("event_id") % 5 === 0).as("relevant_title"),
-      inWindow.as("in_72hr_window"),
-      col("src").isin("google", "newsdata").as("title_filter_applied"),
-      (minute(col("ts")) % 10 =!= 0).as("parseable_date"))
-    val winners = selectedHeadlines(s, dir, asOf).select(
-      col("user_id"), col("headline_source").as("src"),
-      col("picked_event_id").as("event_id"), lit(true).as("__w"))
-    annotated.join(broadcast(winners), Seq("user_id", "src", "event_id"), "left")
-      .withColumn("SELECTED", coalesce(col("__w"), lit(false)))
-      .drop("__w")
-  }
-
-  /** "Re-crawled" corpus for the dedup queries: documents twice, second
-    * copy with shifted ids — guarantees real duplicate groups.
-    */
-  private def recrawl(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    d.unionByName(d.withColumn("doc_id", col("doc_id") + 1000000))
-  }
-
-  /** Corpus-wide video frame-dup rollup (mm_frame_dedup, and the video
-    * signal of e9_av_curation): per-frame perceptual-hash signatures →
-    * one min-struct aggregate elects each signature's canonical
-    * occurrence → join-back marks duplicates → per-doc duplicated-frame
-    * fraction + keep verdict under `mmDupFrameMax`.
-    */
-  private def videoDupRollup(s: SparkSession, dir: String): DataFrame =
-    videoDupRollupFrom(Multimodal.attachVideoPayload(
-      Tables.documents(s, dir), Cfg.paraBlockTokens))
-
-  /** Rollup over an ALREADY-ATTACHED payload — e9/mm_profile attach the
-    * md5-per-block payload once and feed both this and the audio side
-    * (the block hashing is the query's most expensive narrow stage;
-    * computing it per-signal would double it).
-    */
-  private def videoDupRollupFrom(withPayload: DataFrame): DataFrame = {
-    val sigs = Multimodal.frameSignatures(withPayload)
-    val canon = sigs.groupBy(col("frame_sig"))
-      .agg(min(struct(col("doc_id"), col("frame_id"))).as("c"))
-    sigs.join(canon, Seq("frame_sig"))
-      .withColumn("is_dup",
-        !(col("doc_id") === col("c").getField("doc_id") &&
-          col("frame_id") === col("c").getField("frame_id")))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_frames"),
-        sum(when(col("is_dup"), lit(1L)).otherwise(lit(0L))).as("n_dup"))
-      .withColumn("dup_frac", Rounding.stable(
-        col("n_dup").cast("double") / col("n_frames"), 4))
-      .select(col("doc_id"), col("n_frames"), col("n_dup"),
-        col("dup_frac"),
-        (col("dup_frac") < lit(Cfg.mmDupFrameMax)).as("keep"))
-  }
-
-  /** Per-doc audio speech-window fraction (e9_av_curation's audio
-    * signal, mm_profile's per-format input) over an ALREADY-ATTACHED
-    * payload (shared with the video side — see [[videoDupRollupFrom]]):
-    * stable-rounded share of windows whose byte-energy clears
-    * `audioEnergyThreshold`.
-    */
-  private def speechFracPerDoc(withPayload: DataFrame): DataFrame =
-    Multimodal.audioWindows(withPayload)
-      .groupBy(col("doc_id"))
-      .agg(Rounding.stable(
-        sum(when(col("energy") >= lit(Cfg.audioEnergyThreshold.toLong),
-          lit(1.0)).otherwise(lit(0.0))) / count(lit(1)), 4)
-        .as("speech_frac"))
-
-  /** Deterministic PII fixture (ta_pii / e6): appends id-derived email /
-    * phone / IPv4 / mixed tokens to ~1/3, 1/4, 1/5, 1/7 of docs — the
-    * synthetic corpus has no natural PII, so the scrub stage's work is
-    * injected reproducibly; `piiInjectSql` is the SQL mirror. Requires a
-    * `doc_id` column in scope.
-    */
-  private def piiInject(textCol: Column): Column = concat(
-    textCol,
-    when(col("doc_id") % 3 === 0, concat(lit(" contact user"),
-      col("doc_id").cast("string"), lit("@example"),
-      (col("doc_id") % 7).cast("string"), lit(".com"))).otherwise(lit("")),
-    when(col("doc_id") % 4 === 0, concat(lit(" call 555-867-"),
-      lpad((col("doc_id") % 10000).cast("string"), 4, "0"))).otherwise(lit("")),
-    when(col("doc_id") % 5 === 0, concat(lit(" from 10."),
-      (col("doc_id") % 300).cast("string"), lit(".0.1"))).otherwise(lit("")),
-    when(col("doc_id") % 7 === 0,
-      lit(" id 555-123-4567@mail.example.org")).otherwise(lit("")))
-
-  /** SemDeDup (dedup_semantic / dedup_semantic_centroid): k-means
-    * clusters the paraphrase-augmented corpus, cosine pairs form only
-    * within (LSH bucket, cluster) cells, and `keep` picks the pair
-    * survivor — "min_id" drops the larger id (greedy, arrival-order
-    * keep); "centroid" drops the member FARTHER from its cluster
-    * centroid (standard SemDeDup's representativeness keep; 6-dp
-    * own-centroid cosine from the very Lloyd assignment that scoped the
-    * pair, ties to the lower id). Either way a doc pairing only with
-    * already-dropped docs is still dropped — cheaper than the
-    * transitive closure (dedup_clusters is the closure when canonical
-    * labels are needed). The Lloyd subtree is staged once and read by
-    * the pair join, the keep-rule joins, and the final flag.
-    */
-  private def semanticDedup(s: SparkSession, dir: String, keep: String): DataFrame = {
-    val base = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-    val para = base.select((col("vec_id") + 100000).as("vec_id"),
-      transform(col("v"),
-        (x, i) => when(i === 0, x + Cfg.semanticDelta).otherwise(x)).as("v"))
-    val corpus = base.unionByName(para)
-    val asg = Similarity.kmeans(corpus, "vec_id", "v",
-        k = Cfg.kmeansK, iters = Cfg.kmeansIters)
-      .localCheckpoint(eager = false)
-    val pairs = Similarity.cosineDedupPairs(
-      corpus.select(col("vec_id").as("id"), col("v").as("vecd"))
-        .join(asg.select(col("vec_id").as("id"), col("cluster_id")), Seq("id")),
-      Cfg.semanticThreshold, numPlanes = Cfg.cosNumPlanes,
-      extraKeys = Seq("cluster_id"), maxCell = Cfg.cosMaxCell)
-    val dropped = Similarity.semanticDrops(pairs, asg, keep)
-    asg.join(dropped.select(col("vec_id"), lit(1).as("__d")), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster_id"), col("__d").isNull.as("kept"))
-  }
-
-  /** The two snapshots the reconciliation queries compare: the live
-    * events table vs a deterministic "backfill" that drops every 97th
-    * event and perturbs every 101st value — so the operator must report
-    * exactly those keys. Row hashes compare integerized values
-    * (floor(value·1e4)); raw double rendering is not engine-stable.
-    */
-  private def reconcileInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val h = Reconcile.rowHash(col("user_id"), col("event_type"),
-      floor(col("value") * 10000).cast("long"))
-    val live = Tables.events(s, dir).select(col("event_id"), h.as("h"))
-    val backfill = Tables.events(s, dir)
-      .filter(col("event_id") % 97 =!= 0)
-      .withColumn("value",
-        when(col("event_id") % 101 === 0, col("value") + 1)
-          .otherwise(col("value")))
-      .select(col("event_id"), h.as("h"))
-    (live, backfill)
-  }
-
-  /** E1 — the full pipeline (engine.py:101-214) with the error-
-    * degradation channels parameterized: `newsFail` models a
-    * fetch_headline exception (row kept, DEFAULT headline, news=error
-    * in the log — engine.py:156-163), `sentFail` a sentiment.analyze
-    * exception (row kept, Neutral/0.0, sentiment=error —
-    * engine.py:165-173). e1_pipeline passes lit(false) for both (the
-    * healthy run, constant-folded away); e1_pipeline_degraded injects
-    * deterministic keyed failures so the degradation vocabulary is
-    * itself oracle-checked.
-    */
-  private def e1Pipeline(s: SparkSession, dir: String,
-      newsFail: org.apache.spark.sql.Column,
-      sentFail: org.apache.spark.sql.Column): DataFrame = {
-    val asOf = Cfg.asOf
-    val daily = Tables.events(s, dir)
-      .groupBy(col("user_id"), to_date(col("ts")).as("date"))
-      .agg(sum(col("value")).as("close"), count(lit(1)).as("volume"))
-    val withPct = PctChange.withPctChange(
-      daily, Seq("user_id"), Seq(col("date")), "close")
-    // calendar × keys ⋈ withPct, as a semi-join: every (user_id, date)
-    // key of withPct is a distinct user of events by construction, so
-    // the universe's only effect is to keep trading dates and drop null
-    // keys (a null never equi-joins)
-    val market = withPct.filter(col("user_id").isNotNull)
-      .join(broadcast(Calendar.tradingDates(s, Cfg.marketStart, Cfg.marketEnd)),
-        Seq("date"), "left_semi")
-      .filter(col("pct_change").isNotNull)
-    val head = selectedHeadlines(s, dir, asOf)
-      .withColumn("doc_id", pmod(col("picked_event_id"), lit(500)))
-      .join(Tables.documents(s, dir)
-        .select(col("doc_id"), substring(col("text"), 1, 60).as("headline_text")),
-        Seq("doc_id"), "left")
-      .select(col("user_id"), col("headline_source"), col("headline_text"))
-    val fund = AsOf.yoyAsOf(
-        Tables.orders(s, dir).select(col("o_custkey"), col("o_orderdate"),
-          col("o_totalprice"), col("o_orderkey")),
-        keyCol = "o_custkey", timeCol = "o_orderdate",
-        valueCol = "o_totalprice",
-        offsetMonths = 12, toleranceDays = 120, tiebreakCol = "o_orderkey")
-      .select(col("o_custkey").as("user_id"), col("yoy_pct"))
-    Sentiment.withAnalysis(
-      market
-        .join(head, Seq("user_id"), "left")
-        .join(fund, Seq("user_id"), "left")
-        .withColumn("Headline",
-          when(newsFail, lit(Sentiment.DefaultHeadline))
-            .otherwise(coalesce(col("headline_text"), lit(Sentiment.DefaultHeadline)))),
-      "Headline", "__s")
-      .select(
-        col("date").as("Date"),
-        col("user_id").as("Stock"),
-        col("pct_change").as("Pct_Change"),
-        col("volume").as("Volume"),
-        col("Headline"),
-        when(sentFail, lit("Neutral")).otherwise(col("__s.label"))
-          .as("Sentiment_Label"),
-        when(sentFail, lit(0.0)).otherwise(col("__s.score"))
-          .as("Sentiment_Score"),
-        col("yoy_pct").as("YoY_NetIncome_Pct"),
-        concat_ws(" | ",
-          lit("market=events"),
-          concat(lit("news="), when(newsFail, lit("error"))
-            .otherwise(coalesce(col("headline_source"), lit("default")))),
-          concat(lit("sentiment="), when(sentFail, lit("error"))
-            .otherwise(lit("lexicon"))),
-          concat(lit("fundamentals="),
-            when(col("yoy_pct").isNotNull, lit("orders"))
-              .otherwise(lit("unavailable")))).as("Data_Source_Log"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // G1 — trading-calendar generation (engine.py:248-263): sequence +
-    // explode + weekday filter; rows generated inside the engine.
-    "g1_trading_calendar" -> ((s, _) =>
-      Calendar.tradingDates(s, Cfg.calendarStart, Cfg.calendarEnd)),
-
-    // G2 — calendar × key-universe cross product (engine.py:98-105);
-    // tiny calendar side broadcast.
-    "g2_cross_universe" -> ((s, dir) =>
-      Calendar.universe(
-        Calendar.tradingDates(s, Cfg.calendarStart, Cfg.universeEnd),
-        Tables.events(s, dir).select(col("user_id")).distinct())),
-
-    // T3+T1/T2/T4/T5 — lag/pct-change over full history, range-filter
-    // AFTER the window (the Spark shape of the 10-day buffer, N6).
-    "t3_pct_change" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(
-        col("user_id"), col("event_id"), col("ts"),
-        col("value").cast(DoubleType).as("value"))
-      PctChange.withPctChange(
-          ev, Seq("user_id"), Seq(col("ts"), col("event_id")), "value")
-        .filter(col("ts") >= to_timestamp(lit(Cfg.historyStart)))
-        .select("user_id", "event_id", "ts", "value", "pct_change")
-    }),
-
-    // A1 — top-1 by recency per key (news.py:170-185): rank-1 window.
-    "a1_top1_recency" -> ((s, dir) =>
-      Recency.top1(Tables.events(s, dir), Seq("user_id"),
-          Seq(col("ts").desc, col("event_id").desc))
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("ts").as("last_ts"), col("value").as("last_value"))),
-
-    // A2/N3 — top-1 by *string* timestamp where unparseable times become
-    // "" and sort as oldest (news.py:288-291,319-330).
-    "a2_top1_string_recency" -> ((s, dir) =>
-      Recency.top1(
-          Tables.events(s, dir).withColumn("published_str",
-            when(col("event_type") === "error", lit(""))
-              .otherwise(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))),
-          Seq("user_id"),
-          Seq(col("published_str").desc, col("event_id").desc))
-        .select(col("user_id"), col("event_id").as("picked_event_id"),
-          col("published_str"))),
-
-    // T8 — recency-window predicate with a parameterized asOf
-    // (news.py:153,163-169) — never current_timestamp(). Uses the
-    // raw-column pushdown form; Recency.recencyWindow is the same
-    // predicate for already-typed timestamp columns (and streaming).
-    "t8_recency_window" -> ((s, dir) =>
-      Tables.eventsInWindow(s, dir, Cfg.recencyAsOf, Cfg.lookbackHours)
-        .select("event_id", "user_id", "ts", "event_type")),
-
-    // J1 — calendar×keys INNER join the fact: missing (key,date) rows are
-    // silently dropped (engine.py:130-146, N1).
-    "j1_calendar_inner_join" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("user_id"), to_date(col("ts")).as("date"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value")), 4).as("total_value"))
-      Calendar.universe(
-          Calendar.tradingDates(s, Cfg.calendarStart, Cfg.universeEnd),
-          Tables.events(s, dir).select(col("user_id")).distinct())
-        .join(daily, Seq("date", "user_id"), "inner")
-    }),
-
-    // J2+J3 — nullable dimension left-joins + coalesce default
-    // (engine.py:176-177, news_utils.py:120-131).
-    "j2_dim_left_join" -> ((s, dir) => {
-      val ordAgg = Tables.orders(s, dir)
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("spend"))
-      Tables.customer(s, dir)
-        .join(ordAgg, col("c_custkey") === col("o_custkey"), "left")
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"), "left")
-        .select(col("c_custkey"), col("c_name"),
-          coalesce(col("n_name"), lit("UNKNOWN")).as("nation_name"),
-          coalesce(col("cnt"), lit(0L)).as("n_orders"),
-          coalesce(col("spend"), lit(0.0)).as("total_spend"))
-    }),
-
-    // J4/A9/A10/N4 — as-of self-join with tolerance: latest order per
-    // customer vs the order nearest to one year earlier (market.py:111-135).
-    "j4_asof_tolerance" -> ((s, dir) =>
-      AsOf.yoyAsOf(
-        Tables.orders(s, dir)
-          .select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"),
-            col("o_orderkey")),
-        keyCol = "o_custkey", timeCol = "o_orderdate",
-        valueCol = "o_totalprice",
-        offsetMonths = 12, toleranceDays = 120, tiebreakCol = "o_orderkey")),
-
-    // J4c — the SAME nearest-quarter YoY semantics as j4_asof_tolerance,
-    // but through the native as-of join in NEAREST direction: the
-    // per-key latest row probes (target = latest − 12 months) against
-    // unique per-(key, date) totals; the merge walk picks the closer of
-    // the backward/forward neighbors, ties to the later date — exactly
-    // the reference's argmin over date-descending candidates
-    // (market.py:111-135). One shuffle per side, no per-key history
-    // fan-out; prev == 0 rejected after the pick (market.py:130-132).
-    "j4c_asof_nearest" -> ((s, dir) => {
-      val quarters = Tables.orders(s, dir)
-        .groupBy(col("o_custkey").as("k"), col("o_orderdate").as("t"))
-        .agg(Rounding.stable(sum(col("o_totalprice")), 2).as("v"))
-      val latest = {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("k")).orderBy(col("t").desc)
-        quarters.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col("k").as("lk"), col("t").as("cur_time"), col("v").as("cur_value"),
-            add_months(col("t"), -12).cast("timestamp").as("target_ts"))
-      }
-      AsOf.asOfJoin(latest,
-          quarters.select(col("k"), col("t").cast("timestamp").as("rt"), col("v")),
-          "lk", "k", "target_ts", "rt",
-          java.time.Duration.ofDays(120), "nearest")
-        .filter(col("v").isNotNull && col("v") =!= 0)
-        .select(col("lk").as("o_custkey"), col("cur_time"), col("cur_value"),
-          col("rt").cast("date").as("prev_time"), col("v").as("prev_value"),
-          Rounding.stable(
-            (col("cur_value") - col("v")) / abs(col("v")) * 100, 2).as("yoy_pct"))
-    }),
-
-    // A5–A8 — the validator as ONE multi-aggregate pass (validator.py:25-100).
-    "a5a8_validator" -> ((s, dir) =>
-      Validator.measure(Tables.lineitem(s, dir), Validator.Rules(
-        rangeCol = "l_discount", rangeMin = 0.0, rangeMax = 1.0,
-        nonNullCols = Seq("l_quantity", "l_extendedprice"),
-        nullRateCol = "l_tax", nullRateMax = 0.33))),
-
-    // T6 — corporate-suffix strip (news_utils.py:23-37). Company-name
-    // fixtures are built from the documents corpus (6 suffix variants,
-    // mixed case/punctuation) so the regex runs over real data.
-    "t6_suffix_strip" -> ((s, dir) => {
-      val variant = col("doc_id") % 6
-      val raw = concat(substring(col("text"), 1, 12),
-        when(variant === 0, lit(" Limited"))
-          .when(variant === 1, lit(" Ltd."))
-          .when(variant === 2, lit(", ltd"))
-          .when(variant === 3, lit(" CORPORATION"))
-          .when(variant === 4, lit(" Corp."))
-          .otherwise(lit(" corp  ")))
-      Tables.documents(s, dir).select(col("doc_id"), raw.as("raw_name"),
-        Text.stripSuffix(raw).as("stripped_name"))
-    }),
-
-    // T7 — title-relevance predicate (news_utils.py:40-79): standalone
-    // phrase match with the preceding-char-not-letter rule. The comma-
-    // rewritten title exercises the punctuation-prefix acceptance branch;
-    // the plain title only accepts at string start.
-    "t7_relevance" -> ((s, dir) => {
-      val lowerText = lower(col("text"))
-      val commaTitle = lower(regexp_replace(col("text"), lit(" "), lit(", ")))
-      Tables.documents(s, dir).select(col("doc_id"),
-        Text.relevantTitle(col("text"), "Hash Value Limited", "spark").as("relevant"),
-        Text.standaloneMatch(lowerText, "hash value").as("rel_name"),
-        Text.standaloneMatch(commaTitle, "spark").as("rel_comma_spark"),
-        Text.standaloneMatch(lowerText, "spark").as("rel_plain_spark"))
-    }),
-
-    // T7 (native expression) — the dynamic-name case: company name and
-    // ticker are per-row columns from a broadcast dimension, so the
-    // pattern is not plan-time foldable; the custom Catalyst expression
-    // (graft.expressions.RelevantTitle, with codegen + per-thread pattern
-    // cache) evaluates it without UDF boxing.
-    "t7_relevance_native" -> ((s, dir) => {
-      import s.implicits._
-      val dim = Seq(
-        ("HASHVAL", "Hash Value Limited"),
-        ("SPARKCO", "Spark Co"),
-        ("WINMERGE", "Window Merge Corp.")).toDF("ticker", "long_name")
-      Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .crossJoin(broadcast(dim))
-        .select(col("doc_id"), col("ticker"),
-          graft.expressions.RelevantTitle(
-            col("text"), col("long_name"), col("ticker")).as("relevant"))
-    }),
-
-    // T9 — empty-title filter (news.py:157-159,285-287); every 7th title
-    // is blanked so the predicate has real selectivity.
-    "t9_empty_title" -> ((s, dir) => {
-      val title = when(col("doc_id") % 7 === 0, lit("   ")).otherwise(col("text"))
-      Tables.documents(s, dir).select(col("doc_id"), title.as("title"))
-        .filter(Text.nonEmptyTitle(col("title")))
-        .select(col("doc_id"), substring(col("title"), 1, 40).as("title_prefix"))
-    }),
-
-    // M1 + T11/T12/T13 — deterministic sentiment scorer with the full
-    // analyze() contract (sentiment.py:73-159): default short-circuit,
-    // label canonicalization, signed 4-dp normalization. Every 11th doc
-    // carries the default placeholder, every 13th a blank headline.
-    "m1_sentiment" -> ((s, dir) => {
-      val headline = when(col("doc_id") % 11 === 0, lit(Sentiment.DefaultHeadline))
-        .when(col("doc_id") % 13 === 0, lit("  "))
-        .otherwise(col("text"))
-      Sentiment.withAnalysis(
-        Tables.documents(s, dir)
-          .select(col("doc_id"), headline.as("headline")), "headline", "s")
-        .select(col("doc_id"),
-          substring(col("headline"), 1, 30).as("headline_prefix"),
-          col("s.raw_label").as("raw_label"), col("s.raw_score").as("raw_score"),
-          col("s.label").as("label"), col("s.score").as("score"))
-    }),
-
-    // M1 through the inference seam: the same analyze() contract routed
-    // via SentimentInference.withBatchedAnalysis — per-partition model
-    // init + fixed-size batches, the mapPartitions shape a real
-    // ONNX/DJL FinBERT drops into (sentiment.py:100-140). Shares
-    // m1_sentiment's oracle: the two execution forms must hash
-    // identically.
-    "m1_sentiment_batched" -> ((s, dir) => {
-      val headline = when(col("doc_id") % 11 === 0, lit(Sentiment.DefaultHeadline))
-        .when(col("doc_id") % 13 === 0, lit("  "))
-        .otherwise(col("text"))
-      SentimentInference.withBatchedAnalysis(
-        Tables.documents(s, dir)
-          .select(col("doc_id"), headline.as("headline")),
-        "doc_id", "headline",
-        () => new SentimentInference.LexiconModel())
-        .select(col("doc_id"),
-          substring(col("headline"), 1, 30).as("headline_prefix"),
-          col("raw_label"), col("raw_score"), col("label"), col("score"))
-    }),
-
-    // A4/N8/N3 — the coalesce-fallback precedence chain as a live query
-    // (news.py:344-397): google name ≻ google ticker ≻ newsdata name ≻
-    // newsdata ticker, most-recent within the winning source.
-    "a4_fallback_chain" -> ((s, dir) =>
-      selectedHeadlines(s, dir, Cfg.asOf)),
-
-    // J5 + T14/N2 — attach the per-key selected headline to every date of
-    // the calendar universe (left + default-fill, engine.py:149-162) and
-    // assemble the pipe-delimited provenance column (engine.py:136-188).
-    // The selected-headline side is one row per key — small today, but
-    // NOT hint-forced: AQE broadcasts it from the RUNTIME size, so at
-    // 100× key cardinality the same plan degrades to a shuffle join
-    // instead of OOMing the driver (ExplainAuditSpec pins the runtime
-    // broadcast).
-    "j5_attach_provenance" -> ((s, dir) => {
-      val selected = selectedHeadlines(s, dir, Cfg.asOf)
-      Calendar.universe(
-          Calendar.tradingDates(s, Cfg.marketStart, Cfg.provenanceEnd),
-          Tables.events(s, dir).select(col("user_id")).distinct())
-        .join(selected, Seq("user_id"), "left")
-        .select(col("date"), col("user_id"),
-          coalesce(col("headline_source"), lit("default")).as("headline_source"),
-          when(col("picked_event_id").isNull, lit(Sentiment.DefaultHeadline))
-            .otherwise(concat(lit("event:"), col("picked_event_id"))).as("headline"),
-          concat_ws(" | ",
-            lit("market=events"),
-            concat(lit("news="), coalesce(col("headline_source"), lit("default"))),
-            lit("sentiment=lexicon")).as("data_source_log"))
-    }),
-
-    // E1 — the flagship end-to-end pipeline: the reference's whole batch
-    // run as ONE DataFrame DAG producing the 9-column PipelineRow schema
-    // (engine.py:62-112; header :33-37). Composition semantics per N1/N2:
-    //   daily market fact with full-history lag (T3/N6; first-ever day ⇒
-    //            row DROPPED, N1)
-    //   ⋉ semi   broadcast trading calendar — the calendar × keys (G2)
-    //            inner join, minus the cross product: the fact's keys
-    //            ARE the key universe, so only the date filter remains
-    //            (missing (key,date) ⇒ no row, N1)
-    //   ⟕ left   per-key selected headline + document text (A4+J5, N2) —
-    //            one row per key ⇒ AQE broadcasts from runtime size
-    //   ⟕ left   as-of YoY fundamentals (J4) — dimension ⇒ same; no
-    //            hard hint, so 100× key cardinality degrades to a
-    //            shuffle join instead of an OOM
-    //   → sentiment projection (M1/T11-T13), provenance (T14), rounding.
-    "e1_pipeline" -> ((s, dir) =>
-      e1Pipeline(s, dir, newsFail = lit(false), sentFail = lit(false))),
-
-    // E1d — fault-injection shadow of e1_pipeline: the engine-level
-    // error degradation the reference wraps in try/except around
-    // fetch_headline and sentiment.analyze (engine.py:156-173). A
-    // failed news fetch keeps the row with the DEFAULT headline and
-    // logs news=error; a failed scoring call keeps the row with
-    // Neutral/0.0 and logs sentiment=error — degrade, never drop.
-    // Failures are injected deterministically per key (provider outages
-    // are call-level, so a keyed predicate is the bounded-data stand-in)
-    // to make the degradation TOKEN VOCABULARY itself oracle-hashed;
-    // at scale a real try_-null scoring signal lands in the same
-    // branches.
-    "e1_pipeline_degraded" -> ((s, dir) =>
-      e1Pipeline(s, dir,
-        newsFail = pmod(col("user_id"), lit(11)) === 3,
-        sentFail = pmod(col("user_id"), lit(11)) === 7)),
-
-    // K6 — the structured-log reason taxonomy (README.md:191,
-    // news.py:131,274,400-405): one row per key in the degraded run's
-    // universe classifying its headline outcome —
-    //   INFRA_FAILURE: the provider call itself failed (the injected
-    //     outage, same `% 11 = 3` branch as e1_pipeline_degraded;
-    //     news.py's requests/feedparser exception paths);
-    //   COVERAGE_GAP: providers ran but no candidate survived the
-    //     filters (no selection row → default headline, news.py:404);
-    //   SOURCE_ISSUE: a candidate was selected but its content is
-    //     malformed (winner carries the unparseable-date '' pub_str —
-    //     the RSS bozo/parse-warning shape);
-    //   OK: healthy selection (the reference logs no reason code).
-    // Scale shape: universe ⟕ one-row-per-key selection (AQE runtime
-    // broadcast, same as j5) + a constant-folded CASE — no new shuffle.
-    "k6_reason_codes" -> ((s, dir) => {
-      val newsFail = pmod(col("user_id"), lit(11)) === 3
-      val sel = selectedHeadlines(s, dir, Cfg.asOf)
-      Tables.events(s, dir).select(col("user_id")).distinct()
-        .join(sel, Seq("user_id"), "left")
-        .select(col("user_id"),
-          when(newsFail, lit("error"))
-            .otherwise(coalesce(col("headline_source"), lit("default")))
-            .as("headline_source"),
-          when(newsFail, lit("INFRA_FAILURE"))
-            .when(col("picked_event_id").isNull, lit("COVERAGE_GAP"))
-            .when(col("pub_str") === "", lit("SOURCE_ISSUE"))
-            .otherwise(lit("OK")).as("reason"))
-    }),
-
-    // T10 — annotated candidate dump: the debug/explain view of the news
-    // selection (flags, no filtering; dump_news_debug.py:83-136).
-    "t10_debug_annotations" -> ((s, dir) =>
-      debugCandidates(s, dir, Cfg.asOf)),
-
-    // A3 — per-(key, query) counting aggregates over the debug frame
-    // (dump_news_debug.py:149-157).
-    "a3_debug_counts" -> ((s, dir) =>
-      debugCandidates(s, dir, Cfg.asOf)
-        .groupBy(col("user_id"), col("src"))
-        .agg(count(lit(1)).as("total_fetched"),
-          sum(when(col("relevant_title") && col("in_72hr_window") &&
-            col("parseable_date"), 1L).otherwise(0L)).as("relevant_in_window"))),
-
-    // ST1 — the streaming recency operator's batch shadow as an oracle
-    // query: windowedLatestAgg is the exact aggregation behind
-    // StreamingRecency.windowedLatest (minus the watermark, which only
-    // bounds lateness, not results) — so the DuckDB check pins the
-    // streaming semantics.
-    "st1_windowed_latest" -> ((s, dir) =>
-      graft.streaming.StreamingRecency.windowedLatestAgg(
-        Tables.events(s, dir)
-          .withColumn("headline", concat(lit("event:"), col("event_id"))),
-        "user_id", "ts", "headline", "1 day")),
-
-    // J4b — the native whole-operator as-of join (custom LogicalPlan →
-    // AsOfJoinStrategy → AsOfJoinExec via GraftExtensions): every daily
-    // close picks the latest order total of the same key within 30 days.
-    // One shuffle per side + a linear merge walk — no window stage, no
-    // per-key history fan-out.
-    "j4b_asof_native" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("user_id"), date_trunc("day", col("ts")).as("d_ts"))
-        .agg(Rounding.stable(sum(col("value")), 4).as("close"))
-      val ord = Tables.orders(s, dir)
-        .groupBy(col("o_custkey").as("o_key"),
-          col("o_orderdate").cast("timestamp").as("o_ts"))
-        .agg(Rounding.stable(sum(col("o_totalprice")), 2).as("o_total"))
-      AsOf.asOfJoin(daily, ord, "user_id", "o_key", "d_ts", "o_ts",
-          java.time.Duration.ofDays(30))
-        .select(col("user_id"), col("d_ts"), col("close"),
-          col("o_ts"), col("o_total"))
-    }),
-
-    // ST2 — stream-stream interval join, batch shadow: news attached to
-    // market rows of the same key with n_ts ∈ (m_ts − 24h, m_ts]. The
-    // streaming form (StreamingJoin.streamIntervalJoin) is this exact
-    // plan plus watermarks; the oracle pins the shared semantics.
-    "st2_interval_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val market = ev.select(col("user_id").as("m_key"),
-        col("ts").as("m_ts"), col("event_id").as("m_event_id"))
-      val news = ev.filter(pmod(col("event_id"), lit(97)) === 0)
-        .select(col("user_id").as("n_key"), col("ts").as("n_ts"),
-          concat(lit("event:"), col("event_id")).as("headline"))
-      graft.streaming.StreamingJoin
-        .intervalJoin(market, news, "m_key", "n_key", "m_ts", "n_ts", "24 hours")
-        .select(col("m_key").as("user_id"), col("m_event_id"),
-          col("m_ts"), col("n_ts"), col("headline"))
-    }),
-
-    // Sessionization — the canonical event-pipeline derivation: a new
-    // session starts after > 30 min of per-user inactivity; the session
-    // id is the running count of boundaries. One window shuffle on
-    // user_id shared by the lag and the running sum, then the groupBy
-    // re-uses the same hash partitioning — at 100 TB this is one
-    // exchange, not three. All outputs are integer-exact (counts,
-    // epoch-µs durations), so the oracle hash cannot wobble on float
-    // summation order.
-    "ev_sessionize" -> ((s, dir) =>
-      Sessions.aggregate(Tables.events(s, dir),
-        "user_id", "ts", Seq("event_id"), gapSeconds = 1800)),
-
-    // Trailing 24-hour range-frame window per user — rolling activity
-    // counts with an event-TIME frame (not row count), the shape behind
-    // rate limits and rolling features. The frame key is epoch-µs, so
-    // RANGE peers are identical across engines; count/min/max are
-    // order-free (no float-sum divergence inside the frame).
-    "ev_rolling_24h" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val dayUs = 24L * 3600 * 1000000
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(unix_micros(col("ts")))
-        .rangeBetween(-dayUs, 0)
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          count(lit(1)).over(w).as("n_24h"),
-          min(col("value")).over(w).as("min_24h"),
-          max(col("value")).over(w).as("max_24h"))
-    }),
-
-    // ST3 — Spark's native session_window (the streaming-capable
-    // sessionizer: the same expression runs under a watermark in append
-    // mode). Boundary semantics differ from ev_sessionize's lag form: a
-    // session extends [ts, ts+gap), so a NEW session starts at diff >=
-    // gap (ev_sessionize splits at diff > gap). The oracle derives the
-    // identical sessions independently with the lag construction at the
-    // >= boundary — pinning the builtin against first principles.
-    "st3_session_window" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          col("session_window.start").as("w_start"),
-          col("session_window.end").as("w_end"),
-          col("n_events"))),
-
-    // ST4 — batch shadow of StreamingDedup.exactWithinWatermark:
-    // first-seen-wins exact dedup over the re-crawled corpus with a
-    // deterministic event time (base copy at doc_id seconds past
-    // 2024-01-01, re-crawl one hour later), so the watermark operator's
-    // "emit each distinct text once" semantics get a hash-checked
-    // oracle row per distinct text.
-    "st4_dedup_scan" -> ((s, dir) => {
-      val withTs = recrawl(s, dir).withColumn("ts", timestamp_seconds(
-        lit(1704067200L) + (col("doc_id") % 1000000) +
-          expr("doc_id div 1000000") * 3600))
-      graft.streaming.StreamingDedup.firstSeenScan(withTs, "doc_id", "text", "ts")
-    }),
-
-    // ST5 — batch shadow of StreamingNearDedup.nearDupPairs: the same
-    // banding + signature-agreement estimate (matching positions / nSig
-    // ≥ 0.5) the streaming buckets apply, as a bounded-table scan the
-    // oracle re-derives from the shared minhash CTEs.
-    "st5_neardedup_scan" -> ((s, dir) =>
-      graft.streaming.StreamingNearDedup.nearDupPairsScan(
-        recrawl(s, dir), "doc_id", "text",
-        numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, minEstJaccard = 0.5,
-        maxBucket = Cfg.maxBucket)),
-
-    // ST6 — batch shadow of StreamingFunnel.stageAdvances: one advance
-    // row per (user, stage) via the secondary-sort scan, oracle-checked
-    // against the conditional-min-ts stage recurrence.
-    "st6_funnel_scan" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-        .as[graft.streaming.StreamingFunnel.IdEv]
-      graft.streaming.StreamingFunnel.stageAdvancesScan(
-        ev, Seq("view", "click", "purchase")).toDF()
-    }),
-
-    // ST7 — batch shadow of StreamingBars.bars: the SAME barsAgg the
-    // append-mode stream runs (6-hour tumbling candlesticks, min_by/
-    // max_by open/close on the (ts, event_id) struct), so backfill and
-    // live bars are pinned to one definition by the oracle.
-    "st7_bars_scan" -> ((s, dir) =>
-      graft.streaming.StreamingBars.barsAgg(
-        Tables.events(s, dir), "user_id", "ts", "value", "event_id", "6 hours")),
-
-    // ST8 — batch shadow of StreamingQuota.admitUpTo: first sourceCap
-    // arrivals per source (arrival = (ts, doc_id)); min-quota via the
-    // k-bounded aggregate on negated event-time micros, never a
-    // per-source window sort.
-    "st8_quota_scan" -> ((s, dir) => {
-      val withTs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      graft.streaming.StreamingQuota.admitScan(
-        withTs, "source", "doc_id", "ts", Cfg.sourceCap)
-    }),
-
-    // ST10 — batch shadow of StreamingContainment.collisions + the
-    // prescribed downstream aggregation: arrival-capped posting
-    // enrollment (first dfCap docs per shingle by (ts, doc_id) — the
-    // stream cannot retroactively drop a hot shingle like batch
-    // dedup_containment does), collisions between enrolled
-    // (earlier, later) pairs, containment = capped-collision count /
-    // contained side's shingle-set size, both directions.
-    "st10_containment_scan" -> ((s, dir) => {
-      val withTs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      graft.streaming.StreamingContainment.containmentScan(
-        withTs, "doc_id", "text", "ts",
-        Cfg.containmentDfCap, Cfg.containmentThreshold)
-    }),
-
-    // ST9 — batch shadow of StreamingParagraphDedup.firstSeenParagraphs
-    // + reassembly: each distinct paragraph admitted at first ARRIVAL
-    // (ts, doc, pos) over the re-crawled corpus with the st4 event-time
-    // layout (base copy at doc_id seconds past 2024-01-01, re-crawl one
-    // hour later). Arrival order INTERLEAVES by ts — base doc 4000
-    // arrives after re-crawl doc 1000005 — so the kept copies genuinely
-    // differ from batch dedup_paragraph's (doc, pos) rule, and the
-    // oracle pins exactly that divergence.
-    "st9_paragraph_scan" -> ((s, dir) => {
-      val withTs = recrawl(s, dir).withColumn("ts", timestamp_seconds(
-        lit(1704067200L) + (col("doc_id") % 1000000) +
-          expr("doc_id div 1000000") * 3600))
-      graft.streaming.StreamingParagraphDedup.firstSeenParagraphScan(
-        withTs, "doc_id", col("text"), "ts", Cfg.paraBlockTokens)
-    }),
-
-    // ST14 — batch shadow of StreamingSoftWeights.occurrenceWeights:
-    // the live SoftDeDup rule — every copy admitted with weight
-    // 1/arrival-rank of its content hash (batch dedup_soft weights the
-    // FINISHED cluster uniformly at 1/|cluster|; a stream can't see
-    // future copies, so mass is front-loaded instead — the scan pins
-    // that divergence). st9's arrival layout: re-crawl copies an hour
-    // after their originals.
-    "st14_soft_scan" -> ((s, dir) => {
-      val withTs = recrawl(s, dir).withColumn("ts", timestamp_seconds(
-        lit(1704067200L) + (col("doc_id") % 1000000) +
-          expr("doc_id div 1000000") * 3600))
-      graft.streaming.StreamingSoftWeights.occurrenceWeightScan(
-        withTs, "doc_id", col("text"), "ts")
-    }),
-
-    // ST15 — batch shadow of StreamingMatcher.matches: the standing
-    // BM25 query scored live against FROZEN calibration stats (a
-    // stateless narrow map — no state store, no watermark). The scan
-    // self-calibrates on the table it scores, so the oracle re-derives
-    // df/N/avgdl relationally and hashes identical matches.
-    "st15_match_scan" -> ((s, dir) => {
-      val withTs = Tables.documents(s, dir)
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      graft.streaming.StreamingMatcher.matchScan(withTs, "doc_id", "text",
-        "ts", Cfg.bm25Terms, Cfg.bm25K1, Cfg.bm25B, Cfg.matchThresholdU)
-    }),
-
-    // ST16 — batch shadow of StreamingBloom.screen: the live-ingest
-    // membership screen against the STATIC (w, m) filter table — the
-    // verdict computed by BloomHashes stream-static equi-joins folded
-    // into one AND projection (stateless, append-mode; the aggregate
-    // form would put unbounded doc keys in streaming state). Same
-    // fixture and columns as dedup_bloom/dedup_bloom_sharded, so all
-    // three forms — literal map, join+agg, stateless join chain — hash
-    // against the SAME oracle.
-    "st16_bloom_scan" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(col("text").isNotNull)
-      val batch = base.select((col("doc_id") + 1000000).as("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" novel "), col("doc_id").cast("string")))
-          .otherwise(col("text")).as("text"))
-      graft.streaming.StreamingBloom.screenScan(base, batch, "doc_id", "text",
-        math.max(Dedup.BloomWords.toLong, 4L * base.count()))
-    }),
-
-    // ST17 — batch shadow of StreamingBinaryScreen.screen: the live
-    // banded-binary candidate screen (multi-index Hamming probe as a
-    // stateless stream-static equi-join against the standing code/band
-    // postings — st16's discipline applied to the ANN side). Arrivals
-    // are bounded re-encodes of the base: ids %3==0 fully negated
-    // (novel — Hamming ~64, cut by the radius filter) and the rest
-    // with ONLY the first component's sign flipped (Hamming ≤ 1 —
-    // inside the pigeonhole radius, so the screen MUST surface them).
-    // One row per colliding band cell within hamming ≤ bands−1; no
-    // cross-band distinct (that dedup belongs to the bounded verify
-    // stage — a streaming distinct would be unbounded pair state).
-    // The base side comes from the STANDING index artifact
-    // ([[standingBinaryIndex]] — built once per corpus, scanned per
-    // micro-batch); inline ≡ prebuilt bit-for-bit, spec-pinned.
-    "st17_binary_scan" -> ((s, dir) => {
-      val emb = screenBase(s, dir)
-      graft.streaming.StreamingBinaryScreen.screen(screenArrivals(emb),
-        standingBinaryIndex(s, dir, emb),
-        bands = Cfg.binaryBands, maxHamming = Cfg.binaryBands - 1)
-    }),
-
-    // ST19 — stateless streaming video frame-reuse screen: arriving
-    // uploads decode into per-frame signatures (stateless per-partition
-    // flatMap) and stream-static join the STANDING df-capped posting
-    // index ([[standingFrameSigIndex]] — built once per corpus,
-    // frozen-layout append, measured df-drift gate). One row per
-    // (arrival frame, base posting) collision; no pair aggregation (an
-    // unbounded pair keyspace would be streaming state — scoring
-    // belongs to the bounded verify stage, e8's discipline). Clip
-    // re-uploads surface on every shared frame; novel uploads emit
-    // nothing; boilerplate emission is bounded at the source by the
-    // index's build-time cap.
-    "st19_video_scan" -> ((s, dir) =>
-      graft.streaming.StreamingVideoScreen.screen(
-        Multimodal.attachVideoPayload(
-          videoArrivals(Tables.documents(s, dir)), Cfg.paraBlockTokens),
-        standingFrameSigIndex(s, dir))),
-
-    // ST18 — stateless streaming twin of mm_audio_segments: each upload
-    // arrives WHOLE, so the gaps-and-islands fold happens inside the
-    // row (one flatMap — zero shuffle, zero state store, no watermark;
-    // the live plan is strictly narrower than the batch window form,
-    // whose per-doc sort exists only because batch fans the windows
-    // out as rows first). Bit-identical output by construction; shares
-    // the batch oracle (the st16 bloom discipline).
-    "st18_audio_scan" -> ((s, dir) =>
-      graft.streaming.StreamingAudioSegments.segments(
-        Multimodal.attachAudioPayload(Tables.documents(s, dir),
-          Cfg.paraBlockTokens),
-        Cfg.audioEnergyThreshold.toLong)),
-
-    // E8 — the daily-ingest admission flagship: the st17 banded screen
-    // composed with the bounded exact-verify stage it feeds, one DAG.
-    // Candidates (colliding band cells within the pigeonhole radius)
-    // are DISTINCT-collapsed to pairs — a batch aggregate the stream
-    // deliberately defers to exactly this stage — then ONLY those
-    // pairs' full-precision vectors are read for the 6-dp exact
-    // cosine (k·candidates rows, never |arrivals|·|base|); per
-    // arrival, the best match (cos DESC, lower base_id on ties) and
-    // the verdict: admit unless a match clears semanticThreshold —
-    // incremental SemDeDup against a standing corpus, the admission
-    // gate a 100 TB ingest runs on every micro-batch. Near twins
-    // (first-dim flip, cos ≈ 1) are rejected with their source as
-    // best match; negated arrivals generate zero candidates and admit.
-    "e8_ingest_screen" -> ((s, dir) => {
-      val emb = screenBase(s, dir)
-      val arrivals = screenArrivals(emb)
-      val cand = graft.streaming.StreamingBinaryScreen.screen(arrivals,
-          standingBinaryIndex(s, dir, emb), bands = Cfg.binaryBands,
-          maxHamming = Cfg.binaryBands - 1)
-        .select(col("new_id"), col("base_id")).distinct()
-      val av = arrivals.select(col("id").as("new_id"), col("vec").as("a_v"))
-      val bv = emb.select(col("id").as("base_id"), col("vec").as("b_v"))
-      val scored = cand.join(bv, Seq("base_id")).join(broadcast(av), Seq("new_id"))
-        .withColumn("cos", round(Similarity.cosine(col("a_v"), col("b_v")), 6))
-      // argmax by (cos desc, base_id asc) via one min-struct aggregate
-      val best = scored.groupBy(col("new_id"))
-        .agg(min(struct((lit(0.0) - col("cos")).as("nc"),
-            col("base_id").as("b"))).as("m"),
-          count(lit(1)).as("n_cand"))
-        .select(col("new_id"), col("n_cand"), col("m.b").as("best_id"),
-          (lit(0.0) - col("m.nc")).as("best_cos"))
-      arrivals.select(col("id").as("new_id")).join(best, Seq("new_id"), "left")
-        .select(col("new_id").as("id"),
-          coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-          coalesce(col("best_id"), lit(-1L)).as("best_id"),
-          coalesce(col("best_cos"), lit(0.0)).as("best_cos"),
-          (coalesce(col("best_cos"), lit(0.0)) < lit(Cfg.semanticThreshold))
-            .as("admit"))
-    }),
-
-    // E9 — the cross-modal curation flagship: one admission verdict per
-    // upload from three independent per-doc modality signals — (1) text
-    // heuristic quality, (2) corpus-wide duplicated-video-frame
-    // fraction (the shared videoDupRollup), (3) audio speech-window
-    // fraction — folded through a k6-style first-failure reason-code
-    // chain (low_quality → dup_video → low_speech → ok). Each signal is
-    // per-doc bounded (the only corpus-wide exchange is the frame-sig
-    // canonical election inside the rollup); the three joins are all
-    // doc_id-keyed co-partitioned hash joins, so at 100 TB the whole
-    // verdict is one frame-sig shuffle plus doc-keyed merges — no
-    // signal ever shuffles another's intermediate state.
-    "e9_av_curation" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      val tq = docs.select(col("doc_id"), q("quality").as("quality"))
-      // ONE payload attach feeds both binary-plane signals — the
-      // md5-per-block hashing is the query's most expensive narrow
-      // stage, and the audio payload IS the video payload. The lazy
-      // checkpoint is what actually shares it: un-cached subplans are
-      // re-evaluated per join branch (three consumers here), and the
-      // materialization measured 1.44 s → 1.0 s solo at sf0.1.
-      val pay = Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens)
-        .localCheckpoint(false)
-      val vid = videoDupRollupFrom(pay).select(col("doc_id"), col("dup_frac"))
-      val aud = speechFracPerDoc(pay)
-      tq.join(vid, Seq("doc_id")).join(aud, Seq("doc_id"))
-        .withColumn("reason",
-          when(col("quality") < lit(Cfg.avQualityMin), "low_quality")
-            .when(col("dup_frac") >= lit(Cfg.mmDupFrameMax), "dup_video")
-            .when(col("speech_frac") < lit(Cfg.avSpeechFracMin), "low_speech")
-            .otherwise(lit("ok")))
-        .select(col("doc_id"), col("quality"), col("dup_frac"),
-          col("speech_frac"), col("reason"),
-          (col("reason") === "ok").as("keep"))
-    }),
-
-    // ST11 — batch shadow of StreamingSpans.firstSeenWindows + the span
-    // merge: dedup_spans' boilerplate fixture with st8's arrival layout
-    // (doc_id seconds past 2024-01-01), every window occurrence EXCEPT
-    // its hash's first arrival a hit. The arrival-earliest copy of each
-    // boilerplate phrase reads clean here while batch dedup_spans flags
-    // all copies — the oracle pins exactly that divergence.
-    "st11_spans_scan" -> ((s, dir) => {
-      val boiler = concat(col("text"),
-        when(col("doc_id") % 3 === 0, lit(
-          " subscribe to our newsletter for the latest updates and follow us on all social media platforms today"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 0, lit(
-          " this article is for informational purposes only and not professional advice"))
-          .otherwise(lit("")))
-      val withTs = Tables.documents(s, dir)
-        .select(col("doc_id"), boiler.as("text"))
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      graft.streaming.StreamingSpans.firstSeenSpanScan(
-        withTs, "doc_id", col("text"), "ts", Cfg.spanWindowTokens)
-    }),
-
-    // ST12 — batch shadow of StreamingMix.admitToTargets: per-source
-    // √-temperature document targets frozen from the corpus's own counts
-    // (ta_mix_temperature's skewed head/mid/tail fixture), admission =
-    // first target_s arrivals per source by (ts, doc_id). Bounded
-    // output: at most mixBudget rows at any corpus size.
-    "st12_mix_scan" -> ((s, dir) => {
-      val withTs = Tables.documents(s, dir).select(
-          when(col("doc_id") % 2 === 0, "head")
-            .when(col("doc_id") % 4 === 1, "mid")
-            .when(col("doc_id") % 8 === 3, "tail_a")
-            .otherwise("tail_b").as("source"),
-          col("doc_id"))
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      graft.streaming.StreamingMix.mixAdmitScan(
-        withTs, "source", "doc_id", "ts", Cfg.mixBudget)
-    }),
-
-    // Unicode NFC canonicalization over the corpus (native codegen'd
-    // nfc_normalize vs DuckDB's nfc_normalize — both UAX #15): every
-    // 3rd doc gets a DECOMPOSED accent suffix, every 3rd+1 the
-    // precomposed spelling; after NFC both tails are byte-identical and
-    // the combining marks collapse (len_raw − len_norm counts them).
-    "ta_normalize" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        when(col("doc_id") % 3 === 0, lit(" cafe\u0301 nai\u0308ve")) // decomposed
-          .when(col("doc_id") % 3 === 1, lit(" caf\u00e9 na\u00efve")) // precomposed
-          .otherwise(lit("")))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), injected.as("raw"))
-        .select(col("doc_id"), col("raw"),
-          graft.expressions.NfcNormalize(col("raw")).as("norm"))
-        .select(col("doc_id"),
-          substring(col("norm"), -12, 12).as("tail_norm"),
-          length(col("raw")).as("len_raw"),
-          length(col("norm")).as("len_norm"),
-          (length(col("raw")) - length(col("norm"))).as("combining_removed"))
-    }),
-
-    // QA — snapshot reconciliation: the one-row verdict (matched /
-    // changed / missing / extra) of the deterministic backfill against
-    // the live table. One narrow (key, hash) projection per side, one
-    // co-partitioned full-outer join, partial-aggregated counts.
-    "qa_reconcile" -> ((s, dir) => {
-      val (live, backfill) = reconcileInputs(s, dir)
-      Reconcile.counts(live, backfill, "event_id")
-    }),
-
-    // QA — the per-key attribution form: exactly the diverged keys with
-    // their classification (the rows an on-call engineer actually reads).
-    "qa_reconcile_diff" -> ((s, dir) => {
-      val (live, backfill) = reconcileInputs(s, dir)
-      Reconcile.diff(live, backfill, "event_id")
-    }),
-
-    // Bucketed rolling aggregation — the 100 TB companion to
-    // ev_rolling_24h: pre-aggregate events to (user, hour) buckets,
-    // then roll a 24-BUCKET range frame over the hourly counts. The
-    // window shuffle carries |users × active hours| rows instead of
-    // |events|, and each frame folds ≤ 24 partials instead of
-    // thousands of raw rows — sliding features at scale are computed
-    // this way, with ev_rolling_24h's exact per-event form as the
-    // fine-grained twin (same trade as brute-force vs LSH ANN).
-    "ev_rolling_bucketed" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("user_id"),
-          expr("unix_micros(ts) div 3600000000").as("hour_bucket"))
-        .agg(count(lit(1)).as("n_events"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("hour_bucket")).rangeBetween(-23, 0)
-      hourly.select(col("user_id"), col("hour_bucket"), col("n_events"),
-        sum(col("n_events")).over(w).as("n_24h"))
-    }),
-
-    // The ranking/distribution window-function family in one pass —
-    // ntile, percent_rank, cume_dist, first_value, nth_value, lead over
-    // a single (user_id)-partitioned sort, so one exchange serves all
-    // six. Order key (value, event_id) is unique per user: rank-based
-    // distributions are tie-free and deterministic in both engines.
-    "ev_window_funcs" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("value"), col("event_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("value"),
-          ntile(4).over(w).as("quartile"),
-          Rounding.stable(percent_rank().over(w), 6).as("pct_rank"),
-          Rounding.stable(cume_dist().over(w), 6).as("cume"),
-          first_value(col("event_id")).over(w).as("smallest_event"),
-          nth_value(col("event_id"), 2).over(w).as("second_event"),
-          lead(col("event_id"), 1).over(w).as("next_event"))
-    }),
-
-    // Corpus profile with ROLLUP — per (lang, source), per lang, and
-    // grand-total doc/char counts in ONE pass: the Expand operator
-    // replicates each row once per grouping set BEFORE the partial
-    // aggregate, so the exchange carries 3 aggregate rows per group,
-    // not 3 scans of the corpus (what three separate queries would
-    // cost). Counts and integer char sums only — hash-exact.
-    "ta_profile_rollup" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .rollup(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          max(col("n_chars")).as("max_chars"))),
-
-    // Source × language pivot — doc counts with the languages as
-    // columns. Pivot values passed EXPLICITLY: without them Spark runs
-    // an extra distinct scan to discover the columns (a full pass at
-    // 100 TB) and the schema becomes data-dependent. With them the
-    // pivot is one CASE-based partial aggregate — same shuffle as a
-    // plain groupBy(source). Empty cells filled to 0 to match the
-    // oracle's FILTER counts.
-    "ta_pivot_langs" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .pivot("lang", Seq("de", "en", "es", "fr", "zh"))
-        .count()
-        .na.fill(0L)),
-
-    // Incremental dedup: the daily-ingest form — near-dup pairs between a
-    // new batch (re-crawl copy, shifted ids) and the base corpus only;
-    // candidate volume is proportional to the BATCH, not the history.
-    "dedup_incremental" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val batch = base.withColumn("doc_id", col("doc_id") + 1000000)
-      // per side, ONE lazily-checkpointed tokenize+md5 pass shared by
-      // banding and the verify join
-      Dedup.minhashPairsBetween(batch, base, "doc_id", "text",
-        numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-        newSh = Some(Dedup.shingleFrame(batch, "doc_id", "text").localCheckpoint(true)),
-        baseSh = Some(Dedup.shingleFrame(base, "doc_id", "text").localCheckpoint(true)))
-    }),
-
-    // Decontamination: flag corpus docs sharing word-3-gram shingles with
-    // a benchmark/eval set (docs < 20 stand in for the eval suite) — the
-    // overlap check every training-data pipeline runs before release.
-    // The benchmark shingle set is tiny → broadcast; the corpus side is
-    // an explode + map-side join + partial-agg count, no corpus shuffle
-    // beyond the per-doc counts.
-    "ta_decontam" -> ((s, dir) => {
-      val sh = Dedup.shingleFrame(Tables.documents(s, dir), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-      val bench = sh.filter(col("doc_id") < 20)
-        .select(explode(col("sh")).as("g")).distinct()
-      sh.filter(col("doc_id") >= 20)
-        .select(col("doc_id"), explode(col("sh")).as("g"))
-        .join(broadcast(bench), Seq("g"))
-        .groupBy(col("doc_id"))
-        .agg(count_distinct(col("g")).as("contaminated_grams"))
-    }),
-
-    // Duplicate clusters: transitive closure of the minhash near-dup
-    // pairs by min-label propagation — the canonicalization step after
-    // pair generation (a≈b≈c groups a,c even when (a,c) never banded).
-    "dedup_clusters" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      // lazily-checkpointed signatures shared by both band-join sides
-      // (sigs, not the fatter shingleFrame — see dedup_minhash)
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = true)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig))
-        .select(col("doc_a"), col("doc_b"))
-      Dedup.duplicateClusters(corpus.select(col("doc_id").as("id")), pairs)
-        .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-    }),
-
-    // Split manifest — the per-split size/token-mass report a training
-    // pipeline writes next to its split assignment: one narrow map +
-    // one 3-row aggregate over the stable content-keyed cutoffs.
-    "ta_split_stats" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(Sampling.splitAssign(col("doc_id"),
-            Cfg.splitTrainPct, Cfg.splitValPct).as("split"),
-          size(split(col("text"), " ")).cast("long").as("__n"),
-          col("n_chars"))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("__n")).as("ws_tokens"),
-          sum(col("n_chars")).as("chars"))),
-
-    // Train/test split leakage screen — the contamination check every
-    // LLM pipeline owes its held-out sets: docs split by the stable
-    // content-keyed hash, then the verified near-dup pairs grouped by
-    // the (unordered) split pair they connect. Any off-diagonal row is
-    // a near-duplicate leaking across a split boundary (the re-crawl's
-    // copies land in different splits by construction, so the screen
-    // provably has work). Cost = the minhash pair generation everything
-    // else shares + one tiny aggregate.
-    "ta_split_leakage" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = true)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
-          threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig))
-        .select(col("doc_a"), col("doc_b"))
-      val sa = Sampling.splitAssign(col("doc_a"), Cfg.splitTrainPct, Cfg.splitValPct)
-      val sb = Sampling.splitAssign(col("doc_b"), Cfg.splitTrainPct, Cfg.splitValPct)
-      pairs
-        .select(least(sa, sb).as("split_lo"), greatest(sa, sb).as("split_hi"))
-        .groupBy(col("split_lo"), col("split_hi"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("leaks", col("split_lo") =!= col("split_hi"))
-    }),
-
-    // SEMANTIC split leakage — the embedding-space upgrade of
-    // ta_split_leakage's n-gram screen (surface decontamination misses
-    // paraphrases and re-encodes; semantic contamination between train
-    // and held-out is what actually inflates evals): the verified
-    // bucketed-cosine pair frame (dedup_embedding's, ≥0.99 within LSH
-    // cells) grouped by the unordered split pair its endpoints' stable
-    // hash slots land in. Off-diagonal rows = semantically-duplicate
-    // vectors straddling a held-out boundary. Cost = the LSH-bucketed
-    // pair generation (never all-pairs) + one tiny aggregate.
-    "ta_split_leakage_semantic" -> ((s, dir) => {
-      val base = Tables.embeddings(s, dir).select(col("vec_id").as("id"),
-        Similarity.asDouble(col("embedding")).as("vecd"))
-      val reencoded = base.select((col("id") + 100000).as("id"),
-        transform(col("vecd"), x => x * lit(1.5)).as("vecd"))
-      val pairs = Similarity.cosineDedupPairs(base.unionByName(reencoded),
-          threshold = 0.99, numPlanes = Cfg.cosNumPlanes, maxCell = Cfg.cosMaxCell)
-        .select(col("vec_a"), col("vec_b"))
-      val sa = Sampling.splitAssign(col("vec_a"), Cfg.splitTrainPct, Cfg.splitValPct)
-      val sb = Sampling.splitAssign(col("vec_b"), Cfg.splitTrainPct, Cfg.splitValPct)
-      pairs
-        .select(least(sa, sb).as("split_lo"), greatest(sa, sb).as("split_hi"))
-        .groupBy(col("split_lo"), col("split_hi"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("leaks", col("split_lo") =!= col("split_hi"))
-    }),
-
-    // Incremental centroid REFRESH — the remediation half of the drift
-    // story (sim_centroid_drift monitors, this repairs): the union of
-    // base + a shifted ingest is assigned ONE pass against the FROZEN
-    // base centroids (zero-shuffle literal argmax) and the centroids
-    // take ONE fixed-point update — the mini-batch/streaming-kmeans
-    // maintenance move that absorbs mild drift without a full retrain.
-    // Output per centroid: assignment count and how far it moved
-    // (6-dp squared L2, exact micro-unit arithmetic underneath) —
-    // movement above threshold = schedule the real retrain.
-    "sim_centroid_refresh" -> ((s, dir) => {
-      val base = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-        .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-      val ingest = base.select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("v"),
-          (x, i) => when(i === 0, x + Cfg.semanticDelta).otherwise(x)).as("v"))
-      val union = base.unionByName(ingest)
-      val cents = Similarity.collectCentroids(Similarity.trainedCentroids(
-        base, "vec_id", "v", k = Cfg.kmeansK, iters = Cfg.kmeansIters))
-      val asg = union.select(col("vec_id"), col("v"),
-        Similarity.nearestCentroidId(col("v"), cents).as("cid"))
-      val refreshed = Similarity.labelCentroids(asg, "cid", "v")
-        .select(col("clabel").as("cid"), col("cv"))
-      val counts = asg.groupBy(col("cid")).agg(count(lit(1)).as("n_assigned"))
-      val oldCv = cents.foldLeft(lit(null).cast("array<double>")) {
-        case (acc, (cid, cv)) => when(col("cid") === cid, typedLit(cv)).otherwise(acc)
-      }
-      refreshed.join(counts, Seq("cid"))
-        .select(col("cid"), col("n_assigned"),
-          Rounding.stable(Similarity.l2sq(col("cv"), oldCv), 6).as("movement_sq"))
-    }),
-
-    // Graph-propagated quality smoothing: near-dup copies carry
-    // independently-noisy quality estimates; two floor-mean consensus
-    // rounds over the verified minhash graph pull duplicate groups
-    // toward agreement (the similarity-graph label-smoothing move).
-    // Integer micro-units end-to-end; the propagation is the
-    // duplicateClusters join shape with means instead of minima.
-    "ta_quality_smooth" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      // EAGER (r22): the band self-join's two sides race to compute
-      // lazy sig blocks on the broadcast pool (see OPTIMIZATION_r22)
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = true)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
-          threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig))
-        .select(col("doc_a"), col("doc_b"))
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      // fanned (r22): the quality kernel otherwise rides the 2-split
-      // recrawl scan and is evaluated per consumer of round 1's frame
-      // (JobProfile: twin 2-task ~600 ms-CPU Union scan stages)
-      val scores = Fan.out(corpus.filter(col("text").isNotNull))
-        .select(col("doc_id").as("id"),
-          round(q("quality") * 10000).cast("long").as("q_u"))
-      Dedup.qualitySmooth(scores, pairs, rounds = Cfg.smoothRounds)
-        .select(col("id").as("doc_id"), col("q_u"),
-          Rounding.stable(col("q_u") / 10000.0, 4).as("quality_smooth"))
-    }),
-
-    // SoftDeDup (Xue et al. 2024): duplicates are REWEIGHTED, not
-    // dropped — every doc keeps sampling weight 1/|cluster| over the
-    // same minhash closure dedup_clusters computes, so each duplicate
-    // group contributes total mass 1 to the training mix while unique
-    // docs keep weight 1. Sizing the clusters is one count aggregate +
-    // one label-keyed join on top of the closure — nothing pairwise.
-    "dedup_soft" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = true)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig))
-        .select(col("doc_a"), col("doc_b"))
-      Dedup.softWeights(corpus.select(col("doc_id").as("id")), pairs)
-        .select(col("id").as("doc_id"), col("cluster_id"),
-          col("cluster_size"), col("weight"))
-    }),
-
-    // ANN recall measurement: per-query fraction of the exact top-3
-    // recovered by the LSH-bucketed index, single-probe AND multi-probe
-    // side by side — "measure, don't guess" as a first-class query (the
-    // numbers that justify bits/planes/probes choices, and the lift
-    // multi-probe buys over one bucket).
-    "sim_lsh_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, 3).select(col("q_id"), col("c_id"))
-      val lsh = Similarity.topKLsh(q, emb, 3)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      val mp = Similarity.topKLshMultiProbe(q, emb, 3)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit_mp"))
-      brute.join(lsh, Seq("q_id", "c_id"), "left")
-        .join(mp, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / 3, 4).as("recall"),
-          count(col("__hit_mp")).as("hits_mp"),
-          Rounding.stable(count(col("__hit_mp")).cast("double") / 3, 4).as("recall_mp"))
-    }),
-
-    // IVF recall gate: per-query fraction of the exact top-3 recovered
-    // by the trained-codebook probe — the measured defense of the k=8
-    // Lloyd codebook + nProbe=2 configuration (VERDICT r11 #6's
-    // "recall gates not degraded", as a first-class query).
-    "sim_ivf_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, 3).select(col("q_id"), col("c_id"))
-      val codebook = Similarity.collectCentroids(Similarity.trainedCentroids(
-        emb, "id", "vec", k = 8, iters = Cfg.kmeansIters))
-      val ivf = Similarity.topKIvfWith(q, emb, k = 3,
-          centroids = codebook, nProbe = 2)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(ivf, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / 3, 4).as("recall"))
-    }),
-
-    // Multi-probe LSH ANN: the query probes its own sign-bit bucket
-    // plus every Hamming-1 neighbor — the standard recall repair when
-    // one hyperplane disagreement hides a true neighbor. The fan-out
-    // multiplies only the broadcast query side; the corpus stays
-    // bucketed once, joined on equality (never a cross product).
-    "sim_lsh_mp_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.topKLshMultiProbe(emb.filter(col("id") < 5), emb, k = 3)
-    }),
-
-    // Hard-negative mining for contrastive training: per anchor, the
-    // most similar corpus vectors with a DIFFERENT label, candidates
-    // from the multi-probe LSH buckets (partial recall by design, like
-    // the ANN queries). The label-mismatch filter rides the bucket
-    // join; same id never appears (same id ⇒ same label).
-    "sim_hard_negatives" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"),
-          col("label"))
-      Similarity.hardNegatives(emb.filter(col("id") < 5), emb, k = 3)
-    }),
-
-    // kNN-vote weak labeling: majority label among the 5 brute nearest
-    // neighbors, ties to the lower label; argmax via one min-struct
-    // aggregate, never a window over the vote table.
-    "sim_knn_label" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"),
-          col("label"))
-      Similarity.knnClassify(emb.filter(col("id") < 20), emb, k = 5)
-    }),
-
-    // E2 — the acceptance query: the reference's validator run over the
-    // full pipeline output as ONE composed plan (validator.py:25-100 over
-    // engine.py's CSV; here over the e1 DAG directly — no materialization
-    // between pipeline and gate).
-    "e2_validate_pipeline" -> ((s, dir) =>
-      Validator.measure(queries("e1_pipeline")(s, dir), Validator.Rules(
-        rangeCol = "Sentiment_Score", rangeMin = -1.0, rangeMax = 1.0,
-        nonNullCols = Seq("Pct_Change", "Volume"),
-        nullRateCol = "YoY_NetIncome_Pct", nullRateMax = 0.5))),
-
-    // Skew-tolerant two-phase aggregation (salting): identical result to
-    // a direct groupBy, but a hot key spreads over 8 reducers first.
-    "salted_agg" -> ((s, dir) =>
-      Salting.saltedSumCount(Tables.lineitem(s, dir),
-        keys = Seq("l_returnflag"), valueCol = "l_quantity",
-        saltCol = "l_orderkey", saltBuckets = 8)),
-
-    // ── LLM-data-pipeline pillar (graft-native extensions) ──────────────
-
-    // Embedding-cosine near-dup: LSH sign-bit buckets → within-bucket
-    // exact cosine ≥ 0.99. The corpus carries planted re-encoded copies
-    // (scaled vectors) — scale-invariant sign patterns guarantee the
-    // bucketing never misses them.
-    "dedup_embedding" -> ((s, dir) => {
-      val base = Tables.embeddings(s, dir).select(col("vec_id").as("id"),
-        Similarity.asDouble(col("embedding")).as("vecd"))
-      val reencoded = base.select((col("id") + 100000).as("id"),
-        transform(col("vecd"), x => x * lit(1.5)).as("vecd"))
-      Similarity.cosineDedupPairs(base.unionByName(reencoded), threshold = 0.99,
-        numPlanes = Cfg.cosNumPlanes, maxCell = Cfg.cosMaxCell)
-    }),
-
-    // SemDeDup: dedup by MEANING — k-means clusters the corpus, cosine
-    // pairs form only within (cluster, LSH bucket), and each vector is
-    // dropped when it pairs with a smaller id (greedy min-id keep: a
-    // doc pairing ONLY with already-dropped docs is still dropped —
-    // cheaper than the transitive closure and the standard SemDeDup
-    // rule; dedup_clusters is the closure when canonical labels are
-    // needed). Corpus = embeddings ∪ deterministic "paraphrases"
-    // (first component + delta, cos ≈ 0.98 on the unit-norm corpus).
-    // The Lloyd subtree is staged once and read by both the pair join
-    // and the final keep flag.
-    "dedup_semantic" -> ((s, dir) => semanticDedup(s, dir, Cfg.semanticKeep)),
-
-    // Standard-SemDeDup keep rule over the SAME pair frame: within each
-    // qualifying pair the member CLOSEST to its cluster centroid
-    // survives (6-dp own-centroid cosine from the Lloyd assignment;
-    // ties keep the lower id) — representativeness-keep where
-    // dedup_semantic's min-id keep is arrival-order-keep.
-    "dedup_semantic_centroid" -> ((s, dir) => semanticDedup(s, dir, "centroid")),
-
-    // Exact dedup: hash-groupBy over a "re-crawled" corpus (documents ∪
-    // documents with shifted ids) — every text appears ≥2×, so the
-    // operator works against real duplicates, not a vacuous distinct.
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exact(recrawl(s, dir), "doc_id", "text")),
-
-    // Paragraph-level dedup + reassembly: fixed-block "paragraphs" over
-    // the re-crawled corpus keep only their first (lowest doc_id,
-    // lowest position) occurrence; each doc is rebuilt from its
-    // survivors in order — the sub-document pass that strips
-    // cross-document boilerplate whole-doc dedup cannot see. The
-    // re-crawl copy reduces to clean_text = "" (degrade, not drop).
-    "dedup_paragraph" -> ((s, dir) =>
-      Dedup.paragraphDedup(recrawl(s, dir), "doc_id", col("text"),
-        Cfg.paraBlockTokens)),
-
-    // Bloom-filter membership screen for incremental dedup: the base
-    // corpus compresses to a 65,536-bit filter (one bit_or aggregate,
-    // n/8 bytes) that the probe side reads as a broadcast literal —
-    // pure narrow map work, no join against the base. A batch doc
-    // flagged maybe_in_base goes to exact verification; a clean miss
-    // skips it (no false negatives by construction). The md5-derived
-    // bits make even the false positives deterministic, so is_fp is an
-    // oracle-checked MEASURED error rate, not a guess. Batch fixture:
-    // re-crawl copies (true dups) + every 3rd doc mutated (novel).
-    "dedup_bloom" -> ((s, dir) => {
-      // isNotNull, like every dedup operator: a NULL text would
-      // null-propagate through bloomMaybeContains while the oracle's
-      // bool_and over unnested positions yields false — a latent
-      // cross-engine mismatch the guard closes (mirrored in the oracle).
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(col("text").isNotNull)
-      val batch = base.select((col("doc_id") + 1000000).as("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" novel "), col("doc_id").cast("string")))
-          .otherwise(col("text")).as("text"))
-      // corpus-scaled filter: 128 bits per base doc (floored at the
-      // 2048-word minimum) keeps the measured FP rate pinned at every
-      // sf; the count is the build-time stat any bloom builder has
-      val words = Dedup.bloomBits(base, "text",
-        Dedup.bloomWordsFor(base.count()))
-      val exact = base.select(md5(col("text")).as("__h")).distinct()
-        .withColumn("__in", lit(true))
-      batch
-        .select(col("doc_id"), md5(col("text")).as("__h"),
-          Dedup.bloomMaybeContains(words, col("text")).as("maybe_in_base"))
-        .join(exact, Seq("__h"), "left")
-        .select(col("doc_id"), col("maybe_in_base"),
-          coalesce(col("__in"), lit(false)).as("in_base"),
-          (col("maybe_in_base") && col("__in").isNull).as("is_fp"))
-    }),
-
-    // Sharded Bloom screen — the join-side form for the regime where the
-    // literal-array filter can't exist (bloomWordsFor fail-fasts past
-    // 2^31 words ≈ 500 M base docs): the bitmap is a (w, m) TABLE
-    // hash-partitioned on the word index and the probe is an equi-join,
-    // so filter size is bounded by cluster storage, not by a broadcast
-    // literal. Verdicts are bit-identical to dedup_bloom at the same
-    // size (same md5 positions; spec-asserted), so this runs the same
-    // fixture and the same oracle shape.
-    "dedup_bloom_sharded" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(col("text").isNotNull)
-      val batch = base.select((col("doc_id") + 1000000).as("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" novel "), col("doc_id").cast("string")))
-          .otherwise(col("text")).as("text"))
-      val nWords = math.max(Dedup.BloomWords.toLong, 4L * base.count())
-      val filter = Dedup.bloomBitsFrame(base, "text", nWords)
-      val exact = base.select(md5(col("text")).as("__h")).distinct()
-        .withColumn("__in", lit(true))
-      batch
-        .select(col("doc_id"), md5(col("text")).as("__h"))
-        .join(Dedup.bloomMaybeContainsJoin(batch, "doc_id", "text",
-          filter, nWords), Seq("doc_id"))
-        .join(exact, Seq("__h"), "left")
-        .select(col("doc_id"), col("maybe_in_base"),
-          coalesce(col("__in"), lit(false)).as("in_base"),
-          (col("maybe_in_base") && col("__in").isNull).as("is_fp"))
-    }),
-
-    // MinHash+LSH near-dup: shingle → 12-seed minhash → 4 bands → bucket
-    // join → exact-Jaccard verify ≥0.8. Candidates come ONLY from band
-    // collisions (never all-pairs).
-    "dedup_minhash" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      // lazily-checkpointed signatures shared by both band-join sides.
-      // Deliberately NOT the fatter shingleFrame checkpoint: the 12
-      // narrow minima store and rescan cheaply, while checkpointing the
-      // full shingle arrays measured slower than the two narrow verify
-      // re-derivations it would replace.
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = false)
-      Dedup.minhashPairs(corpus, "doc_id", "text",
-        numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-        maxBucket = Cfg.maxBucket, sigs = Some(sig))
-    }),
-
-    // SimHash 32-bit fingerprints per document, in the explode + codegen
-    // hash-aggregate form (identical bits to the fold-over-array form;
-    // map-side combine keeps the shuffle at one row per doc).
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashAgg(Tables.documents(s, dir), "doc_id", "text")),
-
-    // SimHash near-dup pairs: 2×16-bit hamming bands → bucket join →
-    // exact hamming ≤ 1 verify. Pigeonhole-sound: hamming ≤ 1 over 2
-    // bands forces ≥ 1 identical band, so banding never misses a true
-    // pair. 16-bit bands (not 8) because similar corpora concentrate
-    // fingerprints — low-entropy narrow bands degenerate toward the
-    // all-pairs join banding exists to avoid (measured 35× slower at
-    // 8 bits on this corpus). Unlike minhash (50×8-byte shingle arrays
-    // re-joined for verify), the 32-char fingerprint rides the band
-    // explode directly — the payload is small enough that re-derivation
-    // would cost more.
-    // Exact substring-duplication spans (Lee et al. 2107.06499): every
-    // 12-token sliding window hashed, corpus-repeated windows merged
-    // into maximal per-doc spans. Fixture: shared boilerplate phrases
-    // appended to every 3rd (17 tokens) and 5th (11 tokens) doc — the
-    // cross-doc verbatim repetition the window pass must surface at
-    // whatever offset it lands (the 11-token phrase alone is BELOW the
-    // window, so it only surfaces on docs where it concatenates after
-    // the 17-token one — an offset/boundary case the oracle pins).
-    "dedup_spans" -> ((s, dir) => {
-      val boiler = concat(col("text"),
-        when(col("doc_id") % 3 === 0, lit(
-          " subscribe to our newsletter for the latest updates and follow us on all social media platforms today"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 0, lit(
-          " this article is for informational purposes only and not professional advice"))
-          .otherwise(lit("")))
-      Dedup.duplicateSpans(
-        Tables.documents(s, dir).select(col("doc_id"), boiler.as("text")),
-        "doc_id", col("text"), Cfg.spanWindowTokens)
-    }),
-
-    "dedup_simhash_pairs" -> ((s, dir) => {
-      val fp = Dedup.simhashAgg(Tables.documents(s, dir), "doc_id", "text")
-      val banded = fp.select(col("doc_id"), col("simhash"),
-        posexplode(array((0 until 2).map(b =>
-          substring(col("simhash"), b * 16 + 1, 16)): _*)).as(Seq("band_id", "band_val")))
-      val pairs = banded
-        .select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"),
-          col("band_id"), col("band_val"))
-        .join(banded.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"),
-          col("band_id"), col("band_val")), Seq("band_id", "band_val"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b", "band_id")
-      // verify BEFORE the distinct (the pair-dedup shuffle then carries
-      // only survivors), and only on the NON-matched band: the matched
-      // band contributes zero hamming, so the full-fingerprint distance
-      // equals the other band's — parsed base-2 and popcounted
-      // (bit_count∘xor), 3 codegen ops instead of 32 char compares.
-      def otherBand(c: String) =
-        when(col("band_id") === 0, substring(col(c), 17, 16))
-          .otherwise(substring(col(c), 1, 16))
-      val hamming = bit_count(
-        conv(otherBand("sh_a"), 2, 10).cast("long")
-          .bitwiseXOR(conv(otherBand("sh_b"), 2, 10).cast("long")))
-      pairs.withColumn("hamming", hamming)
-        .filter(col("hamming") <= 1)
-        .dropDuplicates("doc_a", "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-    }),
-
-    // N-gram Jaccard near-dup with (lang, source) bucketing: pairs are
-    // generated only within buckets (bounded quadratic), similarity on
-    // unigram token sets with the 3-gram shingle Jaccard alongside.
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      // token-hash representation (see Dedup.tokenValues): both jaccard
-      // stages intersect long arrays, not strings; the two-step select
-      // keeps the md5 transform in its own projection.
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("source"),
-          Dedup.tokenValues(col("text")).as("tv"))
-        // both arrays sorted ascending → verify intersections run on the
-        // native allocation-free merge (SortedIntersectCount)
-        .select(col("doc_id"), col("lang"), col("source"),
-          array_sort(array_distinct(col("tv"))).as("tok"),
-          Dedup.sortedShingleValuesFromTokens(col("tv")).as("sh"))
-        // lazily checkpointed: both sides of the bucket self-join read
-        // this frame — one tokenize+md5+sort pass instead of two
-        .localCheckpoint(false)
-      val a = docs.select(col("lang"), col("source"), col("doc_id").as("doc_a"),
-        col("tok").as("tok_a"), col("sh").as("sh_a"))
-      val b = docs.select(col("lang"), col("source"), col("doc_id").as("doc_b"),
-        col("tok").as("tok_b"), col("sh").as("sh_b"))
-      a.join(b, Seq("lang", "source"))
-        .filter(col("doc_a") < col("doc_b"))
-        // size-ratio prefilter (necessary condition for jaccard >= 0.5)
-        // with 1e-4 slack so the bound stays pure pruning relative to the
-        // 4-dp ROUNDED jaccard filtered on below (oracle has no prefilter).
-        .filter(least(size(col("tok_a")), size(col("tok_b"))).cast("double") /
-          greatest(size(col("tok_a")), size(col("tok_b"))) >= 0.5 - 1e-4)
-        // |A∪B| = |A|+|B|-|A∩B| for the (distinct) arrays — one intersect
-        // per pair instead of intersect + union. The 3-gram intersect
-        // runs only on jac1 survivors (filter ordering); a two-pass
-        // survivor-pruned variant benchmarked identical here and doubles
-        // the bucket join, so single-pass wins.
-        .withColumn("__i1", Dedup.intersectCount(s, col("tok_a"), col("tok_b")))
-        .withColumn("jaccard_1gram", Rounding.stable(
-          col("__i1").cast("double") /
-            (size(col("tok_a")) + size(col("tok_b")) - col("__i1")), 4))
-        .filter(col("jaccard_1gram") >= 0.5)
-        .withColumn("__i3", Dedup.intersectCount(s, col("sh_a"), col("sh_b")))
-        .withColumn("jaccard_3gram", Rounding.stable(
-          col("__i3").cast("double") /
-            (size(col("sh_a")) + size(col("sh_b")) - col("__i3")), 4))
-        .select(col("lang"), col("source"), col("doc_a"), col("doc_b"),
-          col("jaccard_1gram"), col("jaccard_3gram"))
-    }),
-
-    // Asymmetric containment near-dup over an inverted shingle index —
-    // the quote/boilerplate detector symmetric Jaccard structurally
-    // misses (an excerpt inside a long doc has J ≈ |a|/|b| ≈ 0, so no
-    // band ever collides). Candidates are docs sharing any indexed
-    // shingle, with ubiquitous shingles df-capped OUT of the index (the
-    // same quadratic guard as the LSH hot-bucket cap); exact containment
-    // then verifies on sorted-array intersects.
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(s, Tables.documents(s, dir), "doc_id", "text",
-        Cfg.containmentDfCap, Cfg.containmentThreshold)),
-
-    // Brute-force cosine top-k over embeddings (the ANN baseline): query
-    // side broadcast, corpus scan partition-local, dot products in
-    // codegen'd array expressions.
-    "sim_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.topKBrute(emb.filter(col("id") < 5), emb, 5)
-    }),
-
-    // LSH-bucketed approximate top-k (the scale path): sign-bit buckets
-    // from 8 deterministic hyperplanes turn the cross product into an
-    // equality join.
-    "sim_lsh_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.topKLsh(emb.filter(col("id") < 5), emb, k = 3)
-    }),
-
-    // IVF-style ANN (the second scale path): k-means-TRAINED coarse
-    // centroids (k = nLists = 8 Lloyd codebook — what real IVF indexes
-    // train offline; Similarity.trainedCentroids keeps it
-    // oracle-reproducible) → inverted lists → nProbe-list probing. The
-    // codebook collect is a bounded k·dim read at build time; the probe
-    // query itself stays a broadcast equality join on list id.
-    "sim_ivf_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val codebook = Similarity.collectCentroids(Similarity.trainedCentroids(
-        emb, "id", "vec", k = 8, iters = Cfg.kmeansIters))
-      Similarity.topKIvfWith(emb.filter(col("id") < 5), emb, k = 3,
-        centroids = codebook, nProbe = 2)
-    }),
-
-    // Scalar-quantized ANN (the int8 compression path, third family
-    // next to LSH and IVF): integer dots are EXACT in both engines —
-    // zero rounding anywhere — and the ranking is the same bounded
-    // top-k aggregate as the other ANN paths. The scale is calibrated
-    // on a bounded id-prefix sample (pushdown-pruned scan, saturating
-    // clamp for out-of-sample components) — no extra full-corpus pass.
-    "sim_sq_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val scale = Similarity.sqScale(emb, "id", "vec")
-      Similarity.topKQuantized(emb.filter(col("id") < 5), emb, 3, scale)
-    }),
-
-    // Product-quantization ANN (the fourth family: brute / LSH / IVF /
-    // PQ): per-block nearest-codeword codes, scoring through the
-    // reconstruction (≡ lookup-table ADC; see
-    // Similarity.pqReconstructBlocks). Codebooks are per-block
-    // Lloyd-TRAINED (Similarity.trainPqCodebooks — one kmeans-oracle
-    // CTE chain per block keeps DuckDB in lock-step), collected to an
-    // m·k-row local relation so encode and reconstruct read broadcast
-    // literals, not pqM extra Lloyd subtrees. Block layout
-    // Cfg.pqM × Cfg.pqSubDim.
-    "sim_pq_ann" -> ((s, dir) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val cw = Similarity.trainPqCodebooks(
-        emb.filter(col("id") < Cfg.pqTrainBound), "id", "vec",
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, k = Cfg.pqCodewords,
-        iters = Cfg.kmeansIters)
-      Similarity.topKPqBlocks(emb.filter(col("id") < 5), emb, cw,
-        k = Cfg.pqK, m = Cfg.pqM, subDim = Cfg.pqSubDim, rerank = Cfg.pqRerank)
-    }),
-
-    // PQ recall gate: per-query fraction of the exact top-3 the
-    // trained-codeword reconstruction ranking recovers — completes the
-    // measured LSH / SQ / IVF / PQ recall-gate symmetry.
-    "sim_pq_recall" -> ((s, dir) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, Cfg.pqK).select(col("q_id"), col("c_id"))
-      val cw = Similarity.trainPqCodebooks(
-        emb.filter(col("id") < Cfg.pqTrainBound), "id", "vec",
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, k = Cfg.pqCodewords,
-        iters = Cfg.kmeansIters)
-      val pq = Similarity.topKPqBlocks(q, emb, cw, k = Cfg.pqK,
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, rerank = Cfg.pqRerank)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(pq, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / Cfg.pqK, 4).as("recall"))
-    }),
-
-    // Binary (sign-quantized) ANN — the fifth compression family next
-    // to LSH / IVF / SQ / PQ: 1 bit per dimension, Hamming ranking via
-    // XOR+popcount (all-integer, exact), ties to the lower id. The
-    // candidate scan streams 16 bytes/row instead of 256 — the memory-
-    // bandwidth point below SQ on the compression/recall curve.
-    "sim_binary_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.topKBinary(emb.filter(col("id") < 5), emb, k = 3)
-        .select(col("q_id"), col("c_id"),
-          (lit(0) - col("score")).cast("int").as("hamming"), col("rnk"))
-    }),
-
-    // Binary recall gate: fraction of the exact top-3 the two-stage
-    // binary search (Hamming shortlist of k·binaryRerank, exact-cosine
-    // refine) recovers — completes the measured LSH / SQ / IVF / PQ /
-    // binary recall-gate symmetry. Measured 1.0 at sf0.01 with
-    // rerank=20.
-    "sim_binary_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, 3).select(col("q_id"), col("c_id"))
-      val bin = Similarity.topKBinary(q, emb, k = 3, rerank = Cfg.binaryRerank)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(bin, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / 3, 4).as("recall"))
-    }),
-
-    // Banded binary recall gate — the multi-index Hamming candidate
-    // path (8 bands × 8 bits, equi-join on (band, band_val), the
-    // dedup_simhash_pairs move) measured against the exact top-3, next
-    // to sim_binary_recall's raw-scan number: the two recalls bound
-    // what the sub-linear candidate generation costs in quality, per
-    // query, so the banded form's 100 TB win is a measured trade.
-    "sim_binary_banded" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, 3).select(col("q_id"), col("c_id"))
-      val banded = Similarity.topKBinaryBanded(q, emb, k = 3,
-        bands = Cfg.binaryBands, rerank = Cfg.binaryRerank)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(banded, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / 3, 4).as("recall"))
-    }),
-
-    // Matryoshka truncation gate — the DIMENSION-COUNT axis of the
-    // compression family (SQ/PQ/binary cut per-dim precision; MRL-style
-    // truncation cuts dims, the 64/d× scan-bandwidth saving a serving
-    // tier takes by reading a vector prefix): recall of the cosine
-    // top-3 over the FIRST d dims vs the full-64-dim exact top-3, one
-    // row per (tier, query). The d=64 tier is 1.0 by construction (a
-    // prefix of the whole IS the whole), so the gate self-validates;
-    // the lower tiers are the measured quality price of the cut.
-    "sim_trunc_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, 3).select(col("q_id"), col("c_id"))
-      def tier(d: Int): DataFrame = {
-        def cut(df: DataFrame) = df.select(col("id"),
-          slice(Similarity.asDouble(col("vec")), 1, d).as("vec"))
-        val t = Similarity.topKBrute(cut(q), cut(emb), 3)
-          .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-        brute.join(t, Seq("q_id", "c_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(count(col("__hit")).as("hits"),
-            Rounding.stable(count(col("__hit")).cast("double") / 3, 4).as("recall"))
-          .select(lit(d).as("dim"), col("q_id"), col("hits"), col("recall"))
-      }
-      Cfg.truncDims.map(tier).reduce(_.unionByName(_))
-    }),
-
-    // Metadata-filtered exact search — the "top-k similar documents
-    // AMONG <predicate>" query every retrieval deployment actually
-    // serves (filters on lang/source/license/date are the norm, not
-    // the exception). The predicate lives on the DOCUMENTS scan
-    // (parquet-pushdown-able), admission reaches the vector side as a
-    // LEFT SEMI join (ships doc_ids only, materializes no document
-    // columns), and distance is computed ONLY over admitted vectors —
-    // filter-before-distance, never score-then-discard. At 100 TB the
-    // same plan rides a lang-partitioned embedding layout: the
-    // semi-join collapses into partition pruning.
-    "sim_filtered_ann" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val admitted = Tables.documents(s, dir)
-        .filter(col("lang") === lit(Cfg.annFilterLang))
-        .select(col("doc_id").as("id"))
-      Similarity.topKBrute(emb.filter(col("id") < 5),
-        emb.join(admitted, Seq("id"), "left_semi"), 3)
-    }),
-
-    // Filtered-IVF recall gate — the production hazard the filtered
-    // family exists to measure: the standing coarse codebook is
-    // trained on the WHOLE corpus (indexes are built once, filters
-    // arrive at query time), so a query routes by overall geometry
-    // while admission prunes its probed lists; when the predicate is
-    // selective, a probed list can hold few or no admitted vectors and
-    // recall degrades — the number that tells the tuning loop to raise
-    // nProbe (or partition the index by the filter key). Postings are
-    // pre-filtered BEFORE the probe join (the semi-join on the corpus
-    // side), so the probe scores only admitted candidates — the
-    // cheap-filter ordering, and exactly what a lang-partitioned
-    // posting layout gives for free via partition pruning.
-    "sim_filtered_ivf_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val admitted = Tables.documents(s, dir)
-        .filter(col("lang") === lit(Cfg.annFilterLang))
-        .select(col("doc_id").as("id"))
-      val fc = emb.join(admitted, Seq("id"), "left_semi")
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, fc, 3).select(col("q_id"), col("c_id"))
-      val ivf = Similarity.topKIvfWith(q, fc, k = 3,
-          centroids = standingCodebooks(s, dir, emb)._1, nProbe = 2)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(ivf, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / 3, 4).as("recall"))
-    }),
-
-    // Retrieval eval — MRR of the RAW compressed-domain rankings, one
-    // row per (family, query): the reciprocal rank of each query's
-    // TRUE nearest neighbor (brute top-1) within the family's
-    // top-binaryMrrK list BEFORE any exact refine (binary = Hamming
-    // scan, pq = full ADC, ivfpq = probe-scoped ADC at nProbe=2), 0
-    // when absent. Recall gates measure set overlap; MRR is the
-    // rank-sensitive metric an index tuning loop actually optimizes —
-    // how far down the raw shortlist the refine stage must reach —
-    // and the side-by-side families are exactly the knobs it turns
-    // (rerank width vs probe count vs code size).
-    "sim_eval_mrr" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute1 = Similarity.topKBrute(q, emb, 1)
-        .select(col("q_id"), col("c_id").as("true_nn"))
-      def mrr(family: String, ann: DataFrame): DataFrame =
-        brute1.join(
-          ann.select(col("q_id"), col("c_id").as("true_nn"), col("rnk")),
-          Seq("q_id", "true_nn"), "left")
-        .select(lit(family).as("family"), col("q_id"), col("true_nn"),
-          coalesce(col("rnk"), lit(0)).cast("int").as("rnk"),
-          Rounding.stable(coalesce(lit(1.0) / col("rnk"), lit(0.0)), 6).as("rr"))
-      val binary = Similarity.topKBinary(q, emb, k = Cfg.binaryMrrK)
-      // the eval a tuning loop runs repeatedly must not retrain per
-      // run: both quantizer codebooks come from the standing artifacts
-      // (train-once on first touch, read thereafter — ADVICE r18)
-      val (codebook, cw) = standingCodebooks(s, dir, emb)
-      val pq = Similarity.topKPqBlocks(q, emb, cw, k = Cfg.binaryMrrK,
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, rerank = 1)
-      val ivfpq = Similarity.topKIvfPq(q, emb, cw, k = Cfg.binaryMrrK,
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, rerank = 1,
-        centroids = codebook, nProbe = 2)
-      mrr("binary", binary)
-        .unionByName(mrr("pq", pq))
-        .unionByName(mrr("ivfpq", ivfpq))
-    }),
-
-    // MMR diversity re-rank — the post-retrieval pass that trades
-    // relevance against redundancy: greedy λ·rel − (1−λ)·max-sim-to-
-    // selected over the brute top-10 shortlist, k=3 picks per query.
-    // Each greedy step is one broadcast-bounded plan stage (the
-    // selected set is ≤ k rows per query); no collects, no windows.
-    "sim_mmr" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.mmrRerank(emb.filter(col("id") < 5), emb,
-        k = Cfg.mmrK, shortlist = Cfg.mmrShortlist, lam = Cfg.mmrLambda)
-    }),
-
-    // IVF-PQ composite ANN — the FAISS IVFADC+refine layout, the shape
-    // that actually ships at 100 TB: trained coarse lists route the ADC
-    // pass to the probed lists' codes only (~nProbe/nLists of the
-    // corpus), then the k·rerank shortlist re-ranks exact. Reuses the
-    // verified coarse chain (sim_ivf_ann) and codes chain (sim_pq_ann).
-    "sim_ivfpq_ann" -> ((s, dir) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      // the two trainings are independent — overlap their job chains
-      val (codebook, cw) = Similarity.trainIvfPqConcurrently(emb,
-        coarseK = 8, iters = Cfg.kmeansIters, trainBound = Cfg.pqTrainBound,
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, codewords = Cfg.pqCodewords)
-      Similarity.topKIvfPq(emb.filter(col("id") < 5), emb, cw,
-        k = Cfg.pqK, m = Cfg.pqM, subDim = Cfg.pqSubDim, rerank = Cfg.pqRerank,
-        centroids = codebook, nProbe = 2)
-    }),
-
-    // IVF-PQ recall gate: the list probe cuts candidates BEFORE the ADC
-    // shortlist, so its recall can only be ≤ plain PQ's — measure it.
-    "sim_ivfpq_recall" -> ((s, dir) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, Cfg.pqK).select(col("q_id"), col("c_id"))
-      // the two trainings are independent — overlap their job chains
-      val (codebook, cw) = Similarity.trainIvfPqConcurrently(emb,
-        coarseK = 8, iters = Cfg.kmeansIters, trainBound = Cfg.pqTrainBound,
-        m = Cfg.pqM, subDim = Cfg.pqSubDim, codewords = Cfg.pqCodewords)
-      val ivfpq = Similarity.topKIvfPq(q, emb, cw,
-          k = Cfg.pqK, m = Cfg.pqM, subDim = Cfg.pqSubDim, rerank = Cfg.pqRerank,
-          centroids = codebook, nProbe = 2)
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(ivfpq, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("__hit")).as("hits"),
-          Rounding.stable(count(col("__hit")).cast("double") / Cfg.pqK, 4).as("recall"))
-    }),
-
-    // Quantization-quality measurement: per-query recall of the int8
-    // top-3 against the exact-cosine top-3 — completes the
-    // "measure, don't guess" trio (LSH recall, minhash estimate
-    // quality, SQ recall).
-    "sim_sq_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(col("id") < 5)
-      val brute = Similarity.topKBrute(q, emb, 3).select(col("q_id"), col("c_id"))
-      val sq = Similarity.topKQuantized(q, emb, 3, Similarity.sqScale(emb, "id", "vec"))
-        .select(col("q_id"), col("c_id"), lit(1).as("__hit"))
-      brute.join(sq, Seq("q_id", "c_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("__hit"), lit(0))).as("hits"))
-        .select(col("q_id"), col("hits"),
-          Rounding.stable(col("hits").cast("double") / 3, 4).as("recall"))
-    }),
-
-    // Language ID: character-trigram profile scoring with deterministic
-    // first-wins argmax.
-    "ta_langid" -> ((s, dir) =>
-      Tables.documents(s, dir).select(
-        col("doc_id") +: TextAnalysis.langId(col("text"))
-          .map { case (n, c) => c.as(n) }: _*)),
-
-    // Quality scoring + token counting (whitespace and BPE-ish regex).
-    "ta_quality" -> ((s, dir) =>
-      Tables.documents(s, dir).select(
-        col("doc_id") +:
-          (TextAnalysis.qualityColumns(col("text")).map { case (n, c) => c.as(n) } ++
-            Seq(
-              TextAnalysis.whitespaceTokenCount(col("text")).as("ws_tokens"),
-              TextAnalysis.bpeishTokenCount(col("text")).as("bpeish_tokens"))): _*)),
-
-    // Model-based quality filter (the fasttext-classifier stage of
-    // CCNet/LLaMA-style curation): hashing-trick token buckets, exact
-    // integer weight accumulation, one final stable-rounded division,
-    // threshold keep. Weights are a deterministic stand-in export — the
-    // scoring plumbing (bucket → gather → sum → normalize → cut) is the
-    // production operator unchanged.
-    "ta_quality_clf" -> ((s, dir) =>
-      Tables.documents(s, dir).filter(col("text").isNotNull).select(
-        col("doc_id") +:
-          TextAnalysis.clfColumns(col("text"), Cfg.clfThreshold)
-            .map { case (n, c) => c.as(n) }: _*)),
-
-    // Domain-mixing cap: at most sourceCap docs survive per source,
-    // best classifier score first (ties to the lower doc_id) — an
-    // over-represented domain trims to its best members. k-bounded
-    // aggregate, never a per-domain window sort.
-    "ta_source_cap" -> ((s, dir) => {
-      val clfScore = TextAnalysis
-        .clfColumns(col("text"), Cfg.clfThreshold).toMap.apply("clf_score")
-      val scored = Tables.documents(s, dir).filter(col("text").isNotNull)
-        .select(col("doc_id"), col("source"), clfScore.as("clf_score"))
-      Sampling.capPerKey(scored, "source", "doc_id", col("clf_score"),
-          Cfg.sourceCap)
-        .withColumnRenamed("score", "clf_score")
-        .withColumnRenamed("rank", "src_rank")
-    }),
-
-    // Temperature source mixing (mT5/UniMax at τ=0.5): per-source rates
-    // ∝ √count normalized to a document budget, fixed-point integer
-    // derivation end-to-end (no float-fold order anywhere), kept docs
-    // counted through the content-keyed hash. The corpus's natural
-    // sources are uniform (25 docs each — rates would all tie), so the
-    // fixture regroups deterministically into a skewed head/mid/tail
-    // mix: ~50/25/12.5/12.5%, where the sqrt rule visibly downsamples
-    // the head sub-linearly and favors the tails.
-    "ta_mix_temperature" -> ((s, dir) =>
-      Sampling.temperatureMix(
-        Tables.documents(s, dir).select(
-          when(col("doc_id") % 2 === 0, "head")
-            .when(col("doc_id") % 4 === 1, "mid")
-            .when(col("doc_id") % 8 === 3, "tail_a")
-            .otherwise("tail_b").as("source"),
-          col("doc_id")),
-        "source", "doc_id", Cfg.mixBudget)),
-
-    // Vocabulary statistics: top-5 tokens per language by frequency — the
-    // token-distribution profile every curation run reports. Explode →
-    // count (map-side combined) → bounded top-k AGGREGATE per lang
-    // (graft.functions.TopKByCount): the k-bounded buffer map-side
-    // combines to ≤ k rows per partition per lang, where a row_number
-    // window would sort every (lang, token) count through one exchange.
-    "ta_token_topk" -> ((s, dir) => {
-      val counts = Tables.documents(s, dir)
-        .select(col("lang"), explode(split(col("text"), " ")).as("token"))
-        .groupBy(col("lang"), col("token"))
-        .agg(count(lit(1)).as("cnt"))
-      val topk = graft.functions.TopK.topKByCount(5)
-      counts.groupBy(col("lang"))
-        .agg(topk(col("cnt"), col("token")).as("top"))
-        .select(col("lang"), posexplode(col("top")).as(Seq("pos", "kv")))
-        .select(col("lang"), col("kv._2").as("token"), col("kv._1").as("cnt"),
-          (col("pos") + 1).cast("int").as("rnk"))
-    }),
-
-    // E3 — the LLM-pillar flagship: the training-data curation DAG over a
-    // re-crawled corpus as ONE composed plan — exact-dedup to canonical
-    // docs (hash groupBy + hash join, the only shuffles), quality scoring
-    // and token-count bounds as narrow maps, curated rows out. The
-    // composition mirrors how e1 composes the reference's market surface.
-    "e3_curation" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      val canon = Dedup.exact(corpus, "doc_id", "text")
-        .select(col("text_hash"), col("canonical_doc_id"))
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      corpus
-        .withColumn("text_hash", md5(col("text")))
-        .join(canon, Seq("text_hash"))
-        .filter(col("doc_id") === col("canonical_doc_id"))
-        .select(col("doc_id"),
-          q("n_tokens").as("n_tokens"),
-          q("avg_token_len").as("avg_token_len"),
-          q("quality").as("quality"),
-          TextAnalysis.whitespaceTokenCount(col("text")).as("ws_tokens"))
-        .filter(col("quality") >= Cfg.qualityMin &&
-          col("ws_tokens").between(Cfg.minWsTokens, Cfg.maxWsTokens))
-    }),
-
-    // E4 — the FULL LLM-curation pipeline as one DAG: near-dup pair
-    // generation (banded minhash) → transitive duplicate clusters →
-    // keep one canonical doc per cluster → benchmark decontamination
-    // (drop docs sharing any word-3-gram with the eval slice) →
-    // deterministic 50% content-keyed sample → quality gate → per-
-    // language corpus profile. Every stage is the already-oracle-
-    // checked operator; this query proves they COMPOSE — the
-    // row-drop-vs-degrade interactions between stages are exactly what
-    // only breaks in composition (same reason e1 exists for the
-    // reference pipeline).
-    "e4_curation_full" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      // EXACT-CANONICAL-FIRST staging (r13 applied it to containment;
-      // r14 extends it to minhash): identical texts carry identical
-      // shingle sets, so every near-dup relation among copies is implied
-      // by the relation between their exact canonicals plus a star of
-      // copy→canonical edges from the md5 groups. ALL expensive pair
-      // generation (tokenize, signatures, band join, posting join,
-      // verify intersects) therefore runs over |distinct texts|, not the
-      // re-crawled corpus — at 100 TB, where re-crawl duplication is
-      // routinely 2-5×, exact-dedup-before-near-dup is the only sane
-      // staging, and the hot-bucket/df caps read TRUE text frequencies
-      // instead of crawl-copy-inflated ones. The oracle states the same
-      // canonical-domain spec (sig/banded over exc, copyedges unioned).
-      // canonDocs feeds FOUR subtrees (signatures, both minhash verify
-      // sides, the containment index) — checkpoint the (id, text) frame
-      // once instead of re-deriving it per consumer. The canonical per
-      // md5 group is ONE min-struct aggregate (the dedup_paragraph
-      // pattern): doc_id leads the struct so min picks the lowest id,
-      // and the map-side combine keeps one candidate per hash per
-      // partition — versus the r13 shape (hash groupBy → canonical-id
-      // join back onto the corpus), one exchange instead of two plus a
-      // join.
-      // FANNED before the checkpoint (r22): every canonical-domain
-      // kernel downstream (the signature shingling, the containment
-      // tokenize+sort, the decontam shingle side) reads these blocks,
-      // and the agg's tiny-byte output AQE-coalesces to 1-2 partitions
-      // — JobProfile showed a 2-task 2.0 s-CPU kernel stage riding the
-      // checkpoint (Fan.out's plan-time gauge on the agg reads the
-      // static 32 shuffle partitions and stays a no-op, so the spread
-      // must happen HERE, gauged on the scan). EAGER: five consumer
-      // subtrees (several of them broadcast-pool jobs) otherwise race
-      // to compute the same blocks — at 32 cores the verify stage read
-      // run 22.5 s vs cpu 9.9 s, tasks blocked on the block-compute
-      // lock; the driver's 32-core e4 inversion (16.0 s vs 6.8 s at 8
-      // cores, PERF r21) is the cold-JVM face of the same race.
-      // … and the MAP side fans too: the md5 + partial-min + shuffle
-      // write of full-text structs otherwise rides the 2-split recrawl
-      // scan (JobProfile r22: a 2-task ~1.8 s-CPU stage, ~1 s of wall).
-      val canonDocs = Fan.outLike(Fan.out(corpus)
-        .select(md5(col("text")).as("__h"),
-          struct(col("doc_id"), col("text")).as("__s"))
-        .groupBy(col("__h")).agg(min(col("__s")).as("__s"))
-        .select(col("__s.doc_id").as("doc_id"), col("__s.text").as("text")),
-        Tables.documents(s, dir))
-        .localCheckpoint(eager = true)
-      // ONE tokenize+md5+sort shingle pass over the canonical texts
-      // (r22), shared by the signature build, BOTH minhash verify
-      // sides, and the whole containment plane (postings + verify) —
-      // the unshared form re-ran the per-token kernel ~5× (guide §2.3:
-      // don't recompute what one pass provides). SORTED so both verify
-      // stages run the native codegen'd merge intersect instead of the
-      // hash-based builtin (identical |A∩B| on distinct arrays). Eager,
-      // like canonDocs: the consumer subtrees sit on the broadcast pool
-      // and must read blocks instead of racing to compute them. r21's
-      // "sigs, not the fatter shingleFrame" note predates the fanned
-      // 8-block canonical layout these blocks now inherit.
-      val shingled = Dedup.shingleFrame(canonDocs, "doc_id", "text")
-        .select(col("id"), array_sort(col("sh")).as("sh"))
-        .localCheckpoint(eager = true)
-      val sig = Dedup.signaturesFromShingles(shingled, Cfg.nSig)
-        .localCheckpoint(eager = true)
-      val pairs = Dedup.minhashPairs(canonDocs, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig), sh = Some(shingled),
-          fanGauge = Some(Tables.documents(s, dir)), shSorted = true)
-        .select(col("doc_a"), col("doc_b"))
-      // excerpt-in-long-doc duplicates have J ≈ |a|/|b| ≈ 0, so no band
-      // ever collides and a minhash-only closure lets them survive
-      // curation — union the asymmetric containment pairs as edges
-      // (duplicateClusters symmetrizes), so the excerpt collapses into
-      // its source's cluster.
-      val nearEdges = if (Cfg.curationContainmentEdges) {
-        pairs.unionByName(
-          Dedup.containmentPairs(s, canonDocs, "doc_id", "text",
-            Cfg.containmentDfCap, Cfg.containmentThreshold,
-            sh = Some(shingled), fanGauge = Some(Tables.documents(s, dir)))
-          .select(col("doc_a"), col("doc_b")))
-      } else pairs
-      // The closure runs over CANONICAL nodes and near-dup edges only —
-      // copies never enter the loop at all: a copy's id is strictly
-      // greater than its canonical's (cid = min of the md5 group), so a
-      // copy can never be a component minimum and the survivor set
-      // {id == label} is identical with or without the copy→canonical
-      // star edges. The oracle states the full-corpus closure WITH
-      // copyedges; both yield the same canonical survivors. At 100 TB
-      // this keeps the iterated label table at |distinct texts|, not
-      // |crawl|.
-      val clusters = Dedup.duplicateClusters(
-        canonDocs.select(col("doc_id").as("id")), nearEdges)
-      // canonical is consumed TWICE (the decontam shingle side and the
-      // final quality chain) and sits downstream of the whole
-      // pair-generation + propagation closure — without a checkpoint
-      // the second consumer re-runs that closure end-to-end (measured
-      // 22 s of the query's 21 s solo total at sf0.1; with it the tail
-      // is ~4 s). Lazy, like the sig checkpoint above: materializes on
-      // first use, no extra action. Survivors are canonical ids, so the
-      // text join reads the cached canonDocs, not the corpus again.
-      // EAGER (r22, same rationale as canonDocs): the decontam side is
-      // evaluated inside the left_anti's broadcast-pool job while the
-      // survivor chain probes — lazy blocks let the two race.
-      // FANNED like canonDocs (the survivor join's tiny-byte output
-      // AQE-coalesces to ~2 blocks, and the decontam shingle kernel —
-      // JobProfile: a 2-task 2.0 s-CPU stage, 1.1 s of wall — plus the
-      // final quality chain read these blocks).
-      val canonical = Fan.outLike(canonDocs.join(
-        clusters.filter(col("id") === col("label"))
-          .select(col("id").as("doc_id")), Seq("doc_id")),
-        Tables.documents(s, dir))
-        .localCheckpoint(eager = true)
-      val sh = canonical
-        .select(col("doc_id"), Dedup.tokenValues(col("text")).as("tv"))
-        .select(col("doc_id"), Dedup.shingleValuesFromTokens(col("tv")).as("sh"))
-      // no distinct on either side: `contaminated` only ever feeds the
-      // left_anti below, and an anti-join's result is unaffected by
-      // duplicate build-side rows — both distincts were pure exchange
-      // cost (the oracle's `cont` CTE keeps DISTINCT; result-equivalent)
-      val benchG = Tables.documents(s, dir).filter(col("doc_id") < 20)
-        .select(Dedup.tokenValues(col("text")).as("tv"))
-        .select(Dedup.shingleValuesFromTokens(col("tv")).as("sh"))
-        .select(explode(col("sh")).as("g"))
-      val contaminated = sh.select(col("doc_id"), explode(col("sh")).as("g"))
-        .join(broadcast(benchG), Seq("g"))
-        .select("doc_id")
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      // the quality/token kernels below otherwise run on the anti-join
-      // output AQE coalesced to ~1 partition (profiled 1.3 s single-task
-      // at sf0.1); gauge = the raw scan (identity at scale, see Fan)
-      Fan.outLike(
-          canonical.join(contaminated, Seq("doc_id"), "left_anti")
-            .join(Tables.documents(s, dir)
-                .select(col("doc_id").as("orig_id"), col("lang")),
-              pmod(col("doc_id"), lit(1000000L)) === col("orig_id"))
-            .filter(Sampling.deterministicKeep(col("doc_id"), 50)),
-          Tables.documents(s, dir))
-        .select(col("doc_id"), col("lang"), q("quality").as("quality"),
-          TextAnalysis.whitespaceTokenCount(col("text")).as("ws_tokens"))
-        .filter(col("quality") >= Cfg.qualityMin)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ws_tokens")).cast("long").as("total_tokens"))
-    }),
-
-    // Per-language length statistics: count, mean, exact median and p90
-    // of n_chars — the distribution profile a curation run reports before
-    // setting length cutoffs. Exact percentiles via one sort-based
-    // aggregate per language partition.
-    "ta_length_stats" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          Rounding.stable(avg(col("n_chars")), 4).as("avg_chars"),
-          Rounding.stable(expr("percentile(n_chars, 0.5)"), 4).as("median_chars"),
-          Rounding.stable(expr("percentile(n_chars, 0.9)"), 4).as("p90_chars"))),
-
-    // Deterministic 10% sample stratified by content key: md5(doc_id)
-    // mod 100 — reproducible across runs/engines/partitionings, unlike
-    // RNG sample(); zero shuffle.
-    "ta_sample" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .filter(Sampling.deterministicKeep(col("doc_id"), 10))
-        .select(col("doc_id"), col("lang"), col("n_chars"))),
-
-    // Stratified sampling — per-language keep rates over ONE stable
-    // content-keyed hash assignment (downsample the dominant language,
-    // keep the tail): narrow map work, zero shuffle before the count.
-    "ta_sample_stratified" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .filter(Sampling.stratifiedKeep(col("doc_id"), col("lang"),
-          Map("en" -> 20, "zh" -> 50), defaultPct = 80))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"))),
-
-    // Context-window chunking — 32-token windows advancing by 24 (8-token
-    // overlap): the layout pass that turns curated documents into
-    // model-context pieces. Narrow tokenize → explode(sequence) → slice,
-    // ZERO exchanges at any corpus size (plan-asserted); chunk content
-    // travels as an md5, never as token arrays.
-    "ta_chunk" -> ((s, dir) =>
-      Packing.chunk(Tables.documents(s, dir), "doc_id", col("text"),
-        chunkTokens = Cfg.chunkTokens, stride = Cfg.chunkStride)),
-
-    // Fixed-budget shard packing — 20k-char output shards per language,
-    // docs laid out in doc_id order, shard = offset div budget. The
-    // running offset is a TWO-PHASE distributed prefix sum (per-bucket
-    // totals → window over the tiny bucket table → broadcast offsets →
-    // bounded per-(lang, bucket) window), so no window task ever sees
-    // more than bucketSize rows — the oracle states the straight
-    // one-window cumsum SPEC the two-phase plan must reproduce exactly.
-    "ta_shard_pack" -> ((s, dir) =>
-      Packing.packShards(
-        Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars")),
-        part = "lang", orderCol = "doc_id", weight = col("n_chars"),
-        budget = Cfg.shardBudget, bucketSize = Cfg.shardBucketSize)),
-
-    // Deterministic global training-order shuffle: every doc gets a
-    // reproducible pseudo-random (shard_id, shard_pos) slot — the
-    // epoch-shuffle layout training jobs resume from. The global rank
-    // in scrambled-key order is the same two-phase prefix count
-    // ta_shard_pack uses (bucket by key range → tiny offsets table →
-    // bounded per-bucket windows); the oracle states the one-window
-    // row_number SPEC the two-phase plan must reproduce exactly.
-    "ta_shuffle" -> ((s, dir) =>
-      Packing.shuffleLayout(Tables.documents(s, dir).select(col("doc_id")),
-        "doc_id", shardSize = Cfg.shuffleShardSize)),
-
-    // Sequence-length bucketing for batch assembly: power-of-two token
-    // buckets with per-bucket padding-waste accounting — the
-    // measurement behind length-bucketed batching. One narrow map, one
-    // ~40-row aggregate.
-    "ta_length_buckets" -> ((s, dir) =>
-      Packing.lengthBuckets(Tables.documents(s, dir), col("text"))),
-
-    // Curriculum ordering — quality-descending global order cut into
-    // fixed-size training phases (easy/high-quality docs first, the
-    // curriculum-learning data layout). The order key is the 4-dp
-    // quality score inverted into a small non-negative integer domain,
-    // ranked by the same two-phase global rank as ta_shuffle — no
-    // global sort through one task; ties to the lower doc_id.
-    "ta_curriculum" -> ((s, dir) => {
-      // fanned out before the quality kernel — the tokenize-heavy
-      // scoring ran single-task on the unsplittable scan (see Fan)
-      val docs = Fan.out(
-        Tables.documents(s, dir).filter(col("text").isNotNull))
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      val scored = docs.select(col("doc_id"), q("quality").as("quality"))
-      // quality ∈ [0,1] at 4 dp → key = 10000 − round(q·10⁴) ∈ [0,10⁴]
-      val keyed = scored.withColumn("_key",
-        (lit(10000L) - round(col("quality") * 10000).cast("long")))
-      Packing.globalRank(keyed, "doc_id", col("_key"), bucketSize = 256L)
-        .join(scored, Seq("doc_id"))
-        .select(col("doc_id"), col("quality"),
-          expr(s"_rank div ${Cfg.curriculumPhaseSize}").as("phase"),
-          (col("_rank") % Cfg.curriculumPhaseSize).as("phase_pos"))
-    }),
-
-    // Positional rolling-hash document fingerprint (full + 16-token
-    // prefix).
-    "ta_fingerprint" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"),
-        TextAnalysis.fingerprint(col("text"), prefixTokens = 16).as("fp_prefix16"))),
-
-    // Multimodal plumbing: binary payload + typed metadata, per-partition
-    // lazily-initialized (stub) decoder via mapPartitions.
-    "mm_features" -> ((s, dir) =>
-      Multimodal.extractFeatures(Multimodal.attachPayload(
-        Tables.documents(s, dir)))),
-
-    // Headline scan-heavy aggregation (TPC-H Q1 shape): exercises
-    // predicate pushdown + partial aggregation; grouping keys carry ~6
-    // groups so the shuffle is trivial at any scale.
-    "q1_lineitem_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-01")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))),
-
-    // Set operations over token vocabularies as ONE membership aggregate
-    // (the curation question "what words does slice A use that slice B
-    // never does"). The naive EXCEPT ∪ EXCEPT ∪ INTERSECT form shuffles
-    // the token domain three times and scans the corpus twice per arm;
-    // here the corpus is scanned once, (token, lang) is exploded once,
-    // and a single groupBy(token) with two boolean max-aggregates (with
-    // map-side partial aggregation) decides en_only/fr_only/shared in a
-    // CASE projection — one token-domain exchange total, which at 100 TB
-    // is one job instead of three (VERDICT r13 #3).
-    "ta_token_setops" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .filter(col("lang").isin("en", "fr"))
-        .select(col("lang"), explode(split(col("text"), " ")).as("token"))
-        .groupBy(col("token"))
-        .agg(max(col("lang") === "en").as("in_en"),
-             max(col("lang") === "fr").as("in_fr"))
-        .select(col("token"),
-          when(col("in_en") && col("in_fr"), "shared")
-            .when(col("in_en"), "en_only")
-            .otherwise("fr_only").as("membership"))),
-
-    // Semi/anti-join pair — customers with and without orders per
-    // nation. left_semi/left_anti materialize NO right columns (the
-    // probe short-circuits on first match), so the build side ships
-    // only its join key — at 100 TB the difference between shuffling
-    // orders' keys and shuffling orders. The two branches share the
-    // customer scan; counts merge on a full outer + coalesce.
-    "q16_semi_anti" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))
-      val ordKeys = Tables.orders(s, dir).select(col("o_custkey"))
-      val semi = cust.join(ordKeys, col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_with_orders"))
-      val anti = cust.join(ordKeys, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_without_orders"))
-      semi.join(anti, Seq("c_nationkey"), "full_outer")
-        .select(col("c_nationkey"),
-          coalesce(col("n_with_orders"), lit(0L)).as("n_with_orders"),
-          coalesce(col("n_without_orders"), lit(0L)).as("n_without_orders"))
-    }),
-
-    // Blocked edit-distance record linkage over the part-name domain —
-    // the entity-resolution primitive for dirty string keys. Scale
-    // order: collapse the fact stream to DISTINCT names first (the
-    // quadratic term then depends on the name domain, not the table),
-    // block on the last token (equi-join, hash-partitioned — never
-    // all-pairs) with the hot-block cap dropping degenerate shared-
-    // final-token blocks before the quadratic stage, length-prefilter
-    // (pure pruning: every edit moves length by ≤ 1), and compare with
-    // the BANDED 3-arg levenshtein (O(maxDist·n) per pair). Payload:
-    // per-name part counts, so the linkage is actionable as a merge plan.
-    "j6_fuzzy_join" -> ((s, dir) => {
-      val names = Tables.part(s, dir)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n_parts"))
-      Fuzzy.linkage(names, "name", Seq("n_parts"), Cfg.fuzzyMaxDist,
-        Cfg.fuzzyMaxBlock)
-    }),
-
-    // Recall gate for the blocked linkage (the sim_lsh_recall pattern):
-    // last-token blocking misses pairs whose edits touch the final token
-    // BY DESIGN — this measures the miss instead of asserting it away.
-    // Ground truth is the unblocked banded-levenshtein join over a
-    // BOUNDED name slice (p_partkey <= fuzzyRecallKeys pushes to the
-    // scan, so the all-pairs truth term is O(slice²) at any corpus
-    // size). missed_cross_block counts truth pairs whose last tokens
-    // differ — hash-equal to missed_pairs exactly when the blocked path
-    // found every same-block pair, so the row cross-checks the linkage
-    // plumbing (length prefilter, banding) as well as measuring recall.
-    "j6_fuzzy_recall" -> ((s, dir) => {
-      val names = Tables.part(s, dir)
-        .filter(col("p_partkey") <= Cfg.fuzzyRecallKeys)
-        .select(col("p_name").as("name")).distinct()
-      val truth = names.select(col("name").as("name_a"))
-        .join(broadcast(names.select(col("name").as("name_b"))),
-          col("name_a") < col("name_b"))
-        .filter(abs(length(col("name_a")) - length(col("name_b")))
-          <= Cfg.fuzzyMaxDist)
-        .filter(levenshtein(col("name_a"), col("name_b"), Cfg.fuzzyMaxDist) >= 0)
-        .withColumn("cross_block",
-          (Fuzzy.lastTokenBlock(col("name_a")) =!=
-            Fuzzy.lastTokenBlock(col("name_b"))).cast("long"))
-        .agg(count(lit(1)).as("true_pairs"),
-          coalesce(sum(col("cross_block")), lit(0L)).as("missed_cross_block"))
-      val found = Fuzzy
-        .linkage(names, "name", Seq.empty, Cfg.fuzzyMaxDist, Cfg.fuzzyMaxBlock)
-        .agg(count(lit(1)).as("found_pairs"))
-      truth.crossJoin(found)
-        .withColumn("missed_pairs", col("true_pairs") - col("found_pairs"))
-        .withColumn("recall_pct_floor",
-          when(col("true_pairs") === 0, lit(100L))
-            .otherwise(expr("found_pairs * 100L div true_pairs")))
-        .select("true_pairs", "found_pairs", "missed_pairs",
-          "missed_cross_block", "recall_pct_floor")
-    }),
-
-    // The SQL surface — temp views + spark.sql with a CORRELATED scalar
-    // subquery (TPC-H Q17 shape): Catalyst decorrelates the per-part
-    // average into an aggregate + join (no per-row re-execution, which
-    // is what a naive engine does and what dies at scale). The 4-dp
-    // stable rounding on the threshold keeps the float boundary
-    // bit-identical across engines.
-    "q17_small_order" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("v_lineitem")
-      s.sql(s"""
-        SELECT l_partkey,
-               CAST(count(*) AS BIGINT) AS n_small,
-               ${Rounding.stableSql("sum(l_extendedprice)", 2)} AS small_revenue
-        FROM v_lineitem o
-        WHERE l_quantity < (
-          SELECT ${Rounding.stableSql("0.2 * avg(i.l_quantity)", 4)}
-          FROM v_lineitem i WHERE i.l_partkey = o.l_partkey)
-        GROUP BY l_partkey
-      """)
-    }),
-
-    // Join → aggregate → GLOBAL top-10 (TPC-H Q3 shape): the ordered
-    // limit must compile to TakeOrderedAndProject (per-partition top-10
-    // heaps merged on the driver), never a global sort — the difference
-    // between shipping 10·partitions rows and sorting the whole
-    // aggregate at scale. Ranking is on the 2-dp ROUNDED revenue
-    // (+ orderkey tiebreak) so FP sum-order noise cannot reorder the
-    // cut across engines.
-    "q3_top_orders" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") > to_timestamp(lit("1995-03-15")))
-        .join(Tables.orders(s, dir)
-            .filter(col("o_orderdate") < to_timestamp(lit("1995-03-15"))),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(Rounding.stable(
-          sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)),
-
-    // Multi-join aggregation (TPC-H Q5 shape): dims broadcast, one fact
-    // shuffle on the join key.
-    "q5_join_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir)),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"),
-          count(lit(1)).as("n_items"))),
-
-    // Gopher-style repetition filters: top-token share, top-bigram
-    // share, duplicate-bigram share + the keep/drop flag — the post-dedup
-    // boilerplate screen of an LLM curation pipeline (see
-    // TextAnalysis.repetition for the one-explode, all-aggregates-
-    // partition-by-doc scale shape).
-    "ta_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(Tables.documents(s, dir), "doc_id", "text")),
-
-    // TF-IDF top-3 terms per document with the rational BM25 idf (log-
-    // free so both engines agree bit-wise): doc-frequency and corpus
-    // count broadcast, per-doc ranking windows bounded by the doc's own
-    // vocabulary.
-    "ta_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfidf(Tables.documents(s, dir), "doc_id", "text", 3)),
-
-    // Unigram-LM fluency scoring (the CCNet-style perplexity filter):
-    // per-language LM trained on the doc_id % lmRefMod == 0 reference
-    // slice, every doc scored by mean per-token surprisal. Per-token
-    // log-probs are integer bit lengths (length(bin(count))-1), so the
-    // per-doc sum is exact and the one final division hashes
-    // cross-engine — see TextAnalysis.lmSurprisal.
-    "ta_lm_fluency" -> ((s, dir) =>
-      TextAnalysis.lmSurprisal(Tables.documents(s, dir), "doc_id", "lang",
-        "text", pmod(col("doc_id"), lit(Cfg.lmRefMod.toLong)) === 0L)),
-
-    // CCNet's selection step on those scores: head/middle/tail buckets
-    // at fixed surprisal thresholds, sized in docs and tokens per
-    // language — the report a curation run uses to pick how much of
-    // each bucket to keep. Exact comparisons on the stable-rounded
-    // score; one extra hash aggregate over the scored frame.
-    "ta_lm_buckets" -> ((s, dir) =>
-      TextAnalysis.lmSurprisal(Tables.documents(s, dir), "doc_id", "lang",
-          "text", pmod(col("doc_id"), lit(Cfg.lmRefMod.toLong)) === 0L)
-        .withColumn("bucket",
-          when(col("nll_bits") < Cfg.fluencyHead, "head")
-            .when(col("nll_bits") < Cfg.fluencyMid, "middle")
-            .otherwise("tail"))
-        .groupBy(col("lang"), col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("total_tokens"))),
-
-    // DSIR importance weights (Xie et al. 2023): every raw-pool doc
-    // scored by log p_target − log p_raw of its hashed unigram+bigram
-    // bag, with the Cfg.dsirTargetSource slice as the trusted target
-    // domain. Integer bit-length log-probs end-to-end (dsir_bits), so
-    // the hash cannot wobble — see TextAnalysis.dsirScores.
-    "ta_dsir" -> ((s, dir) =>
-      TextAnalysis.dsirScores(Tables.documents(s, dir), "doc_id", "text",
-        col("source") === Cfg.dsirTargetSource, Cfg.dsirBuckets)),
-
-    // DSIR's selection step: the Cfg.dsirKeep docs whose bags look most
-    // target-like, ranked (dsir_bits DESC, doc_id ASC) via the bounded
-    // TopKByScore aggregate — k rows cross the exchange, not the scored
-    // corpus (the deterministic-rank form of the paper's importance
-    // resample; dsir_bits < 2^53 so the double-scored buffer is exact).
-    "ta_dsir_select" -> ((s, dir) => {
-      val top = graft.functions.TopK.topKByScore(Cfg.dsirKeep)
-      TextAnalysis.dsirScores(Tables.documents(s, dir), "doc_id", "text",
-          col("source") === Cfg.dsirTargetSource, Cfg.dsirBuckets)
-        .groupBy()
-        .agg(top(col("dsir_bits").cast("double"), col("doc_id")).as("__top"))
-        .select(posexplode(col("__top")))
-        .select(col("col._2").as("doc_id"),
-          col("col._1").cast("long").as("dsir_bits"),
-          (col("pos") + 1).as("rnk"))
-    }),
-
-    // BPE merge candidates (tokenizer training, round 1): count every
-    // word-internal adjacent character pair across the corpus, rank the
-    // top Cfg.bpeTopK — pair generation is narrow per-row work, the
-    // count is one map-side-combined aggregate over the pair domain
-    // (≤ alphabet², itself bounded), and the global rank is the
-    // k-bounded TopKByCount aggregate.
-    "ta_bpe_pairs" -> ((s, dir) => {
-      val counts = Tables.documents(s, dir)
-        .select(explode(TextAnalysis.bpePairs(col("text"))).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
-      val topk = graft.functions.TopK.topKByCount(Cfg.bpeTopK)
-      counts.groupBy()
-        .agg(topk(col("cnt"), col("pair")).as("top"))
-        .select(posexplode(col("top")).as(Seq("pos", "kv")))
-        .select(col("kv._2").as("pair"), col("kv._1").as("cnt"),
-          (col("pos") + 1).cast("int").as("rnk"))
-    }),
-
-    // ITERATIVE BPE merge learning — the actual tokenizer-training
-    // loop (Sennrich et al.): each round counts adjacent-symbol pairs
-    // over the word-frequency table, takes the argmax (one min-struct
-    // aggregate + 1-row collect, the kmeans-codebook pattern), and
-    // greedily merges it everywhere via the wrapped-symbol replace.
-    // The oracle unrolls the same rounds as CTE stages.
-    "ta_bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpeMerges(Tables.documents(s, dir), "text",
-        rounds = Cfg.bpeMergeRounds)),
-
-    // Tokenizer round-trip: the corpus re-encoded through the merges
-    // ta_bpe_merges just learned — per-doc word count, BPE token
-    // count, and the compression the merge table bought. Encode runs
-    // over the distinct-word table and joins back on the word.
-    "ta_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncode(Tables.documents(s, dir), "doc_id", "text",
-        rounds = Cfg.bpeMergeRounds)),
-
-    // Tokenizer DRIFT gate — the monitoring companion of the BPE
-    // artifact lifecycle (train once → encode many ingests): merges
-    // learned on the BASE corpus only, then base and a drifted ingest
-    // (every even doc's text reversed — reversed words are mostly
-    // outside the trained vocab, so fewer merges apply) both encode
-    // through those frozen merges. tokens_per_word rising on ingest =
-    // fertility drift, the measured retrain trigger — same gate shape
-    // as indexRecallGate on the ANN side. Encode covers UNSEEN words
-    // (chars + whatever merges apply), so the gate never drops novel
-    // vocabulary from the stats.
-    "ta_bpe_drift" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(col("text").isNotNull)
-      val ingest = base.select(
-        when(col("doc_id") % 2 === 0, reverse(col("text")))
-          .otherwise(col("text")).as("text"))
-      val tagged = base.select(lit("base").as("corpus"), col("text"))
-        .unionByName(ingest.select(lit("ingest").as("corpus"), col("text")))
-      val merges = TextAnalysis.learnedMerges(base, "text", Cfg.bpeMergeRounds)
-      val per = TextAnalysis.bpeEncodeWith(tagged, "corpus", "text", merges)
-      val baseTpw = per.filter(col("corpus") === "base")
-        .select(col("tokens_per_word").as("__base_tpw"))
-      per.crossJoin(broadcast(baseTpw)) // 1-row broadcast dim
-        .select(col("corpus"), col("n_words"), col("n_bpe_tokens"),
-          col("tokens_per_word"),
-          Rounding.stable(col("tokens_per_word") - col("__base_tpw"), 4)
-            .as("tpw_drift"))
-    }),
-
-    // BM25 retrieval for a standing query-term set (benchmark-query
-    // doc mining): candidates only — the term filter rides inside the
-    // token array before the explode — integer micro-unit
-    // contributions summed exactly per doc, k-bounded rank.
-    "ta_bm25_topk" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
-        Cfg.bm25Terms, Cfg.bm25TopK, Cfg.bm25K1, Cfg.bm25B)),
-
-    // Reciprocal-rank fusion (Cormack et al.) — the hybrid-retrieval
-    // combiner: the BM25 standing-query list fused with the dense
-    // cosine list for the standing query vector by Σ 1/(K+rank). Both
-    // inputs are k-bounded rankings, so the fusion join and final rank
-    // touch ≤ k₁+k₂ rows at any corpus size.
-    "ta_rrf_fusion" -> ((s, dir) => {
-      val bm = TextAnalysis.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
-          Cfg.bm25Terms, Cfg.bm25TopK, Cfg.bm25K1, Cfg.bm25B)
-        .select(col("doc_id"), col("rnk").as("bm25_rnk"))
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val dense = Similarity.topKBrute(
-          emb.filter(col("id") === Cfg.rrfDenseQueryId), emb, Cfg.rrfDenseK)
-        .select(col("c_id").as("doc_id"), col("rnk").cast("int").as("cos_rnk"))
-      TextAnalysis.rrfFuse(bm, "bm25_rnk", dense, "cos_rnk", "doc_id",
-        kConst = Cfg.rrfK, topK = Cfg.rrfTopK)
-    }),
-
-    // Winnowing fingerprint profile (Schleimer et al.): per-doc k-gram
-    // count, distinct fingerprint count, and order-free integer summary
-    // stats of the fingerprint set — the selection layer a
-    // contamination screen indexes. Zero shuffle beyond the scan.
-    "ta_winnow" -> ((s, dir) =>
-      TextAnalysis.winnowStats(Tables.documents(s, dir), "doc_id", "text",
-        Cfg.winnowK, Cfg.winnowW)),
-
-    // ST13 — batch shadow of StreamingWinnow.firstSeenFingerprints +
-    // the per-doc rollup: docs arrive in doc_id order (st8's layout —
-    // doc_id seconds past 2024-01-01), a fingerprint's owner is its
-    // earliest arrival, and a doc is flagged when any of its winnow
-    // fingerprints was deposited earlier — the crawl-time
-    // contamination screen over the same fingerprint layer ta_winnow
-    // summarizes.
-    "st13_winnow_scan" -> ((s, dir) => {
-      val withTs = Tables.documents(s, dir)
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      graft.streaming.StreamingWinnow.winnowContaminationScan(
-        withTs, "doc_id", "text", "ts", Cfg.winnowK, Cfg.winnowW)
-    }),
-
-    // Nearest-centroid classification over embeddings: fixed-point
-    // (order-independent) per-label centroids, broadcast to a partition-
-    // local scoring scan, argmax via one map-side-combinable max_by
-    // aggregate — the k-means E-step / IVF-assignment shape at scale.
-    "sim_centroids" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = Similarity.labelCentroids(emb, "label", "embedding")
-      Similarity.centroidAssign(emb, "vec_id", "label", "embedding", cents)
-    }),
-
-    // Distributed k-means (Lloyd) — the semantic-clustering primitive
-    // for diversity sampling / semantic dedup / IVF training: k
-    // lowest-id seeds, per-iteration broadcast-centroid assignment
-    // (argmax on the 6-dp cosine, lower cid wins ties) and fixed-point
-    // integer centroid updates, so the whole iterative FP computation
-    // hashes exactly against the unrolled oracle CTEs.
-    "sim_kmeans" -> ((s, dir) =>
-      Similarity.kmeans(Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = Cfg.kmeansK, iters = Cfg.kmeansIters)),
-
-    // Coarse-quantizer drift gate — third of the drift-gate trio
-    // (indexRecallGate = ANN recall vs brute, ta_bpe_drift = tokenizer
-    // fertility, this = quantizer fit): centroids trained on the BASE
-    // corpus stay frozen while an ingest batch (the deterministic
-    // re-embed shift) is assigned against them; per-corpus mean
-    // nearest-centroid cosine in exact micro-units, falling on ingest =
-    // the vectors drifting off the trained Voronoi structure — the
-    // cheap every-batch monitor that needs NO brute-force ground truth.
-    "sim_centroid_drift" -> ((s, dir) => {
-      val base = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-        .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-      // ingest fixture = NEGATED vectors (an embedding-model swap — the
-      // worst-case quantizer drift): every nearest-centroid cosine
-      // flips to -furthest, so the gate must read a large negative delta
-      val ingest = base.select(col("vec_id"),
-        transform(col("v"), x => -x).as("v"))
-      val tagged = base.select(lit("base").as("corpus"), col("vec_id"), col("v"))
-        .unionByName(
-          ingest.select(lit("ingest").as("corpus"), col("vec_id"), col("v")))
-      val cents = Similarity.collectCentroids(Similarity.trainedCentroids(
-        base, "vec_id", "v", k = Cfg.kmeansK, iters = Cfg.kmeansIters))
-      val per = Similarity.nearestCentroidCos(
-          tagged, Seq("corpus", "vec_id"), "v", cents)
-        .groupBy(col("corpus"))
-        .agg(count(lit(1)).as("n_vecs"),
-          Rounding.stable(
-            sum(round(col("nn_cos") * 1000000).cast("long")).cast("double") /
-              (count(lit(1)) * lit(1000000.0)), 6).as("mean_cos"))
-      val baseRow = per.filter(col("corpus") === "base")
-        .select(col("mean_cos").as("__base_cos"))
-      per.crossJoin(broadcast(baseRow)) // 1-row broadcast dim
-        .select(col("corpus"), col("n_vecs"), col("mean_cos"),
-          Rounding.stable(col("mean_cos") - col("__base_cos"), 6)
-            .as("cos_drift"))
-    }),
-
-    // Cluster-quality gate for k-means (the recall-gate counterpart for
-    // clustering): per-cluster size, mean cosine-to-centroid, and the
-    // worst member. A double sum of cosines is summation-order-dependent
-    // and unhashable — instead the 6-dp cosines are exact integers
-    // ×10^6, summed as longs (order-free), with ONE final division.
-    "sim_kmeans_quality" -> ((s, dir) =>
-      Similarity.kmeans(Tables.embeddings(s, dir), "vec_id", "embedding",
-          k = Cfg.kmeansK, iters = Cfg.kmeansIters)
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n"),
-          Rounding.stable(
-            sum(round(col("cos") * 1000000).cast("long")).cast("double") /
-              (count(lit(1)) * lit(1000000.0)), 6).as("mean_cos"),
-          min(col("cos")).as("min_cos"))),
-
-    // Semantic diversity sampling: k-means clusters → per-cluster
-    // inverse-size keep rates (min(100, 100·target div n)) over the
-    // stable content-keyed hash — dominant clusters downsampled toward
-    // the target, tail clusters kept whole. Cluster sizes are a k-row
-    // broadcast; the keep filter is narrow map work; only integer
-    // counts are output, so nothing order-dependent reaches the hash.
-    "sim_diversity_sample" -> ((s, dir) => {
-      // lazily-checkpointed: the 2-pass Lloyd subtree feeds the size
-      // aggregate AND the keep scan — without staging it would run twice
-      val asg = Similarity.kmeans(Tables.embeddings(s, dir), "vec_id",
-        "embedding", k = Cfg.kmeansK, iters = Cfg.kmeansIters)
-        .localCheckpoint(eager = false)
-      val sizes = asg.groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n_total"))
-      val kept = asg.join(broadcast(sizes), Seq("cluster_id"))
-        .filter(Sampling.deterministicKeepAt(col("vec_id"),
-          least(lit(100L), expr(s"(100 * ${Cfg.diversityTarget}) div n_total"))))
-        .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_kept"))
-      sizes.join(kept, Seq("cluster_id"), "left")
-        .select(col("cluster_id"), col("n_total"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-    }),
-
-    // Frame sampling with keyframe selection: the mapPartitions decoder
-    // FANS OUT one row per (doc, frame) — RAGGED, 1..4 rows per doc
-    // derived from the payload's first byte (the decoder's
-    // scene-variance probe), so the plan is exercised on the skewed
-    // shape real video ingestion produces, not a fixed 4× multiplier.
-    // No shuffle until the per-doc keyframe rank, whose window
-    // partition is the doc's own ≤4 frame rows.
-    "mm_frames" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val frames = Multimodal.sampleFrames(Multimodal.attachPayload(
-        Tables.documents(s, dir)))
-      val wnd = Window.partitionBy(col("doc_id"))
-        .orderBy(col("frame_sum").desc, col("frame_id").asc)
-      frames.withColumn("is_key", row_number().over(wnd) === 1)
-    }),
-
-    // MM frame-level dedup — exact dedup lifted to the multimodal
-    // plane: videos decode (per-partition stub decoder, ragged
-    // length-derived fan-out) into per-frame perceptual-hash
-    // signatures; one min-struct aggregate elects the corpus-wide
-    // canonical occurrence of each signature (partial agg absorbs a
-    // frame repeated across millions of videos — the black-frame /
-    // intro-card hot key a window-rank form would sort in one
-    // partition); the join-back marks non-canonical frames and a
-    // per-doc rollup emits the duplicated-frame fraction + the keep
-    // verdict (drop re-used-footage-dominated uploads). Cross-doc
-    // overlap is REAL in the fixture: shared boilerplate blocks become
-    // shared frames, so fractions land strictly between 0 and 1.
-    "mm_frame_dedup" -> ((s, dir) => videoDupRollup(s, dir)),
-
-    // MM video near-dup PAIRS — the pair form of the frame plane
-    // (mm_frame_dedup answers "how much of THIS video is re-used";
-    // this answers "WHICH uploads re-use each other"): distinct
-    // (video, frame-sig) postings, df-capped exactly like
-    // dedup_containment's inverted index (a boilerplate frame in
-    // hundreds of uploads is dropped from pair generation — its
-    // bucket is the all-pairs blowup), sig-bucket self-join a<b,
-    // shared-count aggregate, containment = shared / smaller video's
-    // DISTINCT-signature count (set semantics; the right asymmetry
-    // for a clip cut from a longer video), verdict at videoContainMin.
-    "mm_video_neardup" -> ((s, dir) => {
-      val sigs = Multimodal.frameSignatures(Multimodal.attachVideoPayload(
-        Tables.documents(s, dir), Cfg.paraBlockTokens))
-      Multimodal.videoNearDupPairs(sigs, dfCap = Cfg.videoSigDfCap,
-        minShared = Cfg.videoMinShared.toLong,
-        containMin = Cfg.videoContainMin)
-    }),
-
-    // MM Hamming-tolerant frame near-dup — the gap exact-signature
-    // matching leaves open (mm_frame_dedup / mm_video_neardup join on
-    // sig EQUALITY, so a 1-bit pHash flip from a re-encode splits a
-    // duplicate frame pair): the banded-Hamming candidate discipline
-    // (binaryBands / dedup_simhash_pairs) applied to the 56-bit frame
-    // signature — 2 substring bands of 28 bits, candidates by
-    // (band, slice) equi-join over DISTINCT signatures, exact
-    // XOR+popcount verify on the packed codes, hot band cells dropped
-    // whole. Pigeonhole-complete at radius 1. The fixture makes the
-    // tolerance REAL: ids %10==0 re-upload with re-encode noise
-    // (payload low-bit flip per frame -> every derived signature at
-    // Hamming exactly 1 from its source), so each emitted pair is a
-    // frame equality would have missed.
-    "mm_frame_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val re = Multimodal.attachReencodedPayload(
-        docs.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + lit(4000000L)).as("doc_id"), col("text")),
-        Cfg.paraBlockTokens)
-      val sigs = Multimodal.frameSignatures(
-        Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens)
-          .unionByName(re))
-      Multimodal.frameNearDupPairs(sigs, bands = Cfg.frameSigBands,
-        maxHamming = Cfg.frameSigMaxHamming,
-        bucketCap = Cfg.frameSigBucketCap)
-    }),
-
-    // MM video dup CLUSTERS — the canonicalization step after pair
-    // generation, lifted to the video plane: near-dup verdict pairs
-    // feed the same bounded label-propagation loop as dedup_clusters
-    // (connected components, label = component-min doc_id — keeping
-    // one upload per re-use group needs the transitive closure, since
-    // a re-cut links two originals through itself even when they never
-    // share a frame directly). Nodes = every doc with a payload, so
-    // non-duplicated uploads keep their own id as cluster_id.
-    "mm_video_clusters" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val sigs = Multimodal.frameSignatures(
-        Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens))
-      val pairs = Multimodal.videoNearDupPairs(sigs,
-          dfCap = Cfg.videoSigDfCap, minShared = Cfg.videoMinShared.toLong,
-          containMin = Cfg.videoContainMin)
-        .filter(col("is_neardup")).select(col("doc_a"), col("doc_b"))
-      Dedup.duplicateClusters(docs.select(col("doc_id").as("id")), pairs)
-        .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-    }),
-
-    // MM cross-modal split leakage — ta_split_leakage lifted to the
-    // video plane: a held-out video sharing frames with a training
-    // video leaks evaluation signal even when their TEXT never banded
-    // (re-used footage under different captions is exactly what the
-    // n-gram screen misses). Verified frame near-dup pairs grouped by
-    // the unordered split pair their endpoints' stable content-keyed
-    // hash slots land in; off-diagonal rows = frame-level train/test
-    // contamination. Cost = the df-capped pair generation (never
-    // all-pairs) + one tiny aggregate.
-    "mm_split_leakage" -> ((s, dir) => {
-      val sigs = Multimodal.frameSignatures(Multimodal.attachVideoPayload(
-        Tables.documents(s, dir), Cfg.paraBlockTokens))
-      val pairs = Multimodal.videoNearDupPairs(sigs,
-          dfCap = Cfg.videoSigDfCap, minShared = Cfg.videoMinShared.toLong,
-          containMin = Cfg.videoContainMin)
-        .filter(col("is_neardup")).select(col("doc_a"), col("doc_b"))
-      val sa = Sampling.splitAssign(col("doc_a"),
-        Cfg.splitTrainPct, Cfg.splitValPct)
-      val sb = Sampling.splitAssign(col("doc_b"),
-        Cfg.splitTrainPct, Cfg.splitValPct)
-      pairs
-        .select(least(sa, sb).as("split_lo"), greatest(sa, sb).as("split_hi"))
-        .groupBy(col("split_lo"), col("split_hi"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("leaks", col("split_lo") =!= col("split_hi"))
-    }),
-
-    // MM modality-mix profile — the per-format corpus report a
-    // multimodal ingest writes next to its manifest: doc counts, mean
-    // image brightness, total/ragged video frame mass, mean
-    // duplicated-frame fraction, mean speech fraction. Averages take
-    // the INTEGER PATH for cross-engine hash identity: brightness×16
-    // and frac×10⁴ are exact integers by construction (mean-of-16
-    // bytes; 4-dp-rounded ratios), so both engines sum longs and
-    // divide once — never a float-accumulation order dependence. One
-    // format-keyed 3-row aggregate after three doc-keyed joins.
-    "mm_profile" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val feat = Multimodal.extractFeatures(Multimodal.attachPayload(docs))
-        .select(col("doc_id"), col("format"), col("brightness"))
-      // shared payload checkpointed as in e9 (measured 1.39 → 1.25 s)
-      val pay = Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens)
-        .localCheckpoint(false)
-      val vid = videoDupRollupFrom(pay)
-        .select(col("doc_id"), col("n_frames"), col("dup_frac"))
-      val aud = speechFracPerDoc(pay)
-      feat.join(vid, Seq("doc_id")).join(aud, Seq("doc_id"))
-        .groupBy(col("format"))
-        .agg(count(lit(1)).as("n_docs"),
-          Rounding.stable(
-            sum((col("brightness") * 16).cast("long")).cast("double") /
-              (count(lit(1)) * 16), 4).as("avg_brightness"),
-          sum(col("n_frames")).as("total_frames"),
-          Rounding.stable(
-            sum(round(col("dup_frac") * 10000).cast("long")).cast("double") /
-              (count(lit(1)) * 10000), 4).as("avg_dup_frac"),
-          Rounding.stable(
-            sum(round(col("speech_frac") * 10000).cast("long")).cast("double") /
-              (count(lit(1)) * 10000), 4).as("avg_speech_frac"))
-    }),
-
-    // Audio activity segmentation (the VAD / silence-trim pre-step of
-    // an audio training pipeline): payloads decode (per-partition stub
-    // decoder, ragged length-derived fan-out) into per-16-sample-window
-    // byte-energies; a threshold flags each window speech/silence; a
-    // gaps-and-islands pass folds consecutive same-flag windows into
-    // maximal segments with start / length / total energy. The island
-    // id is the RUNNING FLAG-CHANGE COUNT (null-safe lag ≠ + running
-    // sum) rather than the window_id − per-flag-rank difference: every
-    // window function then partitions by doc_id alone, the downstream
-    // groupBy is co-partitioned with it (hash(doc_id) satisfies the
-    // (doc_id, flag, isl) clustering), and the change count IS the
-    // 1-based segment id — ONE exchange + one per-doc sort end to end,
-    // vs three partitionings for the rank form. Per-doc state is
-    // bounded by the doc's own window count — skew-free at any scale.
-    "mm_audio_segments" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val wins = Multimodal.audioWindows(Multimodal.attachAudioPayload(
-          Tables.documents(s, dir), Cfg.paraBlockTokens))
-        .withColumn("is_speech",
-          col("energy") >= lit(Cfg.audioEnergyThreshold.toLong))
-      val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("window_id"))
-      wins
-        .withColumn("chg",
-          when(!(lag(col("is_speech"), 1).over(byDoc) <=> col("is_speech")),
-            lit(1L)).otherwise(lit(0L)))
-        .withColumn("isl", sum(col("chg")).over(byDoc))
-        .groupBy(col("doc_id"), col("is_speech"), col("isl"))
-        .agg(min(col("window_id")).as("start_window"),
-          count(lit(1)).as("n_windows"),
-          sum(col("energy")).as("seg_energy"))
-        .select(col("doc_id"), col("isl").cast("int").as("seg_id"),
-          col("is_speech"), col("start_window"),
-          col("n_windows"), col("seg_energy"))
-    }),
-
-    // MM audio near-dup pairs — clip-reuse detection, completing the
-    // modality symmetry (video had both segmentation and re-use
-    // detection; audio had only segmentation): window-energy DELTAS
-    // shingled 3 at a time are the acoustic fingerprint (chromaprint's
-    // shape — gain-invariant, computed inside the row with zero
-    // shuffle), then the same df-capped inverted-index pair pipeline
-    // as mm_video_neardup on the fingerprint key. The fixture makes
-    // clip re-use real: ids %10==0 re-upload their first 6 analysis
-    // windows under id +5e6, reproducing the source's delta sequence
-    // exactly — containment lands on the clip side (the correct
-    // asymmetry), while documents under shingle+1 windows emit no
-    // fingerprints and stay out of the pair table.
-    "mm_audio_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val clipTokens = Cfg.audioClipWindows * Cfg.paraBlockTokens
-      val clips = docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + lit(5000000L)).as("doc_id"),
-          concat_ws(" ",
-            slice(split(col("text"), " "), 1, clipTokens)).as("text"))
-      val fps = Multimodal.audioFingerprints(
-        Multimodal.attachAudioPayload(
-          docs.select(col("doc_id"), col("text")).unionByName(clips),
-          Cfg.paraBlockTokens),
-        Cfg.audioFpShingle)
-      Multimodal.audioNearDupPairs(fps, dfCap = Cfg.videoSigDfCap,
-        minShared = Cfg.videoMinShared.toLong,
-        containMin = Cfg.videoContainMin)
-    }),
-
-    // Bigram language-model estimation: P(w2|w1) = c(w1 w2)/c(w1) for
-    // the corpus's top-25 bigrams — the statistical-LM table a data
-    // pipeline derives before training (rational arithmetic only; both
-    // counts shuffle once with map-side combine, the unigram side joins
-    // broadcast at |vocab| rows, and the global top-k is a
-    // TakeOrderedAndProject cut on (count, bigram)).
-    "ta_ngram_lm" -> ((s, dir) => {
-      val big = TextAnalysis.bigrams(Tables.documents(s, dir), "doc_id", "text")
-      val bigc = big.groupBy(col("w").as("w1"), col("w2"))
-        .agg(count(lit(1)).as("c2"))
-      val unic = big.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
-      bigc.join(broadcast(unic), Seq("w1"))
-        .withColumn("cond_p",
-          Rounding.stable(col("c2").cast("double") / col("c1"), 4))
-        .orderBy(col("c2").desc, col("w1").asc, col("w2").asc)
-        .limit(25)
-    }),
-
-    // Semi-structured extraction: the JSON props column parsed ONCE per
-    // row with an explicit one-field schema (Catalyst's OptimizeJsonExprs
-    // prunes from_json to the accessed field — no full-document parse),
-    // then a plain codegen'd aggregate. The at-scale rule: parse JSON in
-    // the projection with a declared schema, never per-aggregate with
-    // get_json_object repeated per field.
-    "ev_json_props" -> ((s, dir) => {
-      val schema = StructType(Seq(StructField("k", LongType)))
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          from_json(col("props"), schema).getField("k").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), min("k").as("min_k"),
-          max("k").as("max_k"), sum("k").as("sum_k"))
-    }),
-
-    // Signature-quality measurement: the minhash analog of
-    // sim_lsh_recall — for every verified near-dup pair, the fraction of
-    // agreeing signature minima (the estimator banding actually acts on)
-    // next to the exact Jaccard, plus the absolute error. The number
-    // that justifies the (bands × rows) budget before scaling it to a
-    // corpus.
-    "dedup_minhash_est" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      // ONE signature computation feeds banding AND both estimate
-      // sides: Spark recomputes a shared unpersisted subtree once per
-      // consumer, so without the checkpoint the tokenize+md5+agg
-      // pipeline would run 3× (it was this query's whole cost — 6.0 s
-      // → 1.7 s solo). LAZY (eager = false): the checkpoint converts
-      // the frame to one shared RDD that materializes on the query's
-      // FIRST job — an eager one would run a full Spark job at
-      // DataFrame-CONSTRUCTION time, making plan-only consumers
-      // (graft.Explain) pay the whole computation just to print a
-      // plan. The checkpointed frame is |docs| rows × 12 longs — at
-      // 100 TB exactly the signature table an ingest job persists.
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = false)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig))
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      val sa = sig.toDF(sig.columns.toIndexedSeq.map(c =>
-        if (c == "id") "doc_a" else s"a_$c"): _*)
-      val sb = sig.toDF(sig.columns.toIndexedSeq.map(c =>
-        if (c == "id") "doc_b" else s"b_$c"): _*)
-      val matches = (0 until Cfg.nSig).map(k =>
-        when(col(s"a_sig_$k") === col(s"b_sig_$k"), 1).otherwise(0))
-        .reduce(_ + _)
-      pairs.join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
-        .withColumn("est_jaccard",
-          Rounding.stable(matches.cast("double") / lit(Cfg.nSig.toDouble), 4))
-        .withColumn("abs_err",
-          Rounding.stable(abs(col("est_jaccard") - col("jaccard")), 4))
-        .select("doc_a", "doc_b", "jaccard", "est_jaccard", "abs_err")
-    }),
-
-    // Daily OHLC bars from the raw event stream — deriving the
-    // reference's own OHLCV data model (SURVEY §1.1) instead of
-    // ingesting it pre-aggregated: open/close via min_by/max_by on the
-    // (ts, event_id) struct (ONE hash aggregate, map-side combinable —
-    // no per-bar sort, no window), high/low/volume/turnover in the same
-    // pass. The aggregate form is what turns 100 TB of ticks into bars
-    // with a single exchange on (user, day).
-    "ev_ohlc_bars" -> ((s, dir) => {
-      val ord = struct(col("ts"), col("event_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), col("ts").cast("date").as("d"),
-          col("ts"), col("event_id"), col("value"))
-        .groupBy(col("user_id"), col("d"))
-        .agg(
-          min_by(col("value"), ord).as("open"),
-          max(col("value")).as("high"),
-          min(col("value")).as("low"),
-          max_by(col("value"), ord).as("close"),
-          count(lit(1)).as("volume"),
-          Rounding.stable(sum(col("value")), 4).as("turnover"))
-    }),
-
-    // Cohort retention: users bucketed by first-seen date, retention by
-    // day offset — the event-analytics rollout every activity warehouse
-    // runs. Two user-keyed aggregates (cohort assignment, distinct
-    // active days) meet in a user-keyed join — one partitioning carried
-    // through — then collapse to the tiny (cohort, offset) grid; the
-    // cohort-size dim re-joins broadcast.
-    "ev_retention" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts").cast("date").as("d"))
-      val cohort = ev.groupBy("user_id").agg(min(col("d")).as("cohort_date"))
-      val active = ev.distinct()
-      val byOffset = active.join(cohort, Seq("user_id"))
-        .select(col("cohort_date"),
-          datediff(col("d"), col("cohort_date")).as("day_offset"),
-          col("user_id"))
-        .groupBy(col("cohort_date"), col("day_offset"))
-        .agg(count_distinct(col("user_id")).as("retained"))
-      val sizes = cohort.groupBy("cohort_date")
-        .agg(count_distinct(col("user_id")).as("cohort_size"))
-      byOffset.join(broadcast(sizes), Seq("cohort_date"))
-        .select(col("cohort_date"), col("day_offset"), col("retained"),
-          col("cohort_size"),
-          Rounding.stable(col("retained").cast("double") / col("cohort_size"), 4)
-            .as("retention_rate"))
-    }),
-
-    // Ordered funnel (view → click-after-view → purchase-after-click):
-    // each stage is a conditional min-ts aggregate co-partitioned on
-    // user_id, so later stages join the previous stage's (user, ts)
-    // without re-partitioning. The per-user ARRAY alternative
-    // (collect_list + HOF walk) would put unbounded per-user state in a
-    // CodegenFallback lambda — the multi-pass conditional aggregate is
-    // the shape that survives 100 TB of events.
-    "ev_funnel" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"))
-      val s1 = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts").as("t1"))
-      val s2 = ev.filter(col("event_type") === "click")
-        .join(s1, Seq("user_id")).filter(col("ts") > col("t1"))
-        .groupBy("user_id").agg(min("ts").as("t2"))
-      val s3 = ev.filter(col("event_type") === "purchase")
-        .join(s2, Seq("user_id")).filter(col("ts") > col("t2"))
-        .groupBy("user_id").agg(min("ts").as("t3"))
-      s1.agg(count(lit(1)).as("n_view"))
-        .crossJoin(s2.agg(count(lit(1)).as("n_click_after")))
-        .crossJoin(s3.agg(count(lit(1)).as("n_purchase_after")))
-        .select(col("n_view"), col("n_click_after"), col("n_purchase_after"),
-          Rounding.stable(col("n_click_after").cast("double") / col("n_view"), 4)
-            .as("view_to_click"),
-          Rounding.stable(
-            col("n_purchase_after").cast("double") / col("n_click_after"), 4)
-            .as("click_to_purchase"))
-    }),
-
-    // Incremental cluster labeling: the new batch (re-crawled copy,
-    // ids +1M) is labeled against the already-canonical base — seeds
-    // from batch↔base collisions, min-label propagation over
-    // batch-internal edges only. Per-ingest cost tracks the batch, not
-    // history (see Dedup.incrementalClusters).
-    "dedup_clusters_incremental" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val batch = base.withColumn("doc_id", col("doc_id") + 1000000)
-      // ONE lazily-checkpointed shingle pass per corpus side, shared by
-      // the cross pairs (banding + verify) AND the batch-internal pairs
-      // (whose signatures derive from the same batch frame)
-      // EAGER (r22): banding + verify consumers of each side sit on
-      // the broadcast pool and raced the lazy blocks (JobProfile: two
-      // 8-task stages with run ~3.9/3.3 s vs cpu ~0.4 s, pure blocking)
-      val batchSh = Dedup.shingleFrame(batch, "doc_id", "text")
-        .localCheckpoint(true)
-      val baseSh = Dedup.shingleFrame(base, "doc_id", "text")
-        .localCheckpoint(true)
-      val cross = Dedup.minhashPairsBetween(batch, base, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-          newSh = Some(batchSh), baseSh = Some(baseSh))
-        .select(col("doc_new").as("new_id"), col("doc_base").as("base_id"))
-      // cap disabled: this query's oracle states base+batch banding
-      // JOINTLY (one CTE chain), where a per-side hot-bucket count
-      // cannot be mirrored; at scale the cap lives in the precomputed
-      // banded table both sides read (Dedup.minhashPairsBetween doc)
-      // the batch frame is already checkpointed for the cross path, so
-      // the inner pairs read it for BOTH banding (via a checkpointed
-      // 12-minima aggregate — the band self-join reads it twice) and
-      // the verify joins, instead of re-tokenizing the batch
-      val inner = Dedup.minhashPairs(batch, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-          maxBucket = Int.MaxValue,
-          sigs = Some(Dedup.signaturesFromShingles(batchSh, Cfg.nSig)
-            .localCheckpoint(true)),
-          sh = Some(batchSh))
-        .select(col("doc_a"), col("doc_b"))
-      Dedup.incrementalClusters(
-          base.select(col("doc_id").as("id"), col("doc_id").as("label")),
-          batch.select(col("doc_id").as("id")), cross, inner)
-        .select(col("id").as("doc_id"), col("label"))
-    }),
-
-    // E5 — the round-5 flagship: the post-dedup quality gate as ONE DAG.
-    // Repetition screen (Gopher-style boilerplate drop) ∩ linear quality
-    // gate, then each surviving doc is tagged with its top TF-IDF term —
-    // the "keep + label" step between dedup (e3/e4) and training-set
-    // assembly. All three branches partition by doc id, the vocabulary
-    // dims broadcast, so the composition adds no exchange beyond its
-    // parts.
-    "e5_quality_gate" -> ((s, dir) => {
-      // fanned (r22): three CPU-dense kernels (repetition, quality,
-      // tfidf) each ride this byte-small 1-split scan — JobProfile read
-      // them as single-task 170-830 ms stages (identity at scale, Fan)
-      val docs = Fan.out(Tables.documents(s, dir))
-      val keepRep = TextAnalysis.repetition(docs, "doc_id", "text")
-        .filter(!col("repetitive")).select("doc_id")
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      val gated = docs
-        .select(col("doc_id"), col("lang"), q("quality").as("quality"))
-        .filter(col("quality") >= Cfg.qualityMin)
-      val kw = TextAnalysis.tfidf(docs, "doc_id", "text", 1)
-        .select(col("doc_id"), col("token").as("keyword"),
-          col("tfidf").as("keyword_tfidf"))
-      gated.join(keepRep, Seq("doc_id")).join(kw, Seq("doc_id"))
-    }),
-
-    // E6 — the pretraining-corpus flagship: the round-12 stages chained
-    // in ONE DAG the way a real data-engineering run would — (1)
-    // paragraph-level dedup over the re-crawl (fully-duplicate docs
-    // degrade to n_kept=0 and drop), (2) PII inject (fixture) + scrub
-    // on the REASSEMBLED text, (3) hashed-classifier quality gate on
-    // the scrubbed text, (4) language metadata join, (5) fixed-
-    // token-budget shard layout per language. Narrow stages fuse; the
-    // only shuffles are paragraph dedup's three, the lang join, and the
-    // two-phase pack.
-    "e6_pretrain_corpus" -> ((s, dir) => {
-      // Fan.out after the paragraph-dedup aggregate: AQE coalesces the
-      // agg's tiny-byte output to one partition, serializing the pii
-      // regex + classifier chain below (profiled 1.2 s single-task at
-      // sf0.1); at scale the agg output already carries >= target
-      // partitions and this is the identity
-      val corpus = recrawl(s, dir)
-      val deduped = Fan.outLike(
-        Dedup.paragraphDedup(corpus, "doc_id",
-            col("text"), Cfg.paraBlockTokens)
-          .filter(col("n_kept") > 0), corpus)
-      val injected = piiInject(col("clean_text"))
-      val scrubbed = deduped.select(
-        col("doc_id") +: col("n_paras") +: col("n_kept") +:
-          (TextAnalysis.piiCounts(injected).map { case (n, c) => c.as(n) } :+
-            TextAnalysis.piiRedact(injected).as("clean_text")): _*)
-      val clf = TextAnalysis.clfColumns(col("clean_text"), Cfg.clfThreshold).toMap
-      val gated = scrubbed
-        .withColumn("n_tokens", clf("n_tokens"))
-        .withColumn("clf_score", clf("clf_score"))
-        .filter(clf("clf_keep"))
-      // checkpoint the curated corpus before the layout pass (r22):
-      // packShards reads its input TWICE (the phase-1 totals — evaluated
-      // inside the offsets BROADCAST subplan — and the phase-2 join),
-      // and paragraphDedup's internal first-occurrence join already
-      // evaluates the paragraph plane twice per read, so the un-staged
-      // query ran the dedup+PII+clf chain ~4× (JobProfile: two
-      // single-task ~1 s broadcast stages + twin 8-task ~2.2 s-run main
-      // stages; the r21 plan's 20 parquet scans). One eager
-      // materialization — the "write curated corpus, then lay out"
-      // staging a real pipeline has anyway — leaves each phase a block
-      // read. Guide §3.3 (materialize to truncate repeated subplans).
-      val withLang = gated.join(
-        Tables.documents(s, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .localCheckpoint(eager = true)
-      Packing.packShards(withLang, part = "lang", orderCol = "doc_id",
-        weight = col("n_tokens"), budget = Cfg.e6ShardBudget,
-        bucketSize = Cfg.shardBucketSize)
-    }),
-
-    // E7 — the training-mix assembly flagship (the round-15 stages in
-    // ONE DAG): (1) SoftDeDup weights over the re-crawl's minhash
-    // closure (duplicates reweighted 1/|cluster|, never dropped),
-    // (2) heuristic quality gate, (3) power-of-two length-bucket tag
-    // for batch assembly, (4) deterministic epoch-shuffle layout over
-    // the SURVIVORS — the (weight, quality, bucket, shard slot) tuple a
-    // training job consumes per document. The closure is the bounded
-    // label-propagation loop; everything downstream is one quality
-    // projection, one id-keyed join, and the two-phase shuffle rank.
-    "e7_training_mix" -> ((s, dir) => {
-      val corpus = recrawl(s, dir)
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = false)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-          numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
-          threshold = Cfg.nearDupThreshold,
-          maxBucket = Cfg.maxBucket, sigs = Some(sig))
-        .select(col("doc_a"), col("doc_b"))
-      val sw = Dedup.softWeights(corpus.select(col("doc_id").as("id")), pairs)
-        .select(col("id").as("doc_id"), col("cluster_size"), col("weight"))
-      val q = TextAnalysis.qualityColumns(col("text")).toMap
-      val n = size(split(col("text"), " "))
-      val bits = when(n <= 1, lit(0))
-        .otherwise(length(bin((n - 1).cast("long")))).cast("long")
-      // fanned out before the quality kernel (the tokenize-heavy
-      // scoring otherwise rides the 2-split recrawl scan), and
-      // checkpointed BETWEEN the projection and the gate: `base` has
-      // three consumers (the layout rank and both sides of the final
-      // join), and the deterministic gate predicate otherwise pushes
-      // below the fan-out onto the 2-task scan — profiled r21 as THREE
-      // ~1.2 s-wall copies of the quality stage per run; staged+fanned
-      // it is one 8-task pass (~0.3 s wall). EAGER (r22): the lazy form
-      // let the layout/offsets/final-join BROADCAST subplans race to
-      // materialize the blocks — JobProfile showed six ~500 ms
-      // broadcast jobs whose tasks sat blocked on the block-compute
-      // lock (run ≈ 3.5-4 s vs cpu ≈ 0.1 s per 8-task stage); driver
-      // r21 read e7 at 9.6 s vs r20's 6.4 s for the same reason.
-      // Materializing once, synchronously, before any consumer plans
-      // costs the same single pass and removes the race entirely.
-      val scored = Fan.out(corpus)
-        .select(col("doc_id"), q("quality").as("quality"), bits.as("bucket_bits"))
-        .localCheckpoint(eager = true)
-      val gated = scored.filter(col("quality") >= Cfg.qualityMin)
-      val base = gated.join(sw, Seq("doc_id"))
-      val laid = Packing.shuffleLayout(base.select(col("doc_id")), "doc_id",
-        shardSize = Cfg.shuffleShardSize)
-      base.join(laid, Seq("doc_id"))
-        .select(col("doc_id"), col("cluster_size"), col("weight"),
-          col("quality"), col("bucket_bits"), col("shard_id"), col("shard_pos"))
-    }),
-
-    // GROUPING SETS profile with grouping_id — the per-lang, per-source,
-    // and per-(lang,source) corpus rollout in ONE Expand pass (three
-    // separate aggregations would scan the corpus three times;
-    // completes the rollup/pivot multi-dimensional family).
-    "ta_grouping_sets" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupingSets(
-          Seq(Seq(col("lang")), Seq(col("source")),
-            Seq(col("lang"), col("source"))),
-          col("lang"), col("source"))
-        .agg(grouping_id().cast("int").as("gid"),
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars"))),
-
-    // Exact-moment Pearson correlation per event_type: does price move
-    // (cents) track the props payload's k? The reference's Pct_Change ↔
-    // Volume question in graft form — ONE codegen'd hash aggregate of
-    // integer moments (map-side combined; the exchange carries 6 longs
-    // per group), corr combined in double afterwards, bit-stable
-    // cross-engine (operators/Stats.scala).
-    "stats_corr" -> ((s, dir) => {
-      val schema = StructType(Seq(StructField("k", LongType)))
-      val ev = Tables.events(s, dir).select(col("event_type"),
-        floor(col("value") * 100).cast("long").as("x"),
-        from_json(col("props"), schema).getField("k").as("y"))
-      Stats.corrExact(ev, Seq("event_type"), col("x"), col("y"))
-    }),
-
-    // Keyless range join — lineitem prices against $1000-wide supplier
-    // account bands, via bin decomposition (operators/RangeJoin): the
-    // `p BETWEEN lo AND hi` predicate alone would plan as a nested-loop
-    // scan of every band for every lineitem; binning at the band width
-    // makes it an ordinary equi-join (≤2 bins per band) and the exact
-    // predicate re-filters inside the bin. Aggregated to per-band
-    // counts so the output is band-sized, not match-sized.
-    "rj_price_bands" -> ((s, dir) => {
-      val pts = Tables.lineitem(s, dir).select(
-        floor(col("l_extendedprice") * 100).cast("long").as("price_c"))
-      val bands = Tables.supplier(s, dir).select(col("s_suppkey"),
-        floor(col("s_acctbal") * 100).cast("long").as("lo"))
-        .withColumn("hi", col("lo") + 100000L)
-      RangeJoin.pointInInterval(pts, bands, col("price_c"),
-          col("lo"), col("hi"), binWidth = 100000L)
-        .groupBy(col("s_suppkey"))
-        .agg(count(lit(1)).as("n_in_band"))
-    }),
-
-    // Interval-overlap form of the keyless range join: $1000-wide
-    // supplier account bands × $100-wide part price bands, each pair
-    // kept only in its canonical first shared bin (no dedup pass).
-    // Aggregated per supplier so output is dim-sized.
-    "rj_band_overlap" -> ((s, dir) => {
-      val sup = Tables.supplier(s, dir).select(col("s_suppkey"),
-        floor(col("s_acctbal") * 100).cast("long").as("s_lo"))
-        .withColumn("s_hi", col("s_lo") + 100000L)
-      val par = Tables.part(s, dir).select(
-        (floor(col("p_retailprice") * 100).cast("long") - 5000L).as("p_lo"))
-        .withColumn("p_hi", col("p_lo") + 10000L)
-      RangeJoin.intervalOverlap(sup, par, col("s_lo"), col("s_hi"),
-          col("p_lo"), col("p_hi"), binWidth = 100000L)
-        .groupBy(col("s_suppkey"))
-        .agg(count(lit(1)).as("n_overlapping"))
-    }),
-
-    // Z-order layout keys — the Morton interleave of (user, hour) that
-    // the write-side zOrderBy sorts by so parquet min/max stats prune
-    // scans filtered on EITHER dimension. Narrow bit math, zero
-    // exchanges (plan-asserted); the same step constants generate the
-    // oracle SQL (operators/Layout.scala).
-    "ev_zorder" -> ((s, dir) =>
-      Tables.events(s, dir).select(col("event_id"), col("user_id"),
-        expr("unix_micros(ts) div 3600000000").as("hour_bucket"))
-        .withColumn("z", graft.operators.Layout.zValue(
-          col("user_id"), col("hour_bucket")))),
-
-    // Rolling 24-bucket Pearson correlation per event_type — the exact
-    // integer moments composed with the bucketed-rolling frame
-    // (ev_rolling_bucketed's shape): one hash aggregate to (type, hour)
-    // moment partials, ONE window shuffle of six longs per bucket row,
-    // each frame folds ≤ 24 partials, corr combined in double per
-    // output row. Sliding correlation features at 100 TB are computed
-    // this way — the window input is |types × active hours|, not the
-    // fact (operators/Stats.rollingCorr).
-    "stats_rolling_corr" -> ((s, dir) => {
-      val schema = StructType(Seq(StructField("k", LongType)))
-      val ev = Tables.events(s, dir).select(col("event_type"),
-        expr("unix_micros(ts) div 3600000000").as("hour_bucket"),
-        floor(col("value") * 100).cast("long").as("x"),
-        from_json(col("props"), schema).getField("k").as("y"))
-      Stats.rollingCorr(ev, "event_type", "hour_bucket",
-        col("x"), col("y"), lookback = 23)
-    }),
-
-    // Per-group z-score outlier top-50: the anomaly screen before
-    // training. Group stats from one exact-moment aggregate broadcast
-    // back onto the unshuffled fact scan; only k rows survive the
-    // TakeOrderedAndProject cut. event_id is the deterministic tiebreak.
-    "stats_zscore_topk" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_type"),
-        col("event_id"), floor(col("value") * 100).cast("long").as("x"))
-      Stats.zscoreTopK(ev, Seq("event_type"), col("x"),
-        keep = Seq("event_id"), k = 50, tiebreak = "event_id")
-    }),
-
-    // PII screen: counts + redaction over a corpus with DETERMINISTIC
-    // synthetic PII derived from doc_id (testdata text carries none) —
-    // emails, phones, in- and out-of-range IPv4s, and a phone-shaped run
-    // inside an email local part (counted as email, not phone: counts are
-    // progressive, matching the redaction order). Narrow codegen'd map
-    // work — one text scan at any scale.
-    "ta_pii" -> ((s, dir) => {
-      val injected = piiInject(col("text"))
-      Tables.documents(s, dir).select(
-        col("doc_id") +:
-          (TextAnalysis.piiCounts(injected).map { case (n, c) => c.as(n) } :+
-            TextAnalysis.piiRedact(injected).as("redacted")): _*)
-    }),
-
-    // Approximate distinct-token counts per language (HyperLogLog++,
-    // 1% rsd) — the sketch an interactive profile uses at 100 TB where
-    // exact distinct is a full shuffle of the token universe. The HLL
-    // buffer map-side combines, so the exchange carries one sketch per
-    // (partition, lang), never the token stream. Raw sketch values are
-    // engine-specific and can't hash cross-engine, so this IS the
-    // hash-checkable form: each engine runs ITS OWN HLL next to the
-    // exact distinct and reports the boolean |approx − exact| / exact
-    // ≤ 10%. The booleans agree even though the sketches don't. Exact
-    // and approx aggregate separately (5-row join) so the HLL path
-    // keeps its sketch-only exchange rather than the expand-based
-    // multi-distinct plan. TextAnalysisSpec pins the error bound.
-    "ta_approx_distinct_gate" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("lang"), explode(split(col("text"), " ")).as("token"))
-      val exact = toks.groupBy(col("lang"))
-        .agg(countDistinct(col("token")).as("exact_tokens"))
-      val approx = toks.groupBy(col("lang"))
-        .agg(approx_count_distinct(col("token"), 0.01).as("approx"))
-      // 10% gate: Spark pins rsd=0.01 but DuckDB's HLL precision is not
-      // configurable, so the gate needs margin over BOTH engines' typical
-      // error at any sf — 5% held but sat close to DuckDB's worst case.
-      exact.join(approx, Seq("lang"))
-        .select(col("lang"), col("exact_tokens"),
-          (abs(col("approx") - col("exact_tokens")).cast("double") /
-            col("exact_tokens") <= 0.10).as("within_10pct"))
-    }),
-
-    // The quantile twin of the HLL gate: ta_length_stats' exact
-    // percentile sorts inside each group, which is the test-SF ground
-    // truth but not the 100 TB path — there a mergeable quantile sketch
-    // (approx_percentile) replaces the sort. Sketch outputs are
-    // engine-specific (Spark GK vs DuckDB t-digest), so each engine
-    // gates ITS OWN sketch median against its exact median and reports
-    // the boolean; the booleans agree even though the sketches don't.
-    // Exact and approx aggregate separately (|langs|-row join) so the
-    // approx plan keeps its sketch-only exchange.
-    "ta_quantile_gate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val exact = docs.groupBy(col("lang"))
-        .agg(expr("percentile(n_chars, 0.5D)").as("exact_p50"))
-      val approx = docs.groupBy(col("lang"))
-        .agg(expr("approx_percentile(n_chars, 0.5D, 10000)").as("approx_p50"))
-      exact.join(approx, Seq("lang"))
-        .select(col("lang"),
-          Rounding.stable(col("exact_p50"), 4).as("exact_p50"),
-          (abs(col("approx_p50") - col("exact_p50")) /
-            col("exact_p50") <= 0.10).as("within_10pct"))
-    }),
-
-    // Count-min-sketch heavy-hitter gate — completes the mergeable-
-    // sketch trio (HLL distinct, quantile, CMS counts): the exact
-    // global top-k tokens are re-estimated from ONE (ε=10⁻³, δ=0.01,
-    // fixed-seed) CMS built in a single pass, and each estimate is
-    // gated against the CMS guarantee exact ≤ est ≤ exact + εN. Like
-    // ta_quantile_gate, each engine gates ITS OWN sketch (DuckDB has
-    // no CMS, so its "sketch" is the exact count — trivially within) —
-    // the hashes agree on the boolean while the Spark side genuinely
-    // exercises the sketch path a 100 TB count pass would use. The
-    // sketch is a bounded driver object (depth·width counters); the
-    // estimate loop touches only the k ranked tokens.
-    "ta_cms_gate" -> ((s, dir) => {
-      val sp = s; import sp.implicits._
-      val toks = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("token"))
-      val counts = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      val topk = graft.functions.TopK.topKByCount(Cfg.cmsTopK)
-      val ranked = counts.groupBy()
-        .agg(topk(col("cnt"), col("token")).as("top"))
-        .select(posexplode(col("top")).as(Seq("pos", "kv")))
-        .select(col("kv._2").as("token"), col("kv._1").as("exact_cnt"),
-          (col("pos") + 1).cast("int").as("rnk"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
-      val cms = toks.stat.countMinSketch("token",
-        eps = Cfg.cmsEps, confidence = Cfg.cmsConfidence, seed = Cfg.cmsSeed)
-      val slack = math.ceil(Cfg.cmsEps * cms.totalCount()).toLong
-      ranked.toSeq.map { case (tok, cnt, rnk) =>
-        val est = cms.estimateCount(tok)
-        (tok, cnt, rnk, est >= cnt && est <= cnt + slack)
-      }.toDF("token", "exact_cnt", "rnk", "within_bounds")
-    }),
-
-    // Batch shadow of StreamingAlerts.thresholdAlerts — the SAME
-    // baseline-anchored recurrence (alert iff ≥50% move from the last
-    // alerted value) as a secondary-sorted group scan, giving the
-    // streaming operator's semantics an oracle-checked row (the DuckDB
-    // side walks the recurrence with a recursive CTE). value>0 filter:
-    // a ratio baseline of 0 is undefined in both engines.
-    "ev_alerts_scan" -> ((s, dir) => {
-      val sp = s; import sp.implicits._
-      val ticks = Tables.events(s, dir)
-        .filter(col("event_type") === "purchase" && col("value") > 0)
-        .select(col("user_id").cast("string").as("key"), col("event_id"),
-          col("ts"), col("value"))
-        .as[graft.streaming.StreamingAlerts.IdTick]
-      graft.streaming.StreamingAlerts.thresholdAlertsScan(ticks, 50.0).toDF()
-    }),
-
-    // Batch shadow of StreamingVocab.heavyHitters: every emitEvery=500
-    // milestone each token's lifetime count has crossed — count per
-    // token (map-side combined), then explode(sequence(...)) generates
-    // exactly the milestone rows the stream would have emitted.
-    "ta_vocab_milestones" -> ((s, dir) => {
-      val emitEvery = 500L
-      Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= emitEvery)
-        .select(col("token"),
-          explode(sequence(lit(1L), floor(col("cnt") / emitEvery).cast("long")))
-            .as("m"))
-        .select(col("token"), (col("m") * emitEvery).as("count"))
-    })
-  )
-
-  // ── programmatic oracle builders (SQL must mirror the Scala constants
-  //    exactly — seeds, bit counts, plane literals) ─────────────────────
-
-  /** Shared oracle CTE block: the annotated candidate frame (T10) and the
-    * fallback winner (sel), both at asOf 2024-01-15.
-    */
-  private val DebugCte =
-    s"""tagged AS (
-      |  SELECT user_id, event_id, ts, 'google' AS src, true AS tfa FROM events WHERE event_type IN ('click','view')
-      |  UNION ALL SELECT user_id, event_id, ts, 'google_ticker', false FROM events WHERE event_type IN ('click','view')
-      |  UNION ALL SELECT user_id, event_id, ts, 'newsdata', true FROM events WHERE event_type IN ('purchase','signup')
-      |  UNION ALL SELECT user_id, event_id, ts, 'newsdata_ticker', false FROM events WHERE event_type IN ('purchase','signup')),
-      |ann AS (
-      |  SELECT user_id, src, event_id,
-      |         (event_id % 5 = 0) AS relevant_title,
-      |         (ts >= ${Cfg.asOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-      |          AND ts <= ${Cfg.asOfSql}) AS in_72hr_window,
-      |         tfa AS title_filter_applied,
-      |         (minute(ts) % 10 != 0) AS parseable_date
-      |  FROM tagged),
-      |wev AS (
-      |  SELECT *, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str, (minute(ts) % 10 = 0) AS unp
-      |  FROM events
-      |  WHERE ts >= ${Cfg.asOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-      |    AND ts <= ${Cfg.asOfSql}),
-      |wgoogle AS (SELECT * FROM wev WHERE event_type IN ('click','view')),
-      |wnewsd  AS (SELECT * FROM wev WHERE event_type IN ('purchase','signup') AND NOT unp),
-      |wcands AS (
-      |  SELECT user_id, event_id, unp, ts_str, 'google' AS src, 0 AS prec FROM wgoogle WHERE event_id % 5 = 0
-      |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'google_ticker', 1 FROM wgoogle
-      |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata', 2 FROM wnewsd WHERE event_id % 5 = 0
-      |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata_ticker', 3 FROM wnewsd),
-      |sel AS (
-      |  SELECT user_id, src, event_id
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-      |          ORDER BY prec ASC, CASE WHEN src LIKE 'google%' AND unp THEN '' ELSE ts_str END DESC, event_id DESC) AS rn
-      |        FROM wcands)
-      |  WHERE rn = 1)""".stripMargin
-
-  private val RecrawlCte =
-    "corpus AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id + 1000000, text FROM documents)"
-
-  /** SQL mirror of reconcileInputs + the full-outer key join; concat_ws
-    * skips NULLs identically in both engines, and the value is
-    * integerized with an explicit floor before casting.
-    */
-  private val ReconcileCtes: String =
-    """live AS (
-      |  SELECT event_id,
-      |         md5(concat_ws('|', user_id::VARCHAR, event_type,
-      |             CAST(floor(value * 10000) AS BIGINT)::VARCHAR)) AS h
-      |  FROM events),
-      |backfill AS (
-      |  SELECT event_id,
-      |         md5(concat_ws('|', user_id::VARCHAR, event_type,
-      |             CAST(floor((CASE WHEN event_id % 101 = 0 THEN value + 1 ELSE value END) * 10000) AS BIGINT)::VARCHAR)) AS h
-      |  FROM events WHERE event_id % 97 <> 0),
-      |j AS (
-      |  SELECT coalesce(l.event_id, b.event_id) AS event_id, l.h AS h_a, b.h AS h_b
-      |  FROM live l FULL OUTER JOIN backfill b ON l.event_id = b.event_id)""".stripMargin
-
-  /** Quality-signal scan over `src` — the SQL mirror of
-    * TextAnalysis.qualityColumns' intermediate counts, shared by
-    * ta_quality and e3_curation.
-    */
-  private def qualityCteSql(src: String): String =
-    s"""SELECT doc_id, text,
-       |         CAST(len(string_split_regex(trim(text), ' +')) AS INT) AS n_tokens,
-       |         length(replace(text, ' ', ''))::DOUBLE AS content_chars,
-       |         CAST(len(regexp_extract_all(lower(text), '\\bthe\\b')) + len(regexp_extract_all(lower(text), '\\ba\\b')) AS INT) AS stop_hits,
-       |         CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS INT) AS punct_hits
-       |  FROM $src""".stripMargin
-
-  /** Shared token/bigram/tfidf CTE chains (DuckDB side of
-    * TextAnalysis.repetition / tfidf / bigrams) — aligned multi-unnest
-    * zips l[1:len-1] with l[2:] positionally for bigrams, because
-    * generate_series cannot lateral-reference a column. Used by
-    * ta_repetition, ta_tfidf, and the e5 flagship.
-    */
-  private def tokenCountCtes(src: String): String =
-    s"""rt AS (SELECT doc_id, string_split(text, ' ') AS l FROM $src),
-       |tok AS (SELECT doc_id, unnest(l) AS w FROM rt),
-       |tokc AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
-       |toka AS (SELECT doc_id, sum(c) AS tot, max(c) AS mx FROM tokc GROUP BY 1)""".stripMargin
-
-  private val BigramCtes: String =
-    """bg AS (SELECT doc_id, unnest(l[1:len(l)-1]) || ' ' || unnest(l[2:]) AS b FROM rt),
-      |bgc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY 1, 2),
-      |bga AS (SELECT doc_id, sum(c) AS tot2, max(c) AS mx2, count(*) AS dst2 FROM bgc GROUP BY 1)""".stripMargin
-
-  private val RepTopTokSql = "round((mx::DOUBLE / tot) * 10000) / 10000"
-  private val RepTopBgSql = "round((mx2::DOUBLE / tot2) * 10000) / 10000"
-  private val RepDupBgSql = "round((1 - dst2::DOUBLE / tot2) * 10000) / 10000"
-  private val RepFlagSql =
-    s"($RepTopTokSql >= 0.12 OR coalesce($RepDupBgSql >= 0.05, false))"
-
-  /** tfidf scores over tokenCountCtes' `tokc`; `src` supplies the corpus
-    * count N.
-    */
-  private def tfidfScoreCtes(src: String): String =
-    s"""tf_tot AS (SELECT doc_id, sum(c) AS tot FROM tokc GROUP BY 1),
-       |dfreq AS (SELECT w, CAST(count(*) AS BIGINT) AS df FROM tokc GROUP BY 1),
-       |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM $src),
-       |tfsc AS (
-       |  SELECT doc_id, w,
-       |         round(((c::DOUBLE / tot) * ((n - df + 0.5) / (df + 0.5))) * 10000) / 10000 AS tfidf
-       |  FROM tokc JOIN tf_tot USING (doc_id) JOIN dfreq USING (w) CROSS JOIN n)""".stripMargin
-
-  /** The rounded quality score over qualityCteSql's columns. */
-  private val QualitySql: String =
-    """round((least(1.0, greatest(0.0,
-      |         0.08 * (content_chars / n_tokens)
-      |         + 0.5 * (stop_hits::DOUBLE / n_tokens)
-      |         - (punct_hits::DOUBLE / length(text))))) * 10000) / 10000""".stripMargin
-
-  private val WsTokensSql: String =
-    """CAST(len(string_split_regex(trim(text), '\s+')) AS INT)"""
-
-
-  /** SQL mirrors of Dedup.tokenValues / shingleValuesFromTokens — the
-    * 48-bit nibble packing of md5(token) and the positional 3-gram
-    * combination, shared by the minhash and ngram oracles.
-    */
-  private val TokenValsSql: String =
-    "list_transform(string_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 12))::BIGINT)"
-
-  private val ShingleValsSql: String = {
-    val P = Dedup.MinhashP
-    val combine =
-      s"((tv[i] % $P) * ${Dedup.ShingleC1} + (tv[i+1] % $P) * ${Dedup.ShingleC2} + tv[i+2]) % $P"
-    s"""list_distinct(
-       |    CASE WHEN len(tv) >= 3
-       |         THEN list_transform(range(1, len(tv) - 1), i -> $combine)
-       |         ELSE [tv[1]] END)""".stripMargin
-  }
-
-  private val MinhashJaccardSql: String =
-    Rounding.stableSql("len(list_intersect(sa.sh, sb.sh))::DOUBLE / len(list_distinct(sa.sh || sb.sh))", 4)
-
-  /** The shared minhash CTE chain (corpus → token values → shingles →
-    * signatures → band keys → candidate pairs) over the re-crawled
-    * corpus. `pairPred` selects which banded collisions count as
-    * candidates (self-dedup: ordered pairs; incremental: base-side ×
-    * batch-side only), with the a/b doc ids surfaced under
-    * `aName`/`bName`. `maxBucket` mirrors Dedup's hot-bucket guard
-    * (rows of buckets above the cap are dropped before pairing) for the
-    * oracles whose Spark side runs the capped `minhashPairs`; None for
-    * the joint base+batch oracles (`minhashPairsBetween` carries no
-    * inline cap — see its scaladoc).
-    */
-  private def minhashCtes(numBands: Int, rowsPerBand: Int,
-      pairPred: String, aName: String, bName: String,
-      maxBucket: Option[Int] = None,
-      canonicalDomain: Boolean = false): String = {
-    val P = Dedup.MinhashP
-    val sigCols = (0 until numBands * rowsPerBand).map { k =>
-      val (a, b) = (Dedup.minhashA(k), Dedup.minhashB(k))
-      s"list_aggregate(list_transform(sh, v -> ((v % $P) * $a + $b) % $P), 'min') AS sig_$k"
-    }.mkString(",\n         ")
-    val bandCases = (0 until numBands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => s"sig_${b * rowsPerBand + r}::VARCHAR").mkString(" || '|' || ")
-      s"WHEN $b THEN md5($parts)"
-    }.mkString(" ")
-    // canonicalDomain (e4): sig/banding run over exact-canonical docs
-    // only (min doc_id per md5(text)); `exc`/`em` are exposed for the
-    // caller's copy-edge and canonical-id CTEs
-    val canonCtes = if (canonicalDomain)
-      s"""exc AS (SELECT md5(text) AS h, min(doc_id) AS cid FROM corpus GROUP BY md5(text)),
-         |em AS (SELECT doc_id, cid FROM (SELECT doc_id, md5(text) AS h FROM corpus) e0 JOIN exc USING (h)),
-         |""".stripMargin else ""
-    val sigSrc = if (canonicalDomain)
-      "sh JOIN (SELECT cid AS doc_id FROM exc) cd USING (doc_id)" else "sh"
-    s"""$RecrawlCte,
-       |tvals AS (
-       |  SELECT doc_id, $TokenValsSql AS tv
-       |  FROM corpus),
-       |sh AS (
-       |  SELECT doc_id, $ShingleValsSql AS sh
-       |  FROM tvals),
-       |${canonCtes}sig AS (
-       |  SELECT doc_id,
-       |         $sigCols
-       |  FROM $sigSrc),
-       |banded AS (
-       |  SELECT doc_id, band_id,
-       |         CASE band_id $bandCases END AS band_key
-       |  FROM sig, (SELECT unnest(range(0, $numBands)) AS band_id)),${maxBucket
-           .map(cap => s"""
-       |bandedc AS (
-       |  SELECT doc_id, band_id, band_key FROM (
-       |    SELECT *, count(*) OVER (PARTITION BY band_id, band_key) AS bn
-       |    FROM banded)
-       |  WHERE bn <= $cap),""").getOrElse("")}
-       |pairs AS (
-       |  SELECT DISTINCT a.doc_id AS $aName, b.doc_id AS $bName
-       |  FROM ${if (maxBucket.isDefined) "bandedc" else "banded"} a
-       |  JOIN ${if (maxBucket.isDefined) "bandedc" else "banded"} b
-       |    ON a.band_id = b.band_id AND a.band_key = b.band_key AND $pairPred)""".stripMargin
-  }
-
-  /** Bloom-screen oracle shared by dedup_bloom and dedup_bloom_sharded
-    * (identical result sets by construction — the sharded probe is
-    * verdict-identical at the same filter size, and the oracle's
-    * join-form build/probe is already the sharded shape): same md5-slice
-    * bit positions re-derived relationally — build = bit_or per 32-bit
-    * word, probe = every bit set via a LEFT JOIN on word. Filter size
-    * scales with the base count exactly as Dedup.bloomWordsFor:
-    * greatest(2048, 4·n) words, via the bn scalar.
-    */
-  /** The bucketed-cosine pair CTE chain shared by dedup_embedding and
-    * ta_split_leakage_semantic: re-encoded copies unioned in, LSH
-    * bucketing with the hot-cell cap, within-bucket pairs `p` carrying
-    * 6-dp cosine. Consumers append their own filter/aggregation.
-    */
-  private lazy val CosinePairCtesSql: String =
-    s"""e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |corpus AS (SELECT id, v FROM e
-       |           UNION ALL SELECT id + 100000, list_transform(v, x -> x * 1.5) FROM e),
-       |b0 AS (SELECT id, v, ${lshBucketSql("v", Cfg.cosNumPlanes, 64)} AS bucket FROM corpus),
-       |b AS (SELECT id, v, bucket FROM (
-       |        SELECT *, count(*) OVER (PARTITION BY bucket) AS cn FROM b0)
-       |      WHERE cn <= ${Cfg.cosMaxCell}),
-       |p AS (
-       |  SELECT a.id AS vec_a, c.id AS vec_b, round(${sqlCos("a.v", "c.v")}, 6) AS cos
-       |  FROM b a JOIN b c ON a.bucket = c.bucket AND a.id < c.id)""".stripMargin
-
-  private lazy val bloomOracleSql: String = {
-    def posList(textExpr: String) = (0 until Dedup.BloomHashes).map(i =>
-      s"('0x' || substr(md5($textExpr), ${i * 8 + 1}, 8))::BIGINT % ((SELECT w FROM bn) * 32)")
-      .mkString("[", ", ", "]")
-    s"""WITH base AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-       |bn AS (SELECT greatest(${Dedup.BloomWords}, 4 * count(*)) AS w FROM base),
-       |batch AS (
-       |  SELECT doc_id + 1000000 AS doc_id,
-       |         CASE WHEN doc_id % 3 = 0
-       |              THEN text || ' novel ' || CAST(doc_id AS VARCHAR)
-       |              ELSE text END AS text
-       |  FROM documents WHERE text IS NOT NULL),
-       |bp AS (SELECT unnest(${posList("text")}) AS p FROM base),
-       |bb AS (SELECT p // 32 AS w, bit_or(1::BIGINT << CAST(p % 32 AS INT)) AS m
-       |       FROM bp GROUP BY 1),
-       |pp AS (SELECT doc_id, text, unnest(${posList("text")}) AS p FROM batch),
-       |ph AS (SELECT doc_id, text, p // 32 AS w, CAST(p % 32 AS INT) AS b FROM pp),
-       |hit AS (
-       |  SELECT doc_id, text,
-       |         bool_and(m IS NOT NULL AND ((m >> b) & 1) = 1) AS maybe_in_base
-       |  FROM ph LEFT JOIN bb USING (w) GROUP BY doc_id, text),
-       |ex AS (SELECT DISTINCT md5(text) AS h FROM base)
-       |SELECT hit.doc_id, hit.maybe_in_base,
-       |       (ex.h IS NOT NULL) AS in_base,
-       |       (hit.maybe_in_base AND ex.h IS NULL) AS is_fp
-       |FROM hit LEFT JOIN ex ON md5(hit.text) = ex.h""".stripMargin
-  }
-
-  private def minhashOracle(numBands: Int, rowsPerBand: Int, threshold: Double,
-      pairPred: String = "a.doc_id < b.doc_id",
-      aName: String = "doc_a", bName: String = "doc_b",
-      maxBucket: Option[Int] = None): String =
-    s"WITH ${minhashCtes(numBands, rowsPerBand, pairPred, aName, bName, maxBucket)}\n" +
-      s"""SELECT $aName, $bName,
-         |       $MinhashJaccardSql AS jaccard
-         |FROM pairs JOIN sh sa ON sa.doc_id = $aName JOIN sh sb ON sb.doc_id = $bName
-         |WHERE $MinhashJaccardSql >= $threshold""".stripMargin
-
-  /** Connected components over the verified near-dup pairs as a recursive
-    * CTE: walk accumulates every label reachable from a node; min = the
-    * component-min id — the unique fixpoint the Spark label-propagation
-    * loop also converges to.
-    */
-  private def clustersWalkCtes(numBands: Int, rowsPerBand: Int, threshold: Double): String =
-    s"WITH RECURSIVE ${minhashCtes(numBands, rowsPerBand, "a.doc_id < b.doc_id", "doc_a", "doc_b",
-      Some(Cfg.maxBucket))},\n" +
-      s"""verified AS (
-         |  SELECT doc_a, doc_b
-         |  FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |  WHERE $MinhashJaccardSql >= $threshold),
-         |nodes AS (SELECT DISTINCT doc_id FROM corpus),
-         |edges AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM verified
-         |  UNION ALL SELECT doc_b, doc_a FROM verified),
-         |walk(node, lab) AS (
-         |  SELECT doc_id, doc_id FROM nodes
-         |  UNION
-         |  SELECT e.b, w.lab FROM walk w JOIN edges e ON e.a = w.node),
-         |cl AS (
-         |  SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS cluster_id
-         |  FROM walk GROUP BY node)""".stripMargin
-
-  /** ta_quality_smooth: verified-pair edges + `smoothRounds` unrolled
-    * floor-mean consensus stages over integer micro-unit qualities.
-    */
-  private def qualitySmoothOracle(numBands: Int, rowsPerBand: Int,
-      threshold: Double, rounds: Int): String = {
-    val roundCtes = (1 to rounds).map { r =>
-      s"""n$r AS (
-         |  SELECT e.a AS id, CAST(sum(q.q_u) AS BIGINT) AS nsum,
-         |         CAST(count(*) AS BIGINT) AS ndeg
-         |  FROM ed e JOIN q${r - 1} q ON q.id = e.b GROUP BY 1),
-         |q$r AS (
-         |  SELECT q.id,
-         |         CASE WHEN n.id IS NULL THEN q.q_u
-         |              ELSE (q.q_u + n.nsum) // (1 + n.ndeg) END AS q_u
-         |  FROM q${r - 1} q LEFT JOIN n$r n USING (id))""".stripMargin
-    }.mkString(",\n")
-    s"WITH ${minhashCtes(numBands, rowsPerBand, "a.doc_id < b.doc_id", "doc_a", "doc_b",
-      Some(Cfg.maxBucket))},\n" +
-      s"""verified AS (
-         |  SELECT doc_a, doc_b
-         |  FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |  WHERE $MinhashJaccardSql >= $threshold),
-         |ed AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM verified
-         |  UNION ALL SELECT doc_b, doc_a FROM verified),
-         |qc AS (${qualityCteSql("corpus WHERE text IS NOT NULL")}),
-         |q0 AS (SELECT doc_id AS id,
-         |              CAST(round(($QualitySql) * 10000) AS BIGINT) AS q_u
-         |       FROM qc),
-         |$roundCtes
-         |SELECT id AS doc_id, q_u,
-         |       ${Rounding.stableSql("q_u / 10000.0", 4)} AS quality_smooth
-         |FROM q$rounds""".stripMargin
-  }
-
-  private def clustersOracle(numBands: Int, rowsPerBand: Int, threshold: Double): String =
-    s"${clustersWalkCtes(numBands, rowsPerBand, threshold)}\n" +
-      "SELECT doc_id, cluster_id FROM cl"
-
-  /** SoftDeDup weights over the same closure: 1/|cluster| per member. */
-  private def softWeightsOracle(numBands: Int, rowsPerBand: Int, threshold: Double): String =
-    s"${clustersWalkCtes(numBands, rowsPerBand, threshold)},\n" +
-      s"""sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |       FROM cl GROUP BY 1)
-         |SELECT doc_id, cluster_id, cluster_size,
-         |       ${Rounding.stableSql("1.0 / cluster_size", 6)} AS weight
-         |FROM cl JOIN sz USING (cluster_id)""".stripMargin
-
-  private def simhashOracle(bits: Int): String = {
-    val bitExprs = (0 until bits).map(j =>
-      s"(CASE WHEN list_sum(list_transform(h, x -> (ascii(substr(x, ${j + 1}, 1)) % 2) * 2 - 1)) > 0 THEN '1' ELSE '0' END)")
-      .mkString(" || ")
-    s"""SELECT doc_id, $bitExprs AS simhash
-       |FROM (SELECT doc_id, list_transform(string_split(text, ' '), t -> md5(t)) AS h FROM documents)""".stripMargin
-  }
-
-  /** Explicit sequential dot/norm so summation order matches Spark's
-    * aggregate fold.
-    */
-  private def sqlDot(a: String, b: String) =
-    s"list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i]))"
-  private def sqlCos(a: String, b: String) =
-    s"round(${sqlDot(a, b)} / (sqrt(${sqlDot(a, a)}) * sqrt(${sqlDot(b, b)})), 6)"
-  private def sqlD2(a: String, b: String) =
-    s"list_sum(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
-
-  /** TextAnalysis.lmSurprisal as CTEs ending in
-    * `fl(doc_id, lang, n_tokens, nll_bits)` — shared by ta_lm_fluency
-    * and ta_lm_buckets.
-    */
-  private lazy val LmFluencyCtes: String =
-    s"""t AS (
-       |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
-       |  FROM documents),
-       |r AS (SELECT lang, token FROM t WHERE doc_id % ${Cfg.lmRefMod} = 0),
-       |lm AS (SELECT lang, token, CAST(length(bin(count(*))) - 1 AS BIGINT) AS w
-       |       FROM r GROUP BY 1, 2),
-       |tot AS (SELECT lang, CAST(length(bin(count(*))) - 1 AS BIGINT) AS tbits
-       |        FROM r GROUP BY 1),
-       |d AS (
-       |  SELECT t.doc_id, t.lang, CAST(count(*) AS BIGINT) AS n_tokens,
-       |         CAST(sum(COALESCE(lm.w, 0)) AS BIGINT) AS bits
-       |  FROM t LEFT JOIN lm USING (lang, token) GROUP BY 1, 2),
-       |fl AS (
-       |  SELECT d.doc_id, d.lang, d.n_tokens,
-       |         ${Rounding.stableSql(
-             "tot.tbits - d.bits / CAST(d.n_tokens AS DOUBLE)", 4)} AS nll_bits
-       |  FROM d JOIN tot USING (lang))""".stripMargin
-
-  /** TextAnalysis.winnowFrame as CTEs ending in `f(doc_id[, at], hs,
-    * fps)` — shared by ta_winnow and st13_winnow_scan. 48-bit md5
-    * k-gram hashes, min per INCLUSIVE list slice `hs[j : j+w−1]`
-    * (≡ Spark's slice(hs, j, w)), deduplicated. `withAt` carries the
-    * st8-layout arrival second (1704067200 + doc_id) for the
-    * first-arrival ownership CTEs.
-    */
-  private def winnowCtes(withAt: Boolean): String = {
-    val (k, w) = (Cfg.winnowK, Cfg.winnowW)
-    val (b, p) = (graft.operators.TextAnalysis.WinnowBase,
-      graft.operators.TextAnalysis.WinnowMod)
-    // pow(j) = B^j mod P — the same plan-time table the Spark side bakes
-    val pow = Array.iterate(1L, k)(x => x * b % p)
-    val kTerms = (0 until k)
-      .map(j => s"cs[i + $j] * ${pow(k - 1 - j)} % $p").mkString(" + ")
-    val at = if (withAt) ", at" else ""
-    val atDef = if (withAt) ", 1704067200 + doc_id AS at" else ""
-    s"""d AS (
-       |  SELECT doc_id$atDef, text, length(text) AS n
-       |  FROM documents WHERE text IS NOT NULL),
-       |c AS (
-       |  SELECT doc_id$at, n,
-       |         list_transform(range(1, n + 1), i ->
-       |           CAST(ord(substr(text, CAST(i AS INT), 1)) AS BIGINT)) AS cs
-       |  FROM d),
-       |h AS (
-       |  SELECT doc_id$at,
-       |         CASE WHEN n >= $k THEN
-       |           list_transform(range(1, n - $k + 2), i -> ($kTerms) % $p)
-       |         WHEN n = 0 THEN [CAST(0 AS BIGINT)]
-       |         ELSE [list_reduce(cs, (a, x) -> (a * $b + x) % $p)] END AS hs
-       |  FROM c),
-       |f AS (
-       |  SELECT doc_id$at, hs,
-       |         list_distinct(
-       |           CASE WHEN len(hs) >= $w THEN
-       |             list_transform(range(1, len(hs) - $w + 2), j ->
-       |               list_min(hs[CAST(j AS INT) : CAST(j + $w - 1 AS INT)]))
-       |           ELSE [list_min(hs)] END) AS fps
-       |  FROM h)""".stripMargin
-  }
-
-  /** TextAnalysis.dsirScores as CTEs ending in
-    * `dsc(doc_id, n_grams, dsir_bits)` — shared by ta_dsir and
-    * ta_dsir_select. Mirrors the plan literally: unigrams++bigrams with
-    * multiplicity, 24-bit md5 buckets mod dsirBuckets, (+1)-Laplace
-    * integer bit-length weights, and the n_grams·(bits(totR)−bits(totT))
-    * Laplace-total shift. range(1, len(ts)) is end-EXCLUSIVE in DuckDB —
-    * exactly the 1..n−1 bigram starts Spark's sequence(1, n−1) yields,
-    * and empty for 1-token docs on both engines.
-    */
-  private lazy val DsirCtes: String = {
-    val nb = Cfg.dsirBuckets
-    s"""dt AS (
-       |  SELECT doc_id, (source = '${Cfg.dsirTargetSource}') AS t,
-       |         string_split(text, ' ') AS ts
-       |  FROM documents WHERE text IS NOT NULL),
-       |dg AS (
-       |  SELECT doc_id, t,
-       |         unnest(list_concat(ts,
-       |           list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i+1]))) AS g
-       |  FROM dt),
-       |db AS (SELECT doc_id, t,
-       |              ('0x' || substr(md5(g), 1, 6))::BIGINT % $nb AS b FROM dg),
-       |dm AS (SELECT b,
-       |              CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-       |              CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS cr
-       |       FROM db GROUP BY 1),
-       |dw AS (SELECT b, CAST(length(bin(ct + 1)) - 1 AS BIGINT)
-       |               - CAST(length(bin(cr + 1)) - 1 AS BIGINT) AS w FROM dm),
-       |dsh AS (SELECT CAST(length(bin(CAST(sum(cr) AS BIGINT) + $nb)) - 1 AS BIGINT)
-       |             - CAST(length(bin(CAST(sum(ct) AS BIGINT) + $nb)) - 1 AS BIGINT) AS shift
-       |        FROM dm),
-       |dsg AS (
-       |  SELECT db.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-       |         CAST(sum(dw.w) AS BIGINT) AS gsum
-       |  FROM db JOIN dw USING (b) WHERE NOT db.t GROUP BY 1),
-       |dsc AS (
-       |  SELECT doc_id, n_grams, gsum + n_grams * shift AS dsir_bits
-       |  FROM dsg CROSS JOIN dsh)""".stripMargin
-  }
-
-  /** Similarity.kmeans unrolled for Cfg.kmeansIters = 2: seeds → assign
-    * (a1) → fixed-point centroid update (c1) → final assign (a20; filter
-    * rn = 1 to consume). Shared by sim_kmeans, sim_kmeans_quality, and
-    * sim_diversity_sample. The require turns a Cfg.kmeansIters bump into
-    * a loud failure instead of three opaque hash mismatches.
-    */
-  /** The unrolled 2-pass Lloyd CTE chain over an injectable corpus body
-    * (`e AS (eBody)`) and cluster count `k`: sim_kmeans and friends
-    * cluster the raw embeddings at Cfg.kmeansK; dedup_semantic clusters
-    * the paraphrase-augmented corpus; sim_ivf_ann trains its k=nLists
-    * coarse codebook. One definition keeps every kmeans oracle in
-    * lock-step with the plan. The `c1` CTE is the trained codebook
-    * (Similarity.trainedCentroids); `a20` rn=1 the final assignment.
-    */
-  private def kmeansCtesOver(eBody: String, k: Int = Cfg.kmeansK,
-      p: String = "", metric: String = "cosine"): String = {
-    require(Cfg.kmeansIters == 2,
-      s"KmeansCtes unrolls exactly 2 Lloyd passes; Cfg.kmeansIters=${Cfg.kmeansIters}")
-    // the assignment score, mirroring lloydCore's metric switch: 6-dp
-    // cosine (higher better) or NEGATED 6-dp squared L2 — both rank
-    // DESC with ties to the lower cid
-    def score(v: String, cv: String): String =
-      if (metric == "l2") s"(0.0 - round(${sqlD2(v, cv)}, 6))" else sqlCos(v, cv)
-    s"""${p}e AS ($eBody),
-       |${p}init AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, v AS cv
-       |  FROM (SELECT vec_id, v FROM ${p}e ORDER BY vec_id LIMIT $k)),
-       |${p}a10 AS (
-       |  SELECT ${p}e.vec_id, ${p}init.cid, ${p}e.v,
-       |         row_number() OVER (PARTITION BY ${p}e.vec_id ORDER BY ${score(s"${p}e.v", s"${p}init.cv")} DESC, ${p}init.cid ASC) AS rn
-       |  FROM ${p}e CROSS JOIN ${p}init),
-       |${p}a1 AS (SELECT vec_id, cid, v FROM ${p}a10 WHERE rn = 1),
-       |${p}c1c AS (
-       |  SELECT cid, unnest(range(1, len(v) + 1)) AS i,
-       |         CAST(round(unnest(v) * 1000000) AS BIGINT) AS q
-       |  FROM ${p}a1),
-       |${p}c1s AS (SELECT cid, i, sum(q) AS sq, CAST(count(*) AS BIGINT) AS n
-       |        FROM ${p}c1c GROUP BY 1, 2),
-       |${p}c1 AS (SELECT cid, list(sq::DOUBLE / (n * 1000000.0) ORDER BY i) AS cv
-       |       FROM ${p}c1s GROUP BY 1),
-       |${p}a20 AS (
-       |  SELECT ${p}e.vec_id, ${p}c1.cid, ${score(s"${p}e.v", s"${p}c1.cv")} AS cos,
-       |         row_number() OVER (PARTITION BY ${p}e.vec_id ORDER BY ${score(s"${p}e.v", s"${p}c1.cv")} DESC, ${p}c1.cid ASC) AS rn
-       |  FROM ${p}e CROSS JOIN ${p}c1)""".stripMargin
-  }
-
-  private lazy val KmeansCtes: String = kmeansCtesOver(
-    "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL")
-
-  /** The dedup_semantic corpus: every embedding plus a deterministic
-    * "re-embedded paraphrase" (first component + semanticDelta, id +
-    * 100000) — mirrored literally by [[SparkEntry.queries]].
-    */
-  private lazy val SemanticCorpusSql: String =
-    s"""SELECT vec_id, v FROM (SELECT vec_id, embedding::DOUBLE[] AS v
-       |                       FROM embeddings WHERE embedding IS NOT NULL) b
-       |UNION ALL
-       |SELECT vec_id + 100000, list_concat([v[1] + ${Cfg.semanticDelta}], v[2:])
-       |FROM (SELECT vec_id, embedding::DOUBLE[] AS v
-       |      FROM embeddings WHERE embedding IS NOT NULL) b""".stripMargin
-
-  /** The SemDeDup oracle body shared by dedup_semantic (Cfg-selected
-    * keep) and dedup_semantic_centroid (pinned "centroid"): Lloyd CTEs
-    * over the paraphrase-augmented corpus, hot-cell-capped
-    * (bucket, cluster) pair join, then the keep rule — min-id drops the
-    * larger id of every qualifying pair; centroid drops the member with
-    * the LOWER a20 cosine to its own centroid (6-dp, ties drop vec_b so
-    * the lower id survives), mirroring semanticDedup's `when` exactly.
-    */
-  private def semanticDedupOracleSql(keep: String): String = {
-    val drp = keep match {
-      case "min_id" =>
-        s"""drp AS (SELECT DISTINCT vec_b AS vec_id FROM p
-           |        WHERE cos >= ${Cfg.semanticThreshold})""".stripMargin
-      case "centroid" =>
-        s"""drp AS (SELECT DISTINCT CASE WHEN ca.cos >= cb.cos THEN p.vec_b ELSE p.vec_a END AS vec_id
-           |        FROM p JOIN asg ca ON p.vec_a = ca.vec_id
-           |               JOIN asg cb ON p.vec_b = cb.vec_id
-           |        WHERE p.cos >= ${Cfg.semanticThreshold})""".stripMargin
-      case other => throw new IllegalArgumentException(
-        s"semanticKeep must be min_id or centroid, got $other")
-    }
-    s"""WITH ${kmeansCtesOver(SemanticCorpusSql)},
-       |asg AS (SELECT vec_id, cid, cos FROM a20 WHERE rn = 1),
-       |b0 AS (
-       |  SELECT e.vec_id, e.v, asg.cid,
-       |         ${lshBucketSql("e.v", Cfg.cosNumPlanes, 64)} AS bucket
-       |  FROM e JOIN asg USING (vec_id)),
-       |b AS (SELECT vec_id, v, cid, bucket FROM (
-       |        SELECT *, count(*) OVER (PARTITION BY bucket, cid) AS cn FROM b0)
-       |      WHERE cn <= ${Cfg.cosMaxCell}),
-       |p AS (
-       |  SELECT a.vec_id AS vec_a, c.vec_id AS vec_b,
-       |         round(${sqlCos("a.v", "c.v")}, 6) AS cos
-       |  FROM b a JOIN b c
-       |    ON a.bucket = c.bucket AND a.cid = c.cid AND a.vec_id < c.vec_id),
-       |$drp
-       |SELECT asg.vec_id, CAST(asg.cid AS INT) AS cluster_id,
-       |       (drp.vec_id IS NULL) AS kept
-       |FROM asg LEFT JOIN drp ON asg.vec_id = drp.vec_id""".stripMargin
-  }
-
-  private def lshBucketSql(v: String, numPlanes: Int, dim: Int): String =
-    Similarity.hyperplanes(numPlanes, dim).map { w =>
-      val lits = w.mkString(",")
-      s"(CASE WHEN list_sum(list_transform(range(1, ${dim + 1}), i -> $v[i] * ([$lits]::DOUBLE[])[i])) > 0 THEN '1' ELSE '0' END)"
-    }.mkString(" || ")
-
-  /** Shared hashed-linear classifier CTE chain (ta_quality_clf /
-    * ta_source_cap / e6): ends in `tcl(doc_id, $carryCols, n_tokens,
-    * clf_score)` over `$textExpr` of `$src`. Bucket/weight arithmetic is
-    * all-integer (list_sum exact); only the final division is IEEE,
-    * stable-rounded — TextAnalysis.clfColumns' mirror. Margin-bearing
-    * raw text for a stripMargin consumer.
-    */
-  private def clfCtesSql(src: String = "documents",
-      textExpr: String = "text", carryCols: String = "source"): String =
-    s"""tcl0 AS (
-       |  SELECT doc_id, $carryCols,
-       |         string_split_regex(trim($textExpr), ' +') AS toks
-       |  FROM $src WHERE $textExpr IS NOT NULL),
-       |tclw AS (
-       |  SELECT doc_id, $carryCols, CAST(len(toks) AS INT) AS n_tokens,
-       |         CAST(list_sum(list_transform(toks, tk ->
-       |           ((('0x' || substr(md5(tk), 1, 4))::BIGINT % ${TextAnalysis.ClfBuckets}) * 37 + 11)
-       |             % ${TextAnalysis.ClfWeightMod} - 48)) AS BIGINT) AS sw
-       |  FROM tcl0),
-       |tcl AS (
-       |  SELECT doc_id, $carryCols, n_tokens,
-       |         ${Rounding.stableSql(s"sw::DOUBLE / (n_tokens * ${TextAnalysis.ClfWeightMod})", 6)} AS clf_score
-       |  FROM tclw)"""
-
-  /** SQL mirror of [[piiInject]]. ONE line on purpose: the `||` concat
-    * operators would lose a leading `|` to a consumer's stripMargin if
-    * this ever line-wrapped.
-    */
-  private def piiInjectSql(textExpr: String): String =
-    s"$textExpr || CASE WHEN doc_id % 3 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example' || CAST(doc_id % 7 AS VARCHAR) || '.com' ELSE '' END || CASE WHEN doc_id % 4 = 0 THEN ' call 555-867-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END || CASE WHEN doc_id % 5 = 0 THEN ' from 10.' || CAST(doc_id % 300 AS VARCHAR) || '.0.1' ELSE '' END || CASE WHEN doc_id % 7 = 0 THEN ' id 555-123-4567@mail.example.org' ELSE '' END"
-
-  /** Shared paragraph-dedup CTE chain (dedup_paragraph / e6) over a
-    * `corpus(doc_id, text)` CTE: ends in `pd(doc_id, n_paras, n_kept,
-    * clean_text)` — Dedup.paragraphDedup's mirror (first occurrence =
-    * rn 1 over (doc_id, para_id); string_agg skips the CASE's NULLs
-    * like collect_list; empty groups coalesce to ''). Margin-bearing.
-    */
-  private def paragraphCtesSql: String = {
-    val b = Cfg.paraBlockTokens
-    s"""pdt AS (SELECT doc_id, string_split(text, ' ') AS tv
-       |        FROM corpus WHERE text IS NOT NULL),
-       |pde AS (SELECT doc_id, tv,
-       |               UNNEST(generate_series(0, (len(tv) - 1) // $b)) AS para_id
-       |        FROM pdt),
-       |pdp AS (SELECT doc_id, para_id,
-       |               array_to_string(tv[para_id*$b+1 : para_id*$b+$b], ' ') AS para_text
-       |        FROM pde),
-       |pdr AS (SELECT *, row_number() OVER (PARTITION BY md5(para_text)
-       |                                     ORDER BY doc_id, para_id) AS rn
-       |        FROM pdp),
-       |pd AS (SELECT doc_id, count(*) AS n_paras,
-       |              count(CASE WHEN rn = 1 THEN 1 END) AS n_kept,
-       |              coalesce(string_agg(CASE WHEN rn = 1 THEN para_text END, ' ' ORDER BY para_id), '') AS clean_text
-       |       FROM pdr GROUP BY doc_id)"""
-  }
-
-  /** Shared IVF CTE chain (sim_ivf_ann / sim_ivf_recall): trained k=8
-    * Lloyd codebook (`c1`) → inverted-list assignment (`cassign`) →
-    * nProbe=2 query probing (`qassign`) → 6-dp-rounded candidate scores
-    * in `ivfs`. Margin-bearing raw text — consumers embed it in a
-    * stripMargin literal, like [[kmeansCtesOver]].
-    */
-  private def ivfCtesSql: String =
-    s"""${kmeansCtesOver(
-           "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL",
-           k = 8)},
-       |eb AS (SELECT vec_id AS id, v FROM e),
-       |cent AS (SELECT cid, cv FROM c1),
-       |cscore AS (
-       |  SELECT c.id AS c_id, c.v AS c_vec, cent.cid, ${sqlCos("c.v", "cent.cv")} AS ccos
-       |  FROM eb c CROSS JOIN cent),
-       |cassign AS (
-       |  SELECT c_id, c_vec, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY c_id ORDER BY ccos DESC, cid ASC) AS rn FROM cscore)
-       |  WHERE rn = 1),
-       |qscore AS (
-       |  SELECT q.id AS q_id, q.v AS q_vec, cent.cid, ${sqlCos("q.v", "cent.cv")} AS qcos
-       |  FROM (SELECT * FROM eb WHERE id < 5) q CROSS JOIN cent),
-       |qassign AS (
-       |  SELECT q_id, q_vec, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, cid ASC) AS rn FROM qscore)
-       |  WHERE rn <= 2),
-       |ivfs AS (
-       |  SELECT q.q_id, c.c_id, round(${sqlCos("q.q_vec", "c.c_vec")}, 6) AS cos
-       |  FROM qassign q JOIN cassign c USING (list_id)
-       |  WHERE q.q_id <> c.c_id)"""
-
-  /** Shared PQ CTE chain (sim_pq_ann / sim_pq_recall): one prefixed
-    * L2-metric Lloyd chain PER BLOCK (b0_…b{m-1}_ —
-    * Similarity.trainPqCodebooks in lock-step, each training on that
-    * block's subDim-slice of the corpus) → per-block nearest-codeword
-    * codes → reconstruction → 6-dp-rounded ADC scores in `pqsc` →
-    * k·rerank shortlist → exact-cosine re-rank in `pqx` (the refined
-    * scores sim_pq_ann ranks). Margin-bearing raw text for a
-    * stripMargin consumer, like [[ivfCtesSql]].
-    */
-  /** The codes-and-reconstruction prefix shared by [[pqCtesSql]] and
-    * [[ivfPqCtesSql]]: eb → per-block Lloyd chains → cw → nearest-
-    * codeword codes → `rec(id, rv)`.
-    */
-  private def pqCodesCtes: String = {
-    val sd = Cfg.pqSubDim
-    val blockChains = (0 until Cfg.pqM).map { b =>
-      kmeansCtesOver(
-        s"SELECT id AS vec_id, v[${b * sd + 1} : ${b * sd + sd}] AS v FROM eb WHERE id < ${Cfg.pqTrainBound}",
-        k = Cfg.pqCodewords, p = s"b${b}_", metric = "l2")
-    }.mkString(",\n")
-    val cwUnion = (0 until Cfg.pqM).map(b =>
-      s"SELECT $b AS m, cid AS cwid, cv AS cwblk FROM b${b}_c1")
-      .mkString(" UNION ALL ")
-    s"""eb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-       |$blockChains,
-       |cw AS ($cwUnion),
-       |enc AS (
-       |  SELECT eb.id, cw.m, cw.cwid,
-       |         list_sum(list_transform(range(1, ${sd + 1}), j ->
-       |           (eb.v[cw.m*$sd+j] - cw.cwblk[j]) * (eb.v[cw.m*$sd+j] - cw.cwblk[j]))) AS d2
-       |  FROM eb CROSS JOIN cw),
-       |codes AS (
-       |  SELECT id, m, cwid AS code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY id, m ORDER BY d2 ASC, cwid ASC) AS rn FROM enc)
-       |  WHERE rn = 1),
-       |rec AS (
-       |  SELECT codes.id, flatten(list(cw.cwblk ORDER BY codes.m)) AS rv
-       |  FROM codes JOIN cw ON cw.m = codes.m AND cw.cwid = codes.code
-       |  GROUP BY codes.id)"""
-  }
-
-  private def pqCtesSql: String =
-    s"""$pqCodesCtes,
-       |pqq AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
-       |pqsc AS (
-       |  SELECT q_id, rec.id AS c_id, round(${sqlDot("qv", "rv")}, 6) AS score
-       |  FROM pqq CROSS JOIN rec WHERE q_id <> rec.id),
-       |short AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rn FROM pqsc)
-       |  WHERE rn <= ${Cfg.pqK * Cfg.pqRerank}),
-       |pqx AS (
-       |  SELECT s.q_id, s.c_id, ${sqlCos("q.v", "c.v")} AS score
-       |  FROM short s JOIN eb q ON q.id = s.q_id JOIN eb c ON c.id = s.c_id)"""
-
-  /** BM25 CTE chain (ta_bm25_topk / ta_rrf_fusion): candidate-term
-    * occurrences → integer micro-unit Robertson contributions → exact
-    * per-doc sums → `bmr(doc_id, bm25, rnk)` (rnk ≤ bm25TopK).
-    */
-  private def bm25CtesSql: String = {
-    val (k1, b) = (Cfg.bm25K1, Cfg.bm25B)
-    val termList = Cfg.bm25Terms.map(t => s"'$t'").mkString("[", ", ", "]")
-    s"""dtl AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-       |  WHERE text IS NOT NULL),
-       |occ AS (
-       |  SELECT doc_id, len(ts) AS dl,
-       |         unnest(list_filter(ts, t -> list_contains($termList, t))) AS term
-       |  FROM dtl),
-       |tf AS (
-       |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf,
-       |         max(dl) AS dl
-       |  FROM occ GROUP BY 1, 2),
-       |dfd AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-       |tot AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |         CAST(sum(len(ts)) AS BIGINT) AS tot_dl
-       |  FROM dtl),
-       |sc AS (
-       |  SELECT tf.doc_id,
-       |         CAST(round((tot.n_docs - dfd.df + 0.5) / (dfd.df + 0.5)
-       |           * (tf.tf * ${k1 + 1})
-       |           / (tf.tf + ${k1} * (${1 - b} + ${b} * tf.dl
-       |                / (CAST(tot.tot_dl AS DOUBLE) / tot.n_docs)))
-       |           * 1000000.0) AS BIGINT) AS contrib_u
-       |  FROM tf JOIN dfd USING (term) CROSS JOIN tot),
-       |agg AS (
-       |  SELECT doc_id, CAST(sum(contrib_u) AS BIGINT) AS score_u
-       |  FROM sc GROUP BY 1),
-       |bmr AS (
-       |  SELECT doc_id, CAST(score_u AS DOUBLE) / 1000000.0 AS bm25,
-       |         CAST(rnk AS INT) AS rnk
-       |  FROM (SELECT *, row_number() OVER (ORDER BY score_u DESC, doc_id ASC) AS rnk
-       |        FROM agg)
-       |  WHERE rnk <= ${Cfg.bm25TopK})""".stripMargin
-  }
-
-  /** MMR greedy re-rank (sim_mmr) unrolled to Cfg.mmrK CTE steps: each
-    * step scores the not-yet-selected shortlist rows by
-    * λ·rel − (1−λ)·max-sim-to-selected (stable-rounded, ties to lower
-    * c_id) and picks rank 1. λ and 1−λ are interpolated from the SAME
-    * Scala doubles the Spark plan multiplies by (1−0.7 is not the
-    * literal 0.3 in binary — emitting the round-tripped value keeps the
-    * products bit-identical).
-    */
-  private def mmrOracleSql: String = {
-    val lam = Cfg.mmrLambda
-    val oneMinus = 1 - Cfg.mmrLambda
-    val steps = (2 to Cfg.mmrK).map { r =>
-      val selUnion = (1 until r).map(i => s"SELECT q_id, c_id FROM s$i")
-        .mkString(" UNION ALL ")
-      s"""sel$r AS ($selUnion),
-         |m$r AS (
-         |  SELECT cand.q_id, cand.c_id, cand.rel,
-         |         max(round(${sqlCos("cv.v", "sv.v")}, 6)) AS maxsim
-         |  FROM cand
-         |  JOIN eb cv ON cv.id = cand.c_id
-         |  JOIN sel$r s ON s.q_id = cand.q_id
-         |  JOIN eb sv ON sv.id = s.c_id
-         |  WHERE NOT EXISTS (SELECT 1 FROM sel$r x
-         |                    WHERE x.q_id = cand.q_id AND x.c_id = cand.c_id)
-         |  GROUP BY 1, 2, 3),
-         |p$r AS (SELECT q_id, c_id,
-         |               ${Rounding.stableSql(s"rel * $lam - maxsim * $oneMinus", 6)} AS obj
-         |        FROM m$r),
-         |s$r AS (SELECT q_id, c_id, obj
-         |        FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY obj DESC, c_id ASC) AS rn FROM p$r)
-         |        WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to Cfg.mmrK).map(r =>
-      s"SELECT q_id, c_id, obj AS mmr_score, CAST($r AS INT) AS rnk FROM s$r")
-      .mkString("\nUNION ALL ")
-    s"""WITH eb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-       |mq AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
-       |bs AS (
-       |  SELECT q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS rel
-       |  FROM mq, eb c WHERE q_id <> c.id),
-       |cand AS (
-       |  SELECT q_id, c_id, rel
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, c_id ASC) AS rn FROM bs)
-       |  WHERE rn <= ${Cfg.mmrShortlist}),
-       |p1 AS (SELECT q_id, c_id, ${Rounding.stableSql(s"rel * $lam", 6)} AS obj FROM cand),
-       |s1 AS (SELECT q_id, c_id, obj
-       |       FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY obj DESC, c_id ASC) AS rn FROM p1)
-       |       WHERE rn = 1),
-       |$steps
-       |$out""".stripMargin
-  }
-
-  /** IVF-PQ composite (sim_ivfpq_ann / sim_ivfpq_recall): the PQ codes
-    * prefix + the trained k=8 coarse chain (prefix cg_, the exact
-    * [[ivfCtesSql]] assignment pattern) — ADC scores only the probed
-    * lists' codes (`ipadc`), then the k·rerank shortlist re-ranks by
-    * exact 6-dp cosine (`ipx`).
-    */
-  private def ivfPqCtesSql: String =
-    s"""$pqCodesCtes,
-       |${kmeansCtesOver(
-           "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL",
-           k = 8, p = "cg_")},
-       |cgcent AS (SELECT cid, cv FROM cg_c1),
-       |cgcs AS (
-       |  SELECT c.id AS c_id, cgcent.cid, ${sqlCos("c.v", "cgcent.cv")} AS ccos
-       |  FROM eb c CROSS JOIN cgcent),
-       |cassign AS (
-       |  SELECT c_id, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY c_id ORDER BY ccos DESC, cid ASC) AS rn FROM cgcs)
-       |  WHERE rn = 1),
-       |cgqs AS (
-       |  SELECT q.id AS q_id, q.v AS qv, cgcent.cid, ${sqlCos("q.v", "cgcent.cv")} AS qcos
-       |  FROM (SELECT * FROM eb WHERE id < 5) q CROSS JOIN cgcent),
-       |qassign AS (
-       |  SELECT q_id, qv, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, cid ASC) AS rn FROM cgqs)
-       |  WHERE rn <= 2),
-       |ipadc AS (
-       |  SELECT q.q_id, c.c_id, round(${sqlDot("q.qv", "rec.rv")}, 6) AS score
-       |  FROM qassign q JOIN cassign c USING (list_id)
-       |       JOIN rec ON rec.id = c.c_id
-       |  WHERE q.q_id <> c.c_id),
-       |ipshort AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rn FROM ipadc)
-       |  WHERE rn <= ${Cfg.pqK * Cfg.pqRerank}),
-       |ipx AS (
-       |  SELECT s.q_id, s.c_id, ${sqlCos("q.v", "c.v")} AS score
-       |  FROM ipshort s JOIN eb q ON q.id = s.q_id JOIN eb c ON c.id = s.c_id)"""
-
-  /** One packed 32-bit half of the binary sign code (bit i set iff dim
-    * off+1+i is strictly > 0): exact shifted-1 sums, matching
-    * Similarity.binaryCodes' pow-2 fold value-for-value (both are exact
-    * integers ≤ 2³²−1). CAST: list_sum over BIGINT is HUGEINT, which
-    * pandas would render float64 against Spark's int64.
-    */
-  private def binaryHalfSql(off: Int): String =
-    s"CAST(list_sum(list_transform(range(0, 32), i -> CASE WHEN v[i + ${off + 1}] > 0 THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT)"
-
-  /** Binary sign-code CTE chain (sim_binary_ann / sim_binary_recall /
-    * sim_binary_banded): eb → bc(id, v, code_lo, code_hi) — the
-    * [[binaryHalfSql]] two-half layout, Similarity.binaryCodes in
-    * lock-step — then the full query-side Hamming scan
-    * `bh(q_id, c_id, hamming)` (XOR + popcount per half,
-    * Similarity.hammingCodes). Margin-bearing raw text for a
-    * stripMargin consumer, like [[ivfCtesSql]].
-    */
-  private def binaryCtes: String =
-    s"""eb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-       |bc AS (
-       |  SELECT id, v, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi
-       |  FROM eb),
-       |bh AS (
-       |  SELECT q.id AS q_id, c.id AS c_id,
-       |         CAST(bit_count(xor(q.code_lo, c.code_lo)) + bit_count(xor(q.code_hi, c.code_hi)) AS INT) AS hamming
-       |  FROM (SELECT * FROM bc WHERE id < 5) q JOIN bc c ON q.id <> c.id)"""
-
-  /** The Hamming-shortlist → exact-cosine-refine → recall-vs-brute tail
-    * shared by sim_binary_recall (candidates = the full `bh` scan) and
-    * sim_binary_banded (candidates = the multi-index band join): mirror
-    * of Similarity.topKBinary[Banded]'s rankAdcThenExact at
-    * rerank=binaryRerank plus the recall join every other gate uses.
-    * `cands` must expose (q_id, c_id, hamming).
-    */
-  private def binaryRecallTail(cands: String): String =
-    s"""short AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming ASC, c_id ASC) AS rn FROM $cands)
-       |  WHERE rn <= ${3 * Cfg.binaryRerank}),
-       |bx AS (
-       |  SELECT s.q_id, s.c_id, ${sqlCos("q.v", "c.v")} AS score
-       |  FROM short s JOIN eb q ON q.id = s.q_id JOIN eb c ON c.id = s.c_id),
-       |refined AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM bx)
-       |  WHERE rnk <= 3),
-       |bs AS (
-       |  SELECT q.id AS q_id, c.id AS c_id, ${sqlCos("q.v", "c.v")} AS cos
-       |  FROM (SELECT * FROM eb WHERE id < 5) q, eb c WHERE q.id <> c.id),
-       |brute AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-       |  WHERE rnk <= 3)
-       |SELECT b.q_id, CAST(count(i.c_id) AS BIGINT) AS hits,
-       |       ${Rounding.stableSql("count(i.c_id)::DOUBLE / 3", 4)} AS recall
-       |FROM brute b LEFT JOIN refined i ON b.q_id = i.q_id AND b.c_id = i.c_id
-       |GROUP BY b.q_id"""
-
-  /** sim_binary_banded's candidate CTEs: the 64-bit code split into
-    * binaryBands equal slices (Similarity.binaryBands in lock-step —
-    * same shifts, same masks), equi-join on (band, band_val), DISTINCT
-    * pairs, then Hamming over only those candidates.
-    */
-  private def bandedCandCtes: String = {
-    val bands = Cfg.binaryBands
-    // same invariant Similarity.binaryBands requires (ADVICE r18): a
-    // misconfigured band count (e.g. 1 → (1L<<64)-1 wraps to mask=0)
-    // would otherwise generate silently wrong SQL here while the Spark
-    // side throws — the two engines must fail the same way, at build time
-    require(bands >= 2 && bands % 2 == 0 && 64 % bands == 0,
-      s"bandedCandCtes: bands must split the two 32-bit halves evenly, got $bands")
-    val perHalf = bands / 2
-    val w = 64 / bands
-    val mask = (1L << w) - 1
-    s"""bands AS (
-       |  SELECT id, t.b,
-       |         CASE WHEN t.b < $perHalf THEN (code_lo >> ($w * t.b)) & $mask
-       |              ELSE (code_hi >> ($w * (t.b - $perHalf))) & $mask END AS band_val
-       |  FROM bc CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) t),
-       |cand AS (
-       |  SELECT DISTINCT qb.id AS q_id, cb.id AS c_id
-       |  FROM (SELECT * FROM bands WHERE id < 5) qb
-       |  JOIN bands cb ON qb.b = cb.b AND qb.band_val = cb.band_val AND qb.id <> cb.id),
-       |bsc AS (
-       |  SELECT cand.q_id, cand.c_id,
-       |         CAST(bit_count(xor(q.code_lo, c.code_lo)) + bit_count(xor(q.code_hi, c.code_hi)) AS INT) AS hamming
-       |  FROM cand JOIN bc q ON q.id = cand.q_id JOIN bc c ON c.id = cand.c_id)"""
-  }
-
-  /** st17_binary_scan: the stateless banded screen's oracle — base and
-    * arrival sign codes ([[binaryHalfSql]]), both sliced into band
-    * cells with the SAME shift/mask arithmetic as [[bandedCandCtes]],
-    * equi-joined on (band, band_val), one row per colliding cell whose
-    * XOR+popcount hamming clears the bands−1 pigeonhole radius. The
-    * arrival fixture mirrors the plan: ids %3==0 fully negated (novel),
-    * the rest with only v[1]'s sign flipped (Hamming ≤ 1 — must
-    * surface). `aid` aliasing avoids DuckDB's lateral-alias ambiguity
-    * between the shifted output id and the source id the CASE reads.
-    */
-  /** The CTE prefix st17_binary_scan and e8_ingest_screen share:
-    * eb (base), arr (the re-encode arrival fixture, `aid` to dodge
-    * DuckDB lateral-alias ambiguity), bc/ac (sign codes), bb/ab (band
-    * cells, the [[bandedCandCtes]] shift/mask arithmetic).
-    */
-  private def binaryScreenCtes: String = {
-    val bands = Cfg.binaryBands
-    require(bands >= 2 && bands % 2 == 0 && 64 % bands == 0,
-      s"binaryScreenCtes: bands must split the two 32-bit halves evenly, got $bands")
-    val perHalf = bands / 2
-    val w = 64 / bands
-    val mask = (1L << w) - 1
-    def bandCte(src: String) =
-      s"""SELECT id, code_lo, code_hi, t.b AS band,
-         |       CASE WHEN t.b < $perHalf THEN (code_lo >> ($w * t.b)) & $mask
-         |            ELSE (code_hi >> ($w * (t.b - $perHalf))) & $mask END AS band_val
-         |FROM $src CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) t"""
-    s"""eb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-       |arr AS (
-       |  SELECT id + 100000 AS aid,
-       |         CASE WHEN id % 3 = 0 THEN list_transform(v, x -> -x)
-       |              ELSE list_concat([-v[1]], v[2:64]) END AS v
-       |  FROM eb WHERE id < ${Cfg.binaryScreenArrivals}),
-       |bc AS (SELECT id, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi FROM eb),
-       |ac AS (SELECT aid AS id, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi FROM arr),
-       |bb AS (${bandCte("bc")}),
-       |ab AS (${bandCte("ac")})"""
-  }
-
-  /** Shared DuckDB CTE prefix for the frame plane — the relational
-    * mirror of `attachVideoPayload` (= `attachAudioPayload`) plus the
-    * decoder fan-out: tokens → one block per `b` tokens → per-block
-    * md5. Every frame/audio oracle builds on `vm` (doc_id, frame_id,
-    * mx) so the payload arithmetic lives in exactly one place.
-    */
-  private def frameBlockCtes(b: Int): String =
-    s"""vt AS (SELECT doc_id, string_split(text, ' ') AS tv
-       |           FROM documents WHERE text IS NOT NULL),
-       |ve AS (SELECT doc_id, tv,
-       |              UNNEST(generate_series(0, (len(tv) - 1) // $b)) AS fid
-       |       FROM vt),
-       |vm AS (SELECT doc_id, CAST(fid AS INT) AS frame_id,
-       |              md5(array_to_string(tv[fid*$b+1 : fid*$b+$b], ' ')) AS mx
-       |       FROM ve)""".stripMargin
-
-  /** vm's per-frame perceptual-hash signature (FakeDecoder
-    * .frameSignature's 14-hex-char prefix).
-    */
-  private val FrameSigCte: String =
-    "vs AS (SELECT doc_id, frame_id, substr(mx, 1, 14) AS frame_sig FROM vm)"
-
-  /** df-capped distinct posting chain over `vs` — the relational
-    * mirror of videoNearDupPairs' inverted index (and
-    * writeFrameSigIndex's build cap): distinct (doc, sig), per-doc
-    * signature counts, postings restricted to sigs within the cap.
-    */
-  private def frameSigPostCtes(dfCap: Int): String =
-    s"""ds AS (SELECT DISTINCT doc_id, frame_sig FROM vs),
-       |nf AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf
-       |       FROM ds GROUP BY doc_id),
-       |dfq AS (SELECT frame_sig FROM ds GROUP BY frame_sig
-       |        HAVING count(*) <= $dfCap),
-       |post AS (SELECT ds.doc_id, ds.frame_sig FROM ds JOIN dfq USING (frame_sig))""".stripMargin
-
-  /** Unsigned-byte sum of the 16-byte md5 hex in column `mx`, decoded
-    * nibble-pairwise (odd hex chars weigh 16) — the SQL twin of
-    * FakeDecoder.windowEnergy / decodeBrightness's numerator.
-    */
-  private val NibbleSumSql: String =
-    """list_sum(list_transform(range(1, 33), i ->
-      |                (CASE WHEN ascii(substr(mx, i, 1)) >= 97
-      |                      THEN ascii(substr(mx, i, 1)) - 87
-      |                      ELSE ascii(substr(mx, i, 1)) - 48 END)
-      |                * (CASE WHEN i % 2 = 1 THEN 16 ELSE 1 END)))""".stripMargin
-
-  /** Verified video near-dup pairs over frameSigPostCtes' postings —
-    * the sh (shared-count) + verified (containment cut) chain shared by
-    * the cluster and split-leakage oracles.
-    */
-  private def videoVerifiedPairCtes: String = {
-    val contain = Rounding.stableSql(
-      "shared_frames::DOUBLE / least(nf_a, nf_b)", 4)
-    s"""sh AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |              CAST(count(*) AS BIGINT) AS shared_frames
-       |       FROM post a JOIN post b USING (frame_sig)
-       |       WHERE a.doc_id < b.doc_id
-       |       GROUP BY 1, 2
-       |       HAVING count(*) >= ${Cfg.videoMinShared}),
-       |verified AS (
-       |  SELECT doc_a, doc_b
-       |  FROM (SELECT doc_a, doc_b, shared_frames, na.nf AS nf_a, nb.nf AS nf_b
-       |        FROM sh JOIN nf na ON na.doc_id = sh.doc_a
-       |                JOIN nf nb ON nb.doc_id = sh.doc_b)
-       |  WHERE $contain >= ${Cfg.videoContainMin})""".stripMargin
-  }
-
-  /** mm_frame_neardup's oracle: base frame sigs + the re-encode
-    * arrivals (char-2 nibble-XOR-1 translate ≡ the plan's payload
-    * low-bit flip), distinct-signature banding with the hot-cell cap,
-    * candidate equi-join, exact Hamming verify over packed codes
-    * rebuilt nibble-by-nibble on the BIGINT path (the value spans 56
-    * bits — a double-typed sum would round past 2^53).
-    */
-  private def frameNearDupSql: String = {
-    val bands = Cfg.frameSigBands
-    // mirror frameNearDupPairs' requires at SQL-generation time so the
-    // two sides can never be built from an inconsistent config
-    require(bands >= 2 && 14 % bands == 0,
-      s"frameNearDupSql: bands must split the 14 hex chars evenly, got $bands")
-    require(Cfg.frameSigMaxHamming >= 1 && Cfg.frameSigMaxHamming < bands,
-      s"frameNearDupSql: need 1 <= maxHamming < bands, got " +
-        s"${Cfg.frameSigMaxHamming} / $bands")
-    val width = 14 / bands
-    val sigCode =
-      """CAST(list_sum(list_transform(range(1, 15), i ->
-        |          CAST(CASE WHEN ascii(substr(frame_sig, i, 1)) >= 97
-        |                    THEN ascii(substr(frame_sig, i, 1)) - 87
-        |                    ELSE ascii(substr(frame_sig, i, 1)) - 48 END AS BIGINT)
-        |          << (4 * (14 - i)))) AS BIGINT)""".stripMargin
-    s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-       |$FrameSigCte,
-       |rs AS (SELECT doc_id + 4000000 AS doc_id, frame_id,
-       |              substr(frame_sig, 1, 1)
-       |                || translate(substr(frame_sig, 2, 1),
-       |                             '0123456789abcdef', '1032547698badcfe')
-       |                || substr(frame_sig, 3, 12) AS frame_sig
-       |       FROM vs WHERE doc_id % 10 = 0),
-       |ds AS (SELECT DISTINCT doc_id, frame_sig FROM
-       |        (SELECT doc_id, frame_sig FROM vs
-       |         UNION ALL SELECT doc_id, frame_sig FROM rs)),
-       |sd AS (SELECT frame_sig, CAST(count(*) AS BIGINT) AS df
-       |       FROM ds GROUP BY frame_sig),
-       |bd AS (SELECT frame_sig, t.b AS band_id,
-       |              substr(frame_sig, t.b * $width + 1, $width) AS band_val
-       |       FROM sd CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) t),
-       |ok AS (SELECT band_id, band_val FROM bd GROUP BY 1, 2
-       |       HAVING count(*) <= ${Cfg.frameSigBucketCap}),
-       |bb AS (SELECT bd.* FROM bd JOIN ok USING (band_id, band_val)),
-       |cd AS (SELECT DISTINCT a.frame_sig AS sig_a, b.frame_sig AS sig_b
-       |       FROM bb a JOIN bb b USING (band_id, band_val)
-       |       WHERE a.frame_sig < b.frame_sig),
-       |sc AS (SELECT frame_sig, $sigCode AS code FROM sd),
-       |hp AS (SELECT sig_a, sig_b,
-       |              CAST(bit_count(xor(ca.code, cb.code)) AS INT) AS hamming
-       |       FROM cd JOIN sc ca ON ca.frame_sig = cd.sig_a
-       |               JOIN sc cb ON cb.frame_sig = cd.sig_b)
-       |SELECT sig_a, sig_b, hamming, da.df AS df_a, db.df AS df_b
-       |FROM hp JOIN sd da ON da.frame_sig = hp.sig_a
-       |        JOIN sd db ON db.frame_sig = hp.sig_b
-       |WHERE hamming <= ${Cfg.frameSigMaxHamming}""".stripMargin
-  }
-
-  /** Shared oracle for mm_audio_segments and its stateless streaming
-    * twin st18_audio_scan (the per-row fold is bit-identical to the
-    * windowed batch form by construction, so one SQL pins both): the
-    * payload windows are md5-per-block, so window energy ≡ the
-    * unsigned-byte sum of the block md5; the islands fold with the
-    * running flag-change count, which doubles as the segment id.
-    */
-  private def audioSegmentsSql: String =
-    s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-       |en AS (SELECT doc_id, frame_id AS window_id,
-       |              CAST($NibbleSumSql AS BIGINT) AS energy
-       |       FROM vm),
-       |ac AS (SELECT *, energy >= ${Cfg.audioEnergyThreshold} AS is_speech
-       |       FROM en),
-       |ch AS (SELECT *, CASE WHEN lag(is_speech)
-       |                OVER (PARTITION BY doc_id ORDER BY window_id)
-       |              IS DISTINCT FROM is_speech THEN 1 ELSE 0 END AS chg
-       |       FROM ac),
-       |il AS (SELECT *, sum(chg) OVER (PARTITION BY doc_id
-       |                                ORDER BY window_id) AS isl
-       |       FROM ch)
-       |SELECT doc_id, CAST(isl AS INT) AS seg_id, is_speech,
-       |       CAST(min(window_id) AS INT) AS start_window,
-       |       CAST(count(*) AS BIGINT) AS n_windows,
-       |       CAST(sum(energy) AS BIGINT) AS seg_energy
-       |FROM il GROUP BY doc_id, is_speech, isl""".stripMargin
-
-  /** mm_audio_neardup's oracle: the delta-shingle acoustic fingerprint
-    * rebuilt relationally — base docs plus the %10 clip re-uploads
-    * (first audioClipWindows token-blocks under doc_id+5e6) share one
-    * token→block→md5→energy chain (audioSegmentsSql's arithmetic),
-    * consecutive window-energy deltas shingled audioFpShingle at a
-    * time into ':'-joined keys, then the same df-capped posting /
-    * pair / containment SQL shape as mm_video_neardup's oracle.
-    */
-  private def audioNearDupSql: String = {
-    val b = Cfg.paraBlockTokens
-    val clipTokens = Cfg.audioClipWindows * b
-    val sh = Cfg.audioFpShingle
-    val contain = Rounding.stableSql(
-      "shared_fps::DOUBLE / least(nfp_a, nfp_b)", 4)
-    s"""WITH bt AS (SELECT doc_id, string_split(text, ' ') AS tv
-       |            FROM documents WHERE text IS NOT NULL),
-       |ut AS (SELECT doc_id, tv FROM bt
-       |       UNION ALL
-       |       SELECT doc_id + 5000000 AS doc_id, tv[1:$clipTokens] AS tv
-       |       FROM bt WHERE doc_id % 10 = 0),
-       |ue AS (SELECT doc_id, tv,
-       |              UNNEST(generate_series(0, (len(tv) - 1) // $b)) AS wid
-       |       FROM ut),
-       |um AS (SELECT doc_id, CAST(wid AS INT) AS window_id,
-       |              md5(array_to_string(tv[wid*$b+1 : wid*$b+$b], ' ')) AS mx
-       |       FROM ue),
-       |en AS (SELECT doc_id, window_id,
-       |              CAST($NibbleSumSql AS BIGINT) AS energy
-       |       FROM um),
-       |dl AS (SELECT doc_id, window_id,
-       |              lead(energy) OVER (PARTITION BY doc_id
-       |                                 ORDER BY window_id) - energy AS delta
-       |       FROM en),
-       |da AS (SELECT doc_id, list(delta ORDER BY window_id) AS dv
-       |       FROM dl WHERE delta IS NOT NULL GROUP BY doc_id),
-       |fps AS (SELECT doc_id,
-       |               UNNEST(list_transform(generate_series(0, len(dv) - $sh),
-       |                 p -> array_to_string(dv[p+1 : p+$sh], ':'))) AS fp
-       |        FROM da),
-       |ds AS (SELECT DISTINCT doc_id, fp FROM fps),
-       |nfp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
-       |        FROM ds GROUP BY doc_id),
-       |dfq AS (SELECT fp FROM ds GROUP BY fp
-       |        HAVING count(*) <= ${Cfg.videoSigDfCap}),
-       |post AS (SELECT ds.doc_id, ds.fp FROM ds JOIN dfq USING (fp)),
-       |shp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |               CAST(count(*) AS BIGINT) AS shared_fps
-       |        FROM post a JOIN post b USING (fp)
-       |        WHERE a.doc_id < b.doc_id
-       |        GROUP BY 1, 2
-       |        HAVING count(*) >= ${Cfg.videoMinShared}),
-       |j AS (SELECT doc_a, doc_b, shared_fps,
-       |             na.nfp AS nfp_a, nb.nfp AS nfp_b
-       |      FROM shp JOIN nfp na ON na.doc_id = shp.doc_a
-       |               JOIN nfp nb ON nb.doc_id = shp.doc_b)
-       |SELECT doc_a, doc_b, shared_fps, nfp_a, nfp_b,
-       |       $contain AS containment,
-       |       $contain >= ${Cfg.videoContainMin} AS is_neardup
-       |FROM j""".stripMargin
-  }
-
-  private def binaryScreenSql: String = {
-    val bands = Cfg.binaryBands
-    s"""WITH $binaryScreenCtes
-       |SELECT a.id AS new_id, b.id AS base_id, CAST(a.band AS INT) AS band,
-       |       CAST(bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) AS INT) AS hamming
-       |FROM ab a JOIN bb b ON a.band = b.band AND a.band_val = b.band_val
-       |WHERE bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) <= ${bands - 1}""".stripMargin
-  }
-
-  /** e8_ingest_screen: the screen's DISTINCT candidate pairs, exact
-    * 6-dp cosine over only those pairs, per-arrival argmax
-    * (cos DESC, lower base_id) + candidate count, and the admission
-    * verdict against semanticThreshold — the SQL twin of the
-    * screen→verify→admit DAG.
-    */
-  private def ingestScreenSql: String = {
-    val bands = Cfg.binaryBands
-    s"""WITH $binaryScreenCtes,
-       |cand AS (
-       |  SELECT DISTINCT a.id AS new_id, b.id AS base_id
-       |  FROM ab a JOIN bb b ON a.band = b.band AND a.band_val = b.band_val
-       |  WHERE bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) <= ${bands - 1}),
-       |sc AS (
-       |  SELECT c.new_id, c.base_id, ${sqlCos("av.v", "bv.v")} AS cos
-       |  FROM cand c
-       |  JOIN (SELECT aid AS id, v FROM arr) av ON av.id = c.new_id
-       |  JOIN eb bv ON bv.id = c.base_id),
-       |best AS (
-       |  SELECT new_id, base_id AS best_id, cos AS best_cos
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY new_id ORDER BY cos DESC, base_id ASC) AS rn FROM sc)
-       |  WHERE rn = 1),
-       |cnt AS (SELECT new_id, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY new_id)
-       |SELECT a.aid AS id,
-       |       CAST(coalesce(cnt.n_cand, 0) AS BIGINT) AS n_cand,
-       |       CAST(coalesce(best.best_id, -1) AS BIGINT) AS best_id,
-       |       coalesce(best.best_cos, 0.0) AS best_cos,
-       |       coalesce(best.best_cos, 0.0) < ${Cfg.semanticThreshold} AS admit
-       |FROM arr a
-       |LEFT JOIN cnt ON cnt.new_id = a.aid
-       |LEFT JOIN best ON best.new_id = a.aid""".stripMargin
-  }
-
-  /** sim_trunc_recall: one truncated-cosine ranking CTE pair per
-    * Cfg.truncDims tier (DuckDB 1-based inclusive list slice `v[1:d]` ≡
-    * Spark `slice(v, 1, d)`), each gated against the shared full-dim
-    * brute CTE and UNION ALL'd — tiers unrolled at SQL-generation time
-    * from the SAME config constant the plan maps over.
-    */
-  private def truncRecallSql: String = {
-    val tiers = Cfg.truncDims.map { d =>
-      s"""t${d}s AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos(s"qv[1:$d]", s"c.v[1:$d]")} AS cos
-         |  FROM q, e c WHERE q.q_id <> c.id),
-         |t$d AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM t${d}s)
-         |  WHERE rnk <= 3)"""
-    }.mkString(",\n")
-    val unions = Cfg.truncDims.map { d =>
-      s"""SELECT CAST($d AS INT) AS dim, b.q_id, CAST(count(t.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql("count(t.c_id)::DOUBLE / 3", 4)} AS recall
-         |FROM brute b LEFT JOIN t$d t ON b.q_id = t.q_id AND b.c_id = t.c_id
-         |GROUP BY b.q_id"""
-    }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
-       |bs AS (
-       |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-       |  FROM q, e c WHERE q.q_id <> c.id),
-       |brute AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-       |  WHERE rnk <= 3),
-       |$tiers
-       |$unions""".stripMargin
-  }
-
-  /** sim_eval_mrr: brute top-1 truth, then each compressed family's RAW
-    * top-binaryMrrK ranking (binary Hamming over [[binaryHalfSql]]
-    * codes; PQ full-corpus ADC over [[pqCodesCtes]]' reconstruction;
-    * IVF-PQ probe-scoped ADC through the trained cg_ coarse chain —
-    * the exact ivfPqCtesSql assignment pattern), reciprocal rank of the
-    * truth within each list (0 when absent), one row per
-    * (family, query).
-    */
-  private def mrrEvalSql: String = {
-    val mrrK = Cfg.binaryMrrK
-    s"""WITH $pqCodesCtes,
-       |${kmeansCtesOver(
-           "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL",
-           k = 8, p = "cg_")},
-       |bc AS (
-       |  SELECT id, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi
-       |  FROM eb),
-       |q5 AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
-       |bs AS (
-       |  SELECT q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-       |  FROM q5, eb c WHERE q_id <> c.id),
-       |brute1 AS (
-       |  SELECT q_id, c_id AS true_nn
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rn FROM bs)
-       |  WHERE rn = 1),
-       |bh AS (
-       |  SELECT q.id AS q_id, c.id AS c_id,
-       |         bit_count(xor(q.code_lo, c.code_lo)) + bit_count(xor(q.code_hi, c.code_hi)) AS hamming
-       |  FROM (SELECT * FROM bc WHERE id < 5) q JOIN bc c ON q.id <> c.id),
-       |binr AS (
-       |  SELECT q_id, c_id, rnk
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming ASC, c_id ASC) AS rnk FROM bh)
-       |  WHERE rnk <= $mrrK),
-       |pqsc AS (
-       |  SELECT q_id, rec.id AS c_id, round(${sqlDot("qv", "rv")}, 6) AS score
-       |  FROM q5 CROSS JOIN rec WHERE q_id <> rec.id),
-       |pqr AS (
-       |  SELECT q_id, c_id, rnk
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM pqsc)
-       |  WHERE rnk <= $mrrK),
-       |cgcent AS (SELECT cid, cv FROM cg_c1),
-       |cgcs AS (
-       |  SELECT c.id AS c_id, cgcent.cid, ${sqlCos("c.v", "cgcent.cv")} AS ccos
-       |  FROM eb c CROSS JOIN cgcent),
-       |cassign AS (
-       |  SELECT c_id, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY c_id ORDER BY ccos DESC, cid ASC) AS rn FROM cgcs)
-       |  WHERE rn = 1),
-       |cgqs AS (
-       |  SELECT q_id, qv, cgcent.cid, ${sqlCos("qv", "cgcent.cv")} AS qcos
-       |  FROM q5 CROSS JOIN cgcent),
-       |qassign AS (
-       |  SELECT q_id, qv, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, cid ASC) AS rn FROM cgqs)
-       |  WHERE rn <= 2),
-       |ipadc AS (
-       |  SELECT q.q_id, c.c_id, round(${sqlDot("q.qv", "rec.rv")}, 6) AS score
-       |  FROM qassign q JOIN cassign c USING (list_id)
-       |       JOIN rec ON rec.id = c.c_id
-       |  WHERE q.q_id <> c.c_id),
-       |ipr AS (
-       |  SELECT q_id, c_id, rnk
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM ipadc)
-       |  WHERE rnk <= $mrrK),
-       |u AS (
-       |  SELECT 'binary' AS family, b.q_id, b.true_nn, r.rnk
-       |  FROM brute1 b LEFT JOIN binr r ON r.q_id = b.q_id AND r.c_id = b.true_nn
-       |  UNION ALL
-       |  SELECT 'pq' AS family, b.q_id, b.true_nn, r.rnk
-       |  FROM brute1 b LEFT JOIN pqr r ON r.q_id = b.q_id AND r.c_id = b.true_nn
-       |  UNION ALL
-       |  SELECT 'ivfpq' AS family, b.q_id, b.true_nn, r.rnk
-       |  FROM brute1 b LEFT JOIN ipr r ON r.q_id = b.q_id AND r.c_id = b.true_nn)
-       |SELECT family, q_id, true_nn, CAST(coalesce(rnk, 0) AS INT) AS rnk,
-       |       ${Rounding.stableSql("coalesce(1.0 / rnk, 0.0)", 6)} AS rr
-       |FROM u""".stripMargin
-  }
-
-  /** Multi-probe bucket expansion (Similarity.probeBuckets' mirror):
-    * given a probe index column `p` in [0, numPlanes], p = 0 is the
-    * query's own bucket and p = i flips plane i's bit — the Hamming-1
-    * neighborhood. Pair with `unnest(range(0, numPlanes + 1))`.
-    */
-  private def lshProbeSql(bucket: String, p: String): String =
-    // one line on purpose: the || concat operators would be eaten by the
-    // enclosing oracle literal's stripMargin if this ever line-wrapped
-    s"CASE WHEN $p = 0 THEN $bucket ELSE substr($bucket, 1, $p - 1) || (CASE WHEN substr($bucket, $p, 1) = '1' THEN '0' ELSE '1' END) || substr($bucket, $p + 1) END"
-
-  private def fingerprintSql(hs: String, prefix: Int): String = {
-    val bound = if (prefix > 0) s"least(len($hs), $prefix)" else s"len($hs)"
-    // CAST: list_sum over integers is HUGEINT, which pandas renders as
-    // float64 — the driver's exact hash then sees float vs Spark's int64.
-    s"CAST(list_sum(list_transform(range(1, $bound + 1), i -> i * (ascii(substr($hs[i], 1, 1)) * 256 + ascii(substr($hs[i], 2, 1))))) % 1000000007 AS BIGINT)"
-  }
-
-  /** The E1 oracle with the two error-degradation predicates injectable
-    * (SQL over `m.user_id`, evaluated in the base CTE): the healthy run
-    * passes literal "false" for both; the degraded shadow injects the
-    * keyed provider outages.
-    */
-  private def e1OracleSqlWith(newsFail: String, sentFail: String): String =
-    // raw interpolator: the sentiment regexes contain \b, which s"" would
-    // cook into backspace characters
-    raw"""WITH daily AS (
-        |  SELECT user_id, ts::DATE AS date, sum(value) AS close, CAST(count(*) AS BIGINT) AS volume
-        |  FROM events GROUP BY 1, 2),
-        |pct AS (
-        |  SELECT *, round((close / lag(close) OVER (PARTITION BY user_id ORDER BY date) - 1) * 100, 4) AS pct_change
-        |  FROM daily),
-        |cal AS (
-        |  SELECT d::DATE AS date
-        |  FROM generate_series(DATE '${Cfg.marketStart}', DATE '${Cfg.marketEnd}', INTERVAL 1 day) t(d)
-        |  WHERE isodow(d::DATE) BETWEEN 1 AND 5),
-        |uni AS (SELECT cal.date, u.user_id FROM cal, (SELECT DISTINCT user_id FROM events) u),
-        |market AS (
-        |  SELECT uni.date, uni.user_id, pct.pct_change, pct.volume
-        |  FROM uni JOIN pct ON uni.user_id = pct.user_id AND uni.date = pct.date
-        |  WHERE pct.pct_change IS NOT NULL),
-        |ev AS (
-        |  SELECT *, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str,
-        |         (minute(ts) % 10 = 0) AS unp
-        |  FROM events
-        |  WHERE ts >= ${Cfg.asOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-        |    AND ts <= ${Cfg.asOfSql}),
-        |google AS (SELECT * FROM ev WHERE event_type IN ('click','view')),
-        |newsd  AS (SELECT * FROM ev WHERE event_type IN ('purchase','signup') AND NOT unp),
-        |cands AS (
-        |  SELECT user_id, event_id, unp, ts_str, 'google' AS src, 0 AS prec FROM google WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'google_ticker', 1 FROM google
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata', 2 FROM newsd WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata_ticker', 3 FROM newsd),
-        |sel AS (
-        |  SELECT user_id, src AS headline_source, event_id AS picked_event_id
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-        |          ORDER BY prec ASC, CASE WHEN src LIKE 'google%' AND unp THEN '' ELSE ts_str END DESC, event_id DESC) AS rn
-        |        FROM cands)
-        |  WHERE rn = 1),
-        |head AS (
-        |  SELECT sel.user_id, sel.headline_source, substr(d.text, 1, 60) AS headline_text
-        |  FROM sel LEFT JOIN documents d ON d.doc_id = sel.picked_event_id % 500),
-        |nn AS (SELECT * FROM orders WHERE o_totalprice IS NOT NULL),
-        |latest AS (
-        |  SELECT o_custkey AS k, o_orderdate::DATE AS cur_time, o_totalprice AS cur_value
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM nn)
-        |  WHERE rn = 1),
-        |cand AS (
-        |  SELECT l.k, l.cur_value, o.o_totalprice AS prev_value, o.o_orderdate::DATE AS prev_time, o.o_orderkey,
-        |         abs(date_diff('day', (l.cur_time - INTERVAL 12 MONTH)::DATE, o.o_orderdate::DATE)) AS dd
-        |  FROM latest l JOIN nn o ON o.o_custkey = l.k
-        |  WHERE abs(date_diff('day', (l.cur_time - INTERVAL 12 MONTH)::DATE, o.o_orderdate::DATE)) <= 120),
-        |fund AS (
-        |  SELECT k AS user_id, round((cur_value - prev_value) / abs(prev_value) * 100, 2) AS yoy_pct
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY dd ASC, prev_time DESC, o_orderkey DESC) AS rn FROM cand)
-        |  WHERE rn = 1 AND prev_value <> 0),
-        |base AS (
-        |  SELECT m.date, m.user_id, m.pct_change, m.volume,
-        |         CASE WHEN $newsFail THEN 'No major headline available'
-        |              ELSE coalesce(h.headline_text, 'No major headline available') END AS headline,
-        |         h.headline_source, f.yoy_pct,
-        |         ($newsFail) AS news_failed, ($sentFail) AS sent_failed
-        |  FROM market m
-        |  LEFT JOIN head h ON m.user_id = h.user_id
-        |  LEFT JOIN fund f ON m.user_id = f.user_id),
-        |scored AS (
-        |  SELECT *,
-        |         len(regexp_extract_all(lower(trim(headline)), '\bfast\b'))
-        |           + len(regexp_extract_all(lower(trim(headline)), '\bsmall\b')) AS pos,
-        |         len(regexp_extract_all(lower(trim(headline)), '\bslow\b'))
-        |           + len(regexp_extract_all(lower(trim(headline)), '\bbig\b')) AS neg,
-        |         (length(trim(headline)) = 0 OR trim(headline) = 'No major headline available') AS dflt
-        |  FROM base)
-        |SELECT date AS "Date", user_id AS "Stock", pct_change AS "Pct_Change", volume AS "Volume",
-        |       headline AS "Headline",
-        |       CASE WHEN sent_failed THEN 'Neutral'
-        |            WHEN dflt THEN 'Neutral'
-        |            WHEN pos > neg THEN 'Positive'
-        |            WHEN neg > pos THEN 'Negative' ELSE 'Neutral' END AS "Sentiment_Label",
-        |       CASE WHEN sent_failed THEN 0.0
-        |            WHEN dflt OR pos + neg = 0 THEN 0.0
-        |            WHEN pos > neg THEN round(pos / (pos + neg), 4)
-        |            WHEN neg > pos THEN round(-(neg / (pos + neg)), 4)
-        |            ELSE 0.0 END AS "Sentiment_Score",
-        |       yoy_pct AS "YoY_NetIncome_Pct",
-        |       'market=events | news='
-        |         || CASE WHEN news_failed THEN 'error' ELSE coalesce(headline_source, 'default') END
-        |         || ' | sentiment=' || CASE WHEN sent_failed THEN 'error' ELSE 'lexicon' END
-        |         || ' | fundamentals='
-        |         || CASE WHEN yoy_pct IS NOT NULL THEN 'orders' ELSE 'unavailable' END AS "Data_Source_Log"
-        |FROM scored""".stripMargin
-
-  /** The healthy E1 oracle, shared by e1_pipeline and the e2 validation
-    * composition.
-    */
-  private val E1OracleSql: String = e1OracleSqlWith("false", "false")
-
-  /** The M1 analyze() oracle, shared by the expression scorer
-    * (m1_sentiment) and the batched inference seam
-    * (m1_sentiment_batched) — one contract, two execution forms.
-    */
-  private val M1OracleSql: String =
-    """WITH h AS (
-      |  SELECT doc_id,
-      |         CASE WHEN doc_id % 11 = 0 THEN 'No major headline available'
-      |              WHEN doc_id % 13 = 0 THEN '  ' ELSE text END AS headline
-      |  FROM documents),
-      |c AS (
-      |  SELECT doc_id, headline,
-      |         len(regexp_extract_all(lower(trim(headline)), '\bfast\b'))
-      |           + len(regexp_extract_all(lower(trim(headline)), '\bsmall\b')) AS pos,
-      |         len(regexp_extract_all(lower(trim(headline)), '\bslow\b'))
-      |           + len(regexp_extract_all(lower(trim(headline)), '\bbig\b')) AS neg,
-      |         (headline IS NULL OR length(trim(headline)) = 0
-      |          OR trim(headline) = 'No major headline available') AS dflt
-      |  FROM h),
-      |r AS (
-      |  SELECT doc_id, headline,
-      |         CASE WHEN dflt THEN 'neutral'
-      |              WHEN pos > neg THEN 'positive'
-      |              WHEN neg > pos THEN 'negative' ELSE 'neutral' END AS raw_label,
-      |         CASE WHEN dflt OR pos + neg = 0 THEN 0.0
-      |              WHEN pos > neg THEN round(pos / (pos + neg), 4)
-      |              WHEN neg > pos THEN round(neg / (pos + neg), 4)
-      |              ELSE 0.5 END AS raw_score
-      |  FROM c)
-      |SELECT doc_id, substr(headline, 1, 30) AS headline_prefix, raw_label, raw_score,
-      |       CASE raw_label WHEN 'positive' THEN 'Positive'
-      |                      WHEN 'negative' THEN 'Negative' ELSE 'Neutral' END AS label,
-      |       CASE WHEN raw_label = 'positive' THEN round(raw_score, 4)
-      |            WHEN raw_label = 'negative' THEN round(-raw_score, 4)
-      |            ELSE 0.0 END AS score
-      |FROM r""".stripMargin
-
-  /** DuckDB-runnable ANSI SQL oracle per query (same tables). Column
-    * names/aliases match the Spark output exactly (driver sorts columns by
-    * name before hashing).
-    */
-  def oracleSql: Map[String, String] = Map(
-
-    // Moments as DuckDB HUGEINT sums cast to DOUBLE — sums stay < 2^53
-    // here, so the doubles equal Spark's long-sum casts bit-for-bit and
-    // the fixed combination expression agrees everywhere. FILTER mirrors
-    // Stats.momentAggs' complete-pair guard exactly (n counts only rows
-    // with BOTH sides non-null, every sum skips the same rows) while the
-    // plain GROUP BY keeps all-null groups alive as (n=0, null corr).
-    "stats_corr" ->
-      s"""WITH t AS (
-         |  SELECT event_type,
-         |         CAST(floor(value * 100) AS BIGINT) AS x,
-         |         CAST(props->>'k' AS BIGINT) AS y
-         |  FROM events),
-         |m AS (
-         |  SELECT event_type,
-         |         CAST(count(*) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS BIGINT) AS n,
-         |         CAST(sum(x)   FILTER (WHERE y IS NOT NULL) AS DOUBLE) AS sx,
-         |         CAST(sum(y)   FILTER (WHERE x IS NOT NULL) AS DOUBLE) AS sy,
-         |         CAST(sum(x*x) FILTER (WHERE y IS NOT NULL) AS DOUBLE) AS sxx,
-         |         CAST(sum(y*y) FILTER (WHERE x IS NOT NULL) AS DOUBLE) AS syy,
-         |         CAST(sum(x*y) AS DOUBLE) AS sxy
-         |  FROM t GROUP BY 1)
-         |SELECT event_type, n,
-         |       ${Rounding.stableSql(
-                   "(n*sxy - sx*sy) / (sqrt(greatest(n*sxx - sx*sx, 0.0)) * sqrt(greatest(n*syy - sy*sy, 0.0)))",
-                   6)} AS corr
-         |FROM m""".stripMargin,
-
-    // the oracle states the SPEC form — the plain theta join the bin
-    // decomposition must reproduce row-for-row
-    "rj_price_bands" ->
-      """WITH p AS (SELECT CAST(floor(l_extendedprice * 100) AS BIGINT) AS price_c FROM lineitem),
-        |b AS (SELECT s_suppkey, CAST(floor(s_acctbal * 100) AS BIGINT) AS lo FROM supplier)
-        |SELECT b.s_suppkey, CAST(count(*) AS BIGINT) AS n_in_band
-        |FROM b JOIN p ON p.price_c >= b.lo AND p.price_c < b.lo + 100000
-        |GROUP BY 1""".stripMargin,
-
-    "rj_band_overlap" ->
-      """WITH s AS (SELECT s_suppkey, CAST(floor(s_acctbal * 100) AS BIGINT) AS s_lo FROM supplier),
-        |p AS (SELECT CAST(floor(p_retailprice * 100) AS BIGINT) - 5000 AS p_lo FROM part)
-        |SELECT s.s_suppkey, CAST(count(*) AS BIGINT) AS n_overlapping
-        |FROM s JOIN p ON s.s_lo < p.p_lo + 10000 AND p.p_lo < s.s_lo + 100000
-        |GROUP BY 1""".stripMargin,
-
-    "ev_zorder" ->
-      s"""WITH t AS (
-         |  SELECT event_id, user_id,
-         |         epoch_us(ts) // 3600000000 AS hour_bucket
-         |  FROM events)
-         |SELECT event_id, user_id, hour_bucket,
-         |       ${graft.operators.Layout.zValueSql("user_id", "hour_bucket")} AS z
-         |FROM t""".stripMargin,
-
-    // Same moment discipline as stats_corr, framed: the per-bucket
-    // HUGEINT partials window-sum EXACTLY (sums stay < 2^53), the
-    // double cast + fixed combination run per frame — bit-identical to
-    // Spark's long window sums. FILTER guards mirror Stats.momentAggs;
-    // a bucket whose pairs are all incomplete still contributes a row
-    // (n0=0, null sums — window sum skips nulls in both engines).
-    "stats_rolling_corr" ->
-      s"""WITH t AS (
-         |  SELECT event_type, epoch_us(ts) // 3600000000 AS hour_bucket,
-         |         CAST(floor(value * 100) AS BIGINT) AS x,
-         |         CAST(props->>'k' AS BIGINT) AS y
-         |  FROM events),
-         |m AS (
-         |  SELECT event_type, hour_bucket,
-         |         count(*) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS n0,
-         |         sum(x)   FILTER (WHERE y IS NOT NULL) AS sx0,
-         |         sum(y)   FILTER (WHERE x IS NOT NULL) AS sy0,
-         |         sum(x*x) FILTER (WHERE y IS NOT NULL) AS sxx0,
-         |         sum(y*y) FILTER (WHERE x IS NOT NULL) AS syy0,
-         |         sum(x*y) AS sxy0
-         |  FROM t GROUP BY 1, 2),
-         |w AS (
-         |  SELECT event_type, hour_bucket,
-         |         CAST(sum(n0)   OVER win AS BIGINT) AS n,
-         |         CAST(sum(sx0)  OVER win AS DOUBLE) AS sx,
-         |         CAST(sum(sy0)  OVER win AS DOUBLE) AS sy,
-         |         CAST(sum(sxx0) OVER win AS DOUBLE) AS sxx,
-         |         CAST(sum(syy0) OVER win AS DOUBLE) AS syy,
-         |         CAST(sum(sxy0) OVER win AS DOUBLE) AS sxy
-         |  FROM m
-         |  WINDOW win AS (PARTITION BY event_type ORDER BY hour_bucket
-         |                 RANGE BETWEEN 23 PRECEDING AND CURRENT ROW))
-         |SELECT event_type, hour_bucket, n,
-         |       ${Rounding.stableSql(
-                   "(n*sxy - sx*sy) / (sqrt(greatest(n*sxx - sx*sx, 0.0)) * sqrt(greatest(n*syy - sy*sy, 0.0)))",
-                   6)} AS corr
-         |FROM w""".stripMargin,
-
-    "stats_zscore_topk" ->
-      s"""WITH t AS (
-         |  SELECT event_type, event_id, CAST(floor(value * 100) AS BIGINT) AS x
-         |  FROM events),
-         |m AS (
-         |  -- count(x) not count(*): Stats.zscoreTopK counts non-null x
-         |  -- only (sum() skips nulls in both engines already)
-         |  SELECT event_type, CAST(count(x) AS BIGINT) AS n,
-         |         CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(x*x) AS DOUBLE) AS sxx
-         |  FROM t GROUP BY 1),
-         |st AS (
-         |  SELECT event_type, sx / n AS mu,
-         |         sqrt(greatest(n*sxx - sx*sx, 0.0)) / n AS sigma
-         |  FROM m)
-         |SELECT t.event_type, t.event_id, t.x,
-         |       ${Rounding.stableSql("(t.x - st.mu) / st.sigma", 4)} AS z
-         |FROM t JOIN st USING (event_type)
-         |ORDER BY abs(z) DESC NULLS LAST, event_id ASC
-         |LIMIT 50""".stripMargin,
-
-    "ta_pii" -> {
-      val Seq((_, emailPat, _), (_, phonePat, _), (_, ipPat, _)) =
-        TextAnalysis.PiiPatterns
-      s"""WITH inj AS (
-         |  SELECT doc_id, ${piiInjectSql("text")} AS t
-         |  FROM documents),
-         |r1 AS (SELECT doc_id, t, regexp_replace(t, '$emailPat', '<EMAIL>', 'g') AS t1 FROM inj),
-         |r2 AS (SELECT doc_id, t, t1, regexp_replace(t1, '$phonePat', '<PHONE>', 'g') AS t2 FROM r1)
-         |SELECT doc_id,
-         |       CAST(len(regexp_extract_all(t,  '$emailPat')) AS INT) AS n_email,
-         |       CAST(len(regexp_extract_all(t1, '$phonePat')) AS INT) AS n_phone,
-         |       CAST(len(regexp_extract_all(t2, '$ipPat')) AS INT) AS n_ipv4,
-         |       regexp_replace(t2, '$ipPat', '<IPV4>', 'g') AS redacted
-         |FROM r2""".stripMargin
-    },
-
-    // Each engine judges ITS OWN sketch against the exact count; only
-    // the boolean verdicts are compared.
-    "ta_approx_distinct_gate" ->
-      """WITH toks AS (SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents),
-        |e AS (SELECT lang, CAST(count(DISTINCT token) AS BIGINT) AS exact_tokens FROM toks GROUP BY 1),
-        |a AS (SELECT lang, approx_count_distinct(token) AS approx FROM toks GROUP BY 1)
-        |SELECT lang, exact_tokens,
-        |       CAST(abs(approx - exact_tokens) AS DOUBLE) / exact_tokens <= 0.10 AS within_10pct
-        |FROM e JOIN a USING (lang)""".stripMargin,
-
-    // the gate compares against e's UNROUNDED exact_p50 (a real column
-    // outranks the lateral alias in DuckDB, same as Spark's select)
-    "ta_quantile_gate" ->
-      s"""WITH e AS (SELECT lang, quantile_cont(n_chars, 0.5) AS exact_p50 FROM documents GROUP BY 1),
-         |a AS (SELECT lang, approx_quantile(n_chars, 0.5) AS approx_p50 FROM documents GROUP BY 1)
-         |SELECT lang, ${Rounding.stableSql("exact_p50", 4)} AS exact_p50,
-         |       abs(approx_p50 - exact_p50) / exact_p50 <= 0.10 AS within_10pct
-         |FROM e JOIN a USING (lang)""".stripMargin,
-
-    // Exact top-k + the trivially-true own-sketch gate (quantile-gate
-    // precedent: DuckDB has no CMS; its exact "sketch" is within by
-    // definition while Spark's side genuinely checks its CMS).
-    "ta_cms_gate" ->
-      s"""WITH c AS (
-         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-         |g AS (SELECT token, CAST(count(*) AS BIGINT) AS exact_cnt FROM c GROUP BY 1)
-         |SELECT token, exact_cnt, CAST(rnk AS INT) AS rnk, true AS within_bounds
-         |FROM (SELECT *, row_number() OVER (ORDER BY exact_cnt DESC, token ASC) AS rnk FROM g)
-         |WHERE rnk <= ${Cfg.cmsTopK}""".stripMargin,
-
-    // The streaming recurrence (baseline updates only on alert) walked
-    // with a recursive CTE: rows advance one rank per iteration, depth =
-    // max ticks per key.
-    "ev_alerts_scan" ->
-      s"""WITH RECURSIVE t AS (
-         |  SELECT CAST(user_id AS VARCHAR) AS key, event_id, ts, value,
-         |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-         |  FROM events WHERE event_type = 'purchase' AND value > 0),
-         |walk AS (
-         |  SELECT key, rn, event_id, ts, value,
-         |         value AS baseline, false AS alert, CAST(NULL AS DOUBLE) AS prev_baseline
-         |  FROM t WHERE rn = 1
-         |  UNION ALL
-         |  SELECT t.key, t.rn, t.event_id, t.ts, t.value,
-         |         CASE WHEN abs((t.value / w.baseline - 1.0) * 100.0) >= 50.0
-         |              THEN t.value ELSE w.baseline END,
-         |         abs((t.value / w.baseline - 1.0) * 100.0) >= 50.0,
-         |         w.baseline
-         |  FROM walk w JOIN t ON t.key = w.key AND t.rn = w.rn + 1)
-         |SELECT key, event_id, ts, value, prev_baseline AS baseline,
-         |       ${Rounding.stableSql("(value / prev_baseline - 1.0) * 100.0", 4)} AS move_pct
-         |FROM walk WHERE alert""".stripMargin,
-
-    "ta_vocab_milestones" ->
-      """WITH c AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-        |g AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM c GROUP BY 1)
-        |SELECT token, CAST(m * 500 AS BIGINT) AS "count"
-        |FROM (SELECT token, unnest(generate_series(1, cnt // 500)) AS m
-        |      FROM g WHERE cnt >= 500)""".stripMargin,
-
-    // first-seen-wins re-derived through a rank-1 window (DuckDB's
-    // arg_min cannot take the composite (ts, doc_id) key).
-    "st4_dedup_scan" ->
-      s"""WITH $RecrawlCte,
-         |tsd AS (
-         |  SELECT doc_id, text,
-         |         make_timestamp((1704067200 + doc_id % 1000000 + (doc_id // 1000000) * 3600) * 1000000) AS ts
-         |  FROM corpus),
-         |r AS (
-         |  SELECT md5(text) AS text_hash, doc_id, ts,
-         |         row_number() OVER (PARTITION BY md5(text) ORDER BY ts, doc_id) AS rn
-         |  FROM tsd)
-         |SELECT text_hash,
-         |       max(CASE WHEN rn = 1 THEN doc_id END) AS doc_id,
-         |       min(ts) AS first_ts,
-         |       CAST(count(*) AS BIGINT) AS dup_count
-         |FROM r GROUP BY 1""".stripMargin,
-
-    "st5_neardedup_scan" ->
-      (s"WITH ${minhashCtes(Cfg.numBands, Cfg.rowsPerBand, "a.doc_id < b.doc_id", "doc_a", "doc_b",
-        Some(Cfg.maxBucket))},\n" +
-        s"""est AS (
-           |  SELECT p.doc_a, p.doc_b,
-           |         ${Rounding.stableSql(
-                        "(" + (0 until Cfg.nSig).map(k =>
-                          s"(CASE WHEN a.sig_$k = b.sig_$k THEN 1 ELSE 0 END)")
-                          .mkString(" + ") + s")::DOUBLE / ${Cfg.nSig}.0", 4)} AS est_jaccard
-           |  FROM pairs p JOIN sig a ON a.doc_id = p.doc_a JOIN sig b ON b.doc_id = p.doc_b)
-           |SELECT doc_a, doc_b, est_jaccard FROM est WHERE est_jaccard >= 0.5""".stripMargin),
-
-    // Same shingle CTEs as dedup_containment, with the ARRIVAL-capped
-    // posting index (rank ≤ dfCap by (ts, doc_id) per shingle) instead
-    // of the batch retroactive df drop, and the collision-count ratio
-    // instead of the full-set intersect — the streaming lower bound.
-    "st10_containment_scan" ->
-      s"""WITH tvals AS (
-         |  SELECT doc_id, $TokenValsSql AS tv FROM documents),
-         |d AS (
-         |  SELECT doc_id, $ShingleValsSql AS sh,
-         |         make_timestamp((1704067200 + doc_id) * 1000000) AS ts
-         |  FROM tvals),
-         |post AS (
-         |  SELECT doc_id, g, nsh, r FROM (
-         |    SELECT doc_id, g, nsh,
-         |           row_number() OVER (PARTITION BY g ORDER BY ts, doc_id) AS r
-         |    FROM (SELECT doc_id, ts, unnest(sh) AS g, len(sh) AS nsh FROM d) p0)
-         |  WHERE r <= ${Cfg.containmentDfCap}),
-         |hits AS (
-         |  SELECT a.doc_id AS early, b.doc_id AS late, count(*) AS h,
-         |         any_value(a.nsh) AS early_nsh, any_value(b.nsh) AS late_nsh
-         |  FROM post a JOIN post b ON a.g = b.g AND a.r < b.r
-         |  GROUP BY 1, 2),
-         |dirs AS (
-         |  SELECT late AS doc_a, early AS doc_b,
-         |         ${Rounding.stableSql("h::DOUBLE / late_nsh", 4)} AS containment
-         |  FROM hits
-         |  UNION ALL
-         |  SELECT early AS doc_a, late AS doc_b,
-         |         ${Rounding.stableSql("h::DOUBLE / early_nsh", 4)} AS containment
-         |  FROM hits)
-         |SELECT doc_a, doc_b, containment FROM dirs
-         |WHERE containment >= ${Cfg.containmentThreshold}""".stripMargin,
-
-    // Same paragraph CTE shapes as dedup_paragraph, with event time
-    // LEADING the first-occurrence rank — the streaming arrival rule.
-    "st9_paragraph_scan" -> {
-      val b = Cfg.paraBlockTokens
-      s"""WITH $RecrawlCte,
-         |tsd AS (
-         |  SELECT doc_id, text,
-         |         make_timestamp((1704067200 + doc_id % 1000000 + (doc_id // 1000000) * 3600) * 1000000) AS ts
-         |  FROM corpus),
-         |pdt AS (SELECT doc_id, ts, string_split(text, ' ') AS tv
-         |        FROM tsd WHERE text IS NOT NULL),
-         |pde AS (SELECT doc_id, ts, tv,
-         |               UNNEST(generate_series(0, (len(tv) - 1) // $b)) AS para_id
-         |        FROM pdt),
-         |pdp AS (SELECT doc_id, ts, para_id,
-         |               array_to_string(tv[para_id*$b+1 : para_id*$b+$b], ' ') AS para_text
-         |        FROM pde),
-         |pdr AS (SELECT *, row_number() OVER (PARTITION BY md5(para_text)
-         |                                     ORDER BY ts, doc_id, para_id) AS rn
-         |        FROM pdp),
-         |pd AS (SELECT doc_id, count(*) AS n_paras,
-         |              count(CASE WHEN rn = 1 THEN 1 END) AS n_kept,
-         |              coalesce(string_agg(CASE WHEN rn = 1 THEN para_text END, ' ' ORDER BY para_id), '') AS clean_text
-         |       FROM pdr GROUP BY doc_id)
-         |SELECT doc_id, n_paras, n_kept, clean_text FROM pd""".stripMargin
-    },
-
-    // ST15 — the per-doc BM25 sum (bm25 CTE chain's `agg`) thresholded;
-    // ts is the st8 arrival layout.
-    "st15_match_scan" ->
-      s"""WITH $bm25CtesSql
-         |SELECT doc_id,
-         |       make_timestamp((1704067200 + doc_id) * 1000000) AS ts,
-         |       CAST(score_u AS DOUBLE) / 1000000.0 AS bm25
-         |FROM agg WHERE score_u >= ${Cfg.matchThresholdU}""".stripMargin,
-
-    // ST14 — occurrence rank per content hash in arrival order; weight
-    // 1/rank (the stream's front-loaded SoftDeDup mass).
-    "st14_soft_scan" ->
-      s"""WITH $RecrawlCte,
-         |tsd AS (
-         |  SELECT doc_id, md5(text) AS text_hash,
-         |         make_timestamp((1704067200 + doc_id % 1000000 + (doc_id // 1000000) * 3600) * 1000000) AS ts
-         |  FROM corpus),
-         |r AS (
-         |  SELECT doc_id, text_hash,
-         |         CAST(row_number() OVER (PARTITION BY text_hash ORDER BY ts, doc_id) AS BIGINT) AS occurrence
-         |  FROM tsd)
-         |SELECT doc_id, text_hash, occurrence,
-         |       ${Rounding.stableSql("1.0 / occurrence", 6)} AS weight
-         |FROM r""".stripMargin,
-
-    // ST11 — dedup_spans' window/island chain with hit = every window
-    // occurrence EXCEPT its hash's first arrival (rn > 1 over
-    // (ts, doc, p), ts = doc_id seconds past 2024-01-01).
-    "st11_spans_scan" -> {
-      val w = Cfg.spanWindowTokens
-      s"""WITH base AS (
-         |  SELECT doc_id,
-         |         text || CASE WHEN doc_id % 3 = 0 THEN ' subscribe to our newsletter for the latest updates and follow us on all social media platforms today' ELSE '' END
-         |              || CASE WHEN doc_id % 5 = 0 THEN ' this article is for informational purposes only and not professional advice' ELSE '' END AS text
-         |  FROM documents WHERE text IS NOT NULL),
-         |toks AS (SELECT doc_id, $TokenValsSql AS tv FROM base),
-         |wins AS (
-         |  SELECT doc_id, p,
-         |         md5(array_to_string(list_transform(tv[p : p+${w - 1}], x -> CAST(x AS VARCHAR)), '|')) AS whash
-         |  FROM (SELECT doc_id, tv, unnest(generate_series(1, len(tv) - ${w - 1})) AS p
-         |        FROM toks WHERE len(tv) >= $w) w0),
-         |arr AS (
-         |  SELECT doc_id, p,
-         |         row_number() OVER (PARTITION BY whash
-         |                            ORDER BY 1704067200 + doc_id, doc_id, p) AS rn
-         |  FROM wins),
-         |hits AS (SELECT doc_id, p FROM arr WHERE rn > 1),
-         |isl AS (
-         |  SELECT doc_id, p,
-         |         sum(CASE WHEN prev IS NULL OR p > prev + ${w - 1} THEN 1 ELSE 0 END)
-         |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-         |  FROM (SELECT doc_id, p, lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM hits) h0),
-         |spans AS (
-         |  SELECT doc_id, island, count(*) AS nh, max(p) + ${w - 1} - min(p) + 1 AS len
-         |  FROM isl GROUP BY 1, 2),
-         |perdoc AS (
-         |  SELECT doc_id, sum(nh) AS n_dup_windows, count(*) AS n_spans,
-         |         sum(len) AS dup_tokens, max(len) AS max_span_tokens
-         |  FROM spans GROUP BY 1)
-         |SELECT t.doc_id,
-         |       CAST(CASE WHEN len(t.tv) >= $w THEN len(t.tv) - $w + 1 ELSE 0 END AS BIGINT) AS n_windows,
-         |       CAST(coalesce(p.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
-         |       CAST(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
-         |       CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-         |       CAST(coalesce(p.max_span_tokens, 0) AS BIGINT) AS max_span_tokens
-         |FROM toks t LEFT JOIN perdoc p USING (doc_id)""".stripMargin
-    },
-
-    // ST12 — ta_mix_temperature's √-weight derivation in COUNT form
-    // (target = least(n, (budget·w) // Σw), HUGEINT end-to-end), then
-    // the first target_s arrivals per source by (ts, doc_id).
-    "st12_mix_scan" ->
-      s"""WITH s0 AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 2 = 0 THEN 'head'
-         |              WHEN doc_id % 4 = 1 THEN 'mid'
-         |              WHEN doc_id % 8 = 3 THEN 'tail_a'
-         |              ELSE 'tail_b' END AS source
-         |  FROM documents),
-         |c AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM s0 GROUP BY 1),
-         |w AS (SELECT source, n, CAST(floor(sqrt(n) * 1000000) AS BIGINT) AS w FROM c),
-         |t AS (SELECT sum(w) AS tot FROM w),
-         |tgt AS (SELECT source,
-         |               least(CAST(n AS HUGEINT), (CAST(${Cfg.mixBudget} AS HUGEINT) * w) // tot) AS target
-         |        FROM w, t),
-         |arr AS (
-         |  SELECT source, doc_id,
-         |         row_number() OVER (PARTITION BY source
-         |                            ORDER BY 1704067200 + doc_id, doc_id) AS rn
-         |  FROM s0)
-         |SELECT a.source, CAST(g.target AS BIGINT) AS target, a.doc_id,
-         |       CAST(a.rn AS INT) AS adm_rank
-         |FROM arr a JOIN tgt g USING (source)
-         |WHERE a.rn <= g.target""".stripMargin,
-
-    "st6_funnel_scan" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(ts) AS t
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(ts) AS t
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1)
-        |SELECT user_id, CAST(1 AS INT) AS stage, 'view' AS event_type, t AS ts FROM s1
-        |UNION ALL
-        |SELECT user_id, CAST(2 AS INT) AS stage, 'click' AS event_type, t AS ts FROM s2
-        |UNION ALL
-        |SELECT user_id, CAST(3 AS INT) AS stage, 'purchase' AS event_type, t AS ts FROM s3""".stripMargin,
-
-    // suffixes built from chr() so the SQL stays ASCII: decomposed
-    // (e+chr(769), i+chr(776)) for doc_id%3=0, precomposed (chr(233),
-    // chr(239)) for %3=1; nfc_normalize is DuckDB's own UAX #15 kernel.
-    "ta_normalize" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |         text || CASE WHEN doc_id % 3 = 0 THEN ' cafe' || chr(769) || ' nai' || chr(776) || 've'
-        |                      WHEN doc_id % 3 = 1 THEN ' caf' || chr(233) || ' na' || chr(239) || 've'
-        |                      ELSE '' END AS raw
-        |  FROM documents),
-        |n AS (SELECT doc_id, raw, nfc_normalize(raw) AS norm FROM r)
-        |SELECT doc_id,
-        |       right(norm, 12) AS tail_norm,
-        |       CAST(length(raw) AS INT) AS len_raw,
-        |       CAST(length(norm) AS INT) AS len_norm,
-        |       CAST(length(raw) - length(norm) AS INT) AS combining_removed
-        |FROM n""".stripMargin,
-
-    "qa_reconcile" ->
-      s"""WITH $ReconcileCtes
-         |SELECT CAST(sum(CASE WHEN h_a = h_b THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-         |       CAST(sum(CASE WHEN h_a IS NOT NULL AND h_b IS NOT NULL AND h_a <> h_b THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-         |       CAST(sum(CASE WHEN h_b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
-         |       CAST(sum(CASE WHEN h_a IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_extra
-         |FROM j""".stripMargin,
-
-    "qa_reconcile_diff" ->
-      s"""WITH $ReconcileCtes
-         |SELECT event_id,
-         |       CASE WHEN h_a IS NULL THEN 'extra'
-         |            WHEN h_b IS NULL THEN 'missing'
-         |            WHEN h_a <> h_b THEN 'changed' END AS status
-         |FROM j
-         |WHERE h_a IS NULL OR h_b IS NULL OR h_a <> h_b""".stripMargin,
-
-    // 6-hour tumbling buckets via epoch-µs floor division (Spark's
-    // window() start is epoch-aligned); open/close re-derived through
-    // rank-1 windows as in ev_ohlc_bars.
-    "st7_bars_scan" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |         make_timestamp((epoch_us(ts) // 21600000000) * 21600000000) AS bar_start,
-        |         ts, event_id, value
-        |  FROM events),
-        |r AS (SELECT *,
-        |        row_number() OVER (PARTITION BY user_id, bar_start ORDER BY ts, event_id) AS ra,
-        |        row_number() OVER (PARTITION BY user_id, bar_start ORDER BY ts DESC, event_id DESC) AS rd
-        |      FROM e)
-        |SELECT user_id, bar_start,
-        |       max(CASE WHEN ra = 1 THEN value END) AS open,
-        |       max(value) AS high,
-        |       min(value) AS low,
-        |       max(CASE WHEN rd = 1 THEN value END) AS close,
-        |       CAST(count(*) AS BIGINT) AS volume
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    // Streaming quota's batch twin: first sourceCap arrivals per source
-    // in (ts, doc_id) order — the window form of the plan's k-bounded
-    // min-(ts,id) aggregate.
-    "st8_quota_scan" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, source,
-         |         make_timestamp((1704067200 + doc_id) * 1000000) AS ts
-         |  FROM documents),
-         |r AS (
-         |  SELECT source, doc_id, ts,
-         |         row_number() OVER (PARTITION BY source ORDER BY ts, doc_id) AS rn
-         |  FROM t)
-         |SELECT source, doc_id, ts, CAST(rn AS INT) AS adm_rank
-         |FROM r WHERE rn <= ${Cfg.sourceCap}""".stripMargin,
-
-    "t10_debug_annotations" ->
-      s"""WITH $DebugCte
-         |SELECT ann.user_id, ann.src, ann.event_id, ann.relevant_title,
-         |       ann.in_72hr_window, ann.title_filter_applied, ann.parseable_date,
-         |       (sel.user_id IS NOT NULL) AS "SELECTED"
-         |FROM ann LEFT JOIN sel
-         |  ON ann.user_id = sel.user_id AND ann.src = sel.src AND ann.event_id = sel.event_id""".stripMargin,
-
-    "a3_debug_counts" ->
-      s"""WITH $DebugCte
-         |SELECT user_id, src, CAST(count(*) AS BIGINT) AS total_fetched,
-         |       CAST(sum(CASE WHEN relevant_title AND in_72hr_window AND parseable_date THEN 1 ELSE 0 END) AS BIGINT) AS relevant_in_window
-         |FROM ann GROUP BY 1, 2""".stripMargin,
-
-    "dedup_exact" ->
-      s"""WITH $RecrawlCte
-         |SELECT md5(text) AS text_hash, min(doc_id) AS canonical_doc_id,
-         |       CAST(count(*) AS BIGINT) AS dup_count
-         |FROM corpus GROUP BY 1""".stripMargin,
-
-    // Paragraph dedup + reassembly: blocks of paraBlockTokens tokens,
-    // first occurrence = row_number 1 over (doc_id, para_id) — the
-    // window form of the plan's min(struct) aggregate; string_agg
-    // skips the CASE's NULLs exactly like collect_list, and the empty
-    // group coalesces to '' to match array_join.
-    "dedup_paragraph" ->
-      s"""WITH $RecrawlCte,
-         |$paragraphCtesSql
-         |SELECT doc_id, n_paras, n_kept, clean_text FROM pd""".stripMargin,
-
-    // Bloom screen: same md5-slice bit positions re-derived relationally
-    // (build = bit_or per 32-bit word; probe = every bit set via a
-    // LEFT JOIN on word) — bit-for-bit the plan's literal-array probe.
-    // Filter size scales with the base count exactly as
-    // Dedup.bloomWordsFor: greatest(2048, 4·n) words, via the bn scalar.
-    "dedup_bloom" -> bloomOracleSql,
-
-    // Identical result set to dedup_bloom by construction (the sharded
-    // probe is verdict-identical at the same filter size); the oracle's
-    // join-form build/probe is ALREADY the sharded shape, so it is the
-    // natural oracle for both.
-    "dedup_bloom_sharded" -> bloomOracleSql,
-
-    // The streaming screen's batch shadow computes the identical verdict
-    // set a third way (stateless per-position join chain) — same oracle.
-    "st16_bloom_scan" -> bloomOracleSql,
-
-    // Stateless banded-binary candidate screen: colliding band cells
-    // within the pigeonhole radius, per (arrival, base, band).
-    "st17_binary_scan" -> binaryScreenSql,
-
-    // The ingest-admission flagship: screen → exact verify → admit.
-    "e8_ingest_screen" -> ingestScreenSql,
-
-    // The cross-modal curation flagship: the three per-doc modality
-    // signals re-derived relationally — video dup fraction via the
-    // frame-sig row_number (the min-struct election's window form),
-    // audio speech fraction via the nibble-decoded window energies,
-    // text quality via the shared quality CTE — folded through the
-    // same first-failure CASE chain as the plan.
-    "e9_av_curation" -> {
-      val dupFrac = Rounding.stableSql("n_dup::DOUBLE / n_frames", 4)
-      val speechFrac = Rounding.stableSql(
-        s"count(CASE WHEN energy >= ${Cfg.audioEnergyThreshold} THEN 1 END)::DOUBLE / count(*)", 4)
-      s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-         |$FrameSigCte,
-         |vr AS (SELECT *, row_number() OVER (PARTITION BY frame_sig
-         |                                    ORDER BY doc_id, frame_id) AS rn
-         |       FROM vs),
-         |vd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_frames,
-         |              CAST(count(CASE WHEN rn > 1 THEN 1 END) AS BIGINT) AS n_dup
-         |       FROM vr GROUP BY doc_id),
-         |vf AS (SELECT doc_id, $dupFrac AS dup_frac FROM vd),
-         |ae AS (SELECT doc_id, CAST($NibbleSumSql AS BIGINT) AS energy
-         |       FROM vm),
-         |af AS (SELECT doc_id, $speechFrac AS speech_frac
-         |       FROM ae GROUP BY doc_id),
-         |tq0 AS (
-         |${qualityCteSql("documents")}
-         |  WHERE text IS NOT NULL),
-         |tq AS (SELECT doc_id, $QualitySql AS quality FROM tq0),
-         |j AS (SELECT doc_id, quality, dup_frac, speech_frac,
-         |             CASE WHEN quality < ${Cfg.avQualityMin} THEN 'low_quality'
-         |                  WHEN dup_frac >= ${Cfg.mmDupFrameMax} THEN 'dup_video'
-         |                  WHEN speech_frac < ${Cfg.avSpeechFracMin} THEN 'low_speech'
-         |                  ELSE 'ok' END AS reason
-         |      FROM tq JOIN vf USING (doc_id) JOIN af USING (doc_id))
-         |SELECT doc_id, quality, dup_frac, speech_frac, reason,
-         |       reason = 'ok' AS keep
-         |FROM j""".stripMargin
-    },
-
-    "dedup_minhash" -> minhashOracle(numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-      maxBucket = Some(Cfg.maxBucket)),
-
-    // incremental: candidates restricted to base (< 1e6) × batch (>= 1e6)
-    "dedup_incremental" -> minhashOracle(numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
-      threshold = Cfg.nearDupThreshold,
-      pairPred = "a.doc_id < 1000000 AND b.doc_id >= 1000000",
-      aName = "doc_base", bName = "doc_new"),
-
-    "dedup_clusters" -> clustersOracle(numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
-      threshold = Cfg.nearDupThreshold),
-
-    "dedup_soft" -> softWeightsOracle(numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
-      threshold = Cfg.nearDupThreshold),
-
-    "ta_quality_smooth" -> qualitySmoothOracle(numBands = Cfg.numBands,
-      rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-      rounds = Cfg.smoothRounds),
-
-    "ta_split_stats" ->
-      s"""SELECT ${graft.operators.Sampling.splitSql("doc_id",
-            Cfg.splitTrainPct, Cfg.splitValPct)} AS split,
-         |       CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(CASE WHEN text IS NULL THEN NULL
-         |                ELSE len(string_split(text, ' ')) END) AS BIGINT) AS ws_tokens,
-         |       CAST(sum(n_chars) AS BIGINT) AS chars
-         |FROM documents
-         |GROUP BY 1""".stripMargin,
-
-    // Verified near-dup pairs grouped by the unordered split pair —
-    // off-diagonal rows are cross-split leakage.
-    "ta_split_leakage" -> {
-      val sa = graft.operators.Sampling.splitSql("doc_a", Cfg.splitTrainPct, Cfg.splitValPct)
-      val sb = graft.operators.Sampling.splitSql("doc_b", Cfg.splitTrainPct, Cfg.splitValPct)
-      s"WITH ${minhashCtes(Cfg.numBands, Cfg.rowsPerBand, "a.doc_id < b.doc_id",
-        "doc_a", "doc_b", Some(Cfg.maxBucket))},\n" +
-        s"""verified AS (
-           |  SELECT doc_a, doc_b
-           |  FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-           |  WHERE $MinhashJaccardSql >= ${Cfg.nearDupThreshold}),
-           |sp AS (
-           |  SELECT least(($sa), ($sb)) AS split_lo,
-           |         greatest(($sa), ($sb)) AS split_hi
-           |  FROM verified)
-           |SELECT split_lo, split_hi, CAST(count(*) AS BIGINT) AS n_pairs,
-           |       split_lo <> split_hi AS leaks
-           |FROM sp GROUP BY 1, 2""".stripMargin
-    },
-
-    // E7 — soft weights (recursive closure) ⨝ quality gate ⨝ length
-    // bucket, then the one-window shuffle-rank SPEC over the survivors.
-    "e7_training_mix" ->
-      (s"${clustersWalkCtes(Cfg.numBands, Cfg.rowsPerBand, Cfg.nearDupThreshold)},\n" +
-      s"""sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |       FROM cl GROUP BY 1),
-         |swt AS (SELECT doc_id, cluster_size,
-         |               ${Rounding.stableSql("1.0 / cluster_size", 6)} AS weight
-         |        FROM cl JOIN sz USING (cluster_id)),
-         |qc AS (${qualityCteSql("corpus")}),
-         |qq AS (SELECT doc_id, $QualitySql AS quality,
-         |              CAST(CASE WHEN len(string_split(text, ' ')) <= 1 THEN 0
-         |                   ELSE length(bin(len(string_split(text, ' ')) - 1))
-         |                   END AS BIGINT) AS bucket_bits
-         |       FROM qc),
-         |keep AS (SELECT doc_id, quality, bucket_bits FROM qq
-         |         WHERE quality >= ${Cfg.qualityMin}),
-         |eb7 AS (SELECT k.doc_id, s.cluster_size, s.weight, k.quality, k.bucket_bits
-         |        FROM keep k JOIN swt s USING (doc_id)),
-         |hh AS (SELECT *, ((doc_id % ${graft.operators.Packing.ShuffleMod})
-         |                  * ${graft.operators.Packing.ShuffleMul}
-         |                  + ${graft.operators.Packing.ShuffleAdd})
-         |                 % ${graft.operators.Packing.ShuffleMod} AS h FROM eb7),
-         |rr AS (SELECT *, row_number() OVER (ORDER BY h, doc_id) - 1 AS rnk FROM hh)
-         |SELECT doc_id, cluster_size, weight, quality, bucket_bits,
-         |       rnk // ${Cfg.shuffleShardSize} AS shard_id,
-         |       rnk % ${Cfg.shuffleShardSize} AS shard_pos
-         |FROM rr""".stripMargin),
-
-    "ta_ngram_lm" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-        |bg AS (SELECT doc_id, unnest(l[1:len(l)-1]) AS w1, unnest(l[2:]) AS w2 FROM t),
-        |bigc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1, 2),
-        |unic AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1)
-        |SELECT w1, w2, c2, c1,
-        |       round((c2::DOUBLE / c1) * 10000) / 10000 AS cond_p
-        |FROM bigc JOIN unic USING (w1)
-        |ORDER BY c2 DESC, w1 ASC, w2 ASC
-        |LIMIT 25""".stripMargin,
-
-    "ev_json_props" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       min(CAST(props->>'k' AS BIGINT)) AS min_k,
-        |       max(CAST(props->>'k' AS BIGINT)) AS max_k,
-        |       CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "dedup_minhash_est" ->
-      (s"WITH ${minhashCtes(Cfg.numBands, Cfg.rowsPerBand, "a.doc_id < b.doc_id", "doc_a", "doc_b",
-        Some(Cfg.maxBucket))},\n" +
-        s"""verified AS (
-           |  SELECT doc_a, doc_b, $MinhashJaccardSql AS jaccard
-           |  FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-           |  WHERE $MinhashJaccardSql >= 0.8),
-           |est AS (
-           |  SELECT v.doc_a, v.doc_b, v.jaccard,
-           |         ${Rounding.stableSql(
-                        "(" + (0 until Cfg.nSig).map(k =>
-                          s"(CASE WHEN a.sig_$k = b.sig_$k THEN 1 ELSE 0 END)")
-                          .mkString(" + ") + s")::DOUBLE / ${Cfg.nSig}.0", 4)} AS est_jaccard
-           |  FROM verified v JOIN sig a ON a.doc_id = v.doc_a JOIN sig b ON b.doc_id = v.doc_b)
-           |SELECT doc_a, doc_b, jaccard, est_jaccard,
-           |       ${Rounding.stableSql("abs(est_jaccard - jaccard)", 4)} AS abs_err
-           |FROM est""".stripMargin),
-
-    // open/close re-derived through rank-1 windows (DuckDB's arg_min
-    // cannot take a composite (ts, event_id) key).
-    "ev_ohlc_bars" ->
-      """WITH e AS (SELECT user_id, ts::DATE AS d, ts, event_id, value FROM events),
-        |r AS (SELECT *,
-        |        row_number() OVER (PARTITION BY user_id, d ORDER BY ts, event_id) AS ra,
-        |        row_number() OVER (PARTITION BY user_id, d ORDER BY ts DESC, event_id DESC) AS rd
-        |      FROM e)
-        |SELECT user_id, d,
-        |       max(CASE WHEN ra = 1 THEN value END) AS open,
-        |       max(value) AS high,
-        |       min(value) AS low,
-        |       max(CASE WHEN rd = 1 THEN value END) AS close,
-        |       CAST(count(*) AS BIGINT) AS volume,
-        |       round(sum(value) * 10000) / 10000 AS turnover
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    "ev_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(ts) AS t2
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(ts) AS t3
-        |  FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM s1) AS n_view,
-        |       (SELECT CAST(count(*) AS BIGINT) FROM s2) AS n_click_after,
-        |       (SELECT CAST(count(*) AS BIGINT) FROM s3) AS n_purchase_after,
-        |       round(((SELECT count(*) FROM s2)::DOUBLE / (SELECT count(*) FROM s1)) * 10000) / 10000 AS view_to_click,
-        |       round(((SELECT count(*) FROM s3)::DOUBLE / (SELECT count(*) FROM s2)) * 10000) / 10000 AS click_to_purchase""".stripMargin,
-
-    "ev_retention" ->
-      """WITH ev AS (SELECT user_id, ts::DATE AS d FROM events),
-        |cohort AS (SELECT user_id, min(d) AS cohort_date FROM ev GROUP BY 1),
-        |active AS (SELECT DISTINCT user_id, d FROM ev),
-        |by_offset AS (
-        |  SELECT cohort_date, date_diff('day', cohort_date, d) AS day_offset,
-        |         CAST(count(DISTINCT a.user_id) AS BIGINT) AS retained
-        |  FROM active a JOIN cohort c USING (user_id)
-        |  GROUP BY 1, 2),
-        |sizes AS (
-        |  SELECT cohort_date, CAST(count(DISTINCT user_id) AS BIGINT) AS cohort_size
-        |  FROM cohort GROUP BY 1)
-        |SELECT cohort_date, CAST(day_offset AS INT) AS day_offset, retained, cohort_size,
-        |       round((retained::DOUBLE / cohort_size) * 10000) / 10000 AS retention_rate
-        |FROM by_offset JOIN sizes USING (cohort_date)""".stripMargin,
-
-    // Incremental labeling semantics: seeds = min(own id, min base
-    // neighbor) over batch↔base edges (doc_a < 1M is always the base
-    // side of a cross pair), then the walk propagates seeds over
-    // batch-internal edges only — base labels are frozen.
-    "dedup_clusters_incremental" ->
-      (s"WITH RECURSIVE ${minhashCtes(Cfg.numBands, Cfg.rowsPerBand, "a.doc_id < b.doc_id", "doc_a", "doc_b")},\n" +
-        s"""verified AS (
-           |  SELECT doc_a, doc_b
-           |  FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-           |  WHERE $MinhashJaccardSql >= 0.8),
-           |seeds AS (
-           |  SELECT n.doc_id, least(n.doc_id, coalesce(min(v.doc_a), n.doc_id)) AS seed
-           |  FROM (SELECT doc_id FROM corpus WHERE doc_id >= 1000000) n
-           |  LEFT JOIN verified v ON v.doc_b = n.doc_id AND v.doc_a < 1000000
-           |  GROUP BY n.doc_id),
-           |nn AS (
-           |  SELECT doc_a AS a, doc_b AS b FROM verified WHERE doc_a >= 1000000
-           |  UNION ALL SELECT doc_b, doc_a FROM verified WHERE doc_a >= 1000000),
-           |walk(node, lab) AS (
-           |  SELECT doc_id, seed FROM seeds
-           |  UNION
-           |  SELECT e.b, w.lab FROM walk w JOIN nn e ON e.a = w.node)
-           |SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS label
-           |FROM walk GROUP BY node""".stripMargin),
-
-    "ta_decontam" ->
-      s"""WITH tvals AS (
-         |  SELECT doc_id, $TokenValsSql AS tv
-         |  FROM documents),
-         |shl AS (
-         |  SELECT doc_id, $ShingleValsSql AS sh
-         |  FROM tvals),
-         |bench AS (SELECT DISTINCT unnest(sh) AS g FROM shl WHERE doc_id < 20),
-         |cand AS (SELECT doc_id, unnest(sh) AS g FROM shl WHERE doc_id >= 20)
-         |SELECT doc_id, CAST(count(DISTINCT c.g) AS BIGINT) AS contaminated_grams
-         |FROM cand c JOIN bench b ON c.g = b.g
-         |GROUP BY doc_id""".stripMargin,
-
-    "dedup_simhash" -> simhashOracle(32),
-
-    "dedup_simhash_pairs" ->
-      (s"WITH fp AS (\n${simhashOracle(32)}),\n" +
-        """banded AS (
-          |  SELECT doc_id, simhash, band_id,
-          |         substr(simhash, band_id * 16 + 1, 16) AS band_val
-          |  FROM fp, (SELECT unnest(range(0, 2)) AS band_id)),
-          |pairs AS (
-          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          |         a.simhash AS sh_a, b.simhash AS sh_b
-          |  FROM banded a JOIN banded b
-          |    ON a.band_id = b.band_id AND a.band_val = b.band_val
-          |   AND a.doc_id < b.doc_id)
-          |SELECT doc_a, doc_b,
-          |       CAST(len(list_filter(range(1, 33), i -> substr(sh_a, i, 1) <> substr(sh_b, i, 1))) AS INT) AS hamming
-          |FROM pairs
-          |WHERE len(list_filter(range(1, 33), i -> substr(sh_a, i, 1) <> substr(sh_b, i, 1))) <= 1""".stripMargin),
-
-    "dedup_ngram_jaccard" ->
-      s"""WITH tvals AS (
-         |  SELECT doc_id, lang, source, $TokenValsSql AS tv
-         |  FROM documents),
-         |d AS (
-         |  SELECT doc_id, lang, source,
-         |         list_distinct(tv) AS tok,
-         |         $ShingleValsSql AS sh
-         |  FROM tvals)
-        |SELECT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       round((len(list_intersect(a.tok, b.tok))::DOUBLE / len(list_distinct(a.tok || b.tok))) * 10000) / 10000 AS jaccard_1gram,
-        |       round((len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(a.sh || b.sh))) * 10000) / 10000 AS jaccard_3gram
-        |FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-        |WHERE round((len(list_intersect(a.tok, b.tok))::DOUBLE / len(list_distinct(a.tok || b.tok))) * 10000) / 10000 >= 0.5""".stripMargin,
-
-    // Same shingle construction as the plan; the df cap filters the
-    // posting list identically (count over the shingle key), and the
-    // containment ratio divides by the A side's shingle count only —
-    // the relation is asymmetric and both directions report.
-    "dedup_containment" ->
-      s"""WITH tvals AS (
-         |  SELECT doc_id, $TokenValsSql AS tv FROM documents),
-         |d AS (
-         |  SELECT doc_id, $ShingleValsSql AS sh FROM tvals),
-         |post AS (
-         |  SELECT doc_id, g FROM (
-         |    SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df
-         |    FROM (SELECT doc_id, unnest(sh) AS g FROM d) p0)
-         |  WHERE df <= ${Cfg.containmentDfCap}),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM post a JOIN post b ON a.g = b.g AND a.doc_id <> b.doc_id)
-         |SELECT cand.doc_a, cand.doc_b,
-         |       ${Rounding.stableSql("len(list_intersect(da.sh, db.sh))::DOUBLE / len(da.sh)", 4)} AS containment
-         |FROM cand JOIN d da ON da.doc_id = cand.doc_a
-         |          JOIN d db ON db.doc_id = cand.doc_b
-         |WHERE ${Rounding.stableSql("len(list_intersect(da.sh, db.sh))::DOUBLE / len(da.sh)", 4)} >= ${Cfg.containmentThreshold}""".stripMargin,
-
-    // Window hashes re-derived relationally over the SAME token-value
-    // construction; islands via the lag/sum gaps-and-islands idiom the
-    // Spark side's per-doc window computes.
-    "dedup_spans" -> {
-      val w = Cfg.spanWindowTokens
-      s"""WITH base AS (
-         |  SELECT doc_id,
-         |         text || CASE WHEN doc_id % 3 = 0 THEN ' subscribe to our newsletter for the latest updates and follow us on all social media platforms today' ELSE '' END
-         |              || CASE WHEN doc_id % 5 = 0 THEN ' this article is for informational purposes only and not professional advice' ELSE '' END AS text
-         |  FROM documents WHERE text IS NOT NULL),
-         |toks AS (SELECT doc_id, $TokenValsSql AS tv FROM base),
-         |wins AS (
-         |  SELECT doc_id, p,
-         |         md5(array_to_string(list_transform(tv[p : p+${w - 1}], x -> CAST(x AS VARCHAR)), '|')) AS whash
-         |  FROM (SELECT doc_id, tv, unnest(generate_series(1, len(tv) - ${w - 1})) AS p
-         |        FROM toks WHERE len(tv) >= $w) w0),
-         |dup AS (SELECT whash FROM wins GROUP BY 1 HAVING count(*) >= 2),
-         |hits AS (SELECT doc_id, p FROM wins JOIN dup USING (whash)),
-         |isl AS (
-         |  SELECT doc_id, p,
-         |         sum(CASE WHEN prev IS NULL OR p > prev + ${w - 1} THEN 1 ELSE 0 END)
-         |           OVER (PARTITION BY doc_id ORDER BY p) AS island
-         |  FROM (SELECT doc_id, p, lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM hits) h0),
-         |spans AS (
-         |  SELECT doc_id, island, count(*) AS nh, max(p) + ${w - 1} - min(p) + 1 AS len
-         |  FROM isl GROUP BY 1, 2),
-         |perdoc AS (
-         |  SELECT doc_id, sum(nh) AS n_dup_windows, count(*) AS n_spans,
-         |         sum(len) AS dup_tokens, max(len) AS max_span_tokens
-         |  FROM spans GROUP BY 1)
-         |SELECT t.doc_id,
-         |       CAST(CASE WHEN len(t.tv) >= $w THEN len(t.tv) - $w + 1 ELSE 0 END AS BIGINT) AS n_windows,
-         |       CAST(coalesce(p.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
-         |       CAST(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
-         |       CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-         |       CAST(coalesce(p.max_span_tokens, 0) AS BIGINT) AS max_span_tokens
-         |FROM toks t LEFT JOIN perdoc p USING (doc_id)""".stripMargin
-    },
-
-    "sim_topk" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
-         |s AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q, e c WHERE q.q_id <> c.id)
-         |SELECT q_id, c_id, cos, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM s)
-         |WHERE rnk <= 5""".stripMargin,
-
-    "sim_lsh_ann" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT id, v, ${lshBucketSql("v", 8, 64)} AS bucket FROM e),
-         |q AS (SELECT id AS q_id, v AS qv, bucket FROM b WHERE id < 5),
-         |s AS (
-         |  SELECT q.q_id, c.id AS c_id, c.bucket, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q JOIN b c ON q.bucket = c.bucket AND q.q_id <> c.id)
-         |SELECT q_id, c_id, bucket, cos, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM s)
-         |WHERE rnk <= 3""".stripMargin,
-
-    // Coarse codebook = the k=8 trained Lloyd centroids (the CTE
-    // chain's c1 — Similarity.trainedCentroids in lock-step), not the
-    // first-8 vectors; assignment/probing unchanged.
-    "sim_ivf_ann" ->
-      s"""WITH $ivfCtesSql
-         |SELECT q_id, c_id, cos, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM ivfs)
-         |WHERE rnk <= 3""".stripMargin,
-
-    // IVF recall gate: fraction of the exact top-3 the trained-codebook
-    // probe recovers — the number that justifies (or indicts) the k=8
-    // codebook + nProbe=2 choice, measured like sim_lsh_recall.
-    "sim_ivf_recall" ->
-      s"""WITH $ivfCtesSql,
-         |ivf AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM ivfs)
-         |  WHERE rnk <= 3),
-         |bs AS (
-         |  SELECT q.id AS q_id, c.id AS c_id, ${sqlCos("q.v", "c.v")} AS cos
-         |  FROM (SELECT * FROM eb WHERE id < 5) q, eb c WHERE q.id <> c.id),
-         |brute AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-         |  WHERE rnk <= 3)
-         |SELECT b.q_id, CAST(count(i.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql("count(i.c_id)::DOUBLE / 3", 4)} AS recall
-         |FROM brute b LEFT JOIN ivf i ON b.q_id = i.q_id AND b.c_id = i.c_id
-         |GROUP BY b.q_id""".stripMargin,
-
-    "sim_sq_ann" ->
-      """WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-        |mx AS (SELECT CASE WHEN coalesce(max(list_aggregate(list_transform(v, x -> abs(x)), 'max')), 0) <= 0
-        |              THEN error('sqScale: empty or all-zero calibration sample id < 256')
-        |              ELSE 127.0 / max(list_aggregate(list_transform(v, x -> abs(x)), 'max')) END AS s
-        |       FROM e WHERE id < 256),
-        |q8 AS (SELECT id, list_transform(v, x -> greatest(least(round(x * s), 127.0), -127.0)) AS qv FROM e CROSS JOIN mx),
-        |qq AS (SELECT id AS q_id, qv AS qqv FROM q8 WHERE id < 5),
-        |sc AS (
-        |  SELECT q_id, c.id AS c_id,
-        |         CAST(list_sum(list_transform(range(1, len(qqv) + 1), i -> qqv[i] * c.qv[i])) AS BIGINT) AS qdot
-        |  FROM qq, q8 c WHERE q_id <> c.id)
-        |SELECT q_id, c_id, qdot, CAST(rnk AS INT) AS rnk
-        |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qdot DESC, c_id ASC) AS rnk FROM sc)
-        |WHERE rnk <= 3""".stripMargin,
-
-    // Codes and reconstruction re-derived relationally: per-block
-    // L2-Lloyd codebooks (the prefixed CTE chains' b*_c1 —
-    // Similarity.trainPqCodebooks in lock-step), nearest-codeword
-    // codes, reconstruction ordered by m so the ADC dot runs the same
-    // sequential fold as Spark's kernel, then the k·rerank shortlist
-    // re-ranked by exact 6-dp cosine (pqx).
-    "sim_pq_ann" ->
-      s"""WITH $pqCtesSql
-         |SELECT q_id, c_id, score, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM pqx)
-         |WHERE rnk <= ${Cfg.pqK}""".stripMargin,
-
-    // PQ recall gate: fraction of the exact top-3 the trained-codeword
-    // reconstruction ranking recovers — completes the recall-gate
-    // symmetry (LSH / SQ / IVF / PQ each measured, never guessed).
-    "sim_pq_recall" ->
-      s"""WITH $pqCtesSql,
-         |pq AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM pqx)
-         |  WHERE rnk <= ${Cfg.pqK}),
-         |bs AS (
-         |  SELECT q.id AS q_id, c.id AS c_id, ${sqlCos("q.v", "c.v")} AS cos
-         |  FROM (SELECT * FROM eb WHERE id < 5) q, eb c WHERE q.id <> c.id),
-         |brute AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-         |  WHERE rnk <= ${Cfg.pqK})
-         |SELECT b.q_id, CAST(count(p.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql(s"count(p.c_id)::DOUBLE / ${Cfg.pqK}", 4)} AS recall
-         |FROM brute b LEFT JOIN pq p ON b.q_id = p.q_id AND b.c_id = p.c_id
-         |GROUP BY b.q_id""".stripMargin,
-
-    "sim_mmr" -> mmrOracleSql,
-
-    "sim_ivfpq_ann" ->
-      s"""WITH $ivfPqCtesSql
-         |SELECT q_id, c_id, score, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM ipx)
-         |WHERE rnk <= ${Cfg.pqK}""".stripMargin,
-
-    "sim_ivfpq_recall" ->
-      s"""WITH $ivfPqCtesSql,
-         |ip AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM ipx)
-         |  WHERE rnk <= ${Cfg.pqK}),
-         |bs AS (
-         |  SELECT q.id AS q_id, c.id AS c_id, ${sqlCos("q.v", "c.v")} AS cos
-         |  FROM (SELECT * FROM eb WHERE id < 5) q, eb c WHERE q.id <> c.id),
-         |brute AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-         |  WHERE rnk <= ${Cfg.pqK})
-         |SELECT b.q_id, CAST(count(p.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql(s"count(p.c_id)::DOUBLE / ${Cfg.pqK}", 4)} AS recall
-         |FROM brute b LEFT JOIN ip p ON b.q_id = p.q_id AND b.c_id = p.c_id
-         |GROUP BY b.q_id""".stripMargin,
-
-    // Raw Hamming ranking over the sign codes: ASC distance ≡ the
-    // Spark side's DESC −hamming score, ties to the lower c_id.
-    "sim_binary_ann" ->
-      s"""WITH $binaryCtes
-         |SELECT q_id, c_id, hamming, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming ASC, c_id ASC) AS rnk FROM bh)
-         |WHERE rnk <= 3""".stripMargin,
-
-    // Two-stage binary search (Hamming shortlist of 3·binaryRerank →
-    // exact 6-dp cosine refine → top-3) measured against brute top-3.
-    "sim_binary_recall" ->
-      s"""WITH $binaryCtes,
-         |${binaryRecallTail("bh")}""".stripMargin,
-
-    // Same two-stage search, but candidates come from the multi-index
-    // band join instead of the full Hamming scan.
-    "sim_binary_banded" ->
-      s"""WITH $binaryCtes,
-         |$bandedCandCtes,
-         |${binaryRecallTail("bsc")}""".stripMargin,
-
-    "sim_eval_mrr" -> mrrEvalSql,
-
-    // Per-tier truncated-cosine top-3 vs the full-dim exact top-3 —
-    // tiers unrolled from the same Cfg.truncDims the plan reads; the
-    // full-dim tier must read 1.0, self-validating the gate.
-    "sim_trunc_recall" -> truncRecallSql,
-
-    // Filtered exact search: admission is an IN-subquery on documents
-    // (≡ the Spark plan's left-semi join); distance only over admitted.
-    "sim_filtered_ann" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |fc AS (SELECT * FROM e WHERE id IN (SELECT doc_id FROM documents WHERE lang = '${Cfg.annFilterLang}')),
-         |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
-         |s AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q, fc c WHERE q.q_id <> c.id)
-         |SELECT q_id, c_id, cos, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM s)
-         |WHERE rnk <= 3""".stripMargin,
-
-    // Filtered-IVF recall: the coarse chain trains on the WHOLE corpus
-    // (the standing index), cassign/brute range over the ADMITTED
-    // subset only — mirroring pre-filtered postings probed by
-    // unfiltered-routed queries.
-    "sim_filtered_ivf_recall" ->
-      s"""WITH ${kmeansCtesOver(
-             "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL",
-             k = 8)},
-         |eb AS (SELECT vec_id AS id, v FROM e),
-         |fc AS (SELECT * FROM eb WHERE id IN (SELECT doc_id FROM documents WHERE lang = '${Cfg.annFilterLang}')),
-         |cent AS (SELECT cid, cv FROM c1),
-         |cscore AS (
-         |  SELECT c.id AS c_id, c.v AS c_vec, cent.cid, ${sqlCos("c.v", "cent.cv")} AS ccos
-         |  FROM fc c CROSS JOIN cent),
-         |cassign AS (
-         |  SELECT c_id, c_vec, cid AS list_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY c_id ORDER BY ccos DESC, cid ASC) AS rn FROM cscore)
-         |  WHERE rn = 1),
-         |qscore AS (
-         |  SELECT q.id AS q_id, q.v AS q_vec, cent.cid, ${sqlCos("q.v", "cent.cv")} AS qcos
-         |  FROM (SELECT * FROM eb WHERE id < 5) q CROSS JOIN cent),
-         |qassign AS (
-         |  SELECT q_id, q_vec, cid AS list_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, cid ASC) AS rn FROM qscore)
-         |  WHERE rn <= 2),
-         |ivfs AS (
-         |  SELECT q.q_id, c.c_id, round(${sqlCos("q.q_vec", "c.c_vec")}, 6) AS cos
-         |  FROM qassign q JOIN cassign c USING (list_id)
-         |  WHERE q.q_id <> c.c_id),
-         |ivf AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM ivfs)
-         |  WHERE rnk <= 3),
-         |bs AS (
-         |  SELECT q.id AS q_id, c.id AS c_id, ${sqlCos("q.v", "c.v")} AS cos
-         |  FROM (SELECT * FROM eb WHERE id < 5) q, fc c WHERE q.id <> c.id),
-         |brute AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-         |  WHERE rnk <= 3)
-         |SELECT b.q_id, CAST(count(i.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql("count(i.c_id)::DOUBLE / 3", 4)} AS recall
-         |FROM brute b LEFT JOIN ivf i ON b.q_id = i.q_id AND b.c_id = i.c_id
-         |GROUP BY b.q_id""".stripMargin,
-
-    "sim_sq_recall" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
-         |bs AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q, e c WHERE q.q_id <> c.id),
-         |brute AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-         |  WHERE rnk <= 3),
-         |mx AS (SELECT CASE WHEN coalesce(max(list_aggregate(list_transform(v, x -> abs(x)), 'max')), 0) <= 0
-         |              THEN error('sqScale: empty or all-zero calibration sample id < 256')
-         |              ELSE 127.0 / max(list_aggregate(list_transform(v, x -> abs(x)), 'max')) END AS s
-         |       FROM e WHERE id < 256),
-         |q8 AS (SELECT id, list_transform(v, x -> greatest(least(round(x * s), 127.0), -127.0)) AS qv FROM e CROSS JOIN mx),
-         |qq AS (SELECT id AS q_id, qv AS qqv FROM q8 WHERE id < 5),
-         |ss AS (
-         |  SELECT q_id, c.id AS c_id,
-         |         CAST(list_sum(list_transform(range(1, len(qqv) + 1), i -> qqv[i] * c.qv[i])) AS BIGINT) AS qdot
-         |  FROM qq, q8 c WHERE q_id <> c.id),
-         |sq AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qdot DESC, c_id ASC) AS rnk FROM ss)
-         |  WHERE rnk <= 3)
-         |SELECT b.q_id, CAST(count(l.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql("count(l.c_id)::DOUBLE / 3", 4)} AS recall
-         |FROM brute b LEFT JOIN sq l ON b.q_id = l.q_id AND b.c_id = l.c_id
-         |GROUP BY b.q_id""".stripMargin,
-
-    "ta_langid" ->
-      """SELECT doc_id,
-        |       CAST(len(regexp_extract_all(lower(text), 'the')) + len(regexp_extract_all(lower(text), 'ing')) + len(regexp_extract_all(lower(text), 'ow ')) AS INT) AS score_en,
-        |       CAST(len(regexp_extract_all(lower(text), 'sch')) + len(regexp_extract_all(lower(text), 'der')) + len(regexp_extract_all(lower(text), 'ein')) AS INT) AS score_de,
-        |       CAST(len(regexp_extract_all(lower(text), 'ció')) + len(regexp_extract_all(lower(text), 'los')) + len(regexp_extract_all(lower(text), 'rde')) AS INT) AS score_es,
-        |       CAST(len(regexp_extract_all(lower(text), 'eau')) + len(regexp_extract_all(lower(text), 'oux')) + len(regexp_extract_all(lower(text), 'que')) AS INT) AS score_fr,
-        |       CASE WHEN CAST(len(regexp_extract_all(lower(text), 'eau')) + len(regexp_extract_all(lower(text), 'oux')) + len(regexp_extract_all(lower(text), 'que')) AS INT)
-        |              > greatest(CAST(len(regexp_extract_all(lower(text), 'the')) + len(regexp_extract_all(lower(text), 'ing')) + len(regexp_extract_all(lower(text), 'ow ')) AS INT),
-        |                         CAST(len(regexp_extract_all(lower(text), 'sch')) + len(regexp_extract_all(lower(text), 'der')) + len(regexp_extract_all(lower(text), 'ein')) AS INT),
-        |                         CAST(len(regexp_extract_all(lower(text), 'ció')) + len(regexp_extract_all(lower(text), 'los')) + len(regexp_extract_all(lower(text), 'rde')) AS INT)) THEN 'fr'
-        |            WHEN CAST(len(regexp_extract_all(lower(text), 'ció')) + len(regexp_extract_all(lower(text), 'los')) + len(regexp_extract_all(lower(text), 'rde')) AS INT)
-        |              > greatest(CAST(len(regexp_extract_all(lower(text), 'the')) + len(regexp_extract_all(lower(text), 'ing')) + len(regexp_extract_all(lower(text), 'ow ')) AS INT),
-        |                         CAST(len(regexp_extract_all(lower(text), 'sch')) + len(regexp_extract_all(lower(text), 'der')) + len(regexp_extract_all(lower(text), 'ein')) AS INT)) THEN 'es'
-        |            WHEN CAST(len(regexp_extract_all(lower(text), 'sch')) + len(regexp_extract_all(lower(text), 'der')) + len(regexp_extract_all(lower(text), 'ein')) AS INT)
-        |              > CAST(len(regexp_extract_all(lower(text), 'the')) + len(regexp_extract_all(lower(text), 'ing')) + len(regexp_extract_all(lower(text), 'ow ')) AS INT) THEN 'de'
-        |            ELSE 'en' END AS predicted_lang
-        |FROM documents""".stripMargin,
-
-    "ta_quality" ->
-      (s"""WITH t AS (
-         |${qualityCteSql("documents")})
-         |SELECT doc_id, n_tokens,
-         |       round((content_chars / n_tokens) * 10000) / 10000 AS avg_token_len,
-         |       round((stop_hits::DOUBLE / n_tokens) * 10000) / 10000 AS stopword_ratio,
-         |       round((punct_hits::DOUBLE / length(text)) * 10000) / 10000 AS punct_ratio,
-         |""".stripMargin +
-        s"       $QualitySql AS quality,\n" +
-        s"       $WsTokensSql AS ws_tokens,\n" +
-        """       CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS INT) AS bpeish_tokens
-          |FROM t""".stripMargin),
-
-    // Hashed-linear classifier: bucket/weight arithmetic is all-integer
-    // (list_sum is exact), so only the final division hashes — mirrored
-    // 6-dp rounded. Constants inline TextAnalysis.ClfBuckets/Mod.
-    "ta_quality_clf" ->
-      s"""WITH ${clfCtesSql()}
-         |SELECT doc_id, n_tokens, clf_score,
-         |       clf_score >= ${Cfg.clfThreshold} AS clf_keep
-         |FROM tcl""".stripMargin,
-
-    // Per-source cap: the window form of the plan's k-bounded aggregate
-    // — rank by (clf_score DESC, doc_id ASC), keep rank <= cap.
-    "ta_source_cap" ->
-      s"""WITH ${clfCtesSql()},
-         |r AS (
-         |  SELECT source, doc_id, clf_score,
-         |         row_number() OVER (PARTITION BY source
-         |                            ORDER BY clf_score DESC, doc_id ASC) AS rn
-         |  FROM tcl)
-         |SELECT source, doc_id, clf_score, CAST(rn AS INT) AS src_rank
-         |FROM r WHERE rn <= ${Cfg.sourceCap}""".stripMargin,
-
-    // Fixed-point sqrt weights (floor(sqrt(n)*1e6) BIGINT), integer
-    // normalizer sum, one integer division — the rate derivation has no
-    // float fold anywhere, so both engines land the identical percent.
-    "ta_mix_temperature" ->
-      s"""WITH s0 AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 2 = 0 THEN 'head'
-         |              WHEN doc_id % 4 = 1 THEN 'mid'
-         |              WHEN doc_id % 8 = 3 THEN 'tail_a'
-         |              ELSE 'tail_b' END AS source
-         |  FROM documents),
-         |c AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM s0 GROUP BY 1),
-         |w AS (SELECT source, n, CAST(floor(sqrt(n) * 1000000) AS BIGINT) AS w FROM c),
-         |t AS (SELECT sum(w) AS tot FROM w),
-         |r AS (SELECT source, n AS n_docs,
-         |             least(100, (100 * ${Cfg.mixBudget} * CAST(w AS HUGEINT)) // (tot * n)) AS rate_pct
-         |      FROM w, t),
-         |k AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept
-         |      FROM s0 d JOIN r USING (source)
-         |      WHERE ${Sampling.keepAtSql("d.doc_id", "r.rate_pct")} GROUP BY 1)
-         |SELECT r.source, r.n_docs, CAST(r.rate_pct AS BIGINT) AS rate_pct,
-         |       CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept
-         |FROM r LEFT JOIN k USING (source)""".stripMargin,
-
-    "ta_length_stats" ->
-      s"""SELECT lang,
-         |       CAST(count(*) AS BIGINT) AS n_docs,
-         |       ${Rounding.stableSql("avg(n_chars)", 4)} AS avg_chars,
-         |       ${Rounding.stableSql("quantile_cont(n_chars, 0.5)", 4)} AS median_chars,
-         |       ${Rounding.stableSql("quantile_cont(n_chars, 0.9)", 4)} AS p90_chars
-         |FROM documents GROUP BY lang""".stripMargin,
-
-    "ta_sample" ->
-      s"""SELECT doc_id, lang, n_chars
-         |FROM documents
-         |WHERE ${graft.operators.Sampling.keepSql("doc_id", 10)}""".stripMargin,
-
-    "ta_sample_stratified" ->
-      s"""SELECT lang, count(*) AS n_kept
-         |FROM documents
-         |WHERE ${graft.operators.Sampling.stratifiedKeepSql("doc_id", "lang",
-                  Map("en" -> 20, "zh" -> 50), 80)}
-         |GROUP BY lang""".stripMargin,
-
-    "ta_chunk" ->
-      graft.operators.Packing.chunkSql("documents", "doc_id", "text",
-        chunkTokens = Cfg.chunkTokens, stride = Cfg.chunkStride),
-
-    "ta_shard_pack" ->
-      graft.operators.Packing.packShardsSql("documents", "lang", "doc_id",
-        "n_chars", budget = Cfg.shardBudget, selectCols = "doc_id, lang, n_chars"),
-
-    "ta_shuffle" ->
-      graft.operators.Packing.shuffleLayoutSql("documents", "doc_id",
-        shardSize = Cfg.shuffleShardSize),
-
-    "ta_length_buckets" ->
-      graft.operators.Packing.lengthBucketsSql("documents", "text"),
-
-    // Quality-descending global order (ties to lower doc_id) cut into
-    // fixed-size phases — the one-window rank SPEC of the two-phase
-    // curriculum layout.
-    "ta_curriculum" ->
-      s"""WITH qc AS (${qualityCteSql("documents WHERE text IS NOT NULL")}),
-         |qs AS (SELECT doc_id, $QualitySql AS quality FROM qc),
-         |kk AS (SELECT doc_id, quality,
-         |              10000 - CAST(round(quality * 10000) AS BIGINT) AS k
-         |       FROM qs),
-         |rr AS (SELECT doc_id, quality,
-         |              row_number() OVER (ORDER BY k, doc_id) - 1 AS rnk
-         |       FROM kk)
-         |SELECT doc_id, quality,
-         |       rnk // ${Cfg.curriculumPhaseSize} AS phase,
-         |       rnk % ${Cfg.curriculumPhaseSize} AS phase_pos
-         |FROM rr""".stripMargin,
-
-    "ta_token_topk" ->
-      """WITH c AS (
-        |  SELECT lang, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |g AS (
-        |  SELECT lang, token, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM c GROUP BY 1, 2)
-        |SELECT lang, token, cnt, CAST(rnk AS INT) AS rnk
-        |FROM (SELECT *, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token ASC) AS rnk FROM g)
-        |WHERE rnk <= 5""".stripMargin,
-
-    "e3_curation" ->
-      (s"""WITH $RecrawlCte,
-         |t AS (
-         |${qualityCteSql("corpus")}),
-         |canon AS (SELECT md5(text) AS h, min(doc_id) AS cid FROM corpus GROUP BY 1)
-         |SELECT t.doc_id, n_tokens,
-         |       round((content_chars / n_tokens) * 10000) / 10000 AS avg_token_len,
-         |""".stripMargin +
-        s"       $QualitySql AS quality,\n" +
-        s"       $WsTokensSql AS ws_tokens\n" +
-        "FROM t JOIN canon ON md5(t.text) = canon.h AND t.doc_id = canon.cid\n" +
-        s"WHERE $QualitySql >= ${Cfg.qualityMin} AND $WsTokensSql BETWEEN ${Cfg.minWsTokens} AND ${Cfg.maxWsTokens}"),
-
-    "e4_curation_full" ->
-      (s"WITH RECURSIVE ${minhashCtes(Cfg.numBands, Cfg.rowsPerBand, "a.doc_id < b.doc_id", "doc_a", "doc_b",
-        Some(Cfg.maxBucket), canonicalDomain = true)},\n" +
-        s"""verified AS (
-           |  SELECT doc_a, doc_b
-           |  FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-           |  WHERE $MinhashJaccardSql >= 0.8),
-           |copyedges AS (SELECT cid AS doc_a, doc_id AS doc_b FROM em WHERE doc_id <> cid),${if (Cfg.curationContainmentEdges) s"""
-           |c_canon AS (SELECT cid AS doc_id FROM exc),
-           |c_sh AS (SELECT sh.doc_id, sh.sh FROM sh JOIN c_canon USING (doc_id)),
-           |c_post AS (
-           |  SELECT doc_id, g FROM (
-           |    SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df
-           |    FROM (SELECT doc_id, unnest(sh) AS g FROM c_sh) p0)
-           |  WHERE df <= ${Cfg.containmentDfCap}),
-           |c_cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM c_post a JOIN c_post b ON a.g = b.g AND a.doc_id <> b.doc_id),
-           |c_pairs AS (
-           |  SELECT c_cand.doc_a, c_cand.doc_b
-           |  FROM c_cand JOIN sh da ON da.doc_id = c_cand.doc_a
-           |              JOIN sh db ON db.doc_id = c_cand.doc_b
-           |  WHERE ${Rounding.stableSql(
-               "len(list_intersect(da.sh, db.sh))::DOUBLE / len(da.sh)", 4)} >= ${Cfg.containmentThreshold}),
-           |alledges AS (SELECT doc_a, doc_b FROM verified
-           |             UNION SELECT doc_a, doc_b FROM c_pairs
-           |             UNION SELECT doc_a, doc_b FROM copyedges),""" else """
-           |alledges AS (SELECT doc_a, doc_b FROM verified
-           |             UNION SELECT doc_a, doc_b FROM copyedges),"""}
-           |nodes AS (SELECT DISTINCT doc_id FROM corpus),
-           |edges AS (
-           |  SELECT doc_a AS a, doc_b AS b FROM alledges
-           |  UNION ALL SELECT doc_b, doc_a FROM alledges),
-           |walk(node, lab) AS (
-           |  SELECT doc_id, doc_id FROM nodes
-           |  UNION
-           |  SELECT e.b, w.lab FROM walk w JOIN edges e ON e.a = w.node),
-           |clusters AS (SELECT node AS doc_id, min(lab) AS label FROM walk GROUP BY node),
-           |canonical AS (
-           |  SELECT c.doc_id, c.text FROM corpus c
-           |  JOIN clusters cl ON cl.doc_id = c.doc_id AND cl.label = c.doc_id),
-           |bench_g AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id < 20),
-           |cont AS (
-           |  SELECT DISTINCT u.doc_id
-           |  FROM (SELECT doc_id, unnest(sh) AS g FROM sh) u JOIN bench_g USING (g)),
-           |clean AS (
-           |  SELECT c.doc_id, c.text FROM canonical c
-           |  WHERE NOT EXISTS (SELECT 1 FROM cont x WHERE x.doc_id = c.doc_id)),
-           |ql AS (
-           |${qualityCteSql("clean")})
-           |""".stripMargin +
-        s"""SELECT lang, count(*) AS n_docs, CAST(sum(ws) AS BIGINT) AS total_tokens
-           |FROM (
-           |  SELECT t.doc_id, d.lang, $WsTokensSql AS ws
-           |  FROM ql t JOIN (SELECT doc_id AS orig_id, lang FROM documents) d
-           |    ON d.orig_id = t.doc_id % 1000000
-           |  WHERE ${graft.operators.Sampling.keepSql("t.doc_id", 50)}
-           |    AND $QualitySql >= ${Cfg.qualityMin})
-           |GROUP BY lang""".stripMargin),
-
-    "ta_fingerprint" ->
-      s"""WITH h AS (SELECT doc_id, list_transform(string_split(text, ' '), t -> md5(t)) AS hs FROM documents)
-         |SELECT doc_id,
-         |       ${fingerprintSql("hs", 0)} AS fp,
-         |       ${fingerprintSql("hs", 16)} AS fp_prefix16
-         |FROM h""".stripMargin,
-
-    "mm_features" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS mx FROM documents),
-        |hv AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, 33), i ->
-        |           CASE WHEN ascii(substr(mx, i, 1)) >= 97
-        |                THEN ascii(substr(mx, i, 1)) - 87
-        |                ELSE ascii(substr(mx, i, 1)) - 48 END) AS nib
-        |  FROM m)
-        |SELECT doc_id,
-        |       CAST(32 + (doc_id % 8) * 16 AS INT) AS width,
-        |       CAST(32 + (doc_id % 5) * 16 AS INT) AS height,
-        |       CASE WHEN doc_id % 3 = 0 THEN 'png'
-        |            WHEN doc_id % 3 = 1 THEN 'jpeg' ELSE 'webp' END AS format,
-        |       CAST(16 AS INT) AS n_bytes,
-        |       list_sum(list_transform(range(1, 17), k -> nib[2*k-1] * 16 + nib[2*k]))::DOUBLE / 16 AS brightness,
-        |       CAST(greatest(1, ((32 + (doc_id % 8) * 16) * 64) // greatest(32 + (doc_id % 8) * 16, 32 + (doc_id % 5) * 16)) AS INT) AS resized_w,
-        |       CAST(greatest(1, ((32 + (doc_id % 5) * 16) * 64) // greatest(32 + (doc_id % 8) * 16, 32 + (doc_id % 5) * 16)) AS INT) AS resized_h,
-        |       CAST(doc_id % 4 AS INT) AS frame_id,
-        |       CAST(list_sum(list_transform(range(4 * (doc_id % 4) + 1, 4 * (doc_id % 4) + 5), k -> nib[2*k-1] * 16 + nib[2*k])) AS BIGINT) AS frame_byte_sum
-        |FROM hv""".stripMargin,
-
-    "g1_trading_calendar" ->
-      s"""SELECT d::DATE AS date
-        |FROM generate_series(DATE '${Cfg.calendarStart}', DATE '${Cfg.calendarEnd}', INTERVAL 1 day) t(d)
-        |WHERE isodow(d::DATE) BETWEEN 1 AND 5""".stripMargin,
-
-    "g2_cross_universe" ->
-      s"""SELECT d::DATE AS date, u.user_id
-        |FROM generate_series(DATE '${Cfg.calendarStart}', DATE '${Cfg.universeEnd}', INTERVAL 1 day) t(d),
-        |     (SELECT DISTINCT user_id FROM events) u
-        |WHERE isodow(d::DATE) BETWEEN 1 AND 5""".stripMargin,
-
-    "t3_pct_change" ->
-      s"""SELECT * FROM (
-        |  SELECT user_id, event_id, ts, value,
-        |         round((value / lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1) * 100, 4) AS pct_change
-        |  FROM events)
-        |WHERE ts >= TIMESTAMP '${Cfg.historyStart}'""".stripMargin,
-
-    "a1_top1_recency" ->
-      """SELECT user_id, event_id AS last_event_id, ts AS last_ts, value AS last_value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn FROM events)
-        |WHERE rn = 1""".stripMargin,
-
-    "a2_top1_string_recency" ->
-      """SELECT user_id, event_id AS picked_event_id, published_str
-        |FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY published_str DESC, event_id DESC) AS rn
-        |  FROM (SELECT *, CASE WHEN event_type = 'error' THEN '' ELSE strftime(ts, '%Y-%m-%d %H:%M:%S') END AS published_str FROM events))
-        |WHERE rn = 1""".stripMargin,
-
-    "t8_recency_window" ->
-      s"""SELECT event_id, user_id, ts, event_type FROM events
-        |WHERE ts >= ${Cfg.recencyAsOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-        |  AND ts <= ${Cfg.recencyAsOfSql}""".stripMargin,
-
-    "j1_calendar_inner_join" ->
-      s"""WITH cal AS (
-        |  SELECT d::DATE AS date
-        |  FROM generate_series(DATE '${Cfg.calendarStart}', DATE '${Cfg.universeEnd}', INTERVAL 1 day) t(d)
-        |  WHERE isodow(d::DATE) BETWEEN 1 AND 5),
-        |uni AS (SELECT cal.date, u.user_id FROM cal, (SELECT DISTINCT user_id FROM events) u),
-        |daily AS (
-        |  SELECT user_id, ts::DATE AS date, count(*) AS n_events, round(sum(value), 4) AS total_value
-        |  FROM events GROUP BY 1, 2)
-        |SELECT uni.date, uni.user_id, daily.n_events, daily.total_value
-        |FROM uni JOIN daily ON uni.date = daily.date AND uni.user_id = daily.user_id""".stripMargin,
-
-    "j2_dim_left_join" ->
-      """SELECT c_custkey, c_name,
-        |       coalesce(n_name, 'UNKNOWN') AS nation_name,
-        |       coalesce(cnt, 0) AS n_orders,
-        |       coalesce(spend, 0.0) AS total_spend
-        |FROM customer
-        |LEFT JOIN (SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt, round(sum(o_totalprice), 2) AS spend
-        |           FROM orders GROUP BY 1) o ON c_custkey = o_custkey
-        |LEFT JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
-
-    "j4_asof_tolerance" ->
-      """WITH nn AS (SELECT * FROM orders WHERE o_totalprice IS NOT NULL),
-        |latest AS (
-        |  SELECT o_custkey AS k, o_orderdate::DATE AS cur_time, o_totalprice AS cur_value
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM nn)
-        |  WHERE rn = 1),
-        |cand AS (
-        |  SELECT l.k, l.cur_time, l.cur_value,
-        |         o.o_orderdate::DATE AS prev_time, o.o_totalprice AS prev_value, o.o_orderkey,
-        |         abs(date_diff('day', (l.cur_time - INTERVAL 12 MONTH)::DATE, o.o_orderdate::DATE)) AS dd
-        |  FROM latest l JOIN nn o ON o.o_custkey = l.k
-        |  WHERE abs(date_diff('day', (l.cur_time - INTERVAL 12 MONTH)::DATE, o.o_orderdate::DATE)) <= 120)
-        |SELECT k AS o_custkey, cur_time, cur_value, prev_time, prev_value,
-        |       round((cur_value - prev_value) / abs(prev_value) * 100, 2) AS yoy_pct
-        |FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY dd ASC, prev_time DESC, o_orderkey DESC) AS rn FROM cand)
-        |WHERE rn = 1 AND prev_value <> 0""".stripMargin,
-
-    // nearest = rank by (distance ASC, later-date-first); the native
-    // exec's microsecond distances order identically to day diffs on
-    // midnight dates, and tolerance 120 days is the same boundary
-    "j4c_asof_nearest" ->
-      s"""WITH q AS (
-         |  SELECT o_custkey AS k, o_orderdate::DATE AS t,
-         |         ${Rounding.stableSql("sum(o_totalprice)", 2)} AS v
-         |  FROM orders GROUP BY 1, 2),
-         |latest AS (
-         |  SELECT k, t AS cur_time, v AS cur_value
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY t DESC) AS rn FROM q)
-         |  WHERE rn = 1),
-         |cand AS (
-         |  SELECT l.k, l.cur_time, l.cur_value, q.t AS prev_time, q.v AS prev_value,
-         |         abs(date_diff('day', (l.cur_time - INTERVAL 12 MONTH)::DATE, q.t)) AS dd
-         |  FROM latest l JOIN q ON q.k = l.k
-         |  WHERE abs(date_diff('day', (l.cur_time - INTERVAL 12 MONTH)::DATE, q.t)) <= 120)
-         |SELECT k AS o_custkey, cur_time, cur_value, prev_time, prev_value,
-         |       ${Rounding.stableSql("(cur_value - prev_value) / abs(prev_value) * 100", 2)} AS yoy_pct
-         |FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY dd ASC, prev_time DESC) AS rn FROM cand)
-         |WHERE rn = 1 AND prev_value <> 0""".stripMargin,
-
-    "a5a8_validator" ->
-      """SELECT CAST(count(*) AS BIGINT) AS row_count,
-        |       CAST(sum(CASE WHEN l_discount IS NULL OR l_discount < 0 OR l_discount > 1 THEN 1 ELSE 0 END) AS BIGINT) AS range_violations,
-        |       CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_quantity_nulls,
-        |       CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_extendedprice_nulls,
-        |       round(avg(CASE WHEN l_tax IS NULL THEN 1.0 ELSE 0.0 END), 4) AS null_rate
-        |FROM lineitem""".stripMargin,
-
-    "t6_suffix_strip" ->
-      """SELECT doc_id, raw_name,
-        |       trim(regexp_replace(raw_name, '(?i)[\s,]+(limited|ltd\.|ltd|corporation|corp\.|corp)[\s.]*$', '')) AS stripped_name
-        |FROM (
-        |  SELECT doc_id,
-        |         substr(text, 1, 12) ||
-        |         CASE doc_id % 6
-        |           WHEN 0 THEN ' Limited'  WHEN 1 THEN ' Ltd.'
-        |           WHEN 2 THEN ', ltd'     WHEN 3 THEN ' CORPORATION'
-        |           WHEN 4 THEN ' Corp.'    ELSE ' corp  ' END AS raw_name
-        |  FROM documents)""".stripMargin,
-
-    "t7_relevance" ->
-      """SELECT doc_id,
-        |       (regexp_matches(lower(text), '(?:^\s*|[^\p{L}\s]\s*)\bhash value limited\b')
-        |        OR regexp_matches(lower(text), '(?:^\s*|[^\p{L}\s]\s*)\bhash value\b')
-        |        OR regexp_matches(lower(text), '(?:^\s*|[^\p{L}\s]\s*)\bspark\b')) AS relevant,
-        |       regexp_matches(lower(text), '(?:^\s*|[^\p{L}\s]\s*)\bhash value\b') AS rel_name,
-        |       regexp_matches(regexp_replace(lower(text), ' ', ', ', 'g'), '(?:^\s*|[^\p{L}\s]\s*)\bspark\b') AS rel_comma_spark,
-        |       regexp_matches(lower(text), '(?:^\s*|[^\p{L}\s]\s*)\bspark\b') AS rel_plain_spark
-        |FROM documents""".stripMargin,
-
-    "t7_relevance_native" ->
-      """SELECT d.doc_id, c.ticker,
-        |       CASE c.ticker
-        |         WHEN 'HASHVAL' THEN
-        |           (regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bhash value limited\b')
-        |            OR regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bhash value\b')
-        |            OR regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bhashval\b'))
-        |         WHEN 'SPARKCO' THEN
-        |           (regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bspark co\b')
-        |            OR regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bsparkco\b'))
-        |         ELSE
-        |           (regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bwindow merge corp\.\b')
-        |            OR regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bwindow merge\b')
-        |            OR regexp_matches(lower(d.text), '(?:^\s*|[^\p{L}\s]\s*)\bwinmerge\b'))
-        |       END AS relevant
-        |FROM documents d,
-        |     (SELECT * FROM (VALUES ('HASHVAL'), ('SPARKCO'), ('WINMERGE')) t(ticker)) c""".stripMargin,
-
-    "t9_empty_title" ->
-      """SELECT doc_id, substr(title, 1, 40) AS title_prefix
-        |FROM (SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN '   ' ELSE text END AS title FROM documents)
-        |WHERE length(trim(title)) > 0""".stripMargin,
-
-    "m1_sentiment" -> M1OracleSql,
-
-    // identical by contract: the batched inference seam must reproduce
-    // the expression scorer's rows bit-for-bit
-    "m1_sentiment_batched" -> M1OracleSql,
-
-    "a4_fallback_chain" ->
-      s"""WITH ev AS (
-        |  SELECT *, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str,
-        |         (minute(ts) % 10 = 0) AS unp
-        |  FROM events
-        |  WHERE ts >= ${Cfg.asOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-        |    AND ts <= ${Cfg.asOfSql}),
-        |google AS (SELECT * FROM ev WHERE event_type IN ('click','view')),
-        |newsd  AS (SELECT * FROM ev WHERE event_type IN ('purchase','signup') AND NOT unp),
-        |cands AS (
-        |  SELECT user_id, event_id, unp, ts_str, 'google' AS src, 0 AS prec FROM google WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'google_ticker', 1 FROM google
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata', 2 FROM newsd WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata_ticker', 3 FROM newsd),
-        |w AS (
-        |  SELECT user_id, src, event_id,
-        |         CASE WHEN src LIKE 'google%' AND unp THEN '' ELSE ts_str END AS pub_str, prec
-        |  FROM cands),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY prec ASC, pub_str DESC, event_id DESC) AS rn FROM w)
-        |SELECT user_id, src AS headline_source, event_id AS picked_event_id, pub_str
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "j5_attach_provenance" ->
-      s"""WITH ev AS (
-        |  SELECT *, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str,
-        |         (minute(ts) % 10 = 0) AS unp
-        |  FROM events
-        |  WHERE ts >= ${Cfg.asOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-        |    AND ts <= ${Cfg.asOfSql}),
-        |google AS (SELECT * FROM ev WHERE event_type IN ('click','view')),
-        |newsd  AS (SELECT * FROM ev WHERE event_type IN ('purchase','signup') AND NOT unp),
-        |cands AS (
-        |  SELECT user_id, event_id, unp, ts_str, 'google' AS src, 0 AS prec FROM google WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'google_ticker', 1 FROM google
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata', 2 FROM newsd WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata_ticker', 3 FROM newsd),
-        |w AS (
-        |  SELECT user_id, src, event_id,
-        |         CASE WHEN src LIKE 'google%' AND unp THEN '' ELSE ts_str END AS pub_str, prec
-        |  FROM cands),
-        |sel AS (
-        |  SELECT user_id, src AS headline_source, event_id AS picked_event_id
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY prec ASC, pub_str DESC, event_id DESC) AS rn FROM w)
-        |  WHERE rn = 1),
-        |cal AS (
-        |  SELECT d::DATE AS date
-        |  FROM generate_series(DATE '${Cfg.marketStart}', DATE '${Cfg.provenanceEnd}', INTERVAL 1 day) t(d)
-        |  WHERE isodow(d::DATE) BETWEEN 1 AND 5),
-        |uni AS (SELECT cal.date, u.user_id FROM cal, (SELECT DISTINCT user_id FROM events) u)
-        |SELECT uni.date, uni.user_id,
-        |       coalesce(sel.headline_source, 'default') AS headline_source,
-        |       CASE WHEN sel.picked_event_id IS NULL THEN 'No major headline available'
-        |            ELSE 'event:' || sel.picked_event_id END AS headline,
-        |       'market=events | news=' || coalesce(sel.headline_source, 'default') || ' | sentiment=lexicon' AS data_source_log
-        |FROM uni LEFT JOIN sel ON uni.user_id = sel.user_id""".stripMargin,
-
-    "e1_pipeline" -> E1OracleSql,
-
-    "e1_pipeline_degraded" ->
-      e1OracleSqlWith("m.user_id % 11 = 3", "m.user_id % 11 = 7"),
-
-    // K6 — same selection CTE chain as a4_fallback_chain, classified
-    // into the structured reason vocabulary.
-    "k6_reason_codes" ->
-      s"""WITH ev AS (
-        |  SELECT *, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str,
-        |         (minute(ts) % 10 = 0) AS unp
-        |  FROM events
-        |  WHERE ts >= ${Cfg.asOfSql} - INTERVAL ${Cfg.lookbackHours} HOURS
-        |    AND ts <= ${Cfg.asOfSql}),
-        |google AS (SELECT * FROM ev WHERE event_type IN ('click','view')),
-        |newsd  AS (SELECT * FROM ev WHERE event_type IN ('purchase','signup') AND NOT unp),
-        |cands AS (
-        |  SELECT user_id, event_id, unp, ts_str, 'google' AS src, 0 AS prec FROM google WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'google_ticker', 1 FROM google
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata', 2 FROM newsd WHERE event_id % 5 = 0
-        |  UNION ALL SELECT user_id, event_id, unp, ts_str, 'newsdata_ticker', 3 FROM newsd),
-        |w AS (
-        |  SELECT user_id, src, event_id,
-        |         CASE WHEN src LIKE 'google%' AND unp THEN '' ELSE ts_str END AS pub_str, prec
-        |  FROM cands),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY prec ASC, pub_str DESC, event_id DESC) AS rn FROM w),
-        |sel AS (
-        |  SELECT user_id, src AS headline_source, event_id AS picked_event_id, pub_str
-        |  FROM r WHERE rn = 1),
-        |uni AS (SELECT DISTINCT user_id FROM events)
-        |SELECT uni.user_id,
-        |       CASE WHEN uni.user_id % 11 = 3 THEN 'error'
-        |            ELSE coalesce(sel.headline_source, 'default') END AS headline_source,
-        |       CASE WHEN uni.user_id % 11 = 3 THEN 'INFRA_FAILURE'
-        |            WHEN sel.picked_event_id IS NULL THEN 'COVERAGE_GAP'
-        |            WHEN sel.pub_str = '' THEN 'SOURCE_ISSUE'
-        |            ELSE 'OK' END AS reason
-        |FROM uni LEFT JOIN sel ON uni.user_id = sel.user_id""".stripMargin,
-
-    // (ts DESC, headline DESC) ordering mirrors windowedLatestAgg's
-    // deterministic (ts, headline) max_by tie-break for equal-ts rows
-    // (DuckDB arg_max has no composite key, so rank instead).
-    "st1_windowed_latest" ->
-      """SELECT user_id, window_start, ts, headline
-        |FROM (SELECT user_id, date_trunc('day', ts) AS window_start, ts,
-        |             'event:' || CAST(event_id AS VARCHAR) AS headline,
-        |             row_number() OVER (
-        |               PARTITION BY user_id, date_trunc('day', ts)
-        |               ORDER BY ts DESC, 'event:' || CAST(event_id AS VARCHAR) DESC) AS rn
-        |      FROM events)
-        |WHERE rn = 1""".stripMargin,
-
-    "j4b_asof_native" ->
-      s"""WITH l AS (
-         |  SELECT user_id, date_trunc('day', ts) AS d_ts,
-         |         ${Rounding.stableSql("sum(value)", 4)} AS close
-         |  FROM events GROUP BY 1, 2),
-         |r AS (
-         |  SELECT o_custkey AS o_key, o_orderdate::TIMESTAMP AS o_ts,
-         |         ${Rounding.stableSql("sum(o_totalprice)", 2)} AS o_total
-         |  FROM orders GROUP BY 1, 2),
-         |m AS (
-         |  SELECT l.user_id AS u, l.d_ts AS d, r.o_ts, r.o_total,
-         |         row_number() OVER (PARTITION BY l.user_id, l.d_ts ORDER BY r.o_ts DESC) AS rn
-         |  FROM l JOIN r ON r.o_key = l.user_id
-         |    AND r.o_ts <= l.d_ts AND r.o_ts >= l.d_ts - INTERVAL 30 DAY)
-         |SELECT l.user_id, l.d_ts, l.close, m.o_ts, m.o_total
-         |FROM l LEFT JOIN (SELECT * FROM m WHERE rn = 1) m
-         |  ON m.u = l.user_id AND m.d = l.d_ts""".stripMargin,
-
-    "st2_interval_join" ->
-      """SELECT m.user_id, m.event_id AS m_event_id, m.ts AS m_ts, n.ts AS n_ts,
-        |       'event:' || CAST(n.event_id AS VARCHAR) AS headline
-        |FROM events m JOIN events n
-        |  ON m.user_id = n.user_id
-        | AND n.event_id % 97 = 0
-        | AND n.ts > m.ts - INTERVAL 24 HOUR
-        | AND n.ts <= m.ts""".stripMargin,
-
-    // lag NULL on the first row: NULL > gap is NULL -> ELSE 0, matching
-    // Spark's when().otherwise(0) — session ids start at 0 in both.
-    "ev_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
-        |                (PARTITION BY user_id ORDER BY ts, event_id))
-        |              > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |         CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |           AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       min(ts) AS session_start, max(ts) AS session_end,
-        |       epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us
-        |FROM sess GROUP BY 1, 2""".stripMargin,
-
-    "ev_rolling_24h" ->
-      """SELECT user_id, event_id, ts,
-        |       count(*) OVER w AS n_24h,
-        |       min(value) OVER w AS min_24h,
-        |       max(value) OVER w AS max_24h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    // session boundary at diff >= gap; window end = last event + gap
-    "st3_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
-        |                (PARTITION BY user_id ORDER BY ts, event_id))
-        |              >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |         CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |           AS sid
-        |  FROM flagged)
-        |SELECT user_id, min(ts) AS w_start,
-        |       max(ts) + INTERVAL 30 MINUTE AS w_end,
-        |       count(*) AS n_events
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-
-    "ev_rolling_bucketed" ->
-      """WITH hourly AS (
-        |  SELECT user_id, epoch_us(ts) // 3600000000 AS hour_bucket,
-        |         count(*) AS n_events
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id, hour_bucket, n_events,
-        |       CAST(sum(n_events) OVER (PARTITION BY user_id ORDER BY hour_bucket
-        |            RANGE BETWEEN 23 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_24h
-        |FROM hourly""".stripMargin,
-
-    // ntile is BIGINT in DuckDB, IntegerType in Spark — cast to match
-    "ev_window_funcs" ->
-      s"""SELECT user_id, event_id, value,
-         |       CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-         |       ${Rounding.stableSql("percent_rank() OVER w", 6)} AS pct_rank,
-         |       ${Rounding.stableSql("cume_dist() OVER w", 6)} AS cume,
-         |       first_value(event_id) OVER w AS smallest_event,
-         |       nth_value(event_id, 2) OVER w AS second_event,
-         |       lead(event_id, 1) OVER w AS next_event
-         |FROM events
-         |WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)""".stripMargin,
-
-    "ta_profile_rollup" ->
-      """SELECT lang, source, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |       max(n_chars) AS max_chars
-        |FROM documents GROUP BY ROLLUP(lang, source)""".stripMargin,
-
-    "ta_pivot_langs" ->
-      """SELECT source,
-        |       count(*) FILTER (WHERE lang = 'de') AS de,
-        |       count(*) FILTER (WHERE lang = 'en') AS en,
-        |       count(*) FILTER (WHERE lang = 'es') AS es,
-        |       count(*) FILTER (WHERE lang = 'fr') AS fr,
-        |       count(*) FILTER (WHERE lang = 'zh') AS zh
-        |FROM documents GROUP BY source""".stripMargin,
-
-    "sim_lsh_recall" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
-         |bs AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q, e c WHERE q.q_id <> c.id),
-         |brute AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-         |  WHERE rnk <= 3),
-         |b2 AS (SELECT id, v, ${lshBucketSql("v", 8, 64)} AS bucket FROM e),
-         |q2 AS (SELECT id AS q_id, v AS qv, bucket FROM b2 WHERE id < 5),
-         |ls AS (
-         |  SELECT q2.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q2 JOIN b2 c ON q2.bucket = c.bucket AND q2.q_id <> c.id),
-         |lsh AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM ls)
-         |  WHERE rnk <= 3),
-         |qp AS (
-         |  SELECT q_id, qv, ${lshProbeSql("bucket", "pp.p")} AS bucket
-         |  FROM q2 CROSS JOIN (SELECT unnest(range(0, 9)) AS p) pp),
-         |ms AS (
-         |  SELECT qp.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM qp JOIN b2 c ON qp.bucket = c.bucket AND qp.q_id <> c.id),
-         |mp AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM ms)
-         |  WHERE rnk <= 3)
-         |SELECT b.q_id, CAST(count(l.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql("count(l.c_id)::DOUBLE / 3", 4)} AS recall,
-         |       CAST(count(m.c_id) AS BIGINT) AS hits_mp,
-         |       ${Rounding.stableSql("count(m.c_id)::DOUBLE / 3", 4)} AS recall_mp
-         |FROM brute b
-         |LEFT JOIN lsh l ON b.q_id = l.q_id AND b.c_id = l.c_id
-         |LEFT JOIN mp m ON b.q_id = m.q_id AND b.c_id = m.c_id
-         |GROUP BY b.q_id""".stripMargin,
-
-    // Multi-probe LSH ANN: probe set = own bucket + every Hamming-1
-    // neighbor (lshProbeSql mirrors Similarity.probeBuckets).
-    "sim_lsh_mp_ann" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT id, v, ${lshBucketSql("v", 8, 64)} AS bucket FROM e),
-         |q0 AS (SELECT id AS q_id, v AS qv, bucket FROM b WHERE id < 5),
-         |q AS (
-         |  SELECT q_id, qv, ${lshProbeSql("bucket", "pp.p")} AS bucket
-         |  FROM q0 CROSS JOIN (SELECT unnest(range(0, 9)) AS p) pp),
-         |s AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q JOIN b c ON q.bucket = c.bucket AND q.q_id <> c.id)
-         |SELECT q_id, c_id, cos, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM s)
-         |WHERE rnk <= 3""".stripMargin,
-
-    // Mirrors Similarity.hardNegatives: multi-probe candidate buckets,
-    // label-mismatch filter on the bucket join, (cos DESC, c_id) rank.
-    "sim_hard_negatives" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
-         |b AS (SELECT id, v, label, ${lshBucketSql("v", 8, 64)} AS bucket FROM e),
-         |q0 AS (SELECT id AS q_id, v AS qv, label AS ql, bucket FROM b WHERE id < 5),
-         |q AS (
-         |  SELECT q_id, qv, ql, ${lshProbeSql("bucket", "pp.p")} AS bucket
-         |  FROM q0 CROSS JOIN (SELECT unnest(range(0, 9)) AS p) pp),
-         |s AS (
-         |  SELECT q.q_id, c.id AS c_id, c.label AS c_label, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q JOIN b c ON q.bucket = c.bucket AND c.label <> q.ql)
-         |SELECT q_id, c_id, c_label, cos, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM s)
-         |WHERE rnk <= 3""".stripMargin,
-
-    // Mirrors Similarity.knnClassify: brute (cos DESC, c_id) top-5
-    // neighbor labels, majority vote with ties to the lower label.
-    "sim_knn_label" ->
-      s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
-         |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 20),
-         |s AS (
-         |  SELECT q.q_id, c.id AS c_id, c.label AS c_label, ${sqlCos("qv", "c.v")} AS cos
-         |  FROM q, e c WHERE q.q_id <> c.id),
-         |nb AS (
-         |  SELECT q_id, c_label
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rn FROM s)
-         |  WHERE rn <= 5),
-         |v AS (SELECT q_id, c_label, CAST(count(*) AS BIGINT) AS votes
-         |      FROM nb GROUP BY 1, 2)
-         |SELECT q_id, c_label AS predicted_label, votes
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY votes DESC, c_label ASC) AS rn2 FROM v)
-         |WHERE rn2 = 1""".stripMargin,
-
-    // NOTE: concatenation, not interpolation into a stripMargin string —
-    // the embedded E1 SQL contains lines starting with "||" whose leading
-    // "|" an outer stripMargin would eat.
-    "e2_validate_pipeline" ->
-      ("WITH e1 AS (SELECT * FROM (" + E1OracleSql + "\n) t)\n" +
-        """SELECT CAST(count(*) AS BIGINT) AS row_count,
-          |       CAST(sum(CASE WHEN "Sentiment_Score" IS NULL OR "Sentiment_Score" < -1.0 OR "Sentiment_Score" > 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS range_violations,
-          |       CAST(sum(CASE WHEN "Pct_Change" IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS "Pct_Change_nulls",
-          |       CAST(sum(CASE WHEN "Volume" IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS "Volume_nulls",
-          |       round(avg(CASE WHEN "YoY_NetIncome_Pct" IS NULL THEN 1.0 ELSE 0.0 END), 4) AS null_rate
-          |FROM e1""".stripMargin),
-
-    "salted_agg" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows, sum(l_quantity) AS total
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "dedup_embedding" ->
-      s"""WITH $CosinePairCtesSql
-         |SELECT vec_a, vec_b, cos FROM p WHERE cos >= 0.99""".stripMargin,
-
-    // Same verified pair frame, grouped by the unordered split pair of
-    // the endpoints' stable hash slots — the semantic leakage matrix.
-    "ta_split_leakage_semantic" -> {
-      val sa = Sampling.splitSql("vec_a", Cfg.splitTrainPct, Cfg.splitValPct)
-      val sb = Sampling.splitSql("vec_b", Cfg.splitTrainPct, Cfg.splitValPct)
-      s"""WITH $CosinePairCtesSql,
-         |v AS (SELECT vec_a, vec_b FROM p WHERE cos >= 0.99),
-         |sp AS (
-         |  SELECT least(($sa), ($sb)) AS split_lo,
-         |         greatest(($sa), ($sb)) AS split_hi
-         |  FROM v)
-         |SELECT split_lo, split_hi, CAST(count(*) AS BIGINT) AS n_pairs,
-         |       split_lo <> split_hi AS leaks
-         |FROM sp GROUP BY 1, 2""".stripMargin
-    },
-
-    // SemDeDup mirror: the paraphrase-augmented corpus (SemanticCorpusSql)
-    // through the SAME unrolled 2-pass Lloyd CTEs as sim_kmeans
-    // (kmeansCtesOver keeps them in lock-step), then cosine pairs scoped
-    // to (LSH bucket, cluster) cells — hot-cell cap and plane count both
-    // Cfg-interpolated — and the Cfg-selected keep rule (min-id drop or
-    // centroid-keep; semanticDedupOracleSql mirrors SparkEntry's
-    // semanticDedup switch).
-    "dedup_semantic" -> semanticDedupOracleSql(Cfg.semanticKeep),
-
-    // Standard-SemDeDup centroid keep over the same pair frame: the
-    // pair member farther from its cluster centroid is dropped (6-dp
-    // a20 cosine; ties drop vec_b, keeping the lower id).
-    "dedup_semantic_centroid" -> semanticDedupOracleSql("centroid"),
-
-    "q1_lineitem_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |       round(avg(l_quantity), 4) AS avg_qty,
-        |       round(avg(l_discount), 4) AS avg_disc,
-        |       CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q5_join_agg" ->
-      """SELECT r_name, n_name,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |       CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "ta_token_setops" ->
-      """WITH en AS (SELECT DISTINCT unnest(string_split(text, ' ')) AS token
-        |           FROM documents WHERE lang = 'en'),
-        |fr AS (SELECT DISTINCT unnest(string_split(text, ' ')) AS token
-        |       FROM documents WHERE lang = 'fr')
-        |SELECT token, 'en_only' AS membership FROM (SELECT token FROM en EXCEPT SELECT token FROM fr)
-        |UNION ALL
-        |SELECT token, 'fr_only' FROM (SELECT token FROM fr EXCEPT SELECT token FROM en)
-        |UNION ALL
-        |SELECT token, 'shared' FROM (SELECT token FROM en INTERSECT SELECT token FROM fr)""".stripMargin,
-
-    "q17_small_order" ->
-      s"""SELECT l_partkey,
-         |       count(*) AS n_small,
-         |       ${Rounding.stableSql("sum(l_extendedprice)", 2)} AS small_revenue
-         |FROM lineitem o
-         |WHERE l_quantity < (
-         |  SELECT ${Rounding.stableSql("0.2 * avg(i.l_quantity)", 4)}
-         |  FROM lineitem i WHERE i.l_partkey = o.l_partkey)
-         |GROUP BY l_partkey""".stripMargin,
-
-    "q3_top_orders" ->
-      s"""SELECT l_orderkey, o_orderdate, o_orderpriority, revenue
-         |FROM (
-         |  SELECT l_orderkey, o_orderdate, o_orderpriority,
-         |         ${Rounding.stableSql("sum(l_extendedprice * (1 - l_discount))", 2)} AS revenue
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  WHERE l_shipdate > TIMESTAMP '1995-03-15' AND o_orderdate < TIMESTAMP '1995-03-15'
-         |  GROUP BY 1, 2, 3)
-         |ORDER BY revenue DESC, l_orderkey ASC
-         |LIMIT 10""".stripMargin,
-
-    "q16_semi_anti" ->
-      """WITH with_o AS (
-        |  SELECT c_nationkey, count(*) AS n_with_orders
-        |  FROM customer c
-        |  WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |  GROUP BY c_nationkey),
-        |without_o AS (
-        |  SELECT c_nationkey, count(*) AS n_without_orders
-        |  FROM customer c
-        |  WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |  GROUP BY c_nationkey)
-        |SELECT c_nationkey,
-        |       coalesce(n_with_orders, 0) AS n_with_orders,
-        |       coalesce(n_without_orders, 0) AS n_without_orders
-        |FROM with_o FULL OUTER JOIN without_o USING (c_nationkey)""".stripMargin,
-
-    // Same blocking as the plan (string_split(...)[-1]) and the same
-    // hot-block cap (blocks above fuzzyMaxBlock drop before pairing);
-    // no length prefilter — it is pure pruning on the Spark side.
-    "j6_fuzzy_join" ->
-      s"""WITH names AS (
-         |  SELECT p_name AS name, CAST(count(*) AS BIGINT) AS n_parts
-         |  FROM part GROUP BY 1),
-         |blocked AS (
-         |  SELECT block, name, n_parts FROM (
-         |    SELECT string_split(name, ' ')[-1] AS block, name, n_parts,
-         |           count(*) OVER (PARTITION BY string_split(name, ' ')[-1]) AS bn
-         |    FROM names)
-         |  WHERE bn <= ${Cfg.fuzzyMaxBlock})
-         |SELECT a.block, a.name AS name_a, b.name AS name_b,
-         |       CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist,
-         |       a.n_parts AS n_parts_a, b.n_parts AS n_parts_b
-         |FROM blocked a JOIN blocked b ON a.block = b.block AND a.name < b.name
-         |WHERE levenshtein(a.name, b.name) <= ${Cfg.fuzzyMaxDist}""".stripMargin,
-
-    // Blocking is identical to j6_fuzzy_join's; the truth join is
-    // unblocked over the same bounded slice. Integer counts only.
-    "j6_fuzzy_recall" ->
-      s"""WITH names AS (
-         |  SELECT DISTINCT p_name AS name FROM part
-         |  WHERE p_partkey <= ${Cfg.fuzzyRecallKeys}),
-         |truth AS (
-         |  SELECT CASE WHEN string_split(a.name,' ')[-1] <> string_split(b.name,' ')[-1]
-         |              THEN 1 ELSE 0 END AS cb
-         |  FROM names a JOIN names b ON a.name < b.name
-         |  WHERE levenshtein(a.name, b.name) <= ${Cfg.fuzzyMaxDist}),
-         |blocked AS (
-         |  SELECT name, block FROM (
-         |    SELECT name, string_split(name, ' ')[-1] AS block,
-         |           count(*) OVER (PARTITION BY string_split(name, ' ')[-1]) AS bn
-         |    FROM names)
-         |  WHERE bn <= ${Cfg.fuzzyMaxBlock}),
-         |f AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS found_pairs
-         |  FROM blocked a JOIN blocked b ON a.block = b.block AND a.name < b.name
-         |  WHERE levenshtein(a.name, b.name) <= ${Cfg.fuzzyMaxDist}),
-         |t AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS true_pairs,
-         |         CAST(coalesce(sum(cb), 0) AS BIGINT) AS missed_cross_block
-         |  FROM truth)
-         |SELECT t.true_pairs, f.found_pairs,
-         |       CAST(t.true_pairs - f.found_pairs AS BIGINT) AS missed_pairs,
-         |       t.missed_cross_block,
-         |       CAST(CASE WHEN t.true_pairs = 0 THEN 100
-         |            ELSE f.found_pairs * 100 // t.true_pairs END AS BIGINT)
-         |         AS recall_pct_floor
-         |FROM t, f""".stripMargin,
-
-    "ta_repetition" ->
-      (s"WITH ${tokenCountCtes("documents")},\n$BigramCtes\n" +
-        s"""SELECT toka.doc_id,
-           |       $RepTopTokSql AS top_token_frac,
-           |       $RepTopBgSql AS top_bigram_frac,
-           |       $RepDupBgSql AS dup_bigram_frac,
-           |       $RepFlagSql AS repetitive
-           |FROM toka LEFT JOIN bga USING (doc_id)""".stripMargin),
-
-    "ta_tfidf" ->
-      (s"WITH ${tokenCountCtes("documents")},\n${tfidfScoreCtes("documents")}\n" +
-        """SELECT doc_id, w AS token, tfidf, CAST(rnk AS INT) AS rnk
-          |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, w ASC) AS rnk FROM tfsc)
-          |WHERE rnk <= 3""".stripMargin),
-
-    // Mirrors TextAnalysis.lmSurprisal: integer bit-length weights
-    // (length(bin(count))-1 — a string-length op, exact in both
-    // engines), one final IEEE division, 4-dp round.
-    "ta_lm_fluency" ->
-      s"""WITH $LmFluencyCtes
-         |SELECT doc_id, lang, n_tokens, nll_bits FROM fl""".stripMargin,
-
-    // Fluency scores (shared CTEs) → fixed head/middle/tail thresholds:
-    // exact double comparisons on the stable-rounded score, so no
-    // percentile-interpolation drift can enter the hash.
-    "ta_lm_buckets" ->
-      s"""WITH $LmFluencyCtes
-         |SELECT lang,
-         |       CASE WHEN nll_bits < ${Cfg.fluencyHead} THEN 'head'
-         |            WHEN nll_bits < ${Cfg.fluencyMid} THEN 'middle'
-         |            ELSE 'tail' END AS bucket,
-         |       CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-         |FROM fl GROUP BY 1, 2""".stripMargin,
-
-    // Mirrors TextAnalysis.dsirScores — integer bit-length importance
-    // weights over hashed unigram+bigram buckets, raw pool only.
-    "ta_dsir" ->
-      s"""WITH $DsirCtes
-         |SELECT doc_id, n_grams, dsir_bits FROM dsc""".stripMargin,
-
-    // The selection step: deterministic (dsir_bits DESC, doc_id ASC)
-    // rank, cut at Cfg.dsirKeep.
-    "ta_dsir_select" ->
-      s"""WITH $DsirCtes
-         |SELECT doc_id, dsir_bits, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT doc_id, dsir_bits,
-         |        row_number() OVER (ORDER BY dsir_bits DESC, doc_id ASC) AS rnk
-         |      FROM dsc)
-         |WHERE rnk <= ${Cfg.dsirKeep}""".stripMargin,
-
-    // Mirrors TextAnalysis.bm25TopK: same operation order per term, the
-    // k1/b-derived float constants interpolated from the SAME Scala
-    // doubles, integer micro-unit sum, (score DESC, doc ASC) rank.
-    "ta_bm25_topk" ->
-      s"""WITH $bm25CtesSql
-         |SELECT doc_id, bm25, rnk FROM bmr""".stripMargin,
-
-    // Reciprocal-rank fusion of the BM25 standing-query list with the
-    // dense cosine list for the standing query vector — Σ 1/(K+rank),
-    // absent list contributes 0, fused rank over the ≤ k₁+k₂ union.
-    "ta_rrf_fusion" ->
-      s"""WITH $bm25CtesSql,
-         |deb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-         |dq AS (SELECT v AS qv FROM deb WHERE id = ${Cfg.rrfDenseQueryId}),
-         |dsc AS (
-         |  SELECT c.id AS doc_id, round(${sqlCos("qv", "c.v")}, 6) AS cos
-         |  FROM dq, deb c WHERE c.id <> ${Cfg.rrfDenseQueryId}),
-         |dr AS (
-         |  SELECT doc_id, CAST(rnk AS INT) AS rnk
-         |  FROM (SELECT *, row_number() OVER (ORDER BY cos DESC, doc_id ASC) AS rnk FROM dsc)
-         |  WHERE rnk <= ${Cfg.rrfDenseK}),
-         |fj AS (
-         |  SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-         |         b.rnk AS bm25_rnk, d.rnk AS cos_rnk
-         |  FROM bmr b FULL OUTER JOIN dr d ON b.doc_id = d.doc_id),
-         |fs AS (
-         |  SELECT doc_id, bm25_rnk, cos_rnk,
-         |         ${Rounding.stableSql(
-               s"coalesce(1.0 / (bm25_rnk + ${Cfg.rrfK}), 0) + coalesce(1.0 / (cos_rnk + ${Cfg.rrfK}), 0)",
-               6)} AS rrf
-         |  FROM fj)
-         |SELECT doc_id, bm25_rnk, cos_rnk, rrf, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (ORDER BY rrf DESC, doc_id ASC) AS rnk FROM fs)
-         |WHERE rnk <= ${Cfg.rrfTopK}""".stripMargin,
-
-    "ta_bpe_merges" ->
-      graft.operators.TextAnalysis.bpeMergesSql("documents", "text",
-        rounds = Cfg.bpeMergeRounds),
-
-    "ta_bpe_encode" ->
-      graft.operators.TextAnalysis.bpeEncodeSql("documents", "doc_id", "text",
-        rounds = Cfg.bpeMergeRounds),
-
-    // Train on base only; encode base ∪ reversed-ingest through the
-    // frozen merges via the separate ev-chain (unseen words included).
-    "ta_bpe_drift" -> graft.operators.TextAnalysis.bpeDriftSql(
-      "SELECT text FROM documents WHERE text IS NOT NULL",
-      """SELECT CASE WHEN doc_id % 2 = 0 THEN reverse(text) ELSE text END AS text
-        |FROM documents WHERE text IS NOT NULL""".stripMargin,
-      rounds = Cfg.bpeMergeRounds),
-
-    // Mirrors TextAnalysis.bpePairs + the k-bounded count rank
-    // ((cnt DESC, pair ASC) — TopKByCount's ordering).
-    "ta_bpe_pairs" ->
-      s"""WITH t AS (
-         |  SELECT unnest(string_split(text, ' ')) AS tok
-         |  FROM documents WHERE text IS NOT NULL),
-         |p AS (
-         |  SELECT unnest(list_transform(range(1, length(tok)), i ->
-         |           substr(tok, CAST(i AS INT), 1) || ' ' ||
-         |           substr(tok, CAST(i + 1 AS INT), 1))) AS pair
-         |  FROM t),
-         |c AS (SELECT pair, CAST(count(*) AS BIGINT) AS cnt FROM p GROUP BY 1)
-         |SELECT pair, cnt, CAST(rnk AS INT) AS rnk
-         |FROM (SELECT *, row_number() OVER (ORDER BY cnt DESC, pair ASC) AS rnk FROM c)
-         |WHERE rnk <= ${Cfg.bpeTopK}""".stripMargin,
-
-    // Mirrors TextAnalysis.winnowStats over the shared winnow CTEs:
-    // order-free integer summary stats of the fingerprint sets.
-    "ta_winnow" ->
-      s"""WITH ${winnowCtes(withAt = false)}
-         |SELECT doc_id,
-         |       CAST(len(hs) AS INT) AS n_kgrams,
-         |       CAST(len(fps) AS INT) AS n_fps,
-         |       list_min(fps) AS fp_min,
-         |       list_max(fps) AS fp_max,
-         |       CAST(list_sum(fps) AS BIGINT) AS fp_sum
-         |FROM f""".stripMargin,
-
-    // Mirrors StreamingWinnow.winnowContaminationScan: a fingerprint's
-    // owner is its lexicographic-min [arrival, doc] pair (DuckDB list
-    // compare ≡ Spark's min-struct), every other occurrence is shared.
-    "st13_winnow_scan" ->
-      s"""WITH ${winnowCtes(withAt = true)},
-         |x AS (SELECT doc_id, at, unnest(fps) AS fp FROM f),
-         |o AS (SELECT fp, min([at, doc_id]) AS ofirst FROM x GROUP BY 1),
-         |r AS (
-         |  SELECT x.doc_id,
-         |         CAST(count(*) AS BIGINT) AS n_fps,
-         |         CAST(sum(CASE WHEN [x.at, x.doc_id] <> o.ofirst
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
-         |  FROM x JOIN o USING (fp) GROUP BY 1)
-         |SELECT doc_id, n_fps, n_shared, n_shared > 0 AS flagged FROM r""".stripMargin,
-
-    // Fixed-point centroids (see Similarity.labelCentroids): integer
-    // component sums are order-independent, so both engines build the
-    // SAME centroid doubles; cosines then use the sequential-fold dot.
-    "sim_centroids" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |comp AS (
-         |  SELECT label, unnest(range(1, len(v) + 1)) AS i,
-         |         CAST(round(unnest(v) * 1000000) AS BIGINT) AS q
-         |  FROM e),
-         |cent AS (SELECT label, i, sum(q) AS sq, CAST(count(*) AS BIGINT) AS n
-         |         FROM comp GROUP BY 1, 2),
-         |carr AS (SELECT label AS clabel, list(sq::DOUBLE / (n * 1000000.0) ORDER BY i) AS cv
-         |         FROM cent GROUP BY 1),
-         |scored AS (
-         |  SELECT e.vec_id, e.label, carr.clabel, ${sqlCos("e.v", "carr.cv")} AS cos
-         |  FROM e CROSS JOIN carr)
-         |SELECT p.vec_id, p.label, p.clabel AS pred_label, o.cos AS own_cos,
-         |       p.label = p.clabel AS correct
-         |FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, clabel ASC) AS rn
-         |      FROM scored) p
-         |JOIN scored o ON o.vec_id = p.vec_id AND o.clabel = o.label
-         |WHERE p.rn = 1""".stripMargin,
-
-    // Mirrors Similarity.kmeans with Cfg.kmeansIters (= 2) assignment
-    // passes unrolled: init = k lowest-id vectors, argmax on the 6-dp
-    // cosine with lower cid on ties, fixed-point integer centroid sums
-    // (the sim_centroids trick) between passes.
-    "sim_kmeans" ->
-      s"""WITH $KmeansCtes
-         |SELECT vec_id, CAST(cid AS INT) AS cluster_id, cos
-         |FROM a20 WHERE rn = 1""".stripMargin,
-
-    // Frozen c1 centroids; union assigned one pass (a20's row_number
-    // pattern over the union), one fixed-point update (the c1c/c1s/c1
-    // idiom), movement vs c1 via the proven l2sq ⇔ sqlD2 pairing.
-    "sim_centroid_refresh" ->
-      s"""WITH $KmeansCtes,
-         |tg AS (SELECT vec_id, v FROM e
-         |       UNION ALL
-         |       SELECT vec_id + 100000, list_concat([v[1] + ${Cfg.semanticDelta}], v[2:]) FROM e),
-         |ra0 AS (SELECT tg.vec_id, c1.cid, tg.v,
-         |               row_number() OVER (PARTITION BY tg.vec_id ORDER BY ${sqlCos("tg.v", "c1.cv")} DESC, c1.cid ASC) AS rn
-         |        FROM tg CROSS JOIN c1),
-         |ra AS (SELECT vec_id, cid, v FROM ra0 WHERE rn = 1),
-         |rc AS (SELECT cid, unnest(range(1, len(v) + 1)) AS i,
-         |              CAST(round(unnest(v) * 1000000) AS BIGINT) AS q
-         |       FROM ra),
-         |rs AS (SELECT cid, i, sum(q) AS sq, CAST(count(*) AS BIGINT) AS n
-         |       FROM rc GROUP BY 1, 2),
-         |rn2 AS (SELECT cid, list(sq::DOUBLE / (n * 1000000.0) ORDER BY i) AS cv
-         |        FROM rs GROUP BY 1),
-         |cnt AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_assigned FROM ra GROUP BY 1)
-         |SELECT rn2.cid AS cid, cnt.n_assigned,
-         |       ${Rounding.stableSql(sqlD2("rn2.cv", "c1.cv"), 6)} AS movement_sq
-         |FROM rn2 JOIN cnt USING (cid) JOIN c1 ON rn2.cid = c1.cid""".stripMargin,
-
-    // Frozen c1 centroids from the base Lloyd chain; base ∪ shifted
-    // ingest assigned against them; micro-unit means + drift delta.
-    "sim_centroid_drift" ->
-      s"""WITH $KmeansCtes,
-         |tg AS (SELECT 'base' AS corpus, vec_id, v FROM e
-         |       UNION ALL
-         |       SELECT 'ingest', vec_id, list_transform(v, x -> -x) FROM e),
-         |nn0 AS (SELECT tg.corpus, tg.vec_id, ${sqlCos("tg.v", "c1.cv")} AS cos
-         |        FROM tg CROSS JOIN c1),
-         |nn AS (SELECT corpus, vec_id, max(cos) AS nn_cos FROM nn0 GROUP BY 1, 2),
-         |per AS (SELECT corpus, CAST(count(*) AS BIGINT) AS n_vecs,
-         |               ${Rounding.stableSql(
-               "CAST(sum(CAST(round(nn_cos * 1000000) AS BIGINT)) AS DOUBLE)" +
-                 " / (count(*) * 1000000.0)", 6)} AS mean_cos
-         |        FROM nn GROUP BY 1)
-         |SELECT corpus, n_vecs, mean_cos,
-         |       ${Rounding.stableSql(
-               "mean_cos - (SELECT mean_cos FROM per WHERE corpus = 'base')", 6)} AS cos_drift
-         |FROM per""".stripMargin,
-
-    // Quantized-integer cosine sums (order-free) + one final division —
-    // see the Spark-side comment on sim_kmeans_quality.
-    "sim_kmeans_quality" ->
-      s"""WITH $KmeansCtes,
-         |asg AS (SELECT vec_id, cid, cos FROM a20 WHERE rn = 1)
-         |SELECT CAST(cid AS INT) AS cluster_id, CAST(count(*) AS BIGINT) AS n,
-         |       ${Rounding.stableSql(
-               "CAST(sum(CAST(round(cos * 1000000) AS BIGINT)) AS DOUBLE)" +
-                 " / (count(*) * 1000000.0)", 6)} AS mean_cos,
-         |       min(cos) AS min_cos
-         |FROM asg GROUP BY 1""".stripMargin,
-
-    // K-means assignment (shared CTEs above) → per-cluster inverse-size
-    // keep rates (min(100, 100·target div n)) over the stable md5 hash
-    // — dominant semantic clusters downsampled toward `target` rows,
-    // tail clusters kept whole. Integer div both sides; counts only in
-    // the output, so nothing order-dependent is hashed.
-    "sim_diversity_sample" ->
-      s"""WITH $KmeansCtes,
-         |asg AS (SELECT vec_id, cid FROM a20 WHERE rn = 1),
-         |sz AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_total FROM asg GROUP BY 1),
-         |kept AS (
-         |  SELECT asg.cid FROM asg JOIN sz USING (cid)
-         |  WHERE ${graft.operators.Sampling.keepAtSql("asg.vec_id",
-             s"CAST(LEAST(100, (100 * ${Cfg.diversityTarget}) // sz.n_total) AS BIGINT)")}),
-         |kc AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_kept FROM kept GROUP BY 1)
-         |SELECT CAST(sz.cid AS INT) AS cluster_id, sz.n_total,
-         |       COALESCE(kc.n_kept, 0) AS n_kept
-         |FROM sz LEFT JOIN kc USING (cid)""".stripMargin,
-
-    "e5_quality_gate" ->
-      (s"""WITH t AS (
-         |${qualityCteSql("documents")}),
-         |q AS (SELECT doc_id, $QualitySql AS quality FROM t
-         |      WHERE $QualitySql >= ${Cfg.qualityMin}),
-         |""".stripMargin +
-        s"${tokenCountCtes("documents")},\n$BigramCtes,\n" +
-        s"""rep AS (
-           |  SELECT toka.doc_id FROM toka LEFT JOIN bga USING (doc_id)
-           |  WHERE NOT $RepFlagSql),
-           |""".stripMargin +
-        s"${tfidfScoreCtes("documents")},\n" +
-        """kw AS (
-          |  SELECT doc_id, w AS keyword, tfidf AS keyword_tfidf
-          |  FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, w ASC) AS rnk FROM tfsc)
-          |  WHERE rnk = 1)
-          |SELECT q.doc_id, d.lang, q.quality, kw.keyword, kw.keyword_tfidf
-          |FROM q JOIN rep USING (doc_id) JOIN kw USING (doc_id)
-          |JOIN documents d ON d.doc_id = q.doc_id""".stripMargin),
-
-    // E6 pretraining-corpus flagship: the SQL spec chains the SAME
-    // shared CTE builders the per-stage oracles use — paragraph dedup
-    // (paragraphCtesSql), PII inject+scrub (piiInjectSql + the ta_pii
-    // chain), the classifier gate (clfCtesSql over the scrubbed text),
-    // lang metadata, then packShardsSql's one-window layout spec.
-    "e6_pretrain_corpus" -> {
-      val Seq((_, emailPat, _), (_, phonePat, _), (_, ipPat, _)) =
-        TextAnalysis.PiiPatterns
-      s"""WITH $RecrawlCte,
-         |$paragraphCtesSql,
-         |pk AS (SELECT * FROM pd WHERE n_kept > 0),
-         |inj AS (SELECT doc_id, n_paras, n_kept, ${piiInjectSql("clean_text")} AS t FROM pk),
-         |r1 AS (SELECT *, regexp_replace(t, '$emailPat', '<EMAIL>', 'g') AS t1 FROM inj),
-         |r2 AS (SELECT *, regexp_replace(t1, '$phonePat', '<PHONE>', 'g') AS t2 FROM r1),
-         |scr AS (
-         |  SELECT doc_id, n_paras, n_kept,
-         |         CAST(len(regexp_extract_all(t,  '$emailPat')) AS INT) AS n_email,
-         |         CAST(len(regexp_extract_all(t1, '$phonePat')) AS INT) AS n_phone,
-         |         CAST(len(regexp_extract_all(t2, '$ipPat')) AS INT) AS n_ipv4,
-         |         regexp_replace(t2, '$ipPat', '<IPV4>', 'g') AS clean_text
-         |  FROM r2),
-         |${clfCtesSql("scr", "clean_text",
-             "n_paras, n_kept, n_email, n_phone, n_ipv4, clean_text")},
-         |gate AS (SELECT * FROM tcl WHERE clf_score >= ${Cfg.clfThreshold}),
-         |met AS (SELECT g.*, d.lang FROM gate g JOIN documents d USING (doc_id))
-         |""".stripMargin +
-        graft.operators.Packing.packShardsSql("met", "lang", "doc_id",
-          "n_tokens", budget = Cfg.e6ShardBudget,
-          selectCols = "doc_id, lang, n_paras, n_kept, n_email, n_phone, n_ipv4, n_tokens, clf_score, clean_text")
-    },
-
-    "mm_frames" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS mx FROM documents),
-        |hv AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, 33), i ->
-        |           CASE WHEN ascii(substr(mx, i, 1)) >= 97
-        |                THEN ascii(substr(mx, i, 1)) - 87
-        |                ELSE ascii(substr(mx, i, 1)) - 48 END) AS nib
-        |  FROM m),
-        |nf AS (SELECT doc_id, nib, 1 + ((nib[1] * 16 + nib[2]) % 4) AS n_frames FROM hv),
-        |f AS (SELECT doc_id, nib, unnest(range(0, n_frames)) AS fid FROM nf),
-        |s AS (
-        |  SELECT doc_id, CAST(fid AS INT) AS frame_id,
-        |         CAST(list_sum(list_transform(range(4 * fid + 1, 4 * fid + 5),
-        |              k -> nib[2*k-1] * 16 + nib[2*k])) AS BIGINT) AS frame_sum
-        |  FROM f)
-        |SELECT doc_id, frame_id, frame_sum,
-        |       row_number() OVER (PARTITION BY doc_id ORDER BY frame_sum DESC, frame_id ASC) = 1 AS is_key
-        |FROM s""".stripMargin,
-
-    // Frame dedup: the payload bytes are md5-per-block by construction,
-    // so the oracle never touches binary — frame_sig ≡ the first 14 hex
-    // chars of the block md5, canonical election ≡ row_number over
-    // (doc_id, frame_id), the min-struct's lexicographic order.
-    "mm_frame_dedup" -> {
-      val frac = Rounding.stableSql("n_dup::DOUBLE / n_frames", 4)
-      s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-         |$FrameSigCte,
-         |vr AS (SELECT *, row_number() OVER (PARTITION BY frame_sig
-         |                                    ORDER BY doc_id, frame_id) AS rn
-         |       FROM vs),
-         |vd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_frames,
-         |              CAST(count(CASE WHEN rn > 1 THEN 1 END) AS BIGINT) AS n_dup
-         |       FROM vr GROUP BY doc_id)
-         |SELECT doc_id, n_frames, n_dup, $frac AS dup_frac,
-         |       $frac < ${Cfg.mmDupFrameMax} AS keep
-         |FROM vd""".stripMargin
-    },
-
-    // Audio segmentation: the payload windows are md5-per-block by
-    // construction, so window energy ≡ the unsigned-byte sum of the
-    // block md5 (decoded nibble-pairwise: odd hex chars weigh 16);
-    // the islands fold with the running flag-change count (null-safe
-    // lag inequality + running sum), which doubles as the segment id.
-    "mm_audio_segments" -> audioSegmentsSql,
-
-    // The streaming per-row fold computes the identical segment set a
-    // second way (single-pass flatMap inside the row) — same oracle,
-    // the st16 bloom discipline.
-    "st18_audio_scan" -> audioSegmentsSql,
-
-    // Video near-dup pairs: the df-capped inverted-index pair pipeline
-    // re-derived relationally over the block-md5 frame signatures.
-    "mm_video_neardup" -> {
-      val contain = Rounding.stableSql(
-        "shared_frames::DOUBLE / least(nf_a, nf_b)", 4)
-      s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-         |$FrameSigCte,
-         |${frameSigPostCtes(Cfg.videoSigDfCap)},
-         |sh AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |              CAST(count(*) AS BIGINT) AS shared_frames
-         |       FROM post a JOIN post b USING (frame_sig)
-         |       WHERE a.doc_id < b.doc_id
-         |       GROUP BY 1, 2
-         |       HAVING count(*) >= ${Cfg.videoMinShared}),
-         |j AS (SELECT doc_a, doc_b, shared_frames,
-         |             na.nf AS nf_a, nb.nf AS nf_b
-         |      FROM sh JOIN nf na ON na.doc_id = sh.doc_a
-         |              JOIN nf nb ON nb.doc_id = sh.doc_b)
-         |SELECT doc_a, doc_b, shared_frames, nf_a, nf_b,
-         |       $contain AS containment,
-         |       $contain >= ${Cfg.videoContainMin} AS is_neardup
-         |FROM j""".stripMargin
-    },
-
-    // Hamming-tolerant frame near-dup: perturbed re-upload sigs are the
-    // source sigs with hex char 2 nibble-XOR-1 translated (the payload
-    // low-bit flip lands entirely in that nibble); banding, bucket cap,
-    // candidate join and packed-code XOR popcount mirror the plan. The
-    // signature code is rebuilt on the INTEGER path (nibble << shift,
-    // summed as BIGINT — a double intermediate would lose bits past
-    // 2^53).
-    "mm_frame_neardup" -> frameNearDupSql,
-
-    // Audio near-dup pairs: the delta-shingle fingerprint CTE feeding
-    // the same df-capped pair pipeline as mm_video_neardup.
-    "mm_audio_neardup" -> audioNearDupSql,
-
-    // Streaming video screen: arrival clips/novels rebuilt literally
-    // (token-slice and synthetic-string construction mirror the plan),
-    // joined against the inline df-capped postings (indexed ≡ inline,
-    // spec-pinned).
-    "st19_video_scan" -> {
-      val b = Cfg.paraBlockTokens
-      s"""WITH ${frameBlockCtes(b)},
-         |$FrameSigCte,
-         |${frameSigPostCtes(Cfg.videoSigDfCap)},
-         |arrc AS (SELECT doc_id + 2000000 AS new_id, tv[1 : ${2 * b}] AS tv2
-         |         FROM vt WHERE doc_id % 10 = 0),
-         |arrn AS (SELECT doc_id + 3000000 AS new_id,
-         |                string_split('novel upload ' || doc_id, ' ') AS tv2
-         |         FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 5),
-         |arr AS (SELECT * FROM arrc UNION ALL SELECT * FROM arrn),
-         |ae AS (SELECT new_id, tv2,
-         |              UNNEST(generate_series(0, (len(tv2) - 1) // $b)) AS fid
-         |       FROM arr),
-         |asig AS (SELECT new_id, CAST(fid AS INT) AS frame_id,
-         |                substr(md5(array_to_string(tv2[fid*$b+1 : fid*$b+$b], ' ')), 1, 14) AS frame_sig
-         |         FROM ae)
-         |SELECT new_id, frame_id, post.doc_id AS base_id, frame_sig
-         |FROM asig JOIN post USING (frame_sig)""".stripMargin
-    },
-
-    // Video dup clusters: the near-dup pair CTEs + the same recursive
-    // reachability walk as dedup_clusters (min over reachable labels =
-    // the label-propagation fixpoint).
-    "mm_video_clusters" -> {
-      s"""WITH RECURSIVE ${frameBlockCtes(Cfg.paraBlockTokens)},
-         |$FrameSigCte,
-         |${frameSigPostCtes(Cfg.videoSigDfCap)},
-         |$videoVerifiedPairCtes,
-         |nodes AS (SELECT doc_id FROM vt),
-         |edges AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM verified
-         |  UNION ALL SELECT doc_b, doc_a FROM verified),
-         |walk(node, lab) AS (
-         |  SELECT doc_id, doc_id FROM nodes
-         |  UNION
-         |  SELECT e.b, w.lab FROM walk w JOIN edges e ON e.a = w.node)
-         |SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS cluster_id
-         |FROM walk GROUP BY node""".stripMargin
-    },
-
-    // Video-plane split leakage: the verified pair CTEs + the same
-    // unordered-split-pair rollup as ta_split_leakage.
-    "mm_split_leakage" -> {
-      val sa = graft.operators.Sampling.splitSql("doc_a",
-        Cfg.splitTrainPct, Cfg.splitValPct)
-      val sb = graft.operators.Sampling.splitSql("doc_b",
-        Cfg.splitTrainPct, Cfg.splitValPct)
-      s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-         |$FrameSigCte,
-         |${frameSigPostCtes(Cfg.videoSigDfCap)},
-         |$videoVerifiedPairCtes,
-         |sp AS (
-         |  SELECT least(($sa), ($sb)) AS split_lo,
-         |         greatest(($sa), ($sb)) AS split_hi
-         |  FROM verified)
-         |SELECT split_lo, split_hi, CAST(count(*) AS BIGINT) AS n_pairs,
-         |       split_lo <> split_hi AS leaks
-         |FROM sp GROUP BY 1, 2""".stripMargin
-    },
-
-    // Modality-mix profile: per-format aggregates over the three
-    // signals, all averages on the INTEGER path (byte sums; 4-dp
-    // micro-units) so both engines sum longs and divide once.
-    "mm_profile" -> {
-      val dupFrac = Rounding.stableSql("n_dup::DOUBLE / n_frames", 4)
-      val speechFrac = Rounding.stableSql(
-        s"count(CASE WHEN energy >= ${Cfg.audioEnergyThreshold} THEN 1 END)::DOUBLE / count(*)", 4)
-      val avgBright = Rounding.stableSql(
-        "sum(bsum)::DOUBLE / (count(*) * 16)", 4)
-      val avgDup = Rounding.stableSql(
-        "sum(CAST(round(dup_frac * 10000) AS BIGINT))::DOUBLE / (count(*) * 10000)", 4)
-      val avgSpeech = Rounding.stableSql(
-        "sum(CAST(round(speech_frac * 10000) AS BIGINT))::DOUBLE / (count(*) * 10000)", 4)
-      s"""WITH ${frameBlockCtes(Cfg.paraBlockTokens)},
-         |$FrameSigCte,
-         |vr AS (SELECT *, row_number() OVER (PARTITION BY frame_sig
-         |                                    ORDER BY doc_id, frame_id) AS rn
-         |       FROM vs),
-         |vd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_frames,
-         |              CAST(count(CASE WHEN rn > 1 THEN 1 END) AS BIGINT) AS n_dup
-         |       FROM vr GROUP BY doc_id),
-         |vf AS (SELECT doc_id, n_frames, $dupFrac AS dup_frac FROM vd),
-         |ae AS (SELECT doc_id, CAST($NibbleSumSql AS BIGINT) AS energy FROM vm),
-         |af AS (SELECT doc_id, $speechFrac AS speech_frac
-         |       FROM ae GROUP BY doc_id),
-         |br AS (SELECT doc_id, CAST($NibbleSumSql AS BIGINT) AS bsum
-         |       FROM (SELECT doc_id, md5(text) AS mx
-         |             FROM documents WHERE text IS NOT NULL)),
-         |j AS (SELECT br.doc_id,
-         |             -- ((x%3)+3)%3 ≡ Spark's pmod (ADVICE r19): DuckDB's
-         |             -- % is sign-preserving, so a negative doc_id would
-         |             -- otherwise map to a different format key
-         |             CASE WHEN ((br.doc_id % 3) + 3) % 3 = 0 THEN 'png'
-         |                  WHEN ((br.doc_id % 3) + 3) % 3 = 1 THEN 'jpeg'
-         |                  ELSE 'webp' END AS format,
-         |             br.bsum, vf.n_frames, vf.dup_frac, af.speech_frac
-         |      FROM br JOIN vf USING (doc_id) JOIN af USING (doc_id))
-         |SELECT format, CAST(count(*) AS BIGINT) AS n_docs,
-         |       $avgBright AS avg_brightness,
-         |       CAST(sum(n_frames) AS BIGINT) AS total_frames,
-         |       $avgDup AS avg_dup_frac,
-         |       $avgSpeech AS avg_speech_frac
-         |FROM j GROUP BY format""".stripMargin
-    },
-
-    "ta_grouping_sets" ->
-      """SELECT lang, source, CAST(GROUPING(lang, source) AS INT) AS gid,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM documents
-        |GROUP BY GROUPING SETS ((lang), (source), (lang, source))""".stripMargin
-  )
+  val registry: Seq[QueryDef] =
+    PipelineQueries.defs ++ StQueries.defs ++ DedupQueries.defs ++
+      SimQueries.defs ++ TaQueries.defs ++ CurationQueries.defs ++
+      MmQueries.defs ++ RelationalQueries.defs
+
+  require(registry.map(_.name).distinct.size == registry.size,
+    "duplicate query names: " + registry.groupBy(_.name)
+      .collect { case (n, ds) if ds.size > 1 => n }.toSeq.sorted.mkString(", "))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.plan).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -20,6 +20,12 @@ class PctChangeSpec extends SparkSpec {
     val o = SparkEntry.oracleSql.keySet
     assert(q == o, s"queries without oracle: ${(q -- o).toSeq.sorted.mkString(", ")}; " +
       s"oracles without query: ${(o -- q).toSeq.sorted.mkString(", ")}")
+    // A repeated name in the registry would silently drop one definition
+    // from both maps; every registered name must be distinct.
+    val names = SparkEntry.registry.map(_.name)
+    val repeated = names.diff(names.distinct).distinct.sorted
+    assert(repeated.isEmpty, s"repeated query names: ${repeated.mkString(", ")}")
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
   }
 
   test("T3: first row per key has null pct_change; later rows match the algebra") {
@@ -656,7 +662,7 @@ class HeadlineSelectionSpec extends SparkSpec {
       val inWindow = rows.toDF("user_id", "event_id", "event_type", "ts")
       def norm(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      val got = norm(SparkEntry.selectHeadlines(inWindow))
+      val got = norm(queries.PipelineQueries.selectHeadlines(inWindow))
       assert(got == norm(selectHeadlinesUnion(inWindow)), s"seed $seed")
       assert(got.filter(r => (95 to 99).map(_ + "|").exists(r.startsWith)) == Seq(
         "95|google|1005|2024-01-12 00:01:00",
