@@ -74,9 +74,9 @@ object Bench {
     // untimed, exactly like q1 warms the scan/agg paths.
     try {
       import org.apache.spark.sql.functions.col
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        .localCheckpoint(eager = true)
+      val emb = graft.operators.Stage.share(
+        spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64)
+          .select(col("vec_id").as("id"), col("embedding").as("vec")))
       graft.operators.Similarity.topKBrute(emb.limit(4), emb, 3)
         .write.format("noop").mode("overwrite").save()
       val (cents, cw) = graft.operators.Similarity.trainIvfPqConcurrently(
@@ -133,8 +133,9 @@ object Bench {
         out.toSeq
       }
     // Cross-query state cleanup, run OUTSIDE the timed window: queries that
-    // localCheckpoint (e4_curation_full, dedup_clusters, ...) leave their
-    // blocks in the block manager after the noop write completes; ~95
+    // stage frames (graft.operators.Stage: e4_curation_full,
+    // dedup_clusters, ...) leave their blocks in the block manager after
+    // the noop write completes; ~95
     // queries in, the accumulated residents turn into GC pressure and
     // eviction churn that lands on whoever runs next (the r13 sidecar's
     // 27x ta_token_setops). Blocking unpersist also serializes straggler

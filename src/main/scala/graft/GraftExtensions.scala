@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expressions.{CosineSim, DotProduct, NfcNormalize, RelevantTitle, SortedIntersectCount, SquaredL2}
+import graft.expressions.{CosineSim, DotProduct, KarpRabinHashes, NfcNormalize, RelevantTitle,
+  SortedIntersectCount, SquaredL2, WindowMinima}
+import graft.operators.TextAnalysis
 
 /** Session extensions registering graft's native Catalyst expressions
   * (SURVEY.md §7.3 — custom `Expression`s as the perf upgrade path).
@@ -14,79 +16,41 @@ import graft.expressions.{CosineSim, DotProduct, NfcNormalize, RelevantTitle, So
   * registry (SQL `relevant_title(...)` or `call_function`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  /** One row per native function: (signature, arity, expression class,
+    * constructor). The registered name is the signature up to its `(`; the
+    * signature also heads the arity error.
+    */
+  private val functions: Seq[(String, Int, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("relevant_title(title, long_name, ticker)", 3, classOf[RelevantTitle],
+      a => RelevantTitle(a(0), a(1), a(2))),
+    ("sorted_intersect_count(a, b)", 2, classOf[SortedIntersectCount],
+      a => SortedIntersectCount(a(0), a(1))),
+    ("dot_product(a, b)", 2, classOf[DotProduct], a => DotProduct(a(0), a(1))),
+    ("cosine_sim(a, b)", 2, classOf[CosineSim], a => CosineSim(a(0), a(1))),
+    ("squared_l2(a, b)", 2, classOf[SquaredL2], a => SquaredL2(a(0), a(1))),
+    ("nfc_normalize(s)", 1, classOf[NfcNormalize], a => NfcNormalize(a(0))),
+    ("karp_rabin_hashes(text, k)", 2, classOf[KarpRabinHashes],
+      a => KarpRabinHashes(a(0), literalInt(a(1), "karp_rabin_hashes: k"),
+        TextAnalysis.WinnowBase, TextAnalysis.WinnowMod)),
+    ("window_minima(hashes, w)", 2, classOf[WindowMinima],
+      a => WindowMinima(a(0), literalInt(a(1), "window_minima: w"))))
+
+  private def literalInt(e: Expression, what: String): Int = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval().asInstanceOf[Number].intValue()
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("relevant_title"),
-      new ExpressionInfo(classOf[RelevantTitle].getName, "relevant_title"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"relevant_title(title, long_name, ticker) takes 3 arguments, got ${args.length}")
-        RelevantTitle(args(0), args(1), args(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"sorted_intersect_count(a, b) takes 2 arguments, got ${args.length}")
-        SortedIntersectCount(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"dot_product(a, b) takes 2 arguments, got ${args.length}")
-        DotProduct(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"cosine_sim(a, b) takes 2 arguments, got ${args.length}")
-        CosineSim(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("squared_l2"),
-      new ExpressionInfo(classOf[SquaredL2].getName, "squared_l2"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"squared_l2(a, b) takes 2 arguments, got ${args.length}")
-        SquaredL2(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          s"nfc_normalize(s) takes 1 argument, got ${args.length}")
-        NfcNormalize(args(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("karp_rabin_hashes"),
-      new ExpressionInfo(classOf[graft.expressions.KarpRabinHashes].getName,
-        "karp_rabin_hashes"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"karp_rabin_hashes(text, k) takes 2 arguments, got ${args.length}")
-        require(args(1).foldable, "karp_rabin_hashes: k must be a literal")
-        graft.expressions.KarpRabinHashes(args(0),
-          args(1).eval().asInstanceOf[Number].intValue(),
-          graft.operators.TextAnalysis.WinnowBase,
-          graft.operators.TextAnalysis.WinnowMod)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("window_minima"),
-      new ExpressionInfo(classOf[graft.expressions.WindowMinima].getName,
-        "window_minima"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"window_minima(hashes, w) takes 2 arguments, got ${args.length}")
-        require(args(1).foldable, "window_minima: w must be a literal")
-        graft.expressions.WindowMinima(args(0),
-          args(1).eval().asInstanceOf[Number].intValue())
-      }))
+    for ((sig, arity, cls, build) <- functions) {
+      val name = sig.takeWhile(_ != '(')
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          require(args.length == arity,
+            s"$sig takes $arity argument${if (arity == 1) "" else "s"}, got ${args.length}")
+          build(args)
+        }))
+    }
     // Whole-operator extension (SURVEY.md §7.3 option c): the native
     // as-of join's planner strategy + the optimizer rule restoring
     // predicate pushdown through the custom logical node.

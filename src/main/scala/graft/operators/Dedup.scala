@@ -155,7 +155,7 @@ object Dedup {
 
   /** The (id, sh) shingle-set frame every minhash consumer starts from
     * — staged explicitly so a plan with several consumers (banding +
-    * verify joins + a shingles sink) can lazily checkpoint ONE
+    * verify joins + a shingles sink) can stage ([[Stage.share]]) ONE
     * tokenize+md5 pass and derive everything else from it.
     */
   def shingleFrame(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -187,7 +187,7 @@ object Dedup {
   /** Band keys derived from an already-computed [[signatures]] frame —
     * the narrow posexplode half of [[bandedKeys]]. Lets a plan that also
     * needs the raw signatures (e.g. the estimate-quality query) compute
-    * them ONCE, checkpoint, and feed both consumers instead of
+    * them ONCE, stage, and feed both consumers instead of
     * re-running the tokenize+md5+agg pipeline per use.
     */
   def bandedKeysFromSignatures(sig: DataFrame,
@@ -241,12 +241,12 @@ object Dedup {
     * with `a.id < b.id` → distinct pairs → true Jaccard on the shingle
     * sets → keep >= `threshold`.
     *
-    * @param sigs optionally, a precomputed (ideally checkpointed)
+    * @param sigs optionally, a precomputed (ideally staged)
     *             [[signatures]] frame with `numBands`×`rowsPerBand`
     *             minima — banding derives from it instead of re-running
     *             the tokenize+md5+agg pipeline (Spark recomputes a
     *             shared unpersisted subtree once per consumer).
-    * @param sh   optionally, a precomputed (ideally lazily-checkpointed)
+    * @param sh   optionally, a precomputed (ideally staged)
     *             [[shingleFrame]] — the verify joins read it instead of
     *             re-tokenizing the corpus per side, and (absent `sigs`)
     *             banding derives from it too
@@ -290,7 +290,7 @@ object Dedup {
     // AQE coalesces the dedup'd pairs to 1-2 partitions and the
     // intersects serialize (JobProfile r22: a 2-task ~1.9 s-CPU stage
     // in e4) — fan them out like the shingle kernel. `fanGauge` lets a
-    // caller whose `docs` is an already-spread checkpoint (e4's
+    // caller whose `docs` is an already-spread stage (e4's
     // canonical frame) gauge on the true input scan; identity at scale
     // either way (see Fan).
     val pairs = Fan.outLike(
@@ -302,7 +302,7 @@ object Dedup {
         .dropDuplicates("doc_a", "doc_b"),
       fanGauge.getOrElse(docs))
     // Verify joins read the shingle frame per side (the caller-provided
-    // checkpointed one, or two narrow re-derivations) rather than
+    // staged one, or two narrow re-derivations) rather than
     // semi-join-pruning on a broadcast candidate-id set: deriving the id
     // set from `pairs` would force the whole banding subtree to compute
     // a second time for the broadcast (benchmarked 2× slower) — Spark
@@ -357,7 +357,7 @@ object Dedup {
     * exceeds `dfCap` — the same quadratic guard as the LSH hot-bucket cap,
     * implemented as the same window count that rides the join's own
     * hash-partitioning on `g` (no extra exchange; plan-asserted). The
-    * verify stage re-joins the checkpointed shingle frame per side and
+    * verify stage re-joins the staged shingle frame per side and
     * intersects SORTED arrays (candidate volume here is posting-join
     * sized, where the native merge pays — see
     * [[sortedShingleValuesFromTokens]]).
@@ -376,20 +376,19 @@ object Dedup {
       fanGauge: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // fan gauge for the spread points below: callers whose `docs` is an
-    // already-spread checkpoint (e4) pass the true input scan instead
+    // already-spread stage (e4) pass the true input scan instead
     val gauge = fanGauge.getOrElse(docs)
     // one tokenize+md5+sort pass, read by the posting explode and both
     // verify sides; fanned out first — the per-token md5 + per-doc sort
     // is the operator's dominant CPU stage (identity at scale, see Fan).
-    // `sh`: optionally an already-materialized SORTED shingle frame
+    // `sh`: optionally an already-staged SORTED shingle frame
     // (id, sh) — spares this operator its own tokenize+md5+sort pass
-    // and its own checkpoint when the caller (e4) shares one sorted
+    // and its own stage when the caller (e4) shares one sorted
     // shingle frame across the minhash and containment planes (r22,
     // guide §2.3 "don't compute things twice").
-    val d = sh.getOrElse(Fan.out(docs)
+    val d = sh.getOrElse(Stage.share(Fan.out(docs)
       .select(col(idCol).as("id"), tokenValues(col(textCol)).as("tv"))
-      .select(col("id"), sortedShingleValuesFromTokens(col("tv")).as("sh"))
-      .localCheckpoint(eager = false))
+      .select(col("id"), sortedShingleValuesFromTokens(col("tv")).as("sh"))))
     // the posting rows are byte-light (two longs) but everything above
     // the g-exchange — the df-cap window's sort+count AND the posting
     // self-join's map side — is CPU-dense, so AQE folds the exchange
@@ -441,12 +440,12 @@ object Dedup {
     * aggregate on the edge list. The loop runs ONLY over nodes that
     * appear in an edge: on a real corpus the dup-involved fraction is
     * tiny, so iterating the full node table would shuffle and
-    * checkpoint ~|corpus| rows per round for nodes whose label can
+    * stage ~|corpus| rows per round for nodes whose label can
     * never change — singletons are attached once at the end with a
     * single anti-join, whose probe side never re-enters the loop.
-    * `localCheckpoint` truncates lineage each round (iterative joins
-    * otherwise stack plans exponentially) and pre-materializes the edge
-    * list so the upstream pair generation runs once, not once per
+    * Each round's labels are truncated (iterative joins otherwise stack
+    * plans exponentially) and the edge list is shared ([[Stage]]), so
+    * the upstream pair generation runs once, not once per
     * iteration. Driver-side is only the loop control and a
     * converged-count — never row data.
     *
@@ -459,11 +458,8 @@ object Dedup {
     val edges = bothDirections(pairs)
     // both directions are in `edges`, so distinct `a` covers every
     // edge-touching node
-    // lazy: materializes inside round 1's convergence count rather than
-    // as a separate up-front job (the loop body reads it repeatedly
-    // after that first action either way)
-    val init = edges.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).localCheckpoint(eager = false)
+    val init = Stage.share(edges.select(col("a").as("id")).distinct()
+      .select(col("id"), col("id").as("label")))
     val labels = propagateMin(init, edges, maxIter)
     // singletons (no edges) keep their own id; left_anti against the
     // small converged label set — one pass over `nodes`, outside the loop
@@ -474,28 +470,24 @@ object Dedup {
   }
 
   private def bothDirections(pairs: DataFrame): DataFrame = {
-    // Checkpoint the DIRECTED pairs before symmetrizing: a union of two
-    // projections of an unmaterialized `pairs` computes the entire
+    // Stage the DIRECTED pairs before symmetrizing: a union of two
+    // projections of an unstaged `pairs` computes the entire
     // pair-generation subtree once PER DIRECTION inside the edge
-    // checkpoint's first materialization (for e4_curation_full that is
-    // the minhash band join AND the containment posting join, twice
-    // each — measured ~2 s of its solo time). With the directed frame
-    // cached, symmetrizing is two scans of narrow cached rows.
-    val p = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint(eager = false)
-    p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
-      // NOT pre-partitioned on the join key: the label table is tiny
-      // relative to the corpus, so the per-round join broadcasts (or
-      // shuffles only labels) — an up-front repartition of the edge list
-      // measured strictly slower at sf0.1. Lazy: the first action
-      // (init's distinct or round 1) materializes it; every later round
-      // reads the checkpoint.
-      .localCheckpoint(eager = false)
+    // stage (for e4_curation_full that is the minhash band join AND the
+    // containment posting join, twice each — measured ~2 s of its solo
+    // time). With the directed frame staged, symmetrizing is two scans
+    // of narrow staged rows.
+    val p = Stage.share(pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
+    // NOT pre-partitioned on the join key: the label table is tiny
+    // relative to the corpus, so the per-round join broadcasts (or
+    // shuffles only labels) — an up-front repartition of the edge list
+    // measured strictly slower at sf0.1. Every round reads the stage.
+    Stage.share(p.unionByName(p.select(col("b").as("a"), col("a").as("b"))))
   }
 
   /** Min-label fixpoint over `edges` starting from `init` (id, label):
     * every node repeatedly takes the min of its own and its neighbors'
-    * labels; converged when nothing changes. `localCheckpoint` truncates
+    * labels; converged when nothing changes. [[Stage.truncate]] cuts
     * lineage per round; driver-side is only loop control and a
     * converged-count. Throws rather than returning a truncated (silently
     * wrong) labeling.
@@ -519,7 +511,7 @@ object Dedup {
       // TWO propagation steps per materialized round: the per-round
       // cost here is Spark action overhead, not data (the label table
       // is edge-touching nodes only), so covering a 2-hop neighborhood
-      // per checkpoint+count halves the rounds a given component
+      // per truncate+count halves the rounds a given component
       // diameter needs. Monotone min-propagation makes step batching
       // safe — labels only decrease toward the unique fixpoint.
       // Convergence compares the round's SECOND step against its FIRST
@@ -529,13 +521,12 @@ object Dedup {
       // converges in ONE materialized round instead of paying a
       // whole extra confirm round. The price is evaluating mid's
       // subtree twice inside the round's single job (label-table-sized
-      // join+agg; far cheaper than another checkpoint+count round).
+      // join+agg; far cheaper than another truncate+count round).
       // The carried __old keeps the convergence check a scan-only
-      // count on the LAZY checkpoint — one action per round.
+      // count on the truncated frame — one action per round.
       val mid = step(labels)
-      val next = step(mid)
-        .join(mid.select(col("id"), col("label").as("__old")), Seq("id"))
-        .localCheckpoint(eager = false)
+      val next = Stage.truncate(step(mid)
+        .join(mid.select(col("id"), col("label").as("__old")), Seq("id")))
       changed = next.filter(col("label") =!= col("__old")).count()
       labels = next.drop("__old")
       iter += 1
@@ -579,11 +570,10 @@ object Dedup {
       .join(baseLabels.select(col("id").as("base_id"), col("label").as("bl")),
         Seq("base_id"))
       .groupBy(col("new_id").as("id")).agg(min("bl").as("bmin"))
-    val init = batch.select(col("id"))
+    val init = Stage.share(batch.select(col("id"))
       .join(bmin, Seq("id"), "left")
       .select(col("id"),
-        least(col("id"), coalesce(col("bmin"), col("id"))).as("label"))
-      .localCheckpoint()
+        least(col("id"), coalesce(col("bmin"), col("id"))).as("label")))
     propagateMin(init, bothDirections(innerPairs), maxIter)
   }
 
@@ -603,8 +593,8 @@ object Dedup {
     * batch jointly, and a per-side inline cap could not be mirrored
     * exactly in that joint form.
     *
-    * @param newSh  optionally, a precomputed (ideally lazily-
-    *               checkpointed) [[shingleFrame]] of `newDocs` — banding
+    * @param newSh  optionally, a precomputed (ideally staged,
+    *               [[Stage.share]]) [[shingleFrame]] of `newDocs` — banding
     *               and the verify join both derive from it instead of
     *               re-tokenizing per consumer
     * @param baseSh same for `baseDocs`
@@ -659,11 +649,11 @@ object Dedup {
   def writeNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
       dir: String, numBands: Int = 4, rowsPerBand: Int = 3,
       maxBucket: Int = DefaultMaxBucket): Unit = {
-    // ONE tokenize+md5 pass, lazily checkpointed, feeds BOTH writes:
-    // the shingles table directly and the banded table via the
-    // signature minima — the dominant hashing cost of indexing a
-    // 100 TB base must not run twice
-    val sh = shingleFrame(docs, idCol, textCol).localCheckpoint(false)
+    // ONE tokenize+md5 pass, staged, feeds BOTH writes: the shingles
+    // table directly and the banded table via the signature minima —
+    // the dominant hashing cost of indexing a 100 TB base must not run
+    // twice
+    val sh = Stage.share(shingleFrame(docs, idCol, textCol))
     dropHotBuckets(
       bandedKeysFromSignatures(
         signaturesFromShingles(sh, numBands * rowsPerBand),
@@ -695,8 +685,8 @@ object Dedup {
       rowsPerBand: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     // one tokenize+md5 pass over the batch, shared by banding AND the
-    // verify join via the lazy checkpoint
-    val newPrep = shingleFrame(newDocs, idCol, textCol).localCheckpoint(false)
+    // verify join
+    val newPrep = Stage.share(shingleFrame(newDocs, idCol, textCol))
     val newBanded = bandedKeysFromSignatures(
       signaturesFromShingles(newPrep, numBands * rowsPerBand),
       numBands, rowsPerBand)
@@ -1077,7 +1067,7 @@ object Dedup {
     * final n_windows select; `wins` = (docId, p, whash[, carry…]) — the
     * operator's dominant cost, one md5 per `w`-token window at positions
     * 1, 1+stride, … — feeds the hit detection AND the hit join. Both
-    * lazily checkpointed: without staging, both heavy subtrees run twice
+    * staged: without staging, both heavy subtrees run twice
     * end-to-end. `carry` columns (e.g. an arrival timestamp for the
     * streaming twin) ride along both frames.
     */
@@ -1088,20 +1078,18 @@ object Dedup {
     val carryCols = carry.map(col)
     // fan out before the tokenize — the per-window md5 explode below
     // is the span plane's dominant CPU stage and inherits this
-    // partitioning through the checkpoint (identity at scale, see Fan)
-    val toks = Fan.out(df.filter(text.isNotNull))
-      .select(col(docId) +: tokenValues(text).as("tv") +: carryCols: _*)
-      .localCheckpoint(eager = false)
+    // partitioning through the stage (identity at scale, see Fan)
+    val toks = Stage.share(Fan.out(df.filter(text.isNotNull))
+      .select(col(docId) +: tokenValues(text).as("tv") +: carryCols: _*))
     // window positions 1 .. n-w+1 (docs shorter than w contribute none)
-    val wins = toks.filter(size(col("tv")) >= w)
+    val wins = Stage.share(toks.filter(size(col("tv")) >= w)
       .select(col(docId) +:
         explode(sequence(lit(1), size(col("tv")) - (w - 1), lit(stride))).as("p") +:
         col("tv") +: carryCols: _*)
       .select(col(docId) +: col("p") +:
         md5(concat_ws("|",
           transform(slice(col("tv"), col("p"), lit(w)), x => x.cast("string"))))
-          .as("whash") +: carryCols: _*)
-      .localCheckpoint(eager = false)
+          .as("whash") +: carryCols: _*))
     (toks, wins)
   }
 
@@ -1160,8 +1148,8 @@ object Dedup {
     */
   def softWeights(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int = 20): DataFrame = {
-    // NOT checkpointed despite the two consumers (size aggregate +
-    // join-back): propagateMin already checkpoints per round, so the
+    // NOT staged despite the two consumers (size aggregate +
+    // join-back): propagateMin already truncates per round, so the
     // re-run tail is cheap — an extra materialization here measured
     // 0.7 s SLOWER at sf0.1 (3.4 → 4.1 s solo)
     val cl = duplicateClusters(nodes, pairs, maxIter)
@@ -1195,18 +1183,17 @@ object Dedup {
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds must be in [1,8], got $rounds")
     val edges = bothDirections(pairs)
-    var cur = scores.select(col("id"), col("q_u").cast("long").as("q_u"))
-      .localCheckpoint(eager = false)
+    var cur = Stage.truncate(
+      scores.select(col("id"), col("q_u").cast("long").as("q_u")))
     for (_ <- 1 to rounds) {
       val nb = edges
         .join(cur.select(col("id").as("b"), col("q_u").as("nq")), Seq("b"))
         .groupBy(col("a").as("id"))
         .agg(sum(col("nq")).as("nsum"), count(lit(1)).as("ndeg"))
-      cur = cur.join(nb, Seq("id"), "left")
+      cur = Stage.truncate(cur.join(nb, Seq("id"), "left")
         .select(col("id"),
           when(col("ndeg").isNull, col("q_u"))
-            .otherwise(expr("(q_u + nsum) div (1 + ndeg)")).as("q_u"))
-        .localCheckpoint(eager = false)
+            .otherwise(expr("(q_u + nsum) div (1 + ndeg)")).as("q_u")))
     }
     cur
   }

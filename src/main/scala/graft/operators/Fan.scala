@@ -34,7 +34,7 @@ import org.apache.spark.sql.DataFrame
   * genuinely larger under-split input (a one-file multi-GB gzip, a
   * bigger SF) use every core instead of r21's constant 8. Catalyst's
   * plan-time size estimate is only trusted when it is a real number:
-  * frames behind a localCheckpoint (LogicalRDD) and post-join frames
+  * frames behind a [[Stage]] boundary (LogicalRDD) and post-join frames
   * report the default/product placeholder, which would read as
   * "infinite input" — those fall back to the floor, which is exactly
   * the r21 behavior.
@@ -68,7 +68,7 @@ object Fan {
   /** Size estimates at or above this are Catalyst placeholders, not
     * measurements: `spark.sql.defaultSizeInBytes` (= Long.MaxValue
     * unless set) stands in for unknown relations (LogicalRDD behind a
-    * checkpoint), and join estimates multiply child sizes. 1 TB is
+    * [[Stage]]), and join estimates multiply child sizes. 1 TB is
     * far above any real input this engine fans (a >= 1 TB scan arrives
     * in thousands of splits and every Fan entry point is already the
     * identity there) and far below the placeholder products.

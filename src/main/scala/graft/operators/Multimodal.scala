@@ -313,8 +313,7 @@ object Multimodal {
       sharedName: String, nPrefix: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // distinct (doc, key): a key looping within one doc counts once
-    val ds = posts.distinct()
-      .localCheckpoint(eager = false) // read by postings + both nf sides
+    val ds = Stage.share(posts.distinct()) // read by postings + both nf sides
     val nf = ds.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     val post = ds
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("__key"))))
@@ -425,8 +424,8 @@ object Multimodal {
     import org.apache.spark.sql.expressions.Window
     val width = 14 / bands
     val ds = sigs.select(col("doc_id"), col("frame_sig")).distinct()
-    val sd = ds.groupBy(col("frame_sig")).agg(count(lit(1)).as("df"))
-      .localCheckpoint(eager = false) // read by the banding + two df joins
+    // read by the banding + two df joins
+    val sd = Stage.share(ds.groupBy(col("frame_sig")).agg(count(lit(1)).as("df")))
     val banded = sd.select(col("frame_sig"),
         posexplode(array((0 until bands).map(b =>
           substring(col("frame_sig"), b * width + 1, width)): _*))

@@ -681,11 +681,12 @@ object Similarity {
     // cosine-clustered block codebooks measured WORSE (0.27) than
     // even sliced full-space centroids, because block magnitude is
     // what reconstruction has to preserve.
-    val blocks = Fan.out(emb.filter(col(vecCol).isNotNull))
+    //
+    // staged: every assign pass reads the blocks
+    val blocks = Stage.share(Fan.out(emb.filter(col(vecCol).isNotNull))
       .select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("__v"))
       .select(col("vec_id"), blockExplode(col("__v"), m, subDim).as("mb"))
-      .select(col("vec_id"), col("mb.m").as("b"), col("mb.blk").as("bv"))
-      .localCheckpoint(eager = false) // read by every assign pass
+      .select(col("vec_id"), col("mb.m").as("b"), col("mb.blk").as("bv")))
     // the k lowest vec_ids seed EVERY block — identical to each
     // independent run's first-k-seeds rule. LAZY (r16): the seeds ride
     // the plan as a TakeOrderedAndProject + posexplode numbering joined
@@ -1380,10 +1381,9 @@ object Similarity {
       shortlist: Int, lam: Double): DataFrame = {
     require(k >= 1 && shortlist >= k, s"need 1 <= k <= shortlist, got $k/$shortlist")
     val cVecs = corpus.select(col("id").as("c_id"), asDouble(col("vec")).as("c_v"))
-    val cands = topKBrute(queries, corpus, shortlist)
+    val cands = Stage.share(topKBrute(queries, corpus, shortlist)
       .select(col("q_id"), col("c_id"), col("cos").as("rel"))
-      .join(cVecs, Seq("c_id"))
-      .localCheckpoint(eager = false)
+      .join(cVecs, Seq("c_id")))
     var selected: DataFrame = null
     for (step <- 1 to k) {
       val scored =
@@ -1408,8 +1408,8 @@ object Similarity {
           min_by(col("c_v"), struct((-col("obj")).as("neg"), col("c_id"))).as("c_v"))
         .select(col("q_id"), col("b.c_id").as("c_id"), col("c_v"),
           (-col("b.neg")).as("mmr_score"), lit(step).cast("int").as("rnk"))
-      selected = (if (selected == null) pick else selected.unionByName(pick))
-        .localCheckpoint(eager = false)
+      selected = Stage.truncate(
+        if (selected == null) pick else selected.unionByName(pick))
     }
     selected.select(col("q_id"), col("c_id"), col("mmr_score"), col("rnk"))
   }

@@ -221,12 +221,11 @@ object TextAnalysis {
         explode(split(col(textCol), " ")).as("token"), col("__ref"))
     def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
     // one reference-slice pass: the (lang, token) counts are staged
-    // (lazily) and feed BOTH the per-token weights and — summed per
+    // and feed BOTH the per-token weights and — summed per
     // language over |vocab| rows — the total-token bit lengths, instead
     // of re-exploding the reference slice for each
-    val lmCounts = toks.filter(col("__ref"))
-      .groupBy(col(langCol), col("token")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+    val lmCounts = Stage.share(toks.filter(col("__ref"))
+      .groupBy(col(langCol), col("token")).agg(count(lit(1)).as("c")))
     val lm = lmCounts.select(col(langCol), col("token"), bits(col("c")).as("w"))
     val tot = lmCounts.groupBy(col(langCol)).agg(bits(sum(col("c"))).as("tbits"))
     toks.join(lm, Seq(langCol, "token"), "left")
@@ -391,7 +390,7 @@ object TextAnalysis {
     * Scale shape: gram generation is narrow map work; the bucket model
     * is ONE aggregate that map-side-combines to ≤`buckets` rows (a
     * broadcast dim bounded by the hash width, not the vocabulary —
-    * lazily checkpointed because the weights and the Laplace totals both
+    * staged because the weights and the Laplace totals both
     * read it); scoring is a broadcast join + the per-doc aggregation,
     * the only full-size exchange. Target docs score the model but are
     * not scored themselves (DSIR resamples the raw pool), so every raw
@@ -414,10 +413,9 @@ object TextAnalysis {
         explode(dsirGramsFromTokens(col("__toks"))).as("g"))
       .select(col(idCol), col("__t"),
         dsirBucket(col("g"), buckets).as("b"))
-    val model = g.groupBy(col("b"))
+    val model = Stage.share(g.groupBy(col("b"))
       .agg(sum(when(col("__t"), 1L).otherwise(0L)).as("ct"),
-        sum(when(col("__t"), 0L).otherwise(1L)).as("cr"))
-      .localCheckpoint(eager = false)
+        sum(when(col("__t"), 0L).otherwise(1L)).as("cr")))
     val w = model.select(col("b"),
       (bits(col("ct") + 1) - bits(col("cr") + 1)).as("w"))
     val shift = model.agg(
@@ -489,11 +487,10 @@ object TextAnalysis {
       .select(lower(col("__t")).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    var syms = words.select(
+    var syms = Stage.truncate(words.select(
       concat_ws("", transform(split(col("w"), ""),
         c => concat(lit("~"), c, lit("~")))).as("s"),
-      col("freq"))
-      .localCheckpoint(eager = false)
+      col("freq")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var drained = false
     for (r <- 1 to rounds if !drained) {
@@ -518,9 +515,8 @@ object TextAnalysis {
         val cnt: Long = -b.getLong(0)
         merges += ((r, pa, pb, cnt))
         // pa/pb are [a-z]+ by construction — literal-safe in the expr
-        syms = syms.select(
-          expr(s"replace(s, '~$pa~~$pb~', '~$pa$pb~')").as("s"), col("freq"))
-          .localCheckpoint(eager = false)
+        syms = Stage.truncate(syms.select(
+          expr(s"replace(s, '~$pa~~$pb~', '~$pa$pb~')").as("s"), col("freq")))
       }
     }
     import spark.implicits._

@@ -74,7 +74,7 @@ private[graft] object CurationQueries {
       // instead of crawl-copy-inflated ones. The oracle states the same
       // canonical-domain spec (sig/banded over exc, copyedges unioned).
       // canonDocs feeds FOUR subtrees (signatures, both minhash verify
-      // sides, the containment index) — checkpoint the (id, text) frame
+      // sides, the containment index) — stage the (id, text) frame
       // once instead of re-deriving it per consumer. The canonical per
       // md5 group is ONE min-struct aggregate (the dedup_paragraph
       // pattern): doc_id leads the struct so min picks the lowest id,
@@ -82,45 +82,35 @@ private[graft] object CurationQueries {
       // partition — versus the r13 shape (hash groupBy → canonical-id
       // join back onto the corpus), one exchange instead of two plus a
       // join.
-      // FANNED before the checkpoint (r22): every canonical-domain
+      // FANNED before the stage (r22): every canonical-domain
       // kernel downstream (the signature shingling, the containment
       // tokenize+sort, the decontam shingle side) reads these blocks,
       // and the agg's tiny-byte output AQE-coalesces to 1-2 partitions
       // — JobProfile showed a 2-task 2.0 s-CPU kernel stage riding the
-      // checkpoint (Fan.out's plan-time gauge on the agg reads the
+      // staged blocks (Fan.out's plan-time gauge on the agg reads the
       // static 32 shuffle partitions and stays a no-op, so the spread
-      // must happen HERE, gauged on the scan). EAGER: five consumer
-      // subtrees (several of them broadcast-pool jobs) otherwise race
-      // to compute the same blocks — at 32 cores the verify stage read
-      // run 22.5 s vs cpu 9.9 s, tasks blocked on the block-compute
-      // lock; the suite's 32-core e4 inversion (16.0 s vs 6.8 s at 8
-      // cores, PERF r21) is the cold-JVM face of the same race.
+      // must happen HERE, gauged on the scan).
       // … and the MAP side fans too: the md5 + partial-min + shuffle
       // write of full-text structs otherwise rides the 2-split recrawl
       // scan (JobProfile r22: a 2-task ~1.8 s-CPU stage, ~1 s of wall).
-      val canonDocs = Fan.outLike(Fan.out(corpus)
+      val canonDocs = Stage.share(Fan.outLike(Fan.out(corpus)
         .select(md5(col("text")).as("__h"),
           struct(col("doc_id"), col("text")).as("__s"))
         .groupBy(col("__h")).agg(min(col("__s")).as("__s"))
         .select(col("__s.doc_id").as("doc_id"), col("__s.text").as("text")),
-        Tables.documents(s, dir))
-        .localCheckpoint(eager = true)
+        Tables.documents(s, dir)))
       // ONE tokenize+md5+sort shingle pass over the canonical texts
       // (r22), shared by the signature build, BOTH minhash verify
       // sides, and the whole containment plane (postings + verify) —
       // the unshared form re-ran the per-token kernel ~5× (guide §2.3:
       // don't recompute what one pass provides). SORTED so both verify
       // stages run the native codegen'd merge intersect instead of the
-      // hash-based builtin (identical |A∩B| on distinct arrays). Eager,
-      // like canonDocs: the consumer subtrees sit on the broadcast pool
-      // and must read blocks instead of racing to compute them. r21's
+      // hash-based builtin (identical |A∩B| on distinct arrays). r21's
       // "sigs, not the fatter shingleFrame" note predates the fanned
       // 8-block canonical layout these blocks now inherit.
-      val shingled = Dedup.shingleFrame(canonDocs, "doc_id", "text")
-        .select(col("id"), array_sort(col("sh")).as("sh"))
-        .localCheckpoint(eager = true)
-      val sig = Dedup.signaturesFromShingles(shingled, Cfg.nSig)
-        .localCheckpoint(eager = true)
+      val shingled = Stage.share(Dedup.shingleFrame(canonDocs, "doc_id", "text")
+        .select(col("id"), array_sort(col("sh")).as("sh")))
+      val sig = Stage.share(Dedup.signaturesFromShingles(shingled, Cfg.nSig))
       val pairs = Dedup.minhashPairs(canonDocs, "doc_id", "text",
           numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
           maxBucket = Cfg.maxBucket, sigs = Some(sig), sh = Some(shingled),
@@ -151,24 +141,19 @@ private[graft] object CurationQueries {
         canonDocs.select(col("doc_id").as("id")), nearEdges)
       // canonical is consumed TWICE (the decontam shingle side and the
       // final quality chain) and sits downstream of the whole
-      // pair-generation + propagation closure — without a checkpoint
-      // the second consumer re-runs that closure end-to-end (measured
-      // 22 s of the query's 21 s solo total at sf0.1; with it the tail
-      // is ~4 s). Lazy, like the sig checkpoint above: materializes on
-      // first use, no extra action. Survivors are canonical ids, so the
-      // text join reads the cached canonDocs, not the corpus again.
-      // EAGER (r22, same rationale as canonDocs): the decontam side is
-      // evaluated inside the left_anti's broadcast-pool job while the
-      // survivor chain probes — lazy blocks let the two race.
+      // pair-generation + propagation closure — without a stage the
+      // second consumer re-runs that closure end-to-end (measured 22 s
+      // of the query's 21 s solo total at sf0.1; with it the tail is
+      // ~4 s). Survivors are canonical ids, so the text join reads the
+      // staged canonDocs, not the corpus again.
       // FANNED like canonDocs (the survivor join's tiny-byte output
       // AQE-coalesces to ~2 blocks, and the decontam shingle kernel —
       // JobProfile: a 2-task 2.0 s-CPU stage, 1.1 s of wall — plus the
       // final quality chain read these blocks).
-      val canonical = Fan.outLike(canonDocs.join(
+      val canonical = Stage.share(Fan.outLike(canonDocs.join(
         clusters.filter(col("id") === col("label"))
           .select(col("id").as("doc_id")), Seq("doc_id")),
-        Tables.documents(s, dir))
-        .localCheckpoint(eager = true)
+        Tables.documents(s, dir)))
       val sh = canonical
         .select(col("doc_id"), Dedup.tokenValues(col("text")).as("tv"))
         .select(col("doc_id"), Dedup.shingleValuesFromTokens(col("tv")).as("sh"))
@@ -332,20 +317,19 @@ private[graft] object CurationQueries {
         .withColumn("n_tokens", clf("n_tokens"))
         .withColumn("clf_score", clf("clf_score"))
         .filter(clf("clf_keep"))
-      // checkpoint the curated corpus before the layout pass (r22):
+      // stage the curated corpus before the layout pass (r22):
       // packShards reads its input TWICE (the phase-1 totals — evaluated
       // inside the offsets BROADCAST subplan — and the phase-2 join),
       // and paragraphDedup's internal first-occurrence join already
       // evaluates the paragraph plane twice per read, so the un-staged
       // query ran the dedup+PII+clf chain ~4× (JobProfile: two
       // single-task ~1 s broadcast stages + twin 8-task ~2.2 s-run main
-      // stages; the r21 plan's 20 parquet scans). One eager
+      // stages; the r21 plan's 20 parquet scans). One
       // materialization — the "write curated corpus, then lay out"
       // staging a real pipeline has anyway — leaves each phase a block
       // read. Guide §3.3 (materialize to truncate repeated subplans).
-      val withLang = gated.join(
-        Tables.documents(s, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .localCheckpoint(eager = true)
+      val withLang = Stage.share(gated.join(
+        Tables.documents(s, dir).select(col("doc_id"), col("lang")), Seq("doc_id")))
       Packing.packShards(withLang, part = "lang", orderCol = "doc_id",
         weight = col("n_tokens"), budget = Cfg.e6ShardBudget,
         bucketSize = Cfg.shardBucketSize)
@@ -392,8 +376,7 @@ private[graft] object CurationQueries {
     // projection, one id-keyed join, and the two-phase shuffle rank.
     QueryDef("e7_training_mix", (s, dir) => {
       val corpus = recrawl(s, dir)
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = false)
+      val sig = Stage.share(Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig))
       val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
           numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
           threshold = Cfg.nearDupThreshold,
@@ -407,22 +390,14 @@ private[graft] object CurationQueries {
         .otherwise(length(bin((n - 1).cast("long")))).cast("long")
       // fanned out before the quality kernel (the tokenize-heavy
       // scoring otherwise rides the 2-split recrawl scan), and
-      // checkpointed BETWEEN the projection and the gate: `base` has
+      // staged BETWEEN the projection and the gate: `base` has
       // three consumers (the layout rank and both sides of the final
       // join), and the deterministic gate predicate otherwise pushes
       // below the fan-out onto the 2-task scan — profiled r21 as THREE
       // ~1.2 s-wall copies of the quality stage per run; staged+fanned
-      // it is one 8-task pass (~0.3 s wall). EAGER (r22): the lazy form
-      // let the layout/offsets/final-join BROADCAST subplans race to
-      // materialize the blocks — JobProfile showed six ~500 ms
-      // broadcast jobs whose tasks sat blocked on the block-compute
-      // lock (run ≈ 3.5-4 s vs cpu ≈ 0.1 s per 8-task stage); the
-      // r21 bench read e7 at 9.6 s vs r20's 6.4 s for the same reason.
-      // Materializing once, synchronously, before any consumer plans
-      // costs the same single pass and removes the race entirely.
-      val scored = Fan.out(corpus)
-        .select(col("doc_id"), q("quality").as("quality"), bits.as("bucket_bits"))
-        .localCheckpoint(eager = true)
+      // it is one 8-task pass (~0.3 s wall).
+      val scored = Stage.share(Fan.out(corpus)
+        .select(col("doc_id"), q("quality").as("quality"), bits.as("bucket_bits")))
       val gated = scored.filter(col("quality") >= Cfg.qualityMin)
       val base = gated.join(sw, Seq("doc_id"))
       val laid = Packing.shuffleLayout(base.select(col("doc_id")), "doc_id",

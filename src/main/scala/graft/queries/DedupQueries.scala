@@ -36,9 +36,8 @@ private[graft] object DedupQueries {
       transform(col("v"),
         (x, i) => when(i === 0, x + Cfg.semanticDelta).otherwise(x)).as("v"))
     val corpus = base.unionByName(para)
-    val asg = Similarity.kmeans(corpus, "vec_id", "v",
-        k = Cfg.kmeansK, iters = Cfg.kmeansIters)
-      .localCheckpoint(eager = false)
+    val asg = Stage.share(Similarity.kmeans(corpus, "vec_id", "v",
+        k = Cfg.kmeansK, iters = Cfg.kmeansIters))
     val pairs = Similarity.cosineDedupPairs(
       corpus.select(col("vec_id").as("id"), col("v").as("vecd"))
         .join(asg.select(col("vec_id").as("id"), col("cluster_id")), Seq("id")),
@@ -141,12 +140,12 @@ private[graft] object DedupQueries {
     QueryDef("dedup_incremental", (s, dir) => {
       val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val batch = base.withColumn("doc_id", col("doc_id") + 1000000)
-      // per side, ONE lazily-checkpointed tokenize+md5 pass shared by
-      // banding and the verify join
+      // per side, ONE staged tokenize+md5 pass shared by banding and
+      // the verify join
       Dedup.minhashPairsBetween(batch, base, "doc_id", "text",
         numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
-        newSh = Some(Dedup.shingleFrame(batch, "doc_id", "text").localCheckpoint(true)),
-        baseSh = Some(Dedup.shingleFrame(base, "doc_id", "text").localCheckpoint(true)))
+        newSh = Some(Stage.share(Dedup.shingleFrame(batch, "doc_id", "text"))),
+        baseSh = Some(Stage.share(Dedup.shingleFrame(base, "doc_id", "text"))))
     },
       // incremental: candidates restricted to base (< 1e6) × batch (>= 1e6)
       oracle = minhashOracle(numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
@@ -344,13 +343,12 @@ private[graft] object DedupQueries {
     // collisions (never all-pairs).
     QueryDef("dedup_minhash", (s, dir) => {
       val corpus = recrawl(s, dir)
-      // lazily-checkpointed signatures shared by both band-join sides.
-      // Deliberately NOT the fatter shingleFrame checkpoint: the 12
-      // narrow minima store and rescan cheaply, while checkpointing the
-      // full shingle arrays measured slower than the two narrow verify
-      // re-derivations it would replace.
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = false)
+      // staged signatures shared by both band-join sides.
+      // Deliberately NOT the fatter shingleFrame: the 12 narrow minima
+      // store and rescan cheaply, while staging the full shingle arrays
+      // measured slower than the two narrow verify re-derivations it
+      // would replace.
+      val sig = Stage.share(Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig))
       Dedup.minhashPairs(corpus, "doc_id", "text",
         numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
         maxBucket = Cfg.maxBucket, sigs = Some(sig))
@@ -485,17 +483,16 @@ private[graft] object DedupQueries {
       // token-hash representation (see Dedup.tokenValues): both jaccard
       // stages intersect long arrays, not strings; the two-step select
       // keeps the md5 transform in its own projection.
-      val docs = Tables.documents(s, dir)
+      // staged: both sides of the bucket self-join read this frame —
+      // one tokenize+md5+sort pass instead of two
+      val docs = Stage.share(Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("source"),
           Dedup.tokenValues(col("text")).as("tv"))
         // both arrays sorted ascending → verify intersections run on the
         // native allocation-free merge (SortedIntersectCount)
         .select(col("doc_id"), col("lang"), col("source"),
           array_sort(array_distinct(col("tv"))).as("tok"),
-          Dedup.sortedShingleValuesFromTokens(col("tv")).as("sh"))
-        // lazily checkpointed: both sides of the bucket self-join read
-        // this frame — one tokenize+md5+sort pass instead of two
-        .localCheckpoint(false)
+          Dedup.sortedShingleValuesFromTokens(col("tv")).as("sh")))
       val a = docs.select(col("lang"), col("source"), col("doc_id").as("doc_a"),
         col("tok").as("tok_a"), col("sh").as("sh_a"))
       val b = docs.select(col("lang"), col("source"), col("doc_id").as("doc_b"),
@@ -580,17 +577,11 @@ private[graft] object DedupQueries {
       val corpus = recrawl(s, dir)
       // ONE signature computation feeds banding AND both estimate
       // sides: Spark recomputes a shared unpersisted subtree once per
-      // consumer, so without the checkpoint the tokenize+md5+agg
-      // pipeline would run 3× (it was this query's whole cost — 6.0 s
-      // → 1.7 s solo). LAZY (eager = false): the checkpoint converts
-      // the frame to one shared RDD that materializes on the query's
-      // FIRST job — an eager one would run a full Spark job at
-      // DataFrame-CONSTRUCTION time, making plan-only consumers
-      // (graft.Explain) pay the whole computation just to print a
-      // plan. The checkpointed frame is |docs| rows × 12 longs — at
-      // 100 TB exactly the signature table an ingest job persists.
-      val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-        .localCheckpoint(eager = false)
+      // consumer, so without the stage the tokenize+md5+agg pipeline
+      // would run 3× (it was this query's whole cost — 6.0 s → 1.7 s
+      // solo). The staged frame is |docs| rows × 12 longs — at 100 TB
+      // exactly the signature table an ingest job persists.
+      val sig = Stage.share(Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig))
       val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
           numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
           maxBucket = Cfg.maxBucket, sigs = Some(sig))
@@ -634,16 +625,11 @@ private[graft] object DedupQueries {
     QueryDef("dedup_clusters_incremental", (s, dir) => {
       val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val batch = base.withColumn("doc_id", col("doc_id") + 1000000)
-      // ONE lazily-checkpointed shingle pass per corpus side, shared by
-      // the cross pairs (banding + verify) AND the batch-internal pairs
-      // (whose signatures derive from the same batch frame)
-      // EAGER (r22): banding + verify consumers of each side sit on
-      // the broadcast pool and raced the lazy blocks (JobProfile: two
-      // 8-task stages with run ~3.9/3.3 s vs cpu ~0.4 s, pure blocking)
-      val batchSh = Dedup.shingleFrame(batch, "doc_id", "text")
-        .localCheckpoint(true)
-      val baseSh = Dedup.shingleFrame(base, "doc_id", "text")
-        .localCheckpoint(true)
+      // ONE staged shingle pass per corpus side, shared by the cross
+      // pairs (banding + verify) AND the batch-internal pairs (whose
+      // signatures derive from the same batch frame)
+      val batchSh = Stage.share(Dedup.shingleFrame(batch, "doc_id", "text"))
+      val baseSh = Stage.share(Dedup.shingleFrame(base, "doc_id", "text"))
       val cross = Dedup.minhashPairsBetween(batch, base, "doc_id", "text",
           numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
           newSh = Some(batchSh), baseSh = Some(baseSh))
@@ -652,15 +638,14 @@ private[graft] object DedupQueries {
       // JOINTLY (one CTE chain), where a per-side hot-bucket count
       // cannot be mirrored; at scale the cap lives in the precomputed
       // banded table both sides read (Dedup.minhashPairsBetween doc)
-      // the batch frame is already checkpointed for the cross path, so
-      // the inner pairs read it for BOTH banding (via a checkpointed
-      // 12-minima aggregate — the band self-join reads it twice) and
-      // the verify joins, instead of re-tokenizing the batch
+      // the batch frame is already staged for the cross path, so the
+      // inner pairs read it for BOTH banding (via a staged 12-minima
+      // aggregate — the band self-join reads it twice) and the verify
+      // joins, instead of re-tokenizing the batch
       val inner = Dedup.minhashPairs(batch, "doc_id", "text",
           numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand, threshold = Cfg.nearDupThreshold,
           maxBucket = Int.MaxValue,
-          sigs = Some(Dedup.signaturesFromShingles(batchSh, Cfg.nSig)
-            .localCheckpoint(true)),
+          sigs = Some(Stage.share(Dedup.signaturesFromShingles(batchSh, Cfg.nSig))),
           sh = Some(batchSh))
         .select(col("doc_a"), col("doc_b"))
       Dedup.incrementalClusters(

@@ -101,67 +101,6 @@ private[graft] object MmQueries {
        |WHERE hamming <= ${Cfg.frameSigMaxHamming}""".stripMargin
   }
 
-  /** mm_audio_neardup's oracle: the delta-shingle acoustic fingerprint
-    * rebuilt relationally — base docs plus the %10 clip re-uploads
-    * (first audioClipWindows token-blocks under doc_id+5e6) share one
-    * token→block→md5→energy chain (audioSegmentsSql's arithmetic),
-    * consecutive window-energy deltas shingled audioFpShingle at a
-    * time into ':'-joined keys, then the same df-capped posting /
-    * pair / containment SQL shape as mm_video_neardup's oracle.
-    */
-  private def audioNearDupSql: String = {
-    val b = Cfg.paraBlockTokens
-    val clipTokens = Cfg.audioClipWindows * b
-    val sh = Cfg.audioFpShingle
-    val contain = Rounding.stableSql(
-      "shared_fps::DOUBLE / least(nfp_a, nfp_b)", 4)
-    s"""WITH bt AS (SELECT doc_id, string_split(text, ' ') AS tv
-       |            FROM documents WHERE text IS NOT NULL),
-       |ut AS (SELECT doc_id, tv FROM bt
-       |       UNION ALL
-       |       SELECT doc_id + 5000000 AS doc_id, tv[1:$clipTokens] AS tv
-       |       FROM bt WHERE doc_id % 10 = 0),
-       |ue AS (SELECT doc_id, tv,
-       |              UNNEST(generate_series(0, (len(tv) - 1) // $b)) AS wid
-       |       FROM ut),
-       |um AS (SELECT doc_id, CAST(wid AS INT) AS window_id,
-       |              md5(array_to_string(tv[wid*$b+1 : wid*$b+$b], ' ')) AS mx
-       |       FROM ue),
-       |en AS (SELECT doc_id, window_id,
-       |              CAST($NibbleSumSql AS BIGINT) AS energy
-       |       FROM um),
-       |dl AS (SELECT doc_id, window_id,
-       |              lead(energy) OVER (PARTITION BY doc_id
-       |                                 ORDER BY window_id) - energy AS delta
-       |       FROM en),
-       |da AS (SELECT doc_id, list(delta ORDER BY window_id) AS dv
-       |       FROM dl WHERE delta IS NOT NULL GROUP BY doc_id),
-       |fps AS (SELECT doc_id,
-       |               UNNEST(list_transform(generate_series(0, len(dv) - $sh),
-       |                 p -> array_to_string(dv[p+1 : p+$sh], ':'))) AS fp
-       |        FROM da),
-       |ds AS (SELECT DISTINCT doc_id, fp FROM fps),
-       |nfp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
-       |        FROM ds GROUP BY doc_id),
-       |dfq AS (SELECT fp FROM ds GROUP BY fp
-       |        HAVING count(*) <= ${Cfg.videoSigDfCap}),
-       |post AS (SELECT ds.doc_id, ds.fp FROM ds JOIN dfq USING (fp)),
-       |shp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |               CAST(count(*) AS BIGINT) AS shared_fps
-       |        FROM post a JOIN post b USING (fp)
-       |        WHERE a.doc_id < b.doc_id
-       |        GROUP BY 1, 2
-       |        HAVING count(*) >= ${Cfg.videoMinShared}),
-       |j AS (SELECT doc_a, doc_b, shared_fps,
-       |             na.nfp AS nfp_a, nb.nfp AS nfp_b
-       |      FROM shp JOIN nfp na ON na.doc_id = shp.doc_a
-       |               JOIN nfp nb ON nb.doc_id = shp.doc_b)
-       |SELECT doc_a, doc_b, shared_fps, nfp_a, nfp_b,
-       |       $contain AS containment,
-       |       $contain >= ${Cfg.videoContainMin} AS is_neardup
-       |FROM j""".stripMargin
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // Multimodal plumbing: binary payload + typed metadata, per-partition
@@ -430,9 +369,8 @@ private[graft] object MmQueries {
       val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
       val feat = Multimodal.extractFeatures(Multimodal.attachPayload(docs))
         .select(col("doc_id"), col("format"), col("brightness"))
-      // shared payload checkpointed as in e9 (measured 1.39 → 1.25 s)
-      val pay = Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens)
-        .localCheckpoint(false)
+      // shared payload staged as in e9 (measured 1.39 → 1.25 s)
+      val pay = Stage.share(Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens))
       val vid = videoDupRollupFrom(pay)
         .select(col("doc_id"), col("n_frames"), col("dup_frac"))
       val aud = speechFracPerDoc(pay)
@@ -566,6 +504,62 @@ private[graft] object MmQueries {
     },
       // Audio near-dup pairs: the delta-shingle fingerprint CTE feeding
       // the same df-capped pair pipeline as mm_video_neardup.
-      oracle = audioNearDupSql)
+      // The fingerprint is rebuilt relationally — base docs plus the %10
+      // clip re-uploads (first audioClipWindows token-blocks under
+      // doc_id+5e6) share one token→block→md5→energy chain
+      // (audioSegmentsSql's arithmetic), consecutive window-energy
+      // deltas shingled audioFpShingle at a time into ':'-joined keys.
+      oracle = {
+        val b = Cfg.paraBlockTokens
+        val clipTokens = Cfg.audioClipWindows * b
+        val sh = Cfg.audioFpShingle
+        val contain = Rounding.stableSql(
+          "shared_fps::DOUBLE / least(nfp_a, nfp_b)", 4)
+        s"""WITH bt AS (SELECT doc_id, string_split(text, ' ') AS tv
+           |            FROM documents WHERE text IS NOT NULL),
+           |ut AS (SELECT doc_id, tv FROM bt
+           |       UNION ALL
+           |       SELECT doc_id + 5000000 AS doc_id, tv[1:$clipTokens] AS tv
+           |       FROM bt WHERE doc_id % 10 = 0),
+           |ue AS (SELECT doc_id, tv,
+           |              UNNEST(generate_series(0, (len(tv) - 1) // $b)) AS wid
+           |       FROM ut),
+           |um AS (SELECT doc_id, CAST(wid AS INT) AS window_id,
+           |              md5(array_to_string(tv[wid*$b+1 : wid*$b+$b], ' ')) AS mx
+           |       FROM ue),
+           |en AS (SELECT doc_id, window_id,
+           |              CAST($NibbleSumSql AS BIGINT) AS energy
+           |       FROM um),
+           |dl AS (SELECT doc_id, window_id,
+           |              lead(energy) OVER (PARTITION BY doc_id
+           |                                 ORDER BY window_id) - energy AS delta
+           |       FROM en),
+           |da AS (SELECT doc_id, list(delta ORDER BY window_id) AS dv
+           |       FROM dl WHERE delta IS NOT NULL GROUP BY doc_id),
+           |fps AS (SELECT doc_id,
+           |               UNNEST(list_transform(generate_series(0, len(dv) - $sh),
+           |                 p -> array_to_string(dv[p+1 : p+$sh], ':'))) AS fp
+           |        FROM da),
+           |ds AS (SELECT DISTINCT doc_id, fp FROM fps),
+           |nfp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
+           |        FROM ds GROUP BY doc_id),
+           |dfq AS (SELECT fp FROM ds GROUP BY fp
+           |        HAVING count(*) <= ${Cfg.videoSigDfCap}),
+           |post AS (SELECT ds.doc_id, ds.fp FROM ds JOIN dfq USING (fp)),
+           |shp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           |               CAST(count(*) AS BIGINT) AS shared_fps
+           |        FROM post a JOIN post b USING (fp)
+           |        WHERE a.doc_id < b.doc_id
+           |        GROUP BY 1, 2
+           |        HAVING count(*) >= ${Cfg.videoMinShared}),
+           |j AS (SELECT doc_a, doc_b, shared_fps,
+           |             na.nfp AS nfp_a, nb.nfp AS nfp_b
+           |      FROM shp JOIN nfp na ON na.doc_id = shp.doc_a
+           |               JOIN nfp nb ON nb.doc_id = shp.doc_b)
+           |SELECT doc_a, doc_b, shared_fps, nfp_a, nfp_b,
+           |       $contain AS containment,
+           |       $contain >= ${Cfg.videoContainMin} AS is_neardup
+           |FROM j""".stripMargin
+      })
   )
 }

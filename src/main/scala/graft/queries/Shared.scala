@@ -29,14 +29,12 @@ private[queries] object Shared {
   /** The [[recrawl]] corpus with its verified minhash near-dup pairs
     * (doc_a, doc_b) — the chain dedup_clusters, dedup_soft,
     * ta_split_leakage and ta_quality_smooth share. The signatures feeding
-    * both band-join sides are checkpointed EAGERLY (r22): lazy sig blocks
-    * race on the broadcast pool (see OPTIMIZATION_r22). They stay narrow
-    * (sigs, not the fatter shingleFrame — see dedup_minhash).
+    * both band-join sides are staged narrow (sigs, not the fatter
+    * shingleFrame — see dedup_minhash).
     */
   def recrawlPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val corpus = recrawl(s, dir)
-    val sig = Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig)
-      .localCheckpoint(eager = true)
+    val sig = Stage.share(Dedup.signatures(corpus, "doc_id", "text", Cfg.nSig))
     val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
         numBands = Cfg.numBands, rowsPerBand = Cfg.rowsPerBand,
         threshold = Cfg.nearDupThreshold,

@@ -144,58 +144,6 @@ private[graft] object SimQueries {
        |  SELECT s.q_id, s.c_id, ${sqlCos("q.v", "c.v")} AS score
        |  FROM short s JOIN eb q ON q.id = s.q_id JOIN eb c ON c.id = s.c_id)"""
 
-  /** MMR greedy re-rank (sim_mmr) unrolled to Cfg.mmrK CTE steps: each
-    * step scores the not-yet-selected shortlist rows by
-    * λ·rel − (1−λ)·max-sim-to-selected (stable-rounded, ties to lower
-    * c_id) and picks rank 1. λ and 1−λ are interpolated from the SAME
-    * Scala doubles the Spark plan multiplies by (1−0.7 is not the
-    * literal 0.3 in binary — emitting the round-tripped value keeps the
-    * products bit-identical).
-    */
-  private def mmrOracleSql: String = {
-    val lam = Cfg.mmrLambda
-    val oneMinus = 1 - Cfg.mmrLambda
-    val steps = (2 to Cfg.mmrK).map { r =>
-      val selUnion = (1 until r).map(i => s"SELECT q_id, c_id FROM s$i")
-        .mkString(" UNION ALL ")
-      s"""sel$r AS ($selUnion),
-         |m$r AS (
-         |  SELECT cand.q_id, cand.c_id, cand.rel,
-         |         max(round(${sqlCos("cv.v", "sv.v")}, 6)) AS maxsim
-         |  FROM cand
-         |  JOIN eb cv ON cv.id = cand.c_id
-         |  JOIN sel$r s ON s.q_id = cand.q_id
-         |  JOIN eb sv ON sv.id = s.c_id
-         |  WHERE NOT EXISTS (SELECT 1 FROM sel$r x
-         |                    WHERE x.q_id = cand.q_id AND x.c_id = cand.c_id)
-         |  GROUP BY 1, 2, 3),
-         |p$r AS (SELECT q_id, c_id,
-         |               ${Rounding.stableSql(s"rel * $lam - maxsim * $oneMinus", 6)} AS obj
-         |        FROM m$r),
-         |s$r AS (SELECT q_id, c_id, obj
-         |        FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY obj DESC, c_id ASC) AS rn FROM p$r)
-         |        WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to Cfg.mmrK).map(r =>
-      s"SELECT q_id, c_id, obj AS mmr_score, CAST($r AS INT) AS rnk FROM s$r")
-      .mkString("\nUNION ALL ")
-    s"""WITH eb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-       |mq AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
-       |bs AS (
-       |  SELECT q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS rel
-       |  FROM mq, eb c WHERE q_id <> c.id),
-       |cand AS (
-       |  SELECT q_id, c_id, rel
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, c_id ASC) AS rn FROM bs)
-       |  WHERE rn <= ${Cfg.mmrShortlist}),
-       |p1 AS (SELECT q_id, c_id, ${Rounding.stableSql(s"rel * $lam", 6)} AS obj FROM cand),
-       |s1 AS (SELECT q_id, c_id, obj
-       |       FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY obj DESC, c_id ASC) AS rn FROM p1)
-       |       WHERE rn = 1),
-       |$steps
-       |$out""".stripMargin
-  }
-
   /** IVF-PQ composite (sim_ivfpq_ann / sim_ivfpq_recall): the PQ codes
     * prefix + the trained k=8 coarse chain (prefix cg_, the exact
     * [[ivfCtesSql]] assignment pattern) — ADC scores only the probed
@@ -313,119 +261,6 @@ private[graft] object SimQueries {
        |  SELECT cand.q_id, cand.c_id,
        |         CAST(bit_count(xor(q.code_lo, c.code_lo)) + bit_count(xor(q.code_hi, c.code_hi)) AS INT) AS hamming
        |  FROM cand JOIN bc q ON q.id = cand.q_id JOIN bc c ON c.id = cand.c_id)"""
-  }
-
-  /** sim_trunc_recall: one truncated-cosine ranking CTE pair per
-    * Cfg.truncDims tier (DuckDB 1-based inclusive list slice `v[1:d]` ≡
-    * Spark `slice(v, 1, d)`), each gated against the shared full-dim
-    * brute CTE and UNION ALL'd — tiers unrolled at SQL-generation time
-    * from the SAME config constant the plan maps over.
-    */
-  private def truncRecallSql: String = {
-    val tiers = Cfg.truncDims.map { d =>
-      s"""t${d}s AS (
-         |  SELECT q.q_id, c.id AS c_id, ${sqlCos(s"qv[1:$d]", s"c.v[1:$d]")} AS cos
-         |  FROM q, e c WHERE q.q_id <> c.id),
-         |t$d AS (
-         |  SELECT q_id, c_id
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM t${d}s)
-         |  WHERE rnk <= 3)"""
-    }.mkString(",\n")
-    val unions = Cfg.truncDims.map { d =>
-      s"""SELECT CAST($d AS INT) AS dim, b.q_id, CAST(count(t.c_id) AS BIGINT) AS hits,
-         |       ${Rounding.stableSql("count(t.c_id)::DOUBLE / 3", 4)} AS recall
-         |FROM brute b LEFT JOIN t$d t ON b.q_id = t.q_id AND b.c_id = t.c_id
-         |GROUP BY b.q_id"""
-    }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
-       |bs AS (
-       |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-       |  FROM q, e c WHERE q.q_id <> c.id),
-       |brute AS (
-       |  SELECT q_id, c_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
-       |  WHERE rnk <= 3),
-       |$tiers
-       |$unions""".stripMargin
-  }
-
-  /** sim_eval_mrr: brute top-1 truth, then each compressed family's RAW
-    * top-binaryMrrK ranking (binary Hamming over [[binaryHalfSql]]
-    * codes; PQ full-corpus ADC over [[pqCodesCtes]]' reconstruction;
-    * IVF-PQ probe-scoped ADC through the trained cg_ coarse chain —
-    * the exact ivfPqCtesSql assignment pattern), reciprocal rank of the
-    * truth within each list (0 when absent), one row per
-    * (family, query).
-    */
-  private def mrrEvalSql: String = {
-    val mrrK = Cfg.binaryMrrK
-    s"""WITH $pqCodesCtes,
-       |${kmeansCtesOver(
-           "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL",
-           k = 8, p = "cg_")},
-       |bc AS (
-       |  SELECT id, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi
-       |  FROM eb),
-       |q5 AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
-       |bs AS (
-       |  SELECT q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
-       |  FROM q5, eb c WHERE q_id <> c.id),
-       |brute1 AS (
-       |  SELECT q_id, c_id AS true_nn
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rn FROM bs)
-       |  WHERE rn = 1),
-       |bh AS (
-       |  SELECT q.id AS q_id, c.id AS c_id,
-       |         bit_count(xor(q.code_lo, c.code_lo)) + bit_count(xor(q.code_hi, c.code_hi)) AS hamming
-       |  FROM (SELECT * FROM bc WHERE id < 5) q JOIN bc c ON q.id <> c.id),
-       |binr AS (
-       |  SELECT q_id, c_id, rnk
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming ASC, c_id ASC) AS rnk FROM bh)
-       |  WHERE rnk <= $mrrK),
-       |pqsc AS (
-       |  SELECT q_id, rec.id AS c_id, round(${sqlDot("qv", "rv")}, 6) AS score
-       |  FROM q5 CROSS JOIN rec WHERE q_id <> rec.id),
-       |pqr AS (
-       |  SELECT q_id, c_id, rnk
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM pqsc)
-       |  WHERE rnk <= $mrrK),
-       |cgcent AS (SELECT cid, cv FROM cg_c1),
-       |cgcs AS (
-       |  SELECT c.id AS c_id, cgcent.cid, ${sqlCos("c.v", "cgcent.cv")} AS ccos
-       |  FROM eb c CROSS JOIN cgcent),
-       |cassign AS (
-       |  SELECT c_id, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY c_id ORDER BY ccos DESC, cid ASC) AS rn FROM cgcs)
-       |  WHERE rn = 1),
-       |cgqs AS (
-       |  SELECT q_id, qv, cgcent.cid, ${sqlCos("qv", "cgcent.cv")} AS qcos
-       |  FROM q5 CROSS JOIN cgcent),
-       |qassign AS (
-       |  SELECT q_id, qv, cid AS list_id
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, cid ASC) AS rn FROM cgqs)
-       |  WHERE rn <= 2),
-       |ipadc AS (
-       |  SELECT q.q_id, c.c_id, round(${sqlDot("q.qv", "rec.rv")}, 6) AS score
-       |  FROM qassign q JOIN cassign c USING (list_id)
-       |       JOIN rec ON rec.id = c.c_id
-       |  WHERE q.q_id <> c.c_id),
-       |ipr AS (
-       |  SELECT q_id, c_id, rnk
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM ipadc)
-       |  WHERE rnk <= $mrrK),
-       |u AS (
-       |  SELECT 'binary' AS family, b.q_id, b.true_nn, r.rnk
-       |  FROM brute1 b LEFT JOIN binr r ON r.q_id = b.q_id AND r.c_id = b.true_nn
-       |  UNION ALL
-       |  SELECT 'pq' AS family, b.q_id, b.true_nn, r.rnk
-       |  FROM brute1 b LEFT JOIN pqr r ON r.q_id = b.q_id AND r.c_id = b.true_nn
-       |  UNION ALL
-       |  SELECT 'ivfpq' AS family, b.q_id, b.true_nn, r.rnk
-       |  FROM brute1 b LEFT JOIN ipr r ON r.q_id = b.q_id AND r.c_id = b.true_nn)
-       |SELECT family, q_id, true_nn, CAST(coalesce(rnk, 0) AS INT) AS rnk,
-       |       ${Rounding.stableSql("coalesce(1.0 / rnk, 0.0)", 6)} AS rr
-       |FROM u""".stripMargin
   }
 
   /** Multi-probe bucket expansion (Similarity.probeBuckets' mirror):
@@ -919,7 +754,37 @@ private[graft] object SimQueries {
       // Per-tier truncated-cosine top-3 vs the full-dim exact top-3 —
       // tiers unrolled from the same Cfg.truncDims the plan reads; the
       // full-dim tier must read 1.0, self-validating the gate.
-      oracle = truncRecallSql),
+      // One truncated-cosine ranking CTE pair per tier (DuckDB 1-based
+      // inclusive list slice `v[1:d]` ≡ Spark `slice(v, 1, d)`), each
+      // gated against the shared full-dim brute CTE and UNION ALL'd.
+      oracle = {
+        val tiers = Cfg.truncDims.map { d =>
+          s"""t${d}s AS (
+             |  SELECT q.q_id, c.id AS c_id, ${sqlCos(s"qv[1:$d]", s"c.v[1:$d]")} AS cos
+             |  FROM q, e c WHERE q.q_id <> c.id),
+             |t$d AS (
+             |  SELECT q_id, c_id
+             |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM t${d}s)
+             |  WHERE rnk <= 3)"""
+        }.mkString(",\n")
+        val unions = Cfg.truncDims.map { d =>
+          s"""SELECT CAST($d AS INT) AS dim, b.q_id, CAST(count(t.c_id) AS BIGINT) AS hits,
+             |       ${Rounding.stableSql("count(t.c_id)::DOUBLE / 3", 4)} AS recall
+             |FROM brute b LEFT JOIN t$d t ON b.q_id = t.q_id AND b.c_id = t.c_id
+             |GROUP BY b.q_id"""
+        }.mkString("\nUNION ALL\n")
+        s"""WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
+           |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 5),
+           |bs AS (
+           |  SELECT q.q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
+           |  FROM q, e c WHERE q.q_id <> c.id),
+           |brute AS (
+           |  SELECT q_id, c_id
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rnk FROM bs)
+           |  WHERE rnk <= 3),
+           |$tiers
+           |$unions""".stripMargin
+      }),
 
     // Metadata-filtered exact search — the "top-k similar documents
     // AMONG <predicate>" query every retrieval deployment actually
@@ -1062,7 +927,82 @@ private[graft] object SimQueries {
         .unionByName(mrr("pq", pq))
         .unionByName(mrr("ivfpq", ivfpq))
     },
-      oracle = mrrEvalSql),
+      // Brute top-1 truth, then each compressed family's RAW
+      // top-binaryMrrK ranking (binary Hamming over [[binaryHalfSql]]
+      // codes; PQ full-corpus ADC over [[pqCodesCtes]]' reconstruction;
+      // IVF-PQ probe-scoped ADC through the trained cg_ coarse chain —
+      // the exact ivfPqCtesSql assignment pattern), reciprocal rank of the
+      // truth within each list (0 when absent), one row per
+      // (family, query).
+      oracle = {
+        val mrrK = Cfg.binaryMrrK
+        s"""WITH $pqCodesCtes,
+           |${kmeansCtesOver(
+               "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL",
+               k = 8, p = "cg_")},
+           |bc AS (
+           |  SELECT id, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi
+           |  FROM eb),
+           |q5 AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
+           |bs AS (
+           |  SELECT q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS cos
+           |  FROM q5, eb c WHERE q_id <> c.id),
+           |brute1 AS (
+           |  SELECT q_id, c_id AS true_nn
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rn FROM bs)
+           |  WHERE rn = 1),
+           |bh AS (
+           |  SELECT q.id AS q_id, c.id AS c_id,
+           |         bit_count(xor(q.code_lo, c.code_lo)) + bit_count(xor(q.code_hi, c.code_hi)) AS hamming
+           |  FROM (SELECT * FROM bc WHERE id < 5) q JOIN bc c ON q.id <> c.id),
+           |binr AS (
+           |  SELECT q_id, c_id, rnk
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming ASC, c_id ASC) AS rnk FROM bh)
+           |  WHERE rnk <= $mrrK),
+           |pqsc AS (
+           |  SELECT q_id, rec.id AS c_id, round(${sqlDot("qv", "rv")}, 6) AS score
+           |  FROM q5 CROSS JOIN rec WHERE q_id <> rec.id),
+           |pqr AS (
+           |  SELECT q_id, c_id, rnk
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM pqsc)
+           |  WHERE rnk <= $mrrK),
+           |cgcent AS (SELECT cid, cv FROM cg_c1),
+           |cgcs AS (
+           |  SELECT c.id AS c_id, cgcent.cid, ${sqlCos("c.v", "cgcent.cv")} AS ccos
+           |  FROM eb c CROSS JOIN cgcent),
+           |cassign AS (
+           |  SELECT c_id, cid AS list_id
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY c_id ORDER BY ccos DESC, cid ASC) AS rn FROM cgcs)
+           |  WHERE rn = 1),
+           |cgqs AS (
+           |  SELECT q_id, qv, cgcent.cid, ${sqlCos("qv", "cgcent.cv")} AS qcos
+           |  FROM q5 CROSS JOIN cgcent),
+           |qassign AS (
+           |  SELECT q_id, qv, cid AS list_id
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, cid ASC) AS rn FROM cgqs)
+           |  WHERE rn <= 2),
+           |ipadc AS (
+           |  SELECT q.q_id, c.c_id, round(${sqlDot("q.qv", "rec.rv")}, 6) AS score
+           |  FROM qassign q JOIN cassign c USING (list_id)
+           |       JOIN rec ON rec.id = c.c_id
+           |  WHERE q.q_id <> c.c_id),
+           |ipr AS (
+           |  SELECT q_id, c_id, rnk
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rnk FROM ipadc)
+           |  WHERE rnk <= $mrrK),
+           |u AS (
+           |  SELECT 'binary' AS family, b.q_id, b.true_nn, r.rnk
+           |  FROM brute1 b LEFT JOIN binr r ON r.q_id = b.q_id AND r.c_id = b.true_nn
+           |  UNION ALL
+           |  SELECT 'pq' AS family, b.q_id, b.true_nn, r.rnk
+           |  FROM brute1 b LEFT JOIN pqr r ON r.q_id = b.q_id AND r.c_id = b.true_nn
+           |  UNION ALL
+           |  SELECT 'ivfpq' AS family, b.q_id, b.true_nn, r.rnk
+           |  FROM brute1 b LEFT JOIN ipr r ON r.q_id = b.q_id AND r.c_id = b.true_nn)
+           |SELECT family, q_id, true_nn, CAST(coalesce(rnk, 0) AS INT) AS rnk,
+           |       ${Rounding.stableSql("coalesce(1.0 / rnk, 0.0)", 6)} AS rr
+           |FROM u""".stripMargin
+      }),
 
     // MMR diversity re-rank — the post-retrieval pass that trades
     // relevance against redundancy: greedy λ·rel − (1−λ)·max-sim-to-
@@ -1075,7 +1015,56 @@ private[graft] object SimQueries {
       Similarity.mmrRerank(emb.filter(col("id") < 5), emb,
         k = Cfg.mmrK, shortlist = Cfg.mmrShortlist, lam = Cfg.mmrLambda)
     },
-      oracle = mmrOracleSql),
+      // MMR greedy re-rank unrolled to Cfg.mmrK CTE steps: each
+      // step scores the not-yet-selected shortlist rows by
+      // λ·rel − (1−λ)·max-sim-to-selected (stable-rounded, ties to lower
+      // c_id) and picks rank 1. λ and 1−λ are interpolated from the SAME
+      // Scala doubles the Spark plan multiplies by (1−0.7 is not the
+      // literal 0.3 in binary — emitting the round-tripped value keeps the
+      // products bit-identical).
+      oracle = {
+        val lam = Cfg.mmrLambda
+        val oneMinus = 1 - Cfg.mmrLambda
+        val steps = (2 to Cfg.mmrK).map { r =>
+          val selUnion = (1 until r).map(i => s"SELECT q_id, c_id FROM s$i")
+            .mkString(" UNION ALL ")
+          s"""sel$r AS ($selUnion),
+             |m$r AS (
+             |  SELECT cand.q_id, cand.c_id, cand.rel,
+             |         max(round(${sqlCos("cv.v", "sv.v")}, 6)) AS maxsim
+             |  FROM cand
+             |  JOIN eb cv ON cv.id = cand.c_id
+             |  JOIN sel$r s ON s.q_id = cand.q_id
+             |  JOIN eb sv ON sv.id = s.c_id
+             |  WHERE NOT EXISTS (SELECT 1 FROM sel$r x
+             |                    WHERE x.q_id = cand.q_id AND x.c_id = cand.c_id)
+             |  GROUP BY 1, 2, 3),
+             |p$r AS (SELECT q_id, c_id,
+             |               ${Rounding.stableSql(s"rel * $lam - maxsim * $oneMinus", 6)} AS obj
+             |        FROM m$r),
+             |s$r AS (SELECT q_id, c_id, obj
+             |        FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY obj DESC, c_id ASC) AS rn FROM p$r)
+             |        WHERE rn = 1)""".stripMargin
+        }.mkString(",\n")
+        val out = (1 to Cfg.mmrK).map(r =>
+          s"SELECT q_id, c_id, obj AS mmr_score, CAST($r AS INT) AS rnk FROM s$r")
+          .mkString("\nUNION ALL ")
+        s"""WITH eb AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
+           |mq AS (SELECT id AS q_id, v AS qv FROM eb WHERE id < 5),
+           |bs AS (
+           |  SELECT q_id, c.id AS c_id, ${sqlCos("qv", "c.v")} AS rel
+           |  FROM mq, eb c WHERE q_id <> c.id),
+           |cand AS (
+           |  SELECT q_id, c_id, rel
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, c_id ASC) AS rn FROM bs)
+           |  WHERE rn <= ${Cfg.mmrShortlist}),
+           |p1 AS (SELECT q_id, c_id, ${Rounding.stableSql(s"rel * $lam", 6)} AS obj FROM cand),
+           |s1 AS (SELECT q_id, c_id, obj
+           |       FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY obj DESC, c_id ASC) AS rn FROM p1)
+           |       WHERE rn = 1),
+           |$steps
+           |$out""".stripMargin
+      }),
 
     // IVF-PQ composite ANN — the FAISS IVFADC+refine layout, the shape
     // that actually ships at 100 TB: trained coarse lists route the ADC
@@ -1316,11 +1305,10 @@ private[graft] object SimQueries {
     // broadcast; the keep filter is narrow map work; only integer
     // counts are output, so nothing order-dependent reaches the hash.
     QueryDef("sim_diversity_sample", (s, dir) => {
-      // lazily-checkpointed: the 2-pass Lloyd subtree feeds the size
-      // aggregate AND the keep scan — without staging it would run twice
-      val asg = Similarity.kmeans(Tables.embeddings(s, dir), "vec_id",
-        "embedding", k = Cfg.kmeansK, iters = Cfg.kmeansIters)
-        .localCheckpoint(eager = false)
+      // staged: the 2-pass Lloyd subtree feeds the size aggregate AND
+      // the keep scan — without staging it would run twice
+      val asg = Stage.share(Similarity.kmeans(Tables.embeddings(s, dir), "vec_id",
+        "embedding", k = Cfg.kmeansK, iters = Cfg.kmeansIters))
       val sizes = asg.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("n_total"))
       val kept = asg.join(broadcast(sizes), Seq("cluster_id"))

@@ -70,21 +70,20 @@ private[graft] object StQueries {
     * doubles; mirrored literally by the shared oracle CTE prefix.
     */
   private def screenArrivals(emb: DataFrame): DataFrame =
-    // eagerly checkpointed (r22): the arrival batch is a bounded
+    // staged (r22): the arrival batch is a bounded
     // fixture, but its derived vec column otherwise re-evaluates the
     // interpreted negate-transform chain once per consumer — and
     // binaryCodes' null guard PUSHES that evaluation below every fan
     // onto the 1-split scan (guide §4.4; JobProfile: a 1-task ~1.3
-    // s-CPU scan stage in e8). A ~hundred-row checkpoint is free and
+    // s-CPU scan stage in e8). A ~hundred-row stage is free and
     // is a pushdown barrier.
-    emb.filter(col("id") < Cfg.binaryScreenArrivals)
+    Stage.share(emb.filter(col("id") < Cfg.binaryScreenArrivals)
       .select((col("id") + lit(100000L)).as("id"),
         when(col("id") % 3 === 0,
           transform(col("vec"), x => -x))
         .otherwise(concat(
           array(-element_at(col("vec"), 1)),
-          slice(col("vec"), 2, 63))).as("vec"))
-      .localCheckpoint(eager = true)
+          slice(col("vec"), 2, 63))).as("vec")))
 
   /** Standing frame-signature index for the live-ingest video screen —
     * the [[standingBinaryIndex]] discipline on the frame plane: the
@@ -165,48 +164,6 @@ private[graft] object StQueries {
        |ac AS (SELECT aid AS id, ${binaryHalfSql(0)} AS code_lo, ${binaryHalfSql(32)} AS code_hi FROM arr),
        |bb AS (${bandCte("bc")}),
        |ab AS (${bandCte("ac")})"""
-  }
-
-  private def binaryScreenSql: String = {
-    val bands = Cfg.binaryBands
-    s"""WITH $binaryScreenCtes
-       |SELECT a.id AS new_id, b.id AS base_id, CAST(a.band AS INT) AS band,
-       |       CAST(bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) AS INT) AS hamming
-       |FROM ab a JOIN bb b ON a.band = b.band AND a.band_val = b.band_val
-       |WHERE bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) <= ${bands - 1}""".stripMargin
-  }
-
-  /** e8_ingest_screen: the screen's DISTINCT candidate pairs, exact
-    * 6-dp cosine over only those pairs, per-arrival argmax
-    * (cos DESC, lower base_id) + candidate count, and the admission
-    * verdict against semanticThreshold — the SQL twin of the
-    * screen→verify→admit DAG.
-    */
-  private def ingestScreenSql: String = {
-    val bands = Cfg.binaryBands
-    s"""WITH $binaryScreenCtes,
-       |cand AS (
-       |  SELECT DISTINCT a.id AS new_id, b.id AS base_id
-       |  FROM ab a JOIN bb b ON a.band = b.band AND a.band_val = b.band_val
-       |  WHERE bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) <= ${bands - 1}),
-       |sc AS (
-       |  SELECT c.new_id, c.base_id, ${sqlCos("av.v", "bv.v")} AS cos
-       |  FROM cand c
-       |  JOIN (SELECT aid AS id, v FROM arr) av ON av.id = c.new_id
-       |  JOIN eb bv ON bv.id = c.base_id),
-       |best AS (
-       |  SELECT new_id, base_id AS best_id, cos AS best_cos
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY new_id ORDER BY cos DESC, base_id ASC) AS rn FROM sc)
-       |  WHERE rn = 1),
-       |cnt AS (SELECT new_id, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY new_id)
-       |SELECT a.aid AS id,
-       |       CAST(coalesce(cnt.n_cand, 0) AS BIGINT) AS n_cand,
-       |       CAST(coalesce(best.best_id, -1) AS BIGINT) AS best_id,
-       |       coalesce(best.best_cos, 0.0) AS best_cos,
-       |       coalesce(best.best_cos, 0.0) < ${Cfg.semanticThreshold} AS admit
-       |FROM arr a
-       |LEFT JOIN cnt ON cnt.new_id = a.aid
-       |LEFT JOIN best ON best.new_id = a.aid""".stripMargin
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -597,7 +554,14 @@ private[graft] object StQueries {
     },
       // Stateless banded-binary candidate screen: colliding band cells
       // within the pigeonhole radius, per (arrival, base, band).
-      oracle = binaryScreenSql),
+      oracle = {
+        val bands = Cfg.binaryBands
+        s"""WITH $binaryScreenCtes
+           |SELECT a.id AS new_id, b.id AS base_id, CAST(a.band AS INT) AS band,
+           |       CAST(bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) AS INT) AS hamming
+           |FROM ab a JOIN bb b ON a.band = b.band AND a.band_val = b.band_val
+           |WHERE bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) <= ${bands - 1}""".stripMargin
+      }),
 
     // ST19 — stateless streaming video frame-reuse screen: arriving
     // uploads decode into per-frame signatures (stateless per-partition
@@ -697,7 +661,36 @@ private[graft] object StQueries {
             .as("admit"))
     },
       // The ingest-admission flagship: screen → exact verify → admit.
-      oracle = ingestScreenSql),
+      // The screen's DISTINCT candidate pairs, exact 6-dp cosine over
+      // only those pairs, per-arrival argmax (cos DESC, lower base_id) +
+      // candidate count, and the admission verdict against
+      // semanticThreshold.
+      oracle = {
+        val bands = Cfg.binaryBands
+        s"""WITH $binaryScreenCtes,
+           |cand AS (
+           |  SELECT DISTINCT a.id AS new_id, b.id AS base_id
+           |  FROM ab a JOIN bb b ON a.band = b.band AND a.band_val = b.band_val
+           |  WHERE bit_count(xor(a.code_lo, b.code_lo)) + bit_count(xor(a.code_hi, b.code_hi)) <= ${bands - 1}),
+           |sc AS (
+           |  SELECT c.new_id, c.base_id, ${sqlCos("av.v", "bv.v")} AS cos
+           |  FROM cand c
+           |  JOIN (SELECT aid AS id, v FROM arr) av ON av.id = c.new_id
+           |  JOIN eb bv ON bv.id = c.base_id),
+           |best AS (
+           |  SELECT new_id, base_id AS best_id, cos AS best_cos
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY new_id ORDER BY cos DESC, base_id ASC) AS rn FROM sc)
+           |  WHERE rn = 1),
+           |cnt AS (SELECT new_id, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY new_id)
+           |SELECT a.aid AS id,
+           |       CAST(coalesce(cnt.n_cand, 0) AS BIGINT) AS n_cand,
+           |       CAST(coalesce(best.best_id, -1) AS BIGINT) AS best_id,
+           |       coalesce(best.best_cos, 0.0) AS best_cos,
+           |       coalesce(best.best_cos, 0.0) < ${Cfg.semanticThreshold} AS admit
+           |FROM arr a
+           |LEFT JOIN cnt ON cnt.new_id = a.aid
+           |LEFT JOIN best ON best.new_id = a.aid""".stripMargin
+      }),
 
     // E9 — the cross-modal curation flagship: one admission verdict per
     // upload from three independent per-doc modality signals — (1) text
@@ -716,12 +709,11 @@ private[graft] object StQueries {
       val tq = docs.select(col("doc_id"), q("quality").as("quality"))
       // ONE payload attach feeds both binary-plane signals — the
       // md5-per-block hashing is the query's most expensive narrow
-      // stage, and the audio payload IS the video payload. The lazy
-      // checkpoint is what actually shares it: un-cached subplans are
-      // re-evaluated per join branch (three consumers here), and the
-      // materialization measured 1.44 s → 1.0 s solo at sf0.1.
-      val pay = Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens)
-        .localCheckpoint(false)
+      // stage, and the audio payload IS the video payload. The stage
+      // is what actually shares it: un-staged subplans are re-evaluated
+      // per join branch (three consumers here), and the materialization
+      // measured 1.44 s → 1.0 s solo at sf0.1.
+      val pay = Stage.share(Multimodal.attachVideoPayload(docs, Cfg.paraBlockTokens))
       val vid = videoDupRollupFrom(pay).select(col("doc_id"), col("dup_frac"))
       val aud = speechFracPerDoc(pay)
       tq.join(vid, Seq("doc_id")).join(aud, Seq("doc_id"))

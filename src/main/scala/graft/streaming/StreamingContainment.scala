@@ -96,8 +96,8 @@ object StreamingContainment {
       timeCol: String, dfCap: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // one consumer (the posting explode below) and no intersect stage —
-    // unsorted shingles, no checkpoint (the batch containmentPairs
-    // checkpoints because its verify re-joins the frame per side; this
+    // unsorted shingles, no stage (the batch containmentPairs stages
+    // its shingles because its verify re-joins the frame per side; this
     // scan counts collisions instead)
     val d = df.select(col(idCol).as("id"), col(timeCol).as("ts"),
         Dedup.tokenValues(col(textCol)).as("tv"))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Stage}
 
 /** Streaming MinHash-LSH near-duplicate detection — the streaming twin
   * of [[graft.operators.Dedup.minhashPairsBetween]]: every arriving doc
@@ -74,7 +74,7 @@ object StreamingNearDedup {
 
   /** Banding over an already-staged [[sigArray]] frame — lets a plan
     * that uses the signatures several times (the scan twin reads them
-    * on four subtrees) compute them ONCE behind a lazy checkpoint.
+    * on four subtrees) compute them ONCE behind a [[graft.operators.Stage]].
     */
   def bandedSigsFromStaged(staged: DataFrame, passthrough: Seq[String],
       numBands: Int, rowsPerBand: Int): DataFrame = {
@@ -186,16 +186,10 @@ object StreamingNearDedup {
     val nSig = numBands * rowsPerBand
     val renamed = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
     // the staged signatures feed FOUR subtrees (both banding sides of
-    // the bucket self-join + both estimate sides) — one lazily-
-    // checkpointed computation instead of four tokenize+md5+agg runs
-    // (the same sharing as the batch dedup queries)
-    // EAGER (r22): the four consumers sit on both sides of the bucket
-    // self-join and the estimate joins — several evaluate on the
-    // broadcast pool and raced to compute the lazy blocks (JobProfile:
-    // a 2-task broadcast stage with run 1.38 s vs cpu 7 ms, pure
-    // block-compute blocking)
-    val withSigs = sigArray(renamed, "doc_id", "__text", Nil, nSig)
-      .localCheckpoint(true)
+    // the bucket self-join + both estimate sides) — one staged
+    // computation instead of four tokenize+md5+agg runs (the same
+    // sharing as the batch dedup queries)
+    val withSigs = Stage.share(sigArray(renamed, "doc_id", "__text", Nil, nSig))
     // candidate generation shuffles ONLY (bucket, doc_id) — the
     // signature arrays must never ride the explode+self-join (the same
     // discipline as Dedup.minhashPairs: at scale they would serialize

@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to `private[sql]` session internals — the standard
   * extension-library pattern for turning a custom LogicalPlan (here
-  * [[graft.plans.AsOfJoin]]) into a user-facing DataFrame, and for
-  * reading a parquet schema with the session's own conversion rules.
+  * [[graft.plans.AsOfJoin]]) into a user-facing DataFrame, for staging
+  * a frame's rows behind a `LogicalRDD` ([[graft.operators.Stage]]), and
+  * for reading a parquet schema with the session's own conversion rules.
   * This is the only file outside the `graft` namespace.
   */
 object GraftPlanBridge {
@@ -54,6 +55,39 @@ object GraftPlanBridge {
           new org.apache.parquet.hadoop.Footer(f.getPath, footer),
           new ParquetToSparkSchemaConverter(session.sessionState.conf))
       }
+  }
+
+  /** [[graft.operators.Stage]]'s plumbing: hand `df`'s physical rows
+    * to `stage` inside one SQL execution (as `Dataset`'s own actions
+    * run), and wrap the RDD it returns in the `LogicalRDD` that
+    * `Dataset`'s own checkpoints build — same output partitioning,
+    * ordering and size statistics, so plans above the boundary read a
+    * `Scan ExistingRDD` either way.
+    */
+  def stageRows(df: DataFrame, name: String)(
+      stage: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =>
+        org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+      classic.Dataset.ofRows(ds.sparkSession,
+        execution.LogicalRDD.fromDataset(stage(qe.toRdd), ds, ds.isStreaming))
+    }
+  }
+
+  /** Run `body` with the call site set to the first frame outside Spark,
+    * Scala and `Stage`, so a staged RDD — and the job that fills it —
+    * names the line that staged it rather than `Stage.scala`.
+    */
+  def atCaller[T](df: DataFrame)(body: => T): T = {
+    import org.apache.spark.util.{CallSite, Utils}
+    val sc = df.sparkSession.sparkContext
+    val keys = Seq(CallSite.SHORT_FORM, CallSite.LONG_FORM)
+    val saved = keys.map(sc.getLocalProperty)
+    sc.setCallSite(Utils.getCallSite(c => c.startsWith("org.apache.spark.") ||
+      c.startsWith("scala.") || c.startsWith("graft.operators.Stage")))
+    try body
+    finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Drop a function from ONE session's registry (test support: simulates
